@@ -199,8 +199,9 @@ object BinaryIvfIndex {
     val meta = loadMeta(indexDir)
     val probes = probeSet(spark, indexDir, qvec, nprobe)
 
-    val pruned0 = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
+
+      probes.toIndexedSeq)
     val pruned1 = deletes.map { d =>
       require(d.columns.length == 1, "deletes must be a single id column")
       pruned0.join(d, d.columns.toSeq, "left_anti")

@@ -78,8 +78,12 @@ private[graft] final class BoundedCache[V](
       val latch = new java.util.concurrent.CountDownLatch(1)
       val prev = inFlight.putIfAbsent(key, latch)
       if (prev == null) {
-        // this thread is the loader for `key`
+        // this thread is the loader for `key` — unless a loader that
+        // finished between the miss above and winning the slot already
+        // inserted the value
         try {
+          val raced = lookup(key)
+          if (raced != null) return raced.value
           val v = load
           insert(key, v, math.max(0L, weigh(v)))
           return v

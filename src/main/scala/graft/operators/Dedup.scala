@@ -1336,6 +1336,8 @@ object Dedup {
     *   SF). Exists so the r21 driver regression on d09/d10/d17 can be
     *   A/B'd per VERDICT r21 #2 without a recompile.
     * - "broadcast": force broadcast of the build side.
+    *
+    * Any other value fails, so a typo cannot quietly A/B the default.
     */
   private def lshBucketBuildSide(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption("spark.graft.lsh.bucketJoin")
@@ -1343,7 +1345,10 @@ object Dedup {
     match {
       case "auto" => df
       case "broadcast" => broadcast(df)
-      case _ => df.hint("shuffle_hash")
+      case "shuffle_hash" => df.hint("shuffle_hash")
+      case other => throw new IllegalArgumentException(
+        s"unknown LSH bucket-join mode '$other' (spark.graft.lsh.bucketJoin / " +
+          "SPARK_GRAFT_LSH_JOIN): expected shuffle_hash, auto or broadcast")
     }
 
   def lshCosinePairs(

@@ -25,11 +25,12 @@ import graft.functions.text
   *     build time (the reference ships exactly these to every node,
   *     `collectStatisticForBM25Calculation`, `CommonUtils.h:107`).
   *
-  * Query cost: one scan of ≤ |terms| bucket partitions (tiny fraction of
-  * the postings) + a |terms|-row driver collect for idf — versus the
-  * index-less path's two full corpus scans per query. Build cost: one
-  * stats pass + one explode/groupBy shuffle (the classic distributed
-  * inverted-index build, map-side combined).
+  * Query cost: ≤ |terms| bucket partitions (tiny fraction of the
+  * postings), read twice inside one plan (per-term df, then scoring) —
+  * versus the index-less path's two full corpus scans per query; no job
+  * runs while the search is built. Build cost: one stats pass + one
+  * explode/groupBy shuffle (the classic distributed inverted-index
+  * build, map-side combined).
   *
   * Scoring is identical to [[TextSearch]] (Tantivy BM25, k1=1.2, b=0.75)
   * so the indexed path reproduces the non-indexed results exactly.
@@ -129,9 +130,9 @@ object FtsIndex {
     * rebuilding old ones). New documents' postings are APPENDED into the
     * same bucket directories (immutable-file semantics: new parquet files
     * only) and the global stats are updated incrementally; per-term df at
-    * query time already comes from the pruned read, so appended postings
-    * participate immediately. Callers must not re-append existing doc
-    * ids.
+    * query time comes from the pruned read, which lists the bucket
+    * directories on every query, so appended postings participate
+    * immediately. Callers must not re-append existing doc ids.
     */
   def append(
       spark: SparkSession,
@@ -187,9 +188,12 @@ object FtsIndex {
         num("nBuckets").toDouble.toInt, str("textCol"))
     })
 
-  /** BM25 top-K against the postings index. One pruned postings scan:
-    * per-term df comes from a |terms|-row collect over the pruned read
-    * (bucket partitioning makes it table-global), idf folds to literals,
+  /** BM25 top-K against the postings index. One plan, no driver job:
+    * the pruned postings read lists only the query terms' bucket
+    * directories, per-term df is a `groupBy(term).count` over that read
+    * broadcast-joined back to it (bucket partitioning makes it
+    * table-global), idf is the Scala [[idf]] through a UDF (bit-identical
+    * to the former driver-folded literals; Spark's `log` is StrictMath),
     * the per-doc score is a single hash aggregation, and the top-K is the
     * usual TakeOrderedAndProject. Returns `(doc_id, <scoreName>)`.
     */
@@ -205,37 +209,33 @@ object FtsIndex {
     import spark.implicits._
     val meta = loadMeta(indexDir)
     val terms = TextSearch.queryTerms(query)
+    lazy val empty = Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
     // empty index (built before any append) has no postings files at all
-    if (terms.isEmpty || meta.nDocs == 0)
-      return Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
+    if (terms.isEmpty || meta.nDocs == 0) return empty
 
     val buckets = terms.map(bucketOf(_, meta.nBuckets)).distinct
-    val posts = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
+    val posts =
+      ProbedPartitions.readPresent(spark, s"$indexDir/postings", "bucket", buckets) match {
+        case Some(p) => p.filter(col("term").isin(terms: _*))
+        case None    => return empty // no query term's bucket has postings
+      }
 
-    // Global df per query term (≤ |terms| rows — bounded driver collect).
-    val dfByTerm = posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    val live = terms.filter(t => dfByTerm.getOrElse(t, 0L) > 0L)
-    if (live.isEmpty || (operator.equalsIgnoreCase("AND") && live.size < terms.size))
-      return Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
-
-    // idf literals, same formula as TextSearch.bm25Score.
-    val idfCol = live.tail.foldLeft(
-      when(col("term") === live.head, lit(idf(meta.nDocs, dfByTerm(live.head))))) {
-      (acc, t) => acc.when(col("term") === t, lit(idf(meta.nDocs, dfByTerm(t))))
-    }.otherwise(lit(0.0))
-    val contrib = idfCol * col("tf") * lit(TextSearch.K1 + 1.0) /
+    // df per query term (≤ |terms| rows), computed in the plan
+    val dfs = posts.groupBy(col("term")).agg(count(lit(1)).as("__df"))
+    val nDocs = meta.nDocs
+    val idfU = udf((df: Long) => idf(nDocs, df))
+    val contrib = idfU(col("__df")) * col("tf") * lit(TextSearch.K1 + 1.0) /
       (col("tf") + lit(TextSearch.K1) *
         (lit(1.0 - TextSearch.B) + lit(TextSearch.B) * col("dl") / meta.avgDl))
 
-    val scored = posts
+    val scored = posts.join(broadcast(dfs), "term")
       .withColumn("__c", contrib)
       .groupBy(col("doc_id"))
       .agg(sum(col("__c")).as(scoreName), count(lit(1)).as("__nterms"))
+    // AND: every (distinct) query term posts for the doc; a term missing
+    // from the index matches no doc
     val matched = operator.toUpperCase match {
-      case "AND" => scored.filter(col("__nterms") === live.size)
+      case "AND" => scored.filter(col("__nterms") === terms.size)
       case _     => scored
     }
     // Lightweight-DELETE mask (reference 00040_mqvs_hybrid_search_with_lwd
@@ -284,8 +284,8 @@ object FtsIndex {
     val buckets = allTerms.map(bucketOf(_, meta.nBuckets)).distinct
     // multiple lazy passes over the pruned postings — each is a
     // partition-pruned scan of ≤ |terms| buckets, no caching needed
-    val posts = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(allTerms: _*))
+    val posts = ProbedPartitions.read(spark, s"$indexDir/postings", "bucket", buckets)
+      .filter(col("term").isin(allTerms: _*))
 
     val dfByTerm = posts.filter(col("term").isin(scored: _*))
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -379,8 +379,7 @@ object FtsIndex {
     val terms = TextSearch.queryTerms(query)
     require(terms.nonEmpty, s"fts_index: no terms in query '$query'")
     val buckets = terms.map(bucketOf(_, meta.nBuckets)).distinct
-    val posts = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("bucket").isin(buckets: _*))
+    val posts = ProbedPartitions.read(spark, s"$indexDir/postings", "bucket", buckets)
     val termFreq = posts
       .filter(col("term").isin(terms: _*))
       .groupBy(col("bucket"), col("term"))

@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   *    rank within each list, default fusion_k = 60 (`Settings.h:920`).
   *  - final result ordered by fused score descending, LIMIT k.
   *
-  * Everything is plain DataFrame math over the two candidate frames: two
-  * scalar min/max aggregations + a full outer join on the row id — no
-  * shuffle of the underlying table.
+  * Everything is plain DataFrame math over the two candidate frames,
+  * inside one plan: an unpartitioned min/max window per candidate list
+  * (RSF) or a rank window (RRF), then a full outer join on the row id —
+  * no shuffle of the underlying table and no job while it is built.
   */
 object HybridSearch {
 
@@ -48,14 +49,17 @@ object HybridSearch {
       fusedName: String = "fused_score",
       tieBreak: Seq[Column] = Nil): DataFrame = {
 
+    // min/max over the whole candidate list (≤ 3·k rows) from an
+    // unpartitioned window — inside the plan, no driver aggregation job
     def normalized(df: DataFrame, c: String, outName: String): DataFrame = {
-      val Array(mn, mx) = df.agg(min(col(c)).cast("double"), max(col(c)).cast("double"))
-        .head().toSeq.map(_.asInstanceOf[Double]).toArray
+      val whole = Window.partitionBy()
       // all-equal list → every normalized score is 1.0 (reference :299-304)
-      val norm =
-        if (mn == mx) lit(1.0)
-        else (col(c).cast("double") - lit(mn)) / lit(mx - mn)
-      df.withColumn(outName, norm)
+      df.withColumn("__mn", min(col(c)).over(whole).cast("double"))
+        .withColumn("__mx", max(col(c)).over(whole).cast("double"))
+        .withColumn(outName,
+          when(col("__mn") === col("__mx"), lit(1.0))
+            .otherwise((col(c).cast("double") - col("__mn")) / (col("__mx") - col("__mn"))))
+        .drop("__mn", "__mx")
     }
 
     val v = normalized(vecCandidates, distCol, "__norm_d")

@@ -478,8 +478,7 @@ object IvfIndex {
     val qDf = spark
       .createDataFrame(queries.zipWithIndex.map { case (v, i) => (i, v) })
       .toDF("query_idx", "query_vec")
-    val lists0 = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(listSet: _*))
+    val lists0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id", listSet)
     // same lightweight-delete anti-join as the single-query path
     val lists = deletes.map { d =>
       val idCols = d.columns.toSeq
@@ -525,8 +524,8 @@ object IvfIndex {
     val probes = centroids.zipWithIndex
       .map { case (c, i) => (centroidDist(metric, c, q), i) }
       .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
-    val lists = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+    val lists = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
+      probes.toIndexedSeq)
     VectorSearch.topK(lists.join(other, joinCond), col(meta.vecCol), qvec,
         k, metric, None, distName, tieBreak)
       .drop("list_id")
@@ -568,8 +567,8 @@ object IvfIndex {
       distName: String,
       tieBreak: Seq[Column],
       deletes: Option[DataFrame] = None): DataFrame = {
-    val pruned = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+    val pruned = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
+      probes.toIndexedSeq)
     // Lightweight-delete mask applied INSIDE the index search (reference
     // `00037_mqvs_multiple_lwd.sql`): anti-join the probed lists against
     // the deleted-id set on its (single) id column. No explicit broadcast

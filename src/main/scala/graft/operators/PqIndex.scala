@@ -244,8 +244,8 @@ object PqIndex {
       .map { case (c, i) => (IvfIndex.centroidDist(meta.metric, c, q), i) }
       .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
     // pre-filter BEFORE ranking (reference performPrefilter semantics)
-    val pruned0 = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
+      probes.toIndexedSeq)
     val pruned = preFilter.map(pruned0.filter).getOrElse(pruned0)
     val table = adcTable(q, books, meta.metric)
     val ip = meta.metric.equalsIgnoreCase("ip") || meta.metric.equalsIgnoreCase("dot")
@@ -280,8 +280,9 @@ object PqIndex {
       .map { case (c, i) => (IvfIndex.centroidDist(meta.metric, c, q), i) }
       .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
 
-    val pruned0 = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
+
+      probes.toIndexedSeq)
     val pruned1 = deletes.map { d =>
       require(d.columns.length == 1, "deletes must be a single id column")
       pruned0.join(d, d.columns.toSeq, "left_anti")

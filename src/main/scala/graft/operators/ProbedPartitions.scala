@@ -1,0 +1,88 @@
+package graft.operators
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+
+/** Job-free read of the probed partitions of a `partCol=v`-partitioned
+  * parquet artifact: the IVF-family `lists/` (`list_id=`) and the FTS
+  * `postings/` (`bucket=`).
+  *
+  * `spark.read.parquet(root)` lists every partition directory (a
+  * parallel-listing job once there are more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them) and
+  * infers the schema in a second job, on every search. Here the driver
+  * lists the root non-recursively, keeps the requested directories that
+  * exist, and takes the data schema from the Spark row-metadata key of
+  * one footer (the same source Spark's own inference reads) plus the INT
+  * partition column. The `isin` filter stays, so the scan still carries
+  * `PartitionFilters`.
+  *
+  * Nothing is cached: every search lists afresh, so an append or a
+  * rebuild in another JVM is seen by the next query.
+  */
+private[graft] object ProbedPartitions {
+
+  /** Footer key under which Spark's parquet writer stores the row schema. */
+  val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The requested partitions of `root`, or None when none of them exists. */
+  def readPresent(spark: SparkSession, root: String, partCol: String,
+      values: Seq[Int]): Option[DataFrame] = {
+    val all = partitionDirs(spark, root, partCol)
+    val dirs = values.distinct.sorted.flatMap(all.get)
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(schema(spark, root, partCol, dirs))
+      .option("basePath", root).parquet(dirs.map(_.toString): _*)
+      .filter(col(partCol).isin(values: _*)))
+  }
+
+  /** The requested partitions of `root`; an empty frame with the
+    * artifact's schema when none of them exists.
+    */
+  def read(spark: SparkSession, root: String, partCol: String,
+      values: Seq[Int]): DataFrame =
+    readPresent(spark, root, partCol, values).getOrElse(spark.createDataFrame(
+      java.util.List.of[Row](),
+      schema(spark, root, partCol, partitionDirs(spark, root, partCol).values.toSeq)))
+
+  /** `partCol=v` directories directly under `root`, by `v`. */
+  private def partitionDirs(spark: SparkSession, root: String,
+      partCol: String): Map[Int, Path] = {
+    val rootPath = new Path(root)
+    val prefix = partCol + "="
+    rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(rootPath).iterator
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .flatMap(s => s.getPath.getName.substring(prefix.length).toIntOption
+        .map(_ -> s.getPath))
+      .toMap
+  }
+
+  /** Row schema from the footer of the first data file found in `dirs`,
+    * plus the INT partition column. A footer without Spark's schema key
+    * fails: there is no fallback to the parquet-level schema, whose types
+    * can differ.
+    */
+  private def schema(spark: SparkSession, root: String, partCol: String,
+      dirs: Seq[Path]): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    val file = dirs.iterator.flatMap { d =>
+      d.getFileSystem(conf).listStatus(d).iterator
+        .filter(s => s.isFile && visible(s.getPath)).map(_.getPath)
+        .toSeq.sortBy(_.getName).headOption
+    }.nextOption().getOrElse(throw new IllegalStateException(
+      s"no parquet data file under any partition of $root"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val json =
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close()
+    if (json == null) throw new IllegalStateException(
+      s"parquet footer of $file has no Spark schema ($SparkSchemaKey)")
+    DataType.fromJson(json).asInstanceOf[StructType].add(partCol, IntegerType)
+  }
+}

@@ -184,8 +184,8 @@ object SqIndex {
     // pre-filter BEFORE ranking (reference performPrefilter semantics):
     // the lists carry every source column except the vector, so filters
     // evaluate directly on the quantized layout
-    val pruned0 = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
+      probes.toIndexedSeq)
     val pruned = preFilter.map(pruned0.filter).getOrElse(pruned0)
     val m = parseMetric(meta.metric)
     val sqd = shim.column(SqDistance(
@@ -220,8 +220,9 @@ object SqIndex {
       .map { case (c, i) => (IvfIndex.centroidDist(meta.metric, c, q), i) }
       .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
 
-    val pruned0 = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
+
+      probes.toIndexedSeq)
     val pruned1 = deletes.map { d =>
       require(d.columns.length == 1, "deletes must be a single id column")
       pruned0.join(d, d.columns.toSeq, "left_anti")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.functions.VectorDistance
-import graft.operators.{HnswIndex, IvfIndex}
+import graft.operators.{HnswIndex, IvfIndex, ProbedPartitions}
 
 /** Catalyst rule for the reference's search-query shape.
   *
@@ -33,9 +33,12 @@ import graft.operators.{HnswIndex, IvfIndex}
   *    for the scanned parquet path + vector column, the scan is swapped
   *    for the index's list-partitioned layout pruned to the
   *    `defaultNprobe` nearest lists — file-level pruning IS the index
-  *    acceleration. A WHERE below the sort stays BELOW the ranking
-  *    (pre-filter semantics). Approximate when nprobe < nLists, like the
-  *    reference's index path.
+  *    acceleration. Like the HNSW route, it runs no job during
+  *    optimization: the probes rank against the cached centroids and
+  *    [[ProbedPartitions]] lists only the probed `list_id=` directories
+  *    and takes the schema from one footer. A WHERE below the sort stays
+  *    BELOW the ranking (pre-filter semantics). Approximate when nprobe <
+  *    nLists, like the reference's index path.
   *  - With a BUILT **HNSWFLAT** index, the scan is replaced by a
   *    semi-join of the relation against the graph search's (id, d)
   *    candidates — the graph search itself is the shuffle-free per-part
@@ -213,8 +216,8 @@ case class TopKSearchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           .sortBy(_._1).take(math.min(entry.defaultNprobe, centroids.length)).map(_._2)
         logInfo(s"TopKSearchRewrite: ORDER BY ${vd.prettyName} LIMIT $k over $path " +
           s"→ IVF index ${entry.name} (nprobe=${entry.defaultNprobe}/${centroids.length})")
-        spark.read.parquet(s"${entry.indexDir}/lists")
-          .filter(col("list_id").isin(probes.toIndexedSeq: _*))
+        ProbedPartitions.read(spark, s"${entry.indexDir}/lists", "list_id",
+            probes.toIndexedSeq)
           .queryExecution.analyzed
       case sq @ ("IVFSQ" | "IVFPQ")
           if !filterReferencesVector(filterCond, vecAttr) =>

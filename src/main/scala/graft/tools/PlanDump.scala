@@ -29,7 +29,7 @@ object PlanDump {
       "t01_bm25_topk" -> "BM25 top-K: codegen'd scoring expressions over one scan",
       "q21_asof_join" -> "ASOF join: union + window, one shuffle on the key",
       "e06_tumble" -> "tumbling window aggregation",
-      "t07_fts_topk" -> "FTS index search: pruned bucket-partition postings scan, idf folded to literals — no corpus scan",
+      "t07_fts_topk" -> "FTS index search: pruned bucket-partition postings scan, per-term df aggregated in the plan and broadcast-joined back for idf — no corpus scan, no job while it is built",
       "v11_hnsw_search" -> "HNSW search: per-part single-task scans + union, NO Exchange of the graph",
       "v12_prefilter_ivf" -> "IVF search with pre-filter inside the probed list_id partitions",
       "v14_ivfsq" -> "IVFSQ two-stage: quantized codegen scoring over pruned lists, broadcast semi-join re-rank",

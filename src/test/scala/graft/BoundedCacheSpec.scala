@@ -90,11 +90,37 @@ class BoundedCacheSpec extends SparkSpec {
       loads.incrementAndGet(); "v2-should-not-load"
     }(_ => 1L)))
     t2.start()
-    Thread.sleep(50) // give t2 time to reach the latch wait
+    // t2 parks on t1's in-flight latch — the only wait on its path while
+    // t1's load is held open — before t1 is released
+    while (t2.isAlive && t2.getState != Thread.State.WAITING) Thread.onSpinWait()
     release.countDown()
     t1.join(10000); t2.join(10000)
     assert(loads.get === 1)
     assert(results.size === 2 && results.toArray.forall(_ === "v"))
+  }
+
+  test("a thread that wins the in-flight slot after the load finished does not reload") {
+    // The window: a thread misses the map, the first loader inserts and
+    // frees its slot, then the late thread wins the slot. It must re-check
+    // the map rather than load again. Threads race through the same keys;
+    // every key must load exactly once.
+    val c = cache("1g")
+    val nKeys = 100000
+    val nThreads = 4
+    val loads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val start = new java.util.concurrent.CyclicBarrier(nThreads)
+    val threads = Seq.fill(nThreads)(new Thread(() => {
+      start.await()
+      var i = 0
+      while (i < nKeys) {
+        c.getOrLoad(s"k$i") { loads.incrementAndGet(); "v" }(_ => 1L)
+        i += 1
+      }
+    }))
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    assert(c.size === nKeys)
+    assert(loads.get === nKeys, s"${loads.get - nKeys} redundant load(s)")
   }
 
   test("put overwrites weight accounting; invalidatePrefix drops matching keys") {

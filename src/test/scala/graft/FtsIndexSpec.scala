@@ -75,6 +75,19 @@ class FtsIndexSpec extends SparkSpec {
     assert(plan.contains("bucket"), plan)
   }
 
+  test("search runs NO Spark job while it is built and planned (OR and AND)") {
+    indexDir // force build
+    for (op <- Seq("OR", "AND")) {
+      val (_, jobs) = jobsDuring {
+        FtsIndex.search(spark, indexDir, "spark fast", 10, op, "bm25_score",
+          Seq(col("doc_id"))).queryExecution.executedPlan
+      }
+      // the bucket listing, the schema inference and the per-term df
+      // collect each used to run a job here
+      assert(jobs === 0, s"$op: $jobs job(s) ran while the search was built")
+    }
+  }
+
   test("termStats TVF reports global df and tf") {
     val stats = FtsIndex.termStats(spark, indexDir)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap

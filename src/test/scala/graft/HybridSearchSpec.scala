@@ -55,6 +55,35 @@ class HybridSearchSpec extends SparkSpec {
     assert(scores === scores.sorted.reverse) // descending fused score
   }
 
+  test("indexed hybrid search runs NO Spark job while it is built and planned") {
+    import java.nio.file.Files
+    val docs = graft.engine.Tables.t(spark, sfDir, "documents")
+    val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
+    val joined = docs.join(emb, col("doc_id") === col("vec_id"))
+    val qvec = emb.filter(col("vec_id") === 0)
+      .select(col("embedding")).head().getSeq[Float](0)
+    val ftsDir = Files.createTempDirectory("hyb-nojob-fts").toString
+    try {
+      graft.operators.FtsIndex.build(spark, joined, "doc_id", "text",
+        "hyb_nojob_fts", ftsDir, nBuckets = 64)
+      val (fused, jobs) = jobsDuring {
+        val f = HybridSearch.hybridSearchIndexed(joined, "doc_id",
+          col("embedding"), qvec, "spark merge join", 10, ftsDir, "rsf", "cosine")
+        f.queryExecution.executedPlan
+        f
+      }
+      // FTS listing/inference/df and the two RSF min/max heads used to
+      // run jobs here
+      assert(jobs === 0, s"$jobs job(s) ran while the hybrid search was built")
+      val direct = HybridSearch.hybridSearch(joined, "doc_id",
+          col("embedding"), col("text"), qvec, "spark merge join", 10,
+          "rsf", "cosine")
+        .collect().map(r => r.getLong(0) -> math.round(r.getDouble(1) * 1e9)).toSeq
+      assert(fused.collect()
+        .map(r => r.getLong(0) -> math.round(r.getDouble(1) * 1e9)).toSeq === direct)
+    } finally graft.operators.FtsIndex.Catalog.drop("hyb_nojob_fts")
+  }
+
   test("fully-indexed hybrid at realistic dense_nprobe recalls the direct path") {
     import java.nio.file.Files
     val docs = graft.engine.Tables.t(spark, sfDir, "documents")

@@ -257,6 +257,27 @@ class OperatorsSpec extends SparkSpec {
     assert(recall >= 0.9, s"LSH recall $recall over ${exact.size} exact pairs")
   }
 
+  test("an unknown LSH bucket-join mode fails instead of running the default") {
+    val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
+    val key = "spark.graft.lsh.bucketJoin"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "brodcast")
+    try {
+      val err = intercept[IllegalArgumentException] {
+        Dedup.lshCosinePairs(emb, col("embedding"), col("vec_id"), 0.35, 4, 16)
+      }
+      assert(err.getMessage.contains("brodcast"), err.getMessage)
+      // the three documented modes still plan
+      for (mode <- Seq("shuffle_hash", "auto", "broadcast")) {
+        spark.conf.set(key, mode)
+        Dedup.lshCosinePairs(emb, col("embedding"), col("vec_id"), 0.35, 4, 16)
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("LSH-fed connected components ≈ exact-fed clusters (d10 path)") {
     val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
     def clusters(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =

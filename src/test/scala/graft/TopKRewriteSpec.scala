@@ -199,6 +199,34 @@ class TopKRewriteSpec extends SparkSpec {
     }
   }
 
+  test("IVFFLAT routing runs NO Spark job during optimization") {
+    val dir = Files.createTempDirectory("ivf-nojob").toString
+    val srcPath = "file:" + sfDir + "/embeddings.parquet"
+    try {
+      IvfIndex.build(spark, emb, "embedding", "nojob_ivf", dir, "l2",
+        nLists = 8, sourcePath = srcPath, defaultNprobe = 3)
+      val e = emb // force relation construction before listening
+      qv // force the lazy query-vector collect before listening
+      val (df, jobs) = jobsDuring {
+        val d = e.select(col("vec_id"),
+            distances.l2Distance(col("embedding"), typedLit(qv)).as("d"))
+          .orderBy(col("d"), col("vec_id")).limit(5)
+        // the probed lists used to be listed and schema-inferred here
+        d.queryExecution.optimizedPlan
+        d.queryExecution.executedPlan
+        d
+      }
+      assert(jobs === 0, s"$jobs job(s) ran while the IVFFLAT route was planned")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("list_id"), s"expected the probed-lists scan in:\n$plan")
+      // routed plan answers exactly like the API search at the same nprobe
+      val want = IvfIndex.search(spark, dir, qv, 5, nprobe = 3, None, None,
+          "d", Seq(col("vec_id")))
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      assert(df.collect().map(_.getLong(0)).toSeq === want)
+    } finally IvfIndex.Catalog.drop("nojob_ivf")
+  }
+
   test("filtered HNSW routing runs NO Spark job during optimization") {
     val dir = Files.createTempDirectory("hnsw-nojob").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
@@ -208,34 +236,27 @@ class TopKRewriteSpec extends SparkSpec {
         numPartitions = Some(2), sourcePath = srcPath)
       val e = emb // force relation construction before listening
       qv // force the lazy query-vector collect before listening
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val filtered = e.filter(col("label") === 2)
+      val (filtered, jobs) = jobsDuring {
+        val f = e.filter(col("label") === 2)
           .select(col("vec_id"), col("label"),
             distances.l2Distance(col("embedding"), typedLit(qv)).as("d"))
           .orderBy(col("d")).limit(5)
         // force full optimization + physical planning — the phases where
         // the accept set used to be collect()ed
-        filtered.queryExecution.optimizedPlan
-        filtered.queryExecution.executedPlan
-        org.apache.spark.sql.graft.shim.waitListenerBus(spark.sparkContext)
-        assert(jobs.get() === 0,
-          s"${jobs.get()} job(s) ran during plan-time rewriting — the " +
-            "accept mask must be built at execution time")
-        // and the plan still routes + answers exactly like brute force
-        val fBrute = VectorSearch.topK(emb, col("embedding"), qv, 5, "l2",
-            Some(col("label") === 2), "d", Seq(col("vec_id")))
-          .select("vec_id").collect().map(_.getLong(0)).toSet
-        val fGot = filtered.collect().map(_.getLong(0)).toSet
-        assert((fGot & fBrute).size >= 4,
-          s"filtered recall too low: ${(fGot & fBrute).size}/5")
-      } finally spark.sparkContext.removeSparkListener(listener)
+        f.queryExecution.optimizedPlan
+        f.queryExecution.executedPlan
+        f
+      }
+      assert(jobs === 0,
+        s"$jobs job(s) ran during plan-time rewriting — the " +
+          "accept mask must be built at execution time")
+      // and the plan still routes + answers exactly like brute force
+      val fBrute = VectorSearch.topK(emb, col("embedding"), qv, 5, "l2",
+          Some(col("label") === 2), "d", Seq(col("vec_id")))
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      val fGot = filtered.collect().map(_.getLong(0)).toSet
+      assert((fGot & fBrute).size >= 4,
+        s"filtered recall too low: ${(fGot & fBrute).size}/5")
     } finally IvfIndex.Catalog.drop("nojob_hnsw")
   }
 
