@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,13 +19,7 @@ import graft.functions.{distances, VectorKernels}
 object BinaryIvfIndex {
 
   case class BMeta(nLists: Int, nBytes: Int, nRows: Long, vecCol: String,
-      idCol: String, status: String, metric: String = "hamming")
-
-  private val metaCache = TrieMap.empty[String, BMeta]
-  // size-bounded (shared centroid budget); evicted tables reload from
-  // the centroids/ parquet artifact
-  private val centroidCache = BoundedCache.view[Array[Array[Byte]]](
-    "bivf#", BoundedCache.byteTableBytes)
+      idCol: String, status: String, metric: String)
 
   private[graft] def nearestHamming(cs: Array[Array[Byte]], v: Array[Byte]): Int = {
     var best = 0; var bestD = Float.MaxValue; var i = 0
@@ -127,12 +117,9 @@ object BinaryIvfIndex {
     centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
       .toDF("list_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    Files.writeString(Paths.get(s"$indexDir/meta.json"),
-      s"""{"version":1,"type":"BinaryIVF","nLists":$nLists,"nBytes":$nBytes,""" +
-        s""""nRows":$n,"vecCol":"$vecCol","idCol":"$idCol","status":"BUILT",""" +
-        s""""metric":"$metric"}""" + "\n")
-    metaCache.put(indexDir, BMeta(nLists, nBytes, n, vecCol, idCol, "BUILT", metric))
-    centroidCache.put(indexDir, centroids)
+    val art = IndexArtifact.write(indexDir, "BinaryIVF",
+      BMeta(nLists, nBytes, n, vecCol, idCol, "BUILT", metric))
+    IndexArtifact.BinaryCentroids.put(art, centroids)
 
     val entry = IvfIndex.IndexEntry(indexName, indexDir, sourcePath, vecCol,
       "BinaryIVF", metric, "BUILT", n, defaultNprobe)
@@ -141,29 +128,8 @@ object BinaryIvfIndex {
     entry
   }
 
-  private[graft] def loadMeta(indexDir: String): BMeta =
-    metaCache.getOrElseUpdate(indexDir, {
-      val p = Paths.get(s"$indexDir/meta.json")
-      require(Files.exists(p), s"binary index meta not found: $p")
-      val s = Files.readString(p)
-      def str(k: String): String =
-        ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(s).map(_.group(1))
-          .getOrElse(sys.error(s"meta.json missing '$k' at $p"))
-      def num(k: String): Long =
-        ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-          .getOrElse(sys.error(s"meta.json missing '$k' at $p"))
-      val metric = // pre-r20 meta files carry no metric: hamming
-        ("\"metric\":\"([^\"]*)\"").r.findFirstMatchIn(s)
-          .map(_.group(1)).getOrElse("hamming")
-      BMeta(num("nLists").toInt, num("nBytes").toInt, num("nRows"),
-        str("vecCol"), str("idCol"), str("status"), metric)
-    })
-
-  private def loadCentroids(spark: SparkSession, indexDir: String): Array[Array[Byte]] =
-    centroidCache.getOrLoad(indexDir) {
-      spark.read.parquet(s"$indexDir/centroids").orderBy("list_id").collect()
-        .map(_.getAs[Array[Byte]](1))
-    }
+  private def artifact(indexDir: String): IndexArtifact.Artifact[BMeta] =
+    IndexArtifact.read(indexDir, classOf[BMeta])
 
   /** The probe set [[search]] uses — public for replay oracles (same
     * contract as [[IvfIndex.probeSet]]). Ranks centroids by the index's
@@ -173,10 +139,14 @@ object BinaryIvfIndex {
       spark: SparkSession,
       indexDir: String,
       qvec: Array[Byte],
-      nprobe: Int): Seq[Int] = {
-    val centroids = loadCentroids(spark, indexDir)
+      nprobe: Int): Seq[Int] =
+    probes(spark, artifact(indexDir), qvec, nprobe)
+
+  private def probes(spark: SparkSession, art: IndexArtifact.Artifact[BMeta],
+      qvec: Array[Byte], nprobe: Int): Seq[Int] = {
+    val centroids = IndexArtifact.BinaryCentroids.load(spark, art)
     val kernel: (Array[Byte], Array[Byte]) => Float =
-      if (loadMeta(indexDir).metric == "jaccard") VectorKernels.jaccardBits
+      if (art.meta.metric == "jaccard") VectorKernels.jaccardBits
       else VectorKernels.hammingBits
     centroids.zipWithIndex
       .map { case (c, i) => (kernel(c, qvec), i) }
@@ -196,12 +166,10 @@ object BinaryIvfIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val meta = loadMeta(indexDir)
-    val probes = probeSet(spark, indexDir, qvec, nprobe)
-
+    val art = artifact(indexDir)
+    val meta = art.meta
     val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-
-      probes.toIndexedSeq)
+      probes(spark, art, qvec, nprobe))
     val pruned1 = deletes.map { d =>
       require(d.columns.length == 1, "deletes must be a single id column")
       pruned0.join(d, d.columns.toSeq, "left_anti")

@@ -11,6 +11,12 @@ package graft.operators
   * so an evicted entry simply reloads on next use — correctness is
   * unaffected, only reload I/O.
   *
+  * Keys carry the build id of the artifact behind the entry
+  * (`indexDir#part@buildId` for HNSW graphs, `indexDir/<table>@buildId`
+  * for the [[IndexArtifact]] tables), so a rebuild by any JVM makes the
+  * next search miss rather than serve the old index; nothing is ever
+  * invalidated for correctness.
+  *
   * Weights are caller-estimated footprint bytes. The budget comes from
   * a Spark conf key read via `SparkEnv` when available (works on both
   * driver and executors) with a per-cache default; entries larger than
@@ -107,12 +113,6 @@ private[graft] final class BoundedCache[V](
   def put(key: String, value: V)(weigh: V => Long): Unit =
     insert(key, value, math.max(0L, weigh(value)))
 
-  /** Drop one entry (artifact rebuilt/overwritten). */
-  def invalidate(key: String): Unit = synchronized {
-    val e = map.remove(key)
-    if (e != null) total -= e.weight
-  }
-
   /** Drop every entry whose key starts with `prefix`. */
   def invalidatePrefix(prefix: String): Unit = synchronized {
     val it = map.entrySet().iterator()
@@ -129,44 +129,4 @@ private[graft] final class BoundedCache[V](
     import scala.jdk.CollectionConverters._
     map.keySet().asScala.toSeq
   }
-}
-
-private[graft] object BoundedCache {
-  /** Conf key for the (small) centroid/codebook tables. */
-  val CentroidConfKey = "spark.graft.index.centroidCacheBytes"
-  val CentroidDefault = "1g"
-
-  /** ONE cache instance for every centroid/codebook table across
-    * IVF/PQ/SQ/BinaryIVF — a genuinely shared per-JVM budget (r22: the
-    * r21 wiring gave each of the 5 family caches its OWN `1g` bound, so
-    * worst-case retained memory was ~5× the configured budget while the
-    * comment claimed one). Families prefix their keys via [[view]].
-    */
-  private val centroids =
-    new BoundedCache[AnyRef](CentroidConfKey, CentroidDefault)
-
-  /** Typed, key-prefixed window onto the shared centroid cache. */
-  final class View[V <: AnyRef](prefix: String, weigh: V => Long) {
-    def getOrLoad(key: String)(load: => V): V =
-      centroids.getOrLoad(prefix + key)(load)(v => weigh(v.asInstanceOf[V]))
-        .asInstanceOf[V]
-    def put(key: String, value: V): Unit =
-      centroids.put(prefix + key, value)(v => weigh(v.asInstanceOf[V]))
-  }
-
-  def view[V <: AnyRef](prefix: String, weigh: V => Long): View[V] =
-    new View[V](prefix, weigh)
-
-  // shared-cache test hooks
-  private[graft] def centroidSize: Int = centroids.size
-  private[graft] def centroidTotal: Long = centroids.weightedTotal
-
-  def floatTableBytes(t: Array[Array[Float]]): Long =
-    16L + t.iterator.map(r => 56L + r.length.toLong * 4L).sum
-
-  def byteTableBytes(t: Array[Array[Byte]]): Long =
-    16L + t.iterator.map(r => 56L + r.length.toLong).sum
-
-  def codebookBytes(b: Array[Array[Array[Float]]]): Long =
-    16L + b.iterator.map(floatTableBytes).sum
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -21,8 +19,10 @@ import graft.functions.text
   *     a query's terms prune to ≤ |terms| bucket directories at the FILE
   *     level. A term's postings live entirely in its bucket, so per-term
   *     document frequency computed from the pruned read is table-global.
-  *   - `stats.json` — table-global N (doc count) and avgdl, stored at
-  *     build time (the reference ships exactly these to every node,
+  *   - `meta.json` — [[IndexArtifact]] envelope (version, type, buildId,
+  *     status) around [[Meta]]: table-global N (doc count), avgdl and the
+  *     token total, stored at build time and updated by appends (the
+  *     reference ships exactly these to every node,
   *     `collectStatisticForBM25Calculation`, `CommonUtils.h:107`).
   *
   * Query cost: ≤ |terms| bucket partitions (tiny fraction of the
@@ -37,7 +37,11 @@ import graft.functions.text
   */
 object FtsIndex {
 
-  case class Meta(nDocs: Long, avgDl: Double, nBuckets: Int, textCol: String)
+  /** `totalDl` is the exact token total that appends add to; `avgDl` is
+    * derived from it.
+    */
+  case class Meta(nDocs: Long, avgDl: Double, nBuckets: Int, textCol: String,
+      totalDl: Double)
 
   case class Entry(name: String, indexDir: String, sourcePath: String,
       textCol: String, status: String, nDocs: Long)
@@ -57,8 +61,6 @@ object FtsIndex {
         .select("name", "indexDir", "sourcePath", "textCol", "status", "nDocs")
     }
   }
-
-  private val metaCache = TrieMap.empty[String, Meta]
 
   /** Bucket routing must agree between build (executor) and search
     * (driver); `String.hashCode` is specified by the JLS, so it is stable
@@ -95,9 +97,8 @@ object FtsIndex {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$indexDir/postings")
 
-    val meta = Meta(nDocs, avgDl, nBuckets, textCol)
-    writeStats(indexDir, meta, nDocs * avgDl)
-    metaCache.put(indexDir, meta)
+    IndexArtifact.write(indexDir, "FTS",
+      Meta(nDocs, avgDl, nBuckets, textCol, nDocs * avgDl))
     val entry = Entry(indexName, indexDir, sourcePath, textCol, "BUILT", nDocs)
     Catalog.register(entry)
     entry
@@ -119,12 +120,6 @@ object FtsIndex {
         sort_array(collect_list(col("pos"))).as("positions"))
       .withColumn("bucket", bucketU(col("term")))
 
-  private def writeStats(indexDir: String, meta: Meta, totalDl: Double): Unit =
-    Files.writeString(Paths.get(s"$indexDir/stats.json"),
-      s"""{"version":2,"nDocs":${meta.nDocs},"avgDl":${meta.avgDl},""" +
-        s""""totalDl":$totalDl,"nBuckets":${meta.nBuckets},""" +
-        s""""textCol":"${meta.textCol}"}""" + "\n")
-
   /** Incremental maintenance — the reference's insert-time index update
     * (`VIBuilderUpdater.cpp` lifecycle: new parts get indexed without
     * rebuilding old ones). New documents' postings are APPENDED into the
@@ -140,7 +135,8 @@ object FtsIndex {
       idCol: String,
       textCol: String,
       indexDir: String): Meta = {
-    val meta = loadMeta(indexDir)
+    val art = IndexArtifact.read(indexDir, classOf[Meta])
+    val meta = art.meta
     val base = df
       .select(col(idCol).cast("long").as("doc_id"),
         text.tokenize(col(textCol)).as("toks"))
@@ -156,37 +152,16 @@ object FtsIndex {
       .write.mode("append").partitionBy("bucket")
       .parquet(s"$indexDir/postings")
 
-    val totalDl = loadTotalDl(indexDir, meta) + tdlNew
+    val totalDl = meta.totalDl + tdlNew
     val nDocs = meta.nDocs + nNew
-    val updated = meta.copy(nDocs = nDocs, avgDl = totalDl / nDocs)
-    writeStats(indexDir, updated, totalDl)
-    metaCache.put(indexDir, updated)
-    updated
+    IndexArtifact.write(indexDir, art.indexType,
+      meta.copy(nDocs = nDocs, avgDl = totalDl / nDocs, totalDl = totalDl),
+      art.buildId).meta
   }
 
-  private def loadTotalDl(indexDir: String, meta: Meta): Double = {
-    val s = Files.readString(Paths.get(s"$indexDir/stats.json"))
-    "\"totalDl\":(-?[0-9.eE+-]+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toDouble)
-      .getOrElse(meta.nDocs * meta.avgDl) // version-1 stats fallback
-  }
-
+  /** The index statistics persisted in `indexDir/meta.json`. */
   private[graft] def loadMeta(indexDir: String): Meta =
-    metaCache.getOrElseUpdate(indexDir, {
-      val p = Paths.get(s"$indexDir/stats.json")
-      require(Files.exists(p), s"fts index stats not found: $p")
-      val s = Files.readString(p)
-      def num(k: String): String =
-        ("\"" + k + "\":(-?[0-9.eE+-]+)").r.findFirstMatchIn(s)
-          .map(_.group(1))
-          .getOrElse(sys.error(s"stats.json missing field '$k' at $p"))
-      def str(k: String): String =
-        ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(s)
-          .map(_.group(1))
-          .getOrElse(sys.error(s"stats.json missing field '$k' at $p"))
-      Meta(num("nDocs").toLong, num("avgDl").toDouble,
-        num("nBuckets").toDouble.toInt, str("textCol"))
-    })
+    IndexArtifact.read(indexDir, classOf[Meta]).meta
 
   /** BM25 top-K against the postings index. One plan, no driver job:
     * the pruned postings read lists only the query terms' bucket

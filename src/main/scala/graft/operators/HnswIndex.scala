@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorKernels
@@ -24,11 +24,18 @@ import graft.functions.VectorKernels
   *    merge is the same `TakeOrderedAndProject` every other top-K uses.
   *    Per-part candidates = k (the reference merges per-part top-K the
   *    same way).
+  *  - **Layout** under `indexDir`: `graph/part_id=N/` graph rows,
+  *    `smallparts/` raw vectors of parts under the min-rows gate,
+  *    `sq_params/` (HNSWSQ) or `codebooks/` (HNSWPQ), and `meta.json`, the
+  *    [[IndexArtifact]] envelope (version, type, buildId, status) around
+  *    [[Meta]]. Cached graphs are keyed `indexDir#part@buildId`.
   *
   * Determinism: level draws are seeded per partition, so builds are
   * reproducible.
   */
 object HnswIndex {
+
+  case class Meta(metric: String, idCol: String, vecCol: String, nRows: Long)
 
   case class GraphRow(part_id: Int, node_idx: Int, id: Long,
       vec: Array[Float], neighbors: Seq[Seq[Int]])
@@ -427,8 +434,6 @@ object HnswIndex {
         .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/sq_params")
     } else graphDs.toDF().write.mode("overwrite").partitionBy("part_id")
       .parquet(s"$indexDir/graph")
-    // a rebuild over an existing dir must not serve the old graphs
-    graphCache.invalidatePrefix(s"$indexDir#")
     if (gated) parted.unpersist(blocking = false)
     // per-part segment states (system.vector_index_segments analog);
     // gated-out parts report SMALL_PART with their raw row counts
@@ -448,6 +453,7 @@ object HnswIndex {
         IvfIndex.SegmentEntry(indexName, pid, "SMALL_PART", rows))
     }
     val n = perPart.map(_._2).sum + smallPartCounts.values.sum
+    IndexArtifact.write(indexDir, indexType, Meta(metric, idCol, vecCol, n))
     val entry = IvfIndex.IndexEntry(indexName, indexDir, sourcePath, vecCol,
       indexType, metric, "BUILT", n, idCol = idCol)
     IvfIndex.Catalog.register(entry)
@@ -480,13 +486,9 @@ object HnswIndex {
       numPartitions: Option[Int] = None,
       minRowsToBuild: Long = 0L): Unit = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/graph")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("part_id="))
-      .map(_.getPath.getName.stripPrefix("part_id=").toInt)
-    require(existing.nonEmpty, s"no existing graph under $root — build first")
-    val offset = existing.max + 1
+    val l = layout(spark, indexDir)
+    require(l.parts.nonEmpty, s"no existing graph under $indexDir/graph — build first")
+    val offset = l.parts.map(_._1).max + 1
     IvfIndex.Catalog.logEvent(indexName, "APPEND_START", s"offset=$offset")
 
     val base = batch.select(col(idCol).cast("long"), col(vecCol))
@@ -519,24 +521,20 @@ object HnswIndex {
         b.rows(pid)
       }
     }
-    // Re-encode with stored quantization params when present.
-    val hasPq = fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/codebooks"))
-    val hasSq = !hasPq &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/sq_params"))
-    val out =
-      if (hasPq) {
-        val bcB = spark.sparkContext.broadcast(PqIndex.loadBooks(spark, indexDir))
+    // Re-encode with the stored quantization params.
+    val out = l.art.indexType match {
+      case "HNSWPQ" =>
+        val bcB = spark.sparkContext.broadcast(IndexArtifact.Codebooks.load(spark, l.art))
         graphDs.map(r => (r.part_id, r.node_idx, r.id,
           PqIndex.encode(r.vec, bcB.value), r.neighbors))
           .toDF("part_id", "node_idx", "id", "qvec", "neighbors")
-      } else if (hasSq) {
-        val p = spark.read.parquet(s"$indexDir/sq_params").head()
-        val bcS = spark.sparkContext.broadcast(p.getSeq[Float](0).toArray)
-        val bcO = spark.sparkContext.broadcast(p.getSeq[Float](1).toArray)
+      case "HNSWSQ" =>
+        val bcP = spark.sparkContext.broadcast(IndexArtifact.SqParams.load(spark, l.art))
         graphDs.map(r => (r.part_id, r.node_idx, r.id,
-          VectorKernels.sqEncode(r.vec, bcS.value, bcO.value), r.neighbors))
+          VectorKernels.sqEncode(r.vec, bcP.value._1, bcP.value._2), r.neighbors))
           .toDF("part_id", "node_idx", "id", "qvec", "neighbors")
-      } else graphDs.toDF()
+      case _ => graphDs.toDF()
+    }
     out.write.mode("append").partitionBy("part_id").parquet(s"$indexDir/graph")
 
     if (gated) parted.unpersist(blocking = false)
@@ -553,6 +551,8 @@ object HnswIndex {
         IvfIndex.SegmentEntry(indexName, pid, "SMALL_PART", rows))
     }
     val added = appended.map(_._2).sum + smallPartCounts.values.sum
+    IndexArtifact.write(indexDir, l.art.indexType,
+      l.art.meta.copy(nRows = l.art.meta.nRows + added), l.art.buildId)
     IvfIndex.Catalog.lookup(indexName).foreach { e =>
       IvfIndex.Catalog.register(e.copy(nRows = e.nRows + added))
     }
@@ -614,25 +614,31 @@ object HnswIndex {
   private val SmallPartsSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "part_id INT, id BIGINT, vec ARRAY<FLOAT>")
 
-  /** Quantized graphs (HNSWSQ: int8 + sq_params; HNSWPQ: m-byte codes +
-    * codebooks) are dequantized once per JVM at graph-load time — the
-    * cache makes this a one-off per part.
+  /** What a search needs from one index dir: its metadata, its graph
+    * parts `(part id, dir)`, its small-parts dir when one exists, and the
+    * decoder of quantized graph rows (HNSWSQ: int8 + sq_params; HNSWPQ:
+    * m-byte codes + codebooks), which runs once per part at graph-load
+    * time.
     */
-  private def decoder(
-      spark: SparkSession, indexDir: String,
-      fs: org.apache.hadoop.fs.FileSystem): Option[Array[Byte] => Array[Float]] = {
-    val pqBooks: Option[Array[Array[Array[Float]]]] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/codebooks")))
-        Some(PqIndex.loadBooks(spark, indexDir))
-      else None
-    val sqParams: Option[(Array[Float], Array[Float])] =
-      if (pqBooks.isEmpty &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/sq_params"))) {
-        val r = spark.read.parquet(s"$indexDir/sq_params").head()
-        Some((r.getSeq[Float](0).toArray, r.getSeq[Float](1).toArray))
-      } else None
-    (pqBooks, sqParams) match {
-      case (Some(books), _) =>
+  private final case class Layout(
+      art: IndexArtifact.Artifact[Meta],
+      parts: Seq[(Int, String)],
+      small: Option[String],
+      decode: Option[Array[Byte] => Array[Float]]) {
+    def graphKey(pid: Int): String = s"${art.dir}#$pid@${art.buildId}"
+  }
+
+  private def layout(spark: SparkSession, indexDir: String): Layout = {
+    val art = IndexArtifact.read(indexDir, classOf[Meta])
+    val root = new org.apache.hadoop.fs.Path(s"$indexDir/graph")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("part_id="))
+      .map(st => (st.getPath.getName.stripPrefix("part_id=").toInt, st.getPath.toString))
+    val small = new org.apache.hadoop.fs.Path(s"$indexDir/smallparts")
+    val decode: Option[Array[Byte] => Array[Float]] = art.indexType match {
+      case "HNSWPQ" =>
+        val books = IndexArtifact.Codebooks.load(spark, art)
         val sub = books.head.head.length
         Some { codes =>
           val v = new Array[Float](codes.length * sub)
@@ -643,7 +649,8 @@ object HnswIndex {
           }
           v
         }
-      case (_, Some((scale, offset))) =>
+      case "HNSWSQ" =>
+        val (scale, offset) = IndexArtifact.SqParams.load(spark, art)
         Some { codes =>
           val v = new Array[Float](codes.length)
           var j = 0
@@ -653,6 +660,43 @@ object HnswIndex {
           v
         }
       case _ => None
+    }
+    Layout(art, parts, Some(small.toString).filter(_ => fs.exists(small)), decode)
+  }
+
+  private def searchLayout(spark: SparkSession, indexDir: String): Layout = {
+    val l = layout(spark, indexDir)
+    require(l.parts.nonEmpty || l.small.nonEmpty,
+      s"no graph partitions or small parts under $indexDir")
+    l
+  }
+
+  /** One single-task scan per graph part (`coalesce(1)` — a narrow
+    * dependency, no Exchange) running `f(graphKey, nodes)` inside the
+    * part's task. Quantized rows decode lazily, so only a graph-cache miss
+    * pays for decoding.
+    */
+  private def mapParts[T: Encoder](spark: SparkSession, l: Layout)(
+      f: (String, Iterator[GraphNode]) => Iterator[T]): Seq[Dataset[T]] = {
+    import spark.implicits._
+    l.parts.map { case (pid, path) =>
+      val key = l.graphKey(pid)
+      l.decode match {
+        case Some(dec) =>
+          spark.read.schema(GraphSchemaQuant).parquet(path)
+            .select(col("node_idx"), col("id"), col("qvec"), col("neighbors"))
+            .as[(Int, Long, Array[Byte], Seq[Seq[Int]])]
+            .coalesce(1)
+            .mapPartitions(rows => f(key, rows.map { case (ni, id, codes, nbrs) =>
+              GraphNode(ni, id, dec(codes), nbrs)
+            }))
+        case None =>
+          spark.read.schema(GraphSchemaFlat).parquet(path)
+            .select(col("node_idx"), col("id"), col("vec"), col("neighbors"))
+            .as[GraphNode]
+            .coalesce(1)
+            .mapPartitions(rows => f(key, rows))
+      }
     }
   }
 
@@ -680,64 +724,27 @@ object HnswIndex {
       accept: Option[Long => Boolean] = None): DataFrame = {
     import spark.implicits._
     val q = qvec.toArray
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/graph")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partDirs =
-      (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("part_id="))
-        // (path, mtime): the mtime rides into the graph-cache key as a
-        // build tag, so a REBUILT index dir misses in EVERY JVM's cache
-        // (r21 only invalidated the building JVM's — r21 ADVICE)
-        .map(st => (st.getPath, st.getModificationTime))
+    val l = searchLayout(spark, indexDir)
+    val filt = accept
+    val perPart = mapParts(spark, l) { (key, rows) =>
+      loadGraph(key, rows, metric)
+        .search(q, k, ef, filt.getOrElse((_: Long) => true)).iterator
+    }
     // SMALL_PART segments (parts under min_rows_to_build_vector_index at
     // build time) hold raw vectors in smallparts/ — brute-forced exactly,
     // the reference's behavior for index-less parts.
-    val smallPath = new org.apache.hadoop.fs.Path(s"$indexDir/smallparts")
-    val hasSmall = fs.exists(smallPath)
-    require(partDirs.nonEmpty || hasSmall,
-      s"no graph partitions or small parts under $indexDir")
-    val filt = accept
-    val decode = decoder(spark, indexDir, fs)
-    val perPart = partDirs.map { case (p, mtime) =>
-      val pid = p.getName.stripPrefix("part_id=").toInt
-      decode match {
-        case Some(dec) =>
-          spark.read.schema(GraphSchemaQuant).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("qvec"), col("neighbors"))
-            .as[(Int, Long, Array[Byte], Seq[Seq[Int]])]
-            .coalesce(1)
-            .mapPartitions { rows =>
-              val nodes = rows.map { case (ni, id, codes, nbrs) =>
-                GraphNode(ni, id, dec(codes), nbrs)
-              }
-              val g = loadGraph(s"$indexDir#$pid@$mtime", nodes, metric)
-              g.search(q, k, ef, filt.getOrElse((_: Long) => true)).iterator
-            }
-        case None =>
-          spark.read.schema(GraphSchemaFlat).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("vec"), col("neighbors"))
-            .as[GraphNode]
-            .coalesce(1)
-            .mapPartitions { rows =>
-              val g = loadGraph(s"$indexDir#$pid@$mtime", rows, metric)
-              g.search(q, k, ef, filt.getOrElse((_: Long) => true)).iterator
-            }
-      }
+    val smallHits: Option[DataFrame] = l.small.map { small =>
+      val acceptUdf = filt.map(f => udf((id: Long) => f(id)))
+      val sp = spark.read.schema(SmallPartsSchema).parquet(small)
+      val filtered = acceptUdf.map(u => sp.filter(u(col("id")))).getOrElse(sp)
+      filtered
+        .select(col("id"),
+          graft.functions.distances.distance(metric)(col("vec"), typedLit(q.toSeq))
+            .as("d"))
+        .orderBy(col("d"), col("id")).limit(k)
     }
-    val smallHits: Option[DataFrame] =
-      if (!hasSmall) None
-      else {
-        val acceptUdf = filt.map(f => udf((id: Long) => f(id)))
-        val sp = spark.read.schema(SmallPartsSchema).parquet(smallPath.toString)
-        val filtered = acceptUdf.map(u => sp.filter(u(col("id")))).getOrElse(sp)
-        Some(filtered
-          .select(col("id"),
-            graft.functions.distances.distance(metric)(col("vec"), typedLit(q.toSeq))
-              .as("d"))
-          .orderBy(col("d"), col("id")).limit(k))
-      }
     val graphHits: Option[DataFrame] =
-      if (partDirs.isEmpty) None
+      if (perPart.isEmpty) None
       else Some(perPart.reduce(_ union _).toDF("id", "d"))
     (graphHits.toSeq ++ smallHits.toSeq)
       .reduce(_ unionAll _)
@@ -768,55 +775,19 @@ object HnswIndex {
       metric: String = "l2"): DataFrame = {
     import spark.implicits._
     val q = qvec.toArray
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/graph")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partDirs =
-      (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("part_id="))
-        // (path, mtime): the mtime rides into the graph-cache key as a
-        // build tag, so a REBUILT index dir misses in EVERY JVM's cache
-        // (r21 only invalidated the building JVM's — r21 ADVICE)
-        .map(st => (st.getPath, st.getModificationTime))
-    val smallPath = new org.apache.hadoop.fs.Path(s"$indexDir/smallparts")
-    val hasSmall = fs.exists(smallPath)
-    require(partDirs.nonEmpty || hasSmall,
-      s"no graph partitions or small parts under $indexDir")
-    val decode = decoder(spark, indexDir, fs)
-    val perPart = partDirs.map { case (p, mtime) =>
-      val pid = p.getName.stripPrefix("part_id=").toInt
-      decode match {
-        case Some(dec) =>
-          spark.read.schema(GraphSchemaQuant).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("qvec"), col("neighbors"))
-            .as[(Int, Long, Array[Byte], Seq[Seq[Int]])]
-            .coalesce(1)
-            .mapPartitions { rows =>
-              val nodes = rows.map { case (ni, id, codes, nbrs) =>
-                GraphNode(ni, id, dec(codes), nbrs)
-              }
-              val g = loadGraph(s"$indexDir#$pid@$mtime", nodes, metric)
-              g.searchPool(q, k, ef).iterator
-            }
-        case None =>
-          spark.read.schema(GraphSchemaFlat).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("vec"), col("neighbors"))
-            .as[GraphNode]
-            .coalesce(1)
-            .mapPartitions { rows =>
-              val g = loadGraph(s"$indexDir#$pid@$mtime", rows, metric)
-              g.searchPool(q, k, ef).iterator
-            }
-      }
+    val l = searchLayout(spark, indexDir)
+    val perPart = mapParts(spark, l) { (key, rows) =>
+      loadGraph(key, rows, metric).searchPool(q, k, ef).iterator
     }
-    val smallHits: Option[DataFrame] =
-      if (!hasSmall) None
-      else Some(spark.read.schema(SmallPartsSchema).parquet(smallPath.toString)
+    val smallHits: Option[DataFrame] = l.small.map { small =>
+      spark.read.schema(SmallPartsSchema).parquet(small)
         .select(col("id"),
           graft.functions.distances.distance(metric)(col("vec"), typedLit(q.toSeq))
             .as("d"),
-          col("vec")))
+          col("vec"))
+    }
     val graphHits: Option[DataFrame] =
-      if (partDirs.isEmpty) None
+      if (perPart.isEmpty) None
       else Some(perPart.reduce(_ union _).toDF("id", "d", "vec"))
     (graphHits.toSeq ++ smallHits.toSeq).reduce(_ unionAll _)
   }
@@ -876,20 +847,7 @@ object HnswIndex {
       nRowsTotal: Long): DataFrame = {
     import spark.implicits._
     val q = qvec.toArray
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/graph")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partDirs =
-      (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("part_id="))
-        // (path, mtime): the mtime rides into the graph-cache key as a
-        // build tag, so a REBUILT index dir misses in EVERY JVM's cache
-        // (r21 only invalidated the building JVM's — r21 ADVICE)
-        .map(st => (st.getPath, st.getModificationTime))
-    val smallPath = new org.apache.hadoop.fs.Path(s"$indexDir/smallparts")
-    val hasSmall = fs.exists(smallPath)
-    require(partDirs.nonEmpty || hasSmall,
-      s"no graph partitions or small parts under $indexDir")
-    val decode = decoder(spark, indexDir, fs)
+    val l = searchLayout(spark, indexDir)
     val cap = maxIds
     // The sorted accept-id mask, built in pure (lazy) RDD ops — an
     // SQL-side aggregation would let AQE materialize its shuffle stage
@@ -913,23 +871,12 @@ object HnswIndex {
         java.util.Arrays.sort(m)
         Iterator.single(m)
       }
-    val perPart = partDirs.map { case (p, mtime) =>
-      val pid = p.getName.stripPrefix("part_id=").toInt
-      val nodesRdd: org.apache.spark.rdd.RDD[GraphNode] = decode match {
-        case Some(dec) =>
-          spark.read.schema(GraphSchemaQuant).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("qvec"), col("neighbors"))
-            .as[(Int, Long, Array[Byte], Seq[Seq[Int]])]
-            .coalesce(1).rdd
-            .map { case (ni, id, codes, nbrs) => GraphNode(ni, id, dec(codes), nbrs) }
-        case None =>
-          spark.read.schema(GraphSchemaFlat).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("vec"), col("neighbors"))
-            .as[GraphNode].coalesce(1).rdd
-      }
-      nodesRdd.zipPartitions(maskRdd) { (rows, mit) =>
+    val nodes = mapParts(spark, l)((_, rows) => rows)
+    val perPart = l.parts.zip(nodes).map { case ((pid, _), part) =>
+      val key = l.graphKey(pid)
+      part.rdd.zipPartitions(maskRdd) { (rows, mit) =>
         val mask = if (mit.hasNext) mit.next() else Array.empty[Long]
-        val g = loadGraph(s"$indexDir#$pid@$mtime", rows, metric)
+        val g = loadGraph(key, rows, metric)
         if (mask.length > cap) {
           // overflow: mask truncated → cannot filter exactly here; the
           // runtime-gated overflow branch below contributes ALL
@@ -958,14 +905,14 @@ object HnswIndex {
     // SMALL_PART leg: raw vectors, exact — qualifying ids via a lazy
     // semi-join against the FULL accept frame (no cap needed: a join
     // never materializes the set)
-    val smallHits: Option[DataFrame] =
-      if (!hasSmall) None
-      else Some(spark.read.schema(SmallPartsSchema).parquet(smallPath.toString)
+    val smallHits: Option[DataFrame] = l.small.map { small =>
+      spark.read.schema(SmallPartsSchema).parquet(small)
         .join(acceptDf, Seq("id"), "left_semi")
         .select(col("id"),
           graft.functions.distances.distance(metric)(col("vec"), typedLit(q.toSeq))
             .as("d"))
-        .orderBy(col("d"), col("id")).limit(numCand))
+        .orderBy(col("d"), col("id")).limit(numCand)
+    }
     // overflow branch: when (and only when) the accept set overflowed
     // the mask cap, ALL qualifying ids become candidates — the
     // empty-or-everything gate is a runtime cross join against a lazy
@@ -999,46 +946,11 @@ object HnswIndex {
     import spark.implicits._
     require(queries.nonEmpty, "batchSearch: empty query batch")
     val qArr = queries.map(_.toArray).toArray
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/graph")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partDirs =
-      (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("part_id="))
-        // (path, mtime): the mtime rides into the graph-cache key as a
-        // build tag, so a REBUILT index dir misses in EVERY JVM's cache
-        // (r21 only invalidated the building JVM's — r21 ADVICE)
-        .map(st => (st.getPath, st.getModificationTime))
-    val smallPath = new org.apache.hadoop.fs.Path(s"$indexDir/smallparts")
-    val hasSmall = fs.exists(smallPath)
-    require(partDirs.nonEmpty || hasSmall,
-      s"no graph partitions or small parts under $indexDir")
-    val decode = decoder(spark, indexDir, fs)
-    val perPart = partDirs.map { case (p, mtime) =>
-      val pid = p.getName.stripPrefix("part_id=").toInt
-      def searchAll(g: Graph): Iterator[(Int, Long, Float)] =
-        qArr.iterator.zipWithIndex.flatMap { case (q, qi) =>
-          g.search(q, k, ef).iterator.map { case (id, d) => (qi, id, d) }
-        }
-      decode match {
-        case Some(dec) =>
-          spark.read.schema(GraphSchemaQuant).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("qvec"), col("neighbors"))
-            .as[(Int, Long, Array[Byte], Seq[Seq[Int]])]
-            .coalesce(1)
-            .mapPartitions { rows =>
-              val nodes = rows.map { case (ni, id, codes, nbrs) =>
-                GraphNode(ni, id, dec(codes), nbrs)
-              }
-              searchAll(loadGraph(s"$indexDir#$pid@$mtime", nodes, metric))
-            }
-        case None =>
-          spark.read.schema(GraphSchemaFlat).parquet(p.toString)
-            .select(col("node_idx"), col("id"), col("vec"), col("neighbors"))
-            .as[GraphNode]
-            .coalesce(1)
-            .mapPartitions { rows =>
-              searchAll(loadGraph(s"$indexDir#$pid@$mtime", rows, metric))
-            }
+    val l = searchLayout(spark, indexDir)
+    val perPart = mapParts(spark, l) { (key, rows) =>
+      val g = loadGraph(key, rows, metric)
+      qArr.iterator.zipWithIndex.flatMap { case (q, qi) =>
+        g.search(q, k, ef).iterator.map { case (id, d) => (qi, id, d) }
       }
     }
     val graphHits: Option[DataFrame] =
@@ -1046,18 +958,16 @@ object HnswIndex {
       else Some(perPart.reduce(_ union _).toDF("query_idx", "id", "d"))
     // SMALL_PART leg: brute-score the raw vectors against the broadcast
     // query frame (tiny by the gate's definition)
-    val smallHits: Option[DataFrame] =
-      if (!hasSmall) None
-      else {
-        val qDf = spark
-          .createDataFrame(queries.zipWithIndex.map { case (v, i) => (i, v) })
-          .toDF("query_idx", "__qv")
-        Some(spark.read.schema(SmallPartsSchema).parquet(smallPath.toString)
-          .crossJoin(broadcast(qDf))
-          .select(col("query_idx"), col("id"),
-            graft.functions.distances.distance(metric)(col("vec"), col("__qv"))
-              .as("d")))
-      }
+    val smallHits: Option[DataFrame] = l.small.map { small =>
+      val qDf = spark
+        .createDataFrame(queries.zipWithIndex.map { case (v, i) => (i, v) })
+        .toDF("query_idx", "__qv")
+      spark.read.schema(SmallPartsSchema).parquet(small)
+        .crossJoin(broadcast(qDf))
+        .select(col("query_idx"), col("id"),
+          graft.functions.distances.distance(metric)(col("vec"), col("__qv"))
+            .as("d"))
+    }
     val all = (graphHits.toSeq ++ smallHits.toSeq).reduce(_ unionAll _)
     VectorSearch.perQueryTopK(all, k, "d",
       VectorSearch.isDescending(metric), tieBreak)

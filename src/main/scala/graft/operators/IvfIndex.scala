@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -16,7 +14,8 @@ import graft.functions.VectorKernels
   * `MergeTreeVSManager::vectorScan`).
   *
   * Layout (all artifacts are plain parquet/JSON under `indexDir`):
-  *   - `meta.json` — metric, nLists, dim, source path, status
+  *   - `meta.json` — [[IndexArtifact]] envelope (version, type, buildId,
+  *     status) around [[Meta]]: metric, nLists, dim, nRows, source path
   *   - `centroids.parquet` — (list_id, centroid float[])
   *   - `lists/` — the indexed rows partitioned BY `list_id` (hive-style
   *     directories), so an nprobe search prunes to nprobe/nLists of the
@@ -27,8 +26,8 @@ import graft.functions.VectorKernels
   * list-partitioned write are fully distributed, and search reads only
   * the probed partitions. The searched-side plan is the same
   * TakeOrderedAndProject top-K as brute force, over 1/nLists·nprobe of
-  * the files. Per-JVM centroid cache mirrors the reference's
-  * `VICacheManager`.
+  * the files. Centroids are cached per JVM under the index's build id
+  * ([[IndexArtifact]], the reference's `VICacheManager`).
   */
 object IvfIndex {
 
@@ -109,44 +108,11 @@ object IvfIndex {
     }
   }
 
-  // per-JVM centroid cache (VICacheManager.cpp analog) — size-bounded
-  // like the reference's cache; evicted tables reload from the
-  // centroids/ parquet artifact on next use
-  private val centroidCache = BoundedCache.view[Array[Array[Float]]](
-    "ivf#", BoundedCache.floatTableBytes)
-  private val metaCache = TrieMap.empty[String, Meta]
+  private[graft] def artifact(indexDir: String): IndexArtifact.Artifact[Meta] =
+    IndexArtifact.read(indexDir, classOf[Meta])
 
-  /** Load index metadata, reading back the persisted `meta.json` when this
-    * JVM didn't build the index (fresh-session search against an existing
-    * indexDir). Fails fast on a missing/corrupt meta file rather than
-    * silently falling back to defaults.
-    */
-  private[graft] def loadMeta(indexDir: String): Meta =
-    metaCache.getOrElseUpdate(indexDir, {
-      val p = Paths.get(s"$indexDir/meta.json")
-      require(Files.exists(p), s"vector index meta not found: $p")
-      val s = Files.readString(p)
-      def str(k: String): String =
-        ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(s)
-          .map(_.group(1))
-          .getOrElse(sys.error(s"meta.json missing string field '$k' at $p"))
-      def num(k: String): Long =
-        ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s)
-          .map(_.group(1).toLong)
-          .getOrElse(sys.error(s"meta.json missing numeric field '$k' at $p"))
-      // Writer/reader drift fails loudly: a meta file written by a NEWER
-      // format version than this reader understands is rejected instead of
-      // being regex-scraped into silently-wrong fields.
-      val version = "\"version\":(\\d+)".r.findFirstMatchIn(s)
-        .map(_.group(1).toInt).getOrElse(0)
-      require(version <= 1,
-        s"meta.json at $p is format version $version; this reader understands <= 1")
-      val sourcePath =
-        "\"sourcePath\":\"([^\"]*)\"".r.findFirstMatchIn(s)
-          .map(_.group(1)).getOrElse("") // pre-version-1 files
-      Meta(str("metric"), num("nLists").toInt, num("dim").toInt, num("nRows"),
-        sourcePath, str("vecCol"), str("status"))
-    })
+  /** The index metadata persisted in `indexDir/meta.json`. */
+  private[graft] def loadMeta(indexDir: String): Meta = artifact(indexDir).meta
 
   /** Centroid-to-query distance in the INDEX metric — probe-list selection
     * must rank by the same metric the in-list ranking uses, or cosine/IP
@@ -330,13 +296,9 @@ object IvfIndex {
       .toDF("list_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
 
-    val meta = Meta(metric, nLists, dim, n, sourcePath, vecCol, "BUILT")
-    Files.writeString(Paths.get(s"$indexDir/meta.json"),
-      s"""{"version":1,"metric":"${meta.metric}","nLists":${meta.nLists},""" +
-        s""""dim":${meta.dim},"nRows":${meta.nRows},"vecCol":"${meta.vecCol}",""" +
-        s""""sourcePath":"${meta.sourcePath}","status":"BUILT"}""")
-    metaCache.put(indexDir, meta)
-    centroidCache.put(indexDir, centroids)
+    val art = IndexArtifact.write(indexDir, "IVFFLAT",
+      Meta(metric, nLists, dim, n, sourcePath, vecCol, "BUILT"))
+    IndexArtifact.Centroids.put(art, centroids)
 
     val entry = IndexEntry(indexName, indexDir, sourcePath, vecCol, "IVFFLAT",
       metric, "BUILT", n, defaultNprobe)
@@ -360,8 +322,9 @@ object IvfIndex {
       indexDir: String): IndexEntry = {
     val entry = Catalog.lookup(indexName)
       .getOrElse(sys.error(s"unknown index $indexName"))
-    val meta = loadMeta(indexDir)
-    val centroids = loadCentroids(spark, indexDir)
+    val art = artifact(indexDir)
+    val meta = art.meta
+    val centroids = IndexArtifact.Centroids.load(spark, art)
     val nNew = df.count()
     if (nNew == 0) return entry
 
@@ -380,24 +343,27 @@ object IvfIndex {
       Catalog.registerSegment(SegmentEntry(indexName, i, state, rows))
     }
     val n = meta.nRows + nNew
-    val updatedMeta = meta.copy(nRows = n)
-    Files.writeString(Paths.get(s"$indexDir/meta.json"),
-      s"""{"version":1,"metric":"${meta.metric}","nLists":${meta.nLists},""" +
-        s""""dim":${meta.dim},"nRows":$n,"vecCol":"${meta.vecCol}",""" +
-        s""""sourcePath":"${meta.sourcePath}","status":"BUILT"}""")
-    metaCache.put(indexDir, updatedMeta)
+    IndexArtifact.write(indexDir, art.indexType, meta.copy(nRows = n), art.buildId)
     val updated = entry.copy(nRows = n, status = "BUILT")
     Catalog.register(updated)
     Catalog.logEvent(indexName, "APPEND", s"added=$nNew nRows=$n")
     updated
   }
 
-  private[graft] def loadCentroids(spark: SparkSession, indexDir: String): Array[Array[Float]] =
-    centroidCache.getOrLoad(indexDir) {
-      spark.read.parquet(s"$indexDir/centroids")
-        .orderBy("list_id").collect()
-        .map(_.getSeq[Float](1).toArray)
-    }
+  /** The `nprobe` lists whose centroids are nearest `q` under `metric`,
+    * nearest first. The sort is stable, so a tie goes to the lower list id
+    * and every caller probes the same set.
+    */
+  private[graft] def nearestLists(
+      centroids: Array[Array[Float]], metric: String, q: Array[Float],
+      nprobe: Int): IndexedSeq[Int] = {
+    val d = centroids.map(centroidDist(metric, _, q))
+    d.indices.sortBy(d(_)).take(nprobe)
+  }
+
+  private def probes(spark: SparkSession, art: IndexArtifact.Artifact[Meta],
+      qvec: Seq[Float], nprobe: Int, metric: String): IndexedSeq[Int] =
+    nearestLists(IndexArtifact.Centroids.load(spark, art), metric, qvec.toArray, nprobe)
 
   /** The probe set [[search]] uses for this query: the nprobe nearest
     * centroid lists under the index metric. Public so a replay oracle can
@@ -411,12 +377,8 @@ object IvfIndex {
       qvec: Seq[Float],
       nprobe: Int,
       metricOverride: Option[String] = None): Seq[Int] = {
-    val centroids = loadCentroids(spark, indexDir)
-    val metric = metricOverride.getOrElse(loadMeta(indexDir).metric)
-    val q = qvec.toArray
-    centroids.zipWithIndex
-      .map { case (c, i) => (centroidDist(metric, c, q), i) }
-      .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2).toSeq
+    val art = artifact(indexDir)
+    probes(spark, art, qvec, nprobe, metricOverride.getOrElse(art.meta.metric))
   }
 
   /** nprobe search: probe the nearest nprobe centroid lists, scan only
@@ -438,10 +400,10 @@ object IvfIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val metric = metricOverride.getOrElse(loadMeta(indexDir).metric)
-    val probes = probeSet(spark, indexDir, qvec, nprobe, metricOverride)
-    searchLists(spark, indexDir, qvec, k, probes, metric, preFilter,
-      distName, tieBreak, deletes)
+    val art = artifact(indexDir)
+    val metric = metricOverride.getOrElse(art.meta.metric)
+    searchLists(spark, art, qvec, k, probes(spark, art, qvec, nprobe, metric),
+      metric, preFilter, distName, tieBreak, deletes)
   }
 
   /** `batch_distance()` THROUGH the index: per-query probe lists are
@@ -463,18 +425,15 @@ object IvfIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val centroids = loadCentroids(spark, indexDir)
-    val meta = loadMeta(indexDir)
+    val art = artifact(indexDir)
+    val meta = art.meta
     val metric = metricOverride.getOrElse(meta.metric)
-    val probes: Seq[(Int, Int)] = queries.zipWithIndex.flatMap { case (q, qi) =>
-      val qa = q.toArray
-      centroids.zipWithIndex
-        .map { case (c, i) => (centroidDist(metric, c, qa), i) }
-        .sortBy(_._1).take(math.min(nprobe, centroids.length))
-        .map { case (_, l) => (qi, l) }
+    val centroids = IndexArtifact.Centroids.load(spark, art)
+    val probePairs: Seq[(Int, Int)] = queries.zipWithIndex.flatMap { case (q, qi) =>
+      nearestLists(centroids, metric, q.toArray, nprobe).map(l => (qi, l))
     }
-    val listSet = probes.map(_._2).distinct
-    val probeDf = spark.createDataFrame(probes).toDF("query_idx", "list_id")
+    val listSet = probePairs.map(_._2).distinct
+    val probeDf = spark.createDataFrame(probePairs).toDF("query_idx", "list_id")
     val qDf = spark
       .createDataFrame(queries.zipWithIndex.map { case (v, i) => (i, v) })
       .toDF("query_idx", "query_vec")
@@ -517,16 +476,11 @@ object IvfIndex {
       metricOverride: Option[String] = None,
       distName: String = "d",
       tieBreak: Seq[Column] = Nil): DataFrame = {
-    val centroids = loadCentroids(spark, indexDir)
-    val meta = loadMeta(indexDir)
-    val metric = metricOverride.getOrElse(meta.metric)
-    val q = qvec.toArray
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (centroidDist(metric, c, q), i) }
-      .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
+    val art = artifact(indexDir)
+    val metric = metricOverride.getOrElse(art.meta.metric)
     val lists = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-      probes.toIndexedSeq)
-    VectorSearch.topK(lists.join(other, joinCond), col(meta.vecCol), qvec,
+      probes(spark, art, qvec, nprobe, metric))
+    VectorSearch.topK(lists.join(other, joinCond), col(art.meta.vecCol), qvec,
         k, metric, None, distName, tieBreak)
       .drop("list_id")
   }
@@ -548,27 +502,28 @@ object IvfIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val candidates = search(spark, indexDir, qvec, numReorder, nprobe,
-      metricOverride, preFilter, "__stage1_d", tieBreak, deletes).drop("__stage1_d")
-    val metric = metricOverride.getOrElse(loadMeta(indexDir).metric)
-    val vecCol = loadMeta(indexDir).vecCol
-    VectorSearch.topK(candidates, col(vecCol), qvec, k, metric, None,
+    val art = artifact(indexDir)
+    val metric = metricOverride.getOrElse(art.meta.metric)
+    val candidates = searchLists(spark, art, qvec, numReorder,
+        probes(spark, art, qvec, nprobe, metric), metric, preFilter,
+        "__stage1_d", tieBreak, deletes)
+      .drop("__stage1_d")
+    VectorSearch.topK(candidates, col(art.meta.vecCol), qvec, k, metric, None,
       distName, tieBreak)
   }
 
   private def searchLists(
       spark: SparkSession,
-      indexDir: String,
+      art: IndexArtifact.Artifact[Meta],
       qvec: Seq[Float],
       k: Int,
-      probes: Seq[Int],
+      probes: IndexedSeq[Int],
       metric: String,
       preFilter: Option[Column],
       distName: String,
       tieBreak: Seq[Column],
       deletes: Option[DataFrame] = None): DataFrame = {
-    val pruned = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-      probes.toIndexedSeq)
+    val pruned = ProbedPartitions.read(spark, s"${art.dir}/lists", "list_id", probes)
     // Lightweight-delete mask applied INSIDE the index search (reference
     // `00037_mqvs_multiple_lwd.sql`): anti-join the probed lists against
     // the deleted-id set on its (single) id column. No explicit broadcast
@@ -580,7 +535,7 @@ object IvfIndex {
         s"deletes must be a single id column, got ${idCols.mkString(",")}")
       pruned.join(d, idCols, "left_anti")
     }.getOrElse(pruned)
-    VectorSearch.topK(lists, col(loadMeta(indexDir).vecCol), qvec, k, metric,
+    VectorSearch.topK(lists, col(art.meta.vecCol), qvec, k, metric,
         preFilter, distName, tieBreak)
       .drop("list_id")
   }

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
@@ -32,15 +28,6 @@ object PqIndex {
 
   case class PqMeta(metric: String, nLists: Int, m: Int, dim: Int,
       nRows: Long, vecCol: String, idCol: String, status: String)
-
-  private val metaCache = TrieMap.empty[String, PqMeta]
-  // codebooks(sub)(code) = centroid of that subspace. Both artifact
-  // caches are size-bounded (shared centroid budget — see BoundedCache);
-  // eviction reloads from the codebooks/ and centroids/ parquet.
-  private val codebookCache = BoundedCache.view[Array[Array[Array[Float]]]](
-    "pqbook#", BoundedCache.codebookBytes)
-  private val centroidCache = BoundedCache.view[Array[Array[Float]]](
-    "pq#", BoundedCache.floatTableBytes)
 
   private[graft] def encode(
       v: Array[Float], books: Array[Array[Array[Float]]]): Array[Byte] = {
@@ -150,13 +137,10 @@ object PqIndex {
     }.toSeq.toDF("sub", "code", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebooks")
 
-    Files.writeString(Paths.get(s"$indexDir/meta.json"),
-      s"""{"version":1,"type":"IVFPQ","metric":"$metric","nLists":$nLists,""" +
-        s""""m":$m,"dim":$dim,"nRows":$n,"vecCol":"$vecCol","idCol":"$idCol",""" +
-        s""""status":"BUILT"}""" + "\n")
-    metaCache.put(indexDir, PqMeta(metric, nLists, m, dim, n, vecCol, idCol, "BUILT"))
-    codebookCache.put(indexDir, books)
-    centroidCache.put(indexDir, centroids)
+    val art = IndexArtifact.write(indexDir, "IVFPQ",
+      PqMeta(metric, nLists, m, dim, n, vecCol, idCol, "BUILT"))
+    IndexArtifact.Codebooks.put(art, books)
+    IndexArtifact.Centroids.put(art, centroids)
 
     val entry = IvfIndex.IndexEntry(indexName, indexDir, sourcePath, vecCol,
       "IVFPQ", metric, "BUILT", n, defaultNprobe)
@@ -165,37 +149,15 @@ object PqIndex {
     entry
   }
 
-  private[graft] def loadMeta(indexDir: String): PqMeta =
-    metaCache.getOrElseUpdate(indexDir, {
-      val p = Paths.get(s"$indexDir/meta.json")
-      require(Files.exists(p), s"PQ index meta not found: $p")
-      val s = Files.readString(p)
-      def str(k: String): String =
-        ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(s).map(_.group(1))
-          .getOrElse(sys.error(s"meta.json missing '$k' at $p"))
-      def num(k: String): Long =
-        ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-          .getOrElse(sys.error(s"meta.json missing '$k' at $p"))
-      PqMeta(str("metric"), num("nLists").toInt, num("m").toInt,
-        num("dim").toInt, num("nRows"), str("vecCol"), str("idCol"), str("status"))
-    })
-
-  private[operators] def loadBooks(spark: SparkSession, indexDir: String): Array[Array[Array[Float]]] =
-    codebookCache.getOrLoad(indexDir) {
-      val rows = spark.read.parquet(s"$indexDir/codebooks")
-        .orderBy("sub", "code").collect()
-      val m = rows.map(_.getInt(0)).max + 1
-      Array.tabulate(m) { s =>
-        rows.filter(_.getInt(0) == s).sortBy(_.getInt(1))
-          .map(_.getSeq[Float](2).toArray)
-      }
-    }
-
-  private def loadCentroids(spark: SparkSession, indexDir: String): Array[Array[Float]] =
-    centroidCache.getOrLoad(indexDir) {
-      spark.read.parquet(s"$indexDir/centroids").orderBy("list_id").collect()
-        .map(_.getSeq[Float](1).toArray)
-    }
+  /** The probed lists' PQ-coded rows, plus what ranking them needs. */
+  private def probed(spark: SparkSession, indexDir: String, q: Array[Float],
+      nprobe: Int): (PqMeta, Array[Array[Array[Float]]], DataFrame) = {
+    val art = IndexArtifact.read(indexDir, classOf[PqMeta])
+    val probes = IvfIndex.nearestLists(IndexArtifact.Centroids.load(spark, art),
+      art.meta.metric, q, nprobe)
+    (art.meta, IndexArtifact.Codebooks.load(spark, art),
+      ProbedPartitions.read(spark, s"$indexDir/lists", "list_id", probes))
+  }
 
   /** ADC lookup table: adc(s*256 + c) = exact L2² between the query's
     * subvector s and codebook centroid c. Σ over subspaces = L2² to the
@@ -236,16 +198,9 @@ object PqIndex {
       numReorder: Int,
       nprobe: Int,
       preFilter: Option[Column] = None): DataFrame = {
-    val meta = loadMeta(indexDir)
-    val books = loadBooks(spark, indexDir)
-    val centroids = loadCentroids(spark, indexDir)
     val q = qvec.toArray
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (IvfIndex.centroidDist(meta.metric, c, q), i) }
-      .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
+    val (meta, books, pruned0) = probed(spark, indexDir, q, nprobe)
     // pre-filter BEFORE ranking (reference performPrefilter semantics)
-    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-      probes.toIndexedSeq)
     val pruned = preFilter.map(pruned0.filter).getOrElse(pruned0)
     val table = adcTable(q, books, meta.metric)
     val ip = meta.metric.equalsIgnoreCase("ip") || meta.metric.equalsIgnoreCase("dot")
@@ -272,17 +227,8 @@ object PqIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val meta = loadMeta(indexDir)
-    val books = loadBooks(spark, indexDir)
-    val centroids = loadCentroids(spark, indexDir)
     val q = qvec.toArray
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (IvfIndex.centroidDist(meta.metric, c, q), i) }
-      .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
-
-    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-
-      probes.toIndexedSeq)
+    val (meta, books, pruned0) = probed(spark, indexDir, q, nprobe)
     val pruned1 = deletes.map { d =>
       require(d.columns.length == 1, "deletes must be a single id column")
       pruned0.join(d, d.columns.toSeq, "left_anti")

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
@@ -33,13 +29,6 @@ object SqIndex {
 
   case class SqMeta(metric: String, nLists: Int, dim: Int, nRows: Long,
       vecCol: String, idCol: String, status: String)
-
-  private val metaCache = TrieMap.empty[String, SqMeta]
-  private val paramCache = TrieMap.empty[String, (Array[Float], Array[Float])] // (scale, offset)
-  // size-bounded (shared centroid budget); evicted tables reload from
-  // the centroids/ parquet artifact
-  private val centroidCache = BoundedCache.view[Array[Array[Float]]](
-    "sq#", BoundedCache.floatTableBytes)
 
   private[graft] def parseMetric(m: String): Metric.Value = m.trim.toLowerCase match {
     case "l2" | "euclidean" => Metric.L2
@@ -120,13 +109,10 @@ object SqIndex {
     Seq((scale.toSeq, offset.toSeq)).toDF("scale", "offset")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/sq_params")
 
-    Files.writeString(Paths.get(s"$indexDir/meta.json"),
-      s"""{"version":1,"type":"IVFSQ","metric":"$metric","nLists":$nLists,""" +
-        s""""dim":$dim,"nRows":$n,"vecCol":"$vecCol","idCol":"$idCol",""" +
-        s""""status":"BUILT"}""" + "\n")
-    metaCache.put(indexDir, SqMeta(metric, nLists, dim, n, vecCol, idCol, "BUILT"))
-    paramCache.put(indexDir, (scale, offset))
-    centroidCache.put(indexDir, centroids)
+    val art = IndexArtifact.write(indexDir, "IVFSQ",
+      SqMeta(metric, nLists, dim, n, vecCol, idCol, "BUILT"))
+    IndexArtifact.SqParams.put(art, (scale, offset))
+    IndexArtifact.Centroids.put(art, centroids)
 
     val entry = IvfIndex.IndexEntry(indexName, indexDir, sourcePath, vecCol,
       "IVFSQ", metric, "BUILT", n, defaultNprobe)
@@ -135,32 +121,15 @@ object SqIndex {
     entry
   }
 
-  private[graft] def loadMeta(indexDir: String): SqMeta =
-    metaCache.getOrElseUpdate(indexDir, {
-      val p = Paths.get(s"$indexDir/meta.json")
-      require(Files.exists(p), s"SQ index meta not found: $p")
-      val s = Files.readString(p)
-      def str(k: String): String =
-        ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(s).map(_.group(1))
-          .getOrElse(sys.error(s"meta.json missing '$k' at $p"))
-      def num(k: String): Long =
-        ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-          .getOrElse(sys.error(s"meta.json missing '$k' at $p"))
-      SqMeta(str("metric"), num("nLists").toInt, num("dim").toInt,
-        num("nRows"), str("vecCol"), str("idCol"), str("status"))
-    })
-
-  private def loadParams(spark: SparkSession, indexDir: String): (Array[Float], Array[Float]) =
-    paramCache.getOrElseUpdate(indexDir, {
-      val r = spark.read.parquet(s"$indexDir/sq_params").head()
-      (r.getSeq[Float](0).toArray, r.getSeq[Float](1).toArray)
-    })
-
-  private def loadCentroids(spark: SparkSession, indexDir: String): Array[Array[Float]] =
-    centroidCache.getOrLoad(indexDir) {
-      spark.read.parquet(s"$indexDir/centroids").orderBy("list_id").collect()
-        .map(_.getSeq[Float](1).toArray)
-    }
+  /** The probed lists' quantized rows, plus what ranking them needs. */
+  private def probed(spark: SparkSession, indexDir: String, q: Array[Float],
+      nprobe: Int): (SqMeta, (Array[Float], Array[Float]), DataFrame) = {
+    val art = IndexArtifact.read(indexDir, classOf[SqMeta])
+    val probes = IvfIndex.nearestLists(IndexArtifact.Centroids.load(spark, art),
+      art.meta.metric, q, nprobe)
+    (art.meta, IndexArtifact.SqParams.load(spark, art),
+      ProbedPartitions.read(spark, s"$indexDir/lists", "list_id", probes))
+  }
 
   /** Stage-1 candidate ids only (quantized ranking over the probed
     * lists) — used by [[graft.plans.TopKSearchRewrite]] to graft an IVFSQ
@@ -174,18 +143,11 @@ object SqIndex {
       numReorder: Int,
       nprobe: Int,
       preFilter: Option[Column] = None): DataFrame = {
-    val meta = loadMeta(indexDir)
-    val (scale, offset) = loadParams(spark, indexDir)
-    val centroids = loadCentroids(spark, indexDir)
     val q = qvec.toArray
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (IvfIndex.centroidDist(meta.metric, c, q), i) }
-      .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
+    val (meta, (scale, offset), pruned0) = probed(spark, indexDir, q, nprobe)
     // pre-filter BEFORE ranking (reference performPrefilter semantics):
     // the lists carry every source column except the vector, so filters
     // evaluate directly on the quantized layout
-    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-      probes.toIndexedSeq)
     val pruned = preFilter.map(pruned0.filter).getOrElse(pruned0)
     val m = parseMetric(meta.metric)
     val sqd = shim.column(SqDistance(
@@ -212,17 +174,8 @@ object SqIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val meta = loadMeta(indexDir)
-    val (scale, offset) = loadParams(spark, indexDir)
-    val centroids = loadCentroids(spark, indexDir)
     val q = qvec.toArray
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (IvfIndex.centroidDist(meta.metric, c, q), i) }
-      .sortBy(_._1).take(math.min(nprobe, centroids.length)).map(_._2)
-
-    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-
-      probes.toIndexedSeq)
+    val (meta, (scale, offset), pruned0) = probed(spark, indexDir, q, nprobe)
     val pruned1 = deletes.map { d =>
       require(d.columns.length == 1, "deletes must be a single id column")
       pruned0.join(d, d.columns.toSeq, "left_anti")

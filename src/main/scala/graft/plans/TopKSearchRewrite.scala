@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.functions.VectorDistance
-import graft.operators.{HnswIndex, IvfIndex, ProbedPartitions}
+import graft.operators.{HnswIndex, IndexArtifact, IvfIndex, ProbedPartitions}
 
 /** Catalyst rule for the reference's search-query shape.
   *
@@ -209,15 +209,13 @@ case class TopKSearchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // MSTG is the validated-DDL stand-in over the IVF backend (SURVEY
       // §2.1) — identical probed-lists plan
       case "IVFFLAT" | "MSTG" =>
-        val qvec = qArray.toFloatArray()
-        val centroids = IvfIndex.loadCentroids(spark, entry.indexDir)
-        val probes = centroids.zipWithIndex
-          .map { case (c, i) => (IvfIndex.centroidDist(entry.metric, c, qvec), i) }
-          .sortBy(_._1).take(math.min(entry.defaultNprobe, centroids.length)).map(_._2)
+        val centroids = IndexArtifact.Centroids.load(spark,
+          IvfIndex.artifact(entry.indexDir))
+        val probes = IvfIndex.nearestLists(centroids, entry.metric,
+          qArray.toFloatArray(), entry.defaultNprobe)
         logInfo(s"TopKSearchRewrite: ORDER BY ${vd.prettyName} LIMIT $k over $path " +
           s"→ IVF index ${entry.name} (nprobe=${entry.defaultNprobe}/${centroids.length})")
-        ProbedPartitions.read(spark, s"${entry.indexDir}/lists", "list_id",
-            probes.toIndexedSeq)
+        ProbedPartitions.read(spark, s"${entry.indexDir}/lists", "list_id", probes)
           .queryExecution.analyzed
       case sq @ ("IVFSQ" | "IVFPQ")
           if !filterReferencesVector(filterCond, vecAttr) =>
