@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1), prints one JSON line
   * {"metric":...,"queries":{name:sec,...}}. Each query is forced with
@@ -10,33 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Session posture comes from GraftSession.engineConfs (single source
-    // shared with Verify/QueryTime/PlanSnap so the oracle gate, A/B tool
-    // and plan dumps execute the plans Bench times):
-    // - r21 (guide §3.1/§9): shuffled-hash joins when their BYTE-sized
-    //   conditions hold (preferSortMergeJoin=false + AQE SMJ→SHJ under
-    //   128m build maps); huge partitions at 100 TB keep sort-merge.
-    //   Interleaved A/B over a 12-query join-heavy sample: 20.97 →
-    //   19.56 s (−7%), no query regressed beyond noise.
-    // - r21 (guide §2.2): post-shuffle partitions coalesce by BYTES
-    //   (advisory 64m, parallelismFirst=false) — partition count derives
-    //   from data volume at any SF. Interleaved A/B over a 10-query
-    //   mixed sample: 19.71 → 16.97 s (−14%), worst regression +0.18 s.
-    // All four knobs stay env-overridable (SPARK_GRAFT_PREFER_SMJ,
-    // _SHJ_THRESHOLD, _PARALLELISM_FIRST, _ADVISORY_PARTITION).
-    val spark = graft.engine.GraftSession.withEngineConfs(
-      SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.GraftSession.install(spark)
+    val spark = graft.engine.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // Untimed warm-up: exercise scan/agg/window/sort codegen paths once so
     // the alphabetically-first query doesn't absorb JVM+codegen startup.

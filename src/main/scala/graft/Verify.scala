@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,22 +13,8 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for fast local
     // iteration (the driver passes exactly two args — all queries)
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // engineConfs (r22): the SAME session posture as Bench — the oracle
-    // gate must validate the physical plans the bench times (SHJ
-    // preference + byte-sized AQE coalescing), not stock-conf plans
-    // (VERDICT r21 #3).
-    val spark = graft.engine.GraftSession.withEngineConfs(
-      SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.GraftSession.install(spark)
+    val spark = graft.engine.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

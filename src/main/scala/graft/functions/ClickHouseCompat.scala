@@ -2280,17 +2280,14 @@ object ClickHouseCompat {
     * unreplaceable built-in).
     */
   def install(spark: SparkSession): Seq[String] = {
-    if (sys.env.contains("SPARK_GRAFT_SKIP_COMPAT")) return Nil // bisection only
-    if (!sys.env.contains("SPARK_GRAFT_SKIP_NATIVE")) installNative(spark)
-    val failed =
-      if (sys.env.contains("SPARK_GRAFT_SKIP_SQLDEFS")) Nil
-      else definitions.flatMap { d =>
-        try { spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $d"); None }
-        catch { case _: Exception => Some(d.takeWhile(_ != '(')) }
-      }
+    installNative(spark)
+    val failed = definitions.flatMap { d =>
+      try { spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $d"); None }
+      catch { case _: Exception => Some(d.takeWhile(_ != '(')) }
+    }
     // After the SQL pass: the lambda-capable generic builders replace
     // any same-named macro.
-    if (!sys.env.contains("SPARK_GRAFT_SKIP_HO")) HigherOrder.install(spark)
+    HigherOrder.install(spark)
     failed
   }
 }

@@ -605,23 +605,9 @@ object Dedup {
       val n = math.max(sigs.count(), 1L)
       def keyBits(cc: Int) = cc * (64.0 / (maxHamming + cc))
       def explodeFactor(cc: Int) = choose(maxHamming + cc, cc)
-      val c = sys.env.get("GRAFT_SIMHASH_C").map { raw =>
-        // validate the override: the 21-bit combo-key packing below is
-        // only collision-free when each chunk fits 21 bits, i.e. for
-        // c >= 2 we need m = maxHamming + c >= 4 (⇒ chunk width <= 16)
-        val cc = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-          s"GRAFT_SIMHASH_C must be an integer in [1,3], got '$raw'"))
-        require(cc >= 1 && cc <= 3,
-          s"GRAFT_SIMHASH_C must be in [1,3], got $cc")
-        require(cc == 1 || maxHamming + cc >= 4,
-          s"GRAFT_SIMHASH_C=$cc requires maxHamming + c >= 4 so chunk " +
-            s"width fits the 21-bit key stride (maxHamming=$maxHamming)")
-        cc
-      }.getOrElse {
-        (1 to 3).find(cc => explodeFactor(cc) <= 256 &&
-            n / math.pow(2, keyBits(cc)) <= 64)
-          .getOrElse((1 to 3).filter(explodeFactor(_) <= 256).maxBy(keyBits))
-      }
+      val c = (1 to 3).find(cc => explodeFactor(cc) <= 256 &&
+          n / math.pow(2, keyBits(cc)) <= 64)
+        .getOrElse((1 to 3).filter(explodeFactor(_) <= 256).maxBy(keyBits))
       val nChunks = maxHamming + c
       // distribute 64 bits over nChunks chunks; first (64 % nChunks)
       // chunks are one bit wider
@@ -638,8 +624,8 @@ object Dedup {
         call_function("shiftright", col("sig"), lit(off)).bitwiseAND(lit(mask))
       }
       // combo key = chunk values concatenated at 21-bit stride. Packing
-      // invariant (enforced above for the env override, and by the
-      // adaptive selector needing m >= 4 before it ever picks c >= 2):
+      // invariant (held by the adaptive selector needing m >= 4 before
+      // it ever picks c >= 2):
       // c >= 2 ⇒ m = maxHamming + c >= 4 ⇒ chunk width = ceil(64/m)
       // <= 16 <= 21, and c <= 3 keeps 3·21 < 64 from overflowing;
       // c = 1 keys are the raw chunk value (any width)
@@ -958,7 +944,8 @@ object Dedup {
         (col("group_id").isNull || col("id") === col("__kept_id")).as("keep"))
     // the assignment cache stays live with the returned (lazy) frame —
     // the partitionedRunningSum/t20 posture: a live plan over an eager
-    // checkpoint that would collapse PLANS.md's tree to an RDD scan;
+    // checkpoint that would collapse the plan tree (plans/headline/
+    // d20_semdedup_plan.txt) to an RDD scan;
     // long-lived sessions can clearCache between pipeline stages
   }
 

@@ -451,8 +451,9 @@ object RelationalOps {
       case t: Throwable => local.unpersist(blocking = false); throw t
     }
     // the local-rank cache stays live with the returned (lazy) frame —
-    // the partitionedRunningSum posture: a live plan (PLANS.md shows the
-    // real tree through InMemoryRelation) over an eager checkpoint that
+    // the partitionedRunningSum posture: a live plan (plans/headline/
+    // t21_ppl_buckets_plan.txt shows the real tree through
+    // InMemoryRelation) over an eager checkpoint that
     // would collapse it to an opaque RDD scan; rows are slim (input
     // columns + one long)
   }

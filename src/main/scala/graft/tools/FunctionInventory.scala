@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print every function name live in a GraftSession catalog, one per
   * line: `runMain graft.tools.FunctionInventory [outFile]`. Used for
   * the §2.9 registry-closure diff against the reference's extracted
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object FunctionInventory {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.GraftSession.install(spark)
+    val spark = graft.engine.GraftSession.local(2)
     val names = spark.catalog.listFunctions().collect().map(_.name).sorted
     args.headOption match {
       case Some(path) =>

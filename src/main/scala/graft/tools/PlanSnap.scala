@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Snapshot `explain("formatted")` for named queries into per-query
-  * files — the optimization-round evidence format
-  * (`plans/r<N>/<query>_<suffix>.txt`). Usage:
+  * files — the plan evidence format (`plans/r<N>/<query>_<suffix>.txt`
+  * per optimization round, `plans/headline/<query>_plan.txt` for the
+  * headline set). Usage:
   * `runMain graft.tools.PlanSnap <outDir> <suffix> <name>[,<name>...] [sfDir]`
   */
 object PlanSnap {
@@ -15,19 +14,8 @@ object PlanSnap {
     val names = args.lift(2).map(_.split(',').toSeq.filter(_.nonEmpty))
       .getOrElse(sys.error("names required"))
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // engineConfs: plan evidence must show the plans Bench times
-    val spark = graft.engine.GraftSession.withEngineConfs(
-      SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.GraftSession.install(spark)
+    val spark = graft.engine.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { nm =>
       val fn = graft.SparkEntry.queries.getOrElse(nm,

@@ -76,19 +76,8 @@ object ScaleGrowth {
     // synthesis bound: the seeded-permutation alphabets stay distinct at
     // any factor (the former rot-k scheme capped this at 25)
     require(factors.forall(f => f >= 1 && f <= 64), "factors must be in [1, 64]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.GraftSession.install(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.engine.GraftSession.local(cpus)
 
     def synth(factor: Int): String = {
       if (factor == 1) return baseDir
@@ -231,7 +220,7 @@ object ScaleGrowth {
       val elastic = Seq("d03_minhash_lsh", "d13_incremental_lsh")
         .filter(n => filter(s"${n}_scaledparts")).map { name =>
         val fn = graft.SparkEntry.queries(name)
-        spark.conf.set("spark.sql.shuffle.partitions", (cpus.toInt * f).toString)
+        spark.conf.set("spark.sql.shuffle.partitions", (cpus * f).toString)
         try {
           try fn(spark, dir).count() catch { case _: Throwable => }
           def once(): Double = {
@@ -241,9 +230,9 @@ object ScaleGrowth {
             (System.nanoTime() - t0) / 1e9
           }
           val t = math.min(once(), once())
-          System.err.println(f"[scale] x$f $name@${cpus.toInt * f}parts $t%.2f s")
+          System.err.println(f"[scale] x$f $name@${cpus * f}parts $t%.2f s")
           s"${name}_scaledparts" -> t
-        } finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+        } finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
       }
       f -> (perQuery ++ elastic)
     }

@@ -2,14 +2,28 @@ package graft
 
 /** Plan-shape regression gate: the properties that make the engine safe
   * at 100 TB, asserted against the actual physical plans so a future
-  * change cannot silently lose them. (PLANS.md is the human-readable
-  * dump; this is the executable version.)
+  * change cannot silently lose them. (`plans/headline/` is the
+  * human-readable dump; this is the executable version.)
   */
 class PlanRegressionSpec extends SparkSpec {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan.toString
+
+  test("the shared session is Bench's: engine confs, UTC, nanosAsLong, graft rules") {
+    // every plan-shape assertion below is only evidence for the plans
+    // Bench times if the suite's session is built the way Bench's is
+    val conf = spark.conf
+    graft.engine.GraftSession.engineConfs.foreach { case (k, v) =>
+      assert(conf.get(k) == v, k)
+    }
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+    assert(rules.exists(_.isInstanceOf[graft.plans.TopKSearchRewrite]), rules)
+    assert(rules.exists(_.isInstanceOf[graft.plans.ProjectionRewrite]), rules)
+  }
 
   test("q01: filters reach the parquet scan, aggregation is partial->final") {
     val p = plan("q01_pricing_summary")

@@ -5,20 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session, lazy). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new graft.engine.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    graft.engine.GraftSession.install(s)
-    s
-  }
+  lazy val spark: SparkSession = graft.engine.GraftSession.local(4)
   val sfDir = "/root/testdata/sf0.001"
 }
 
