@@ -74,6 +74,7 @@ object GraftSession {
     graft.operators.Dictionaries.install(spark) // dictGet<T> name surface
     graft.operators.JoinSetStorage.install(spark) // joinGet / inSet surface
     QueryLog.install(spark) // system.query_log analog
+    graft.plans.PrefixScanStrategy.setup(spark) // running sums, keyed ranks
     spark
   }
 }

@@ -942,10 +942,10 @@ object Dedup {
         coalesce(col("group_id"), col("id")).as("group_id"),
         col("centroid_sim"),
         (col("group_id").isNull || col("id") === col("__kept_id")).as("keep"))
-    // the assignment cache stays live with the returned (lazy) frame —
-    // the partitionedRunningSum/t20 posture: a live plan over an eager
-    // checkpoint that would collapse the plan tree (plans/headline/
-    // d20_semdedup_plan.txt) to an RDD scan;
+    // the assignment cache stays live with the returned (lazy) frame,
+    // which reads it through a live plan; an eager checkpoint would
+    // collapse the plan tree (plans/headline/d20_semdedup_plan.txt) to
+    // an RDD scan;
     // long-lived sessions can clearCache between pipeline stages
   }
 

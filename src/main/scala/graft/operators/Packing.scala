@@ -24,8 +24,9 @@ object Packing {
     * offset_in_chunk)`.
     *
     * Scale shape: the global running total comes from
-    * [[RelationalOps.partitionedRunningSum]] — a range repartition plus
-    * a two-phase prefix sum with a one-row-per-partition driver reduce —
+    * [[RelationalOps.partitionedRunningSum]] — one plan node over a range
+    * exchange that totals each partition, then adds the prefix of those
+    * totals to the local running sums —
     * NOT a single-partition window, so the op holds at 100 TB where a
     * global cumsum window would collapse onto one task.
     */
@@ -302,7 +303,7 @@ object Packing {
       } catch {
         case t: Throwable =>
           // failure path releases the caches — no frame is returned to
-          // hold them (mirrors keyedRank's error-path unpersist)
+          // hold them
           docBuckets.unpersist(blocking = false)
           tCounts.unpersist(blocking = false)
           rCounts.unpersist(blocking = false)
@@ -315,9 +316,9 @@ object Packing {
              lit((tTot + buckets).toDouble)) -
          log((coalesce(col("__cr"), lit(0L)) + 1L).cast("double") /
              lit((rTot + buckets).toDouble))).as("__w"))
-    // the gram caches stay live with the returned (lazy) frame — the
-    // partitionedRunningSum/t20 posture: live plan over eager
-    // checkpoint; all three frames are slim and bucket-bounded
+    // the gram caches stay live with the returned (lazy) frame, which
+    // reads them through a live plan rather than an eager checkpoint;
+    // all three frames are slim and bucket-bounded
     docBuckets.join(broadcast(weights), Seq("__b"))
       .groupBy(col("id"))
       .agg(sum(col("__n")).as("n_grams"),

@@ -1,8 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+
+import graft.plans.PrefixScan
 
 /** ClickHouse relational operators Spark lacks as first-class syntax:
   * `LIMIT n BY cols` and `ORDER BY ... WITH FILL`.
@@ -269,9 +275,10 @@ object RelationalOps {
   }
 
   /** Distributed running (prefix) sums in `orderCol` order — the classic
-    * two-phase scan: range-partition by the key, cumulate locally inside
-    * each sorted partition, then add the broadcast prefix of the
-    * per-partition totals (one bounded collect of #partitions rows).
+    * two-phase scan as one plan node ([[graft.plans.PrefixScan]]):
+    * range-partition and sort by the key, total each partition, then
+    * cumulate locally inside each sorted partition and add the prefix of
+    * the earlier partitions' totals. Nothing runs until the query does.
     * A `Window.orderBy` without partitions collapses to a SINGLE task in
     * Spark — this is the shape that replaces it at scale; output values
     * are identical when `orderCol` is unique per row (ties would make
@@ -282,181 +289,43 @@ object RelationalOps {
     */
   def partitionedRunningSum(
       df: DataFrame, orderCol: String, sumCols: Seq[String]): DataFrame = {
-    import org.apache.spark.TaskContext
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-    import org.apache.spark.sql.types._
-    val ranged = df.repartitionByRange(col(orderCol))
-      .sortWithinPartitions(col(orderCol))
-    val withPidSchema = StructType(df.schema.fields.toSeq
-      ++ sumCols.map(c => StructField(s"__cum_$c", DoubleType))
-      :+ StructField("__pid", IntegerType))
-    val idxs = sumCols.map(df.schema.fieldIndex).toArray
-    // r22 (guide §1.2 — per-task work): the cumulate pass stays in
-    // Spark's INTERNAL row format. The r21 form rebuilt an external Row
-    // per input row (r.toSeq ++ acc.toSeq) and pushed it back through an
-    // ExpressionEncoder — a serialize/deserialize round-trip that was the
-    // dominant constant cost of all 7 consumers (e34/e35/e37/e39/e60/
-    // p01/q06). Values are bit-identical: same widening-to-double
-    // semantics, same per-partition addition order.
-    val getters: Array[InternalRow => Double] =
-      idxs.map { ix =>
-        df.schema.fields(ix).dataType match {
-          case DoubleType => (r: InternalRow) => r.getDouble(ix)
-          case FloatType => (r: InternalRow) => r.getFloat(ix).toDouble
-          case LongType => (r: InternalRow) => r.getLong(ix).toDouble
-          case IntegerType => (r: InternalRow) => r.getInt(ix).toDouble
-          case ShortType => (r: InternalRow) => r.getShort(ix).toDouble
-          case ByteType => (r: InternalRow) => r.getByte(ix).toDouble
-          case dt: DecimalType =>
-            (r: InternalRow) => r.getDecimal(ix, dt.precision, dt.scale).toDouble
-          case dt => throw new IllegalArgumentException(
-            s"partitionedRunningSum over non-numeric column type $dt")
-        }
-      }
-    val rdd = ranged.queryExecution.toRdd.mapPartitions { rows =>
-      val pid = TaskContext.getPartitionId()
-      val acc = new Array[Double](idxs.length)
-      val proj = UnsafeProjection.create(withPidSchema)
-      val joined = new JoinedRow
-      rows.map { r =>
-        val extra = new Array[Any](idxs.length + 1)
-        var i = 0
-        while (i < idxs.length) {
-          if (!r.isNullAt(idxs(i))) acc(i) += getters(i)(r)
-          extra(i) = acc(i)
-          i += 1
-        }
-        extra(idxs.length) = pid
-        proj(joined(r, new GenericInternalRow(extra))): InternalRow
-      }
-    }
-    val local = org.apache.spark.sql.graft.shim
-      .internalDf(df.sparkSession, rdd, withPidSchema)
-      .persist() // read once for totals, once for the final pass
-    // Phase 2: per-partition totals — ONE ROW PER PARTITION (bounded
-    // driver collect), turned into exclusive prefix offsets.
-    // (r21 note: an in-plan variant — windowed totals + broadcast join,
-    // bit-identical values — was built and REVERTED: every consumer
-    // query regressed 0.3–0.7 s in the full bench; the bounded collect
-    // plus literal offsets is the faster form as measured.)
-    val aggExprs = sumCols.map(c => sum(col(c).cast("double")).as(c))
-    val perPart = local.groupBy(col("__pid"))
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) -> sumCols.map(c => r.getAs[Double](c)).toArray)
-      .sortBy(_._1)
-    val offsets = scala.collection.mutable.Map.empty[Int, Array[Double]]
-    val running = new Array[Double](sumCols.length)
-    perPart.foreach { case (pid, tots) =>
-      offsets(pid) = running.clone()
-      var i = 0
-      while (i < running.length) { running(i) += tots(i); i += 1 }
-    }
-    val grand = running
-    // Phase 3: add each partition's offset (broadcast literal map) and
-    // expose grand totals as literals.
-    val withCums = sumCols.zipWithIndex.foldLeft(local) { case (d, (c, i)) =>
-      val offMap = typedLit(offsets.map { case (pid, arr) => pid -> arr(i) }.toMap)
-      d.withColumn(s"__cum_$c",
-          col(s"__cum_$c") + coalesce(element_at(offMap, col("__pid")), lit(0.0)))
-        .withColumn(s"__tot_$c", lit(grand(i)))
-    }
-    withCums.drop("__pid")
+    sumCols.foreach(c => PrefixScan.doubleGetter(0, df.schema(c).dataType))
+    prefixScan(df, Seq(col(orderCol)), keyed = false, sumCols,
+      sumCols.map(c => s"__cum_$c" -> DoubleType) ++
+        sumCols.map(c => s"__tot_$c" -> DoubleType))
   }
 
   /** Distributed rank within a BOUNDED-cardinality key (languages,
     * sources — dictionary-sized), in `orderCols` order: the keyed twin
-    * of [[partitionedRunningSum]]. A `Window.partitionBy(key)` puts each
-    * key's ENTIRE population into one task — the skew funnel that
-    * collapses on the head language at 100 TB; here rows range-partition
-    * by (key, order...), a map pass assigns local ranks, per-(partition,
-    * key) counts collect to the driver (bounded: partitions × keys),
-    * and the exclusive prefix joins back as a broadcast offset table.
+    * of [[partitionedRunningSum]], the same plan node. A
+    * `Window.partitionBy(key)` puts each key's ENTIRE population into one
+    * task — the skew funnel that collapses on the head language at
+    * 100 TB; here rows range-partition by (key, order...), a first pass
+    * counts rows per (partition, key) and a second adds each key's count
+    * over the earlier partitions to the local rank. The query fails when
+    * it runs if there are more than a million (partition, key) groups.
     *
     * Adds `__rank` (1-based within key). Make `orderCols` a TOTAL order
     * (unique tiebreak) or ranks depend on partition-internal arrival.
     */
-  def keyedRank(df: DataFrame, keyCol: String, orderCols: Seq[Column]): DataFrame = {
-    import org.apache.spark.TaskContext
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val sortCols = col(keyCol) +: orderCols
-    val ranged = df.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val withRankSchema = StructType(df.schema.fields.toSeq
-      :+ StructField("__local_rank", LongType)
-      :+ StructField("__pid", IntegerType))
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val keyType = df.schema.fields(keyIdx).dataType
-    // r22: same InternalRow treatment as partitionedRunningSum — the
-    // local-rank pass no longer round-trips rows through an external Row
-    // + ExpressionEncoder. curKey copies the key value (an UnsafeRow's
-    // UTF8String points into the reused row buffer); equality semantics
-    // match the external form.
-    val rdd = ranged.queryExecution.toRdd.mapPartitions { rows =>
-      val pid = TaskContext.getPartitionId()
-      val proj = UnsafeProjection.create(withRankSchema)
-      val joined = new JoinedRow
-      var curKey: Any = null; var started = false; var n = 0L
-      rows.map { r =>
-        val k = r.get(keyIdx, keyType)
-        if (!started || k != curKey) {
-          curKey = InternalRow.copyValue(k); n = 0L; started = true
-        }
-        n += 1
-        val extra = new Array[Any](2)
-        extra(0) = n; extra(1) = pid
-        proj(joined(r, new GenericInternalRow(extra))): InternalRow
-      }
+  def keyedRank(df: DataFrame, keyCol: String, orderCols: Seq[Column]): DataFrame =
+    prefixScan(df, col(keyCol) +: orderCols, keyed = true, Nil, Seq("__rank" -> LongType))
+
+  private def prefixScan(
+      df: DataFrame, order: Seq[Column], keyed: Boolean,
+      sumCols: Seq[String], emitted: Seq[(String, DataType)]): DataFrame =
+    df.sortWithinPartitions(order: _*).queryExecution.analyzed match {
+      case Sort(resolved, false, child, _) =>
+        val sums = sumCols.map(c => child.output(df.schema.fieldIndex(c)))
+        val attrs = emitted.map { case (name, dt) =>
+          AttributeReference(name, dt, nullable = false)() }
+        val scan = PrefixScan(resolved, keyed, sums, attrs, child)
+        // the analyzer renews a Project's aliases when the frame is
+        // joined with itself, never a custom node's own attributes
+        shim.ofRows(df.sparkSession,
+          Project(child.output ++ attrs.map(a => Alias(a, a.name)()), scan))
+      case other => throw new IllegalStateException(s"unexpected sort plan $other")
     }
-    val local = org.apache.spark.sql.graft.shim
-      .internalDf(df.sparkSession, rdd, withRankSchema)
-      .persist() // read once for the count pass, once for the join
-    try {
-      // Per-(partition, key) counts — bounded collect by the
-      // key-cardinality contract, ENFORCED: take(cap+1) streams at most
-      // cap+1 rows to the driver (no silent OOM on a mistaken
-      // high-cardinality key), then fails loudly.
-      val cap = 1000000
-      val perPartRows = local.groupBy(col("__pid"), col(keyCol))
-        .agg(max(col("__local_rank")).as("__cnt"))
-        .take(cap + 1)
-      require(perPartRows.length <= cap,
-        s"keyedRank requires a bounded-cardinality key (dictionary-sized, " +
-          s"e.g. language/source): got more than $cap (partition, key) " +
-          "groups — was a document id passed as the key?")
-      val perPart = perPartRows.map(r => (r.getInt(0), r.get(1), r.getLong(2)))
-      val offRows = perPart.groupBy(_._2).toSeq.flatMap { case (_, parts) =>
-        var running = 0L
-        parts.sortBy(_._1).map { case (pid, k, cnt) =>
-          val off = running; running += cnt; Row(pid, k, off)
-        }
-      }
-      val spark = df.sparkSession
-      val offSchema = StructType(Seq(
-        StructField("__opid", IntegerType),
-        StructField("__okey", df.schema(keyIdx).dataType),
-        StructField("__ooff", LongType)))
-      val offDf = spark.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(offRows).asJava, offSchema)
-      local.join(broadcast(offDf),
-          col("__pid") === col("__opid") && col(keyCol) <=> col("__okey"), "left")
-        .withColumn("__rank",
-          col("__local_rank") + coalesce(col("__ooff"), lit(0L)))
-        .drop("__local_rank", "__pid", "__opid", "__okey", "__ooff")
-    } catch {
-      case t: Throwable => local.unpersist(blocking = false); throw t
-    }
-    // the local-rank cache stays live with the returned (lazy) frame —
-    // the partitionedRunningSum posture: a live plan (plans/headline/
-    // t21_ppl_buckets_plan.txt shows the real tree through
-    // InMemoryRelation) over an eager checkpoint that
-    // would collapse it to an opaque RDD scan; rows are slim (input
-    // columns + one long)
-  }
 
   /** SummingMergeTree FINAL (`SummingSortedAlgorithm.cpp`): rows with the
     * same key collapse to one row with the numeric columns summed; other

@@ -152,7 +152,7 @@ object TextPipeline {
     // lost: token strings are corpus-sized; these rows are three longs).
     // The pair frame and the vocab-bounded count frames persist
     // (MEMORY_AND_DISK, lineage kept) and stay live with the returned
-    // lazy frame — the keyedRank/house posture.
+    // lazy frame.
     def tokenPairs(src: DataFrame): DataFrame =
       src.select(idCol.as("id"), text.tokenize(textCol).as("__t"))
         .select(col("id"), explode(expr(
@@ -210,12 +210,12 @@ object TextPipeline {
     * Determinism/scale notes: the rank key is the score ROUNDED at 6
     * decimals (ties broken by id) so the per-engine last-ulp of a
     * float mean can't flip an ordering; the within-language rank is
-    * [[RelationalOps.keyedRank]] — range-partitioned two-phase, NOT a
-    * per-language window, so the head language doesn't funnel into one
-    * task; the tercile split is the standard ntile rule (first n%3
-    * buckets get the extra row) computed in closed-form integer
-    * arithmetic from the rank and the per-language count, so any engine
-    * replays it exactly.
+    * [[RelationalOps.keyedRank]] — one range-partitioned two-pass plan
+    * node, NOT a per-language window, so the head language doesn't
+    * funnel into one task; the tercile split is the standard ntile rule
+    * (first n%3 buckets get the extra row) computed in closed-form
+    * integer arithmetic from the rank and the per-language count, so any
+    * engine replays it exactly.
     *
     * Returns `(id, lang, mean_tok_prob, ppl_bucket)` with bucket ∈
     * head/middle/tail.
@@ -232,7 +232,7 @@ object TextPipeline {
     // the rank shuffle, the per-language counts) would each re-run the
     // whole LM score chain — count-frame joins, not a scan projection.
     // Slim rows (id, lang, score); the cache stays live with the
-    // returned lazy frame (the house live-plan posture — see keyedRank).
+    // returned lazy frame.
     val base = df.select(idCol.as("id"), langCol.as("lang"))
       .join(scored, Seq("id"))
       .withColumn("__s6", round(col("mean_tok_prob"), 6))
@@ -268,9 +268,10 @@ object TextPipeline {
           .select(col("id"), col("lang"), col("mean_tok_prob"),
             lit("tail").as("ppl_bucket")))
     } catch {
-      // keyedRank can throw during plan construction (cardinality-cap
-      // require); release the cached slim frame rather than leaking it
-      // in a long-lived session — same posture as keyedRank itself.
+      // building the frame can fail (a missing column); release the
+      // cached slim frame rather than leaking it in a long-lived
+      // session. keyedRank's cardinality cap fails later, when the
+      // query runs, and the cache then stays with the returned frame.
       case e: Throwable =>
         base.unpersist(blocking = false)
         throw e

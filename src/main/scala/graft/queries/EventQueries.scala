@@ -151,19 +151,17 @@ object EventQueries {
     // 0.8416212335729143), so the oracle recomputes EVERY output cell —
     // including the p<0.05 verdict, which equals |z| > q95 exactly.
     "e60_proportions_ztest" -> ((s, dir) => {
-      val cohorts = events(s, dir)
-        .groupBy((pmod(col("user_id"), lit(2)) === 0).as("even"))
-        .agg(sum(when(col("value") > 10, 1L).otherwise(0L)).as("succ"),
-          count(lit(1)).as("total"))
-        .orderBy(col("even"))
-      val r = cohorts.collect() // 2 bounded rows: the test's scalar inputs
-      val (sx, tx) = (r(1).getLong(1), r(1).getLong(2)) // even cohort
-      val (sy, ty) = (r(0).getLong(1), r(0).getLong(2)) // odd cohort
-      val s0 = s
-      import s0.implicits._
-      Seq(1).toDF("__one")
+      // both cohorts' (successes, total) in one aggregate row: the
+      // test's inputs stay inside the plan
+      val even = pmod(col("user_id"), lit(2)) === 0
+      val high = col("value") > 10
+      events(s, dir)
+        .agg(count(when(even && high, 1)).as("sx"),
+          count(when(!even && high, 1)).as("sy"),
+          count(when(even, 1)).as("tx"),
+          count(when(!even, 1)).as("ty"))
         .selectExpr(
-          s"proportionsZTest(${sx}L, ${sy}L, ${tx}L, ${ty}L, 0.95D) AS zt",
+          "proportionsZTest(sx, sy, tx, ty, 0.95D) AS zt",
           "minSampleSizeConversion(0.25D, 0.03D, 0.8D, 0.05D) AS mss")
         .selectExpr(
           "round(zt._1, 6) AS z_stat",

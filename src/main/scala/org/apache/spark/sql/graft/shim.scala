@@ -24,7 +24,8 @@ object shim {
 
   /** DataFrame over a raw logical plan (`Dataset.ofRows` is
     * `private[sql]`) — used by optimizer rules that graft an index-scan
-    * sub-plan into an existing query tree.
+    * sub-plan into an existing query tree, and by operators that are
+    * their own plan node (`graft.plans.PrefixScan`).
     */
   def ofRows(
       spark: org.apache.spark.sql.SparkSession,
@@ -32,20 +33,6 @@ object shim {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** DataFrame over an RDD of InternalRow
-    * (`SparkSession.internalCreateDataFrame` is `private[sql]`) — lets
-    * per-partition passes (running sums, local ranks) stay in Spark's
-    * internal row format instead of round-tripping every row through an
-    * external `Row` + ExpressionEncoder (r22, guide §1.2 per-task work).
-    */
-  def internalDf(
-      spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
 
   /** Drain the listener bus (`private[spark]`) — lets tests assert
     * "no job ran during optimization" without sleeping.

@@ -184,16 +184,13 @@ class PropertySpec extends SparkSpec {
       assert(math.abs(c - expect(k)) < 1e-6 * (1 + math.abs(expect(k))), s"k=$k")
       assert(math.abs(t - expect(5000L)) < 1e-6 * (1 + math.abs(tot)))
     }
-    // the scale property: NOT a single-partition sort. r22: the cumulate
-    // pass runs over queryExecution.toRdd (InternalRow — the range
-    // partitioning lives in the RDD lineage behind the ExistingRDD scan,
-    // no longer in the visible SQL plan), so assert the shape on the
-    // materialized partitions instead: several of them, and no Window /
-    // SinglePartition anywhere in the consuming plan.
+    // the scale property: NOT a single-partition sort. The cumulate pass
+    // is the PrefixScan plan node over a range exchange, so assert it is
+    // there and that no Window / SinglePartition is anywhere in the plan.
     val out = graft.operators.RelationalOps
       .partitionedRunningSum(df, "k", Seq("v"))
     val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("Scan ExistingRDD"), plan.take(600))
+    assert(plan.contains("PrefixScan"), plan.take(600))
     assert(!plan.contains("SinglePartition"), plan.take(600))
     // (no partition-count assertion: AQE's byte-sized coalescing folds
     // this 80 KB input into one partition by design — scale-adaptive)
