@@ -6,8 +6,43 @@ package graft
   * a count() action (cold JVM — first query absorbs session startup).
   */
 object Bench {
+  /** The timed order of `names` for `SPARK_GRAFT_BENCH_ORDER` = `mode`.
+    * "interleave" (the default) round-robins across the query families
+    * (d/e/h/p/q/t/v prefixes, alphabetical within a family) so every
+    * family samples the WHOLE run window: ambient pressure (a Verify/DuckDB
+    * tear-down overlapping the bench) or cumulative in-JVM
+    * state can then shift the total but never silently tax one family —
+    * which is exactly what produced the r11 d-family and r13 t-family
+    * "regressions" on untouched code (both vanished in an idle
+    * environment; r14 bisection: t-family isolated = faster than r11,
+    * full-alpha local = faster than r11, only the alpha run under ambient
+    * load drifted). "alpha" and "reverse" remain for A/B bisection. Any other
+    * value throws, so a typo cannot quietly time the default order.
+    */
+  def order(mode: String, names: Seq[String]): Seq[String] = {
+    val base = names.sorted
+    mode match {
+      case "interleave" =>
+        val fams = base.groupBy(_.take(1)).toSeq.sortBy(_._1).map(_._2)
+        val maxLen = if (fams.isEmpty) 0 else fams.map(_.length).max
+        (0 until maxLen).flatMap(i => fams.flatMap(_.lift(i)))
+      case "alpha" => base
+      case "reverse" => base.reverse
+      case other => throw new IllegalArgumentException(
+        s"unknown SPARK_GRAFT_BENCH_ORDER '$other': expected interleave, alpha or reverse")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_BENCH_ONLY=d01_exact_dedup,d08_contamination : restrict the
+    // timed set (bisection / local iteration). SPARK_GRAFT_BENCH_ORDER: see
+    // order(); the order is recorded in the output JSON.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val orderMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "interleave")
+    val allNames = SparkEntry.queries.keys.toSeq
+    val names = order(orderMode, only.fold(allNames)(s => allNames.filter(s.contains)))
     val spark = graft.engine.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
@@ -57,34 +92,6 @@ object Bench {
       }
     }
 
-    // SPARK_GRAFT_BENCH_ONLY=d01_exact_dedup,d08_contamination : restrict the
-    // timed set (bisection / local iteration). SPARK_GRAFT_BENCH_ORDER=
-    // interleave|alpha|reverse. Default "interleave" round-robins across the
-    // query families (d/e/h/p/q/t/v prefixes, alphabetical within a family)
-    // so every family samples the WHOLE run window: ambient pressure (the
-    // driver's Verify/DuckDB tear-down overlapping the bench) or cumulative
-    // in-JVM state can then shift the total but never silently tax one
-    // family — which is exactly what produced the r11 d-family and r13
-    // t-family "regressions" on untouched code (both vanished in an idle
-    // environment; r14 bisection: t-family isolated = faster than r11,
-    // full-alpha local = faster than r11, only the driver-ambient alpha run
-    // drifted). alpha/reverse remain for A/B bisection; the order is
-    // recorded in the output JSON.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val orderMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "interleave")
-    val allNames = SparkEntry.queries.keys.toSeq.sorted
-    val names = {
-      val base = only.fold(allNames)(s => allNames.filter(s.contains))
-      orderMode match {
-        case "reverse" => base.reverse
-        case "alpha" => base
-        case _ => // interleave: round-robin across first-letter families
-          val fams = base.groupBy(_.take(1)).toSeq.sortBy(_._1).map(_._2)
-          val maxLen = if (fams.isEmpty) 0 else fams.map(_.length).max
-          (0 until maxLen).flatMap(i => fams.flatMap(_.lift(i)))
-      }
-    }
     val timeSplit = sys.env.contains("SPARK_GRAFT_BENCH_SPLIT")
     // Ambient-noise sentinel (round 20): a FIXED constant-work CPU job —
     // range → xxhash64 → 1-row partial agg; no I/O, no data shuffle — timed

@@ -268,7 +268,6 @@ object H3Core {
       823543, -1, 5764801)
 
   def isPentagonBase(bc: Int): Boolean = baseCellData(bc)._5
-  private def isPolarPentagon(bc: Int): Boolean = bc == 4 || bc == 117
   private def isCwOffset(bc: Int, face: Int): Boolean =
     baseCellData(bc)._6 == face || baseCellData(bc)._7 == face
 

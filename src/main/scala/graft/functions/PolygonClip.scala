@@ -62,9 +62,6 @@ object PolygonClip extends Serializable {
   case object Difference extends Op
   case object Xor extends Op
 
-  private def signedArea(p0: Pt, p1: Pt, p2: Pt): Double =
-    (p0._1 - p2._1) * (p1._2 - p2._2) - (p1._1 - p2._1) * (p0._2 - p2._2)
-
   /** Segment intersection: 0 points (disjoint / parallel), 1 point
     * (proper or endpoint touch) or 2 points (collinear overlap interval).
     */

@@ -29,13 +29,6 @@ object Dedup {
     df.groupBy(text.fingerprint(textCol).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(idCol).as("canonical_id"))
 
-  /** Exact word n-gram Jaccard similarity pairs (id_a < id_b, sim >= minSim).
-    *
-    * Shape: explode distinct shingles → self-join on shingle (only
-    * matching shingles meet) → per-pair intersection counts → Jaccard via
-    * |A|+|B|-|A∩B|. The shingle join key is hashed to 8 bytes so the
-    * shuffle carries longs, not strings.
-    */
   /** Cross-corpus incremental dedup — the training-pipeline shape where
     * each new batch is deduplicated AGAINST THE ALREADY-SEEN corpus
     * (batch-vs-seen, not batch-vs-itself): survivors are the new docs
@@ -79,18 +72,6 @@ object Dedup {
       idCol: Column,
       n: Int = 3,
       minSim: Double = 0.5): DataFrame = {
-    // Shingle hash = xxhash over the n token hashes (hashShingles) — no
-    // shingle STRING is ever materialized, the same trick that makes the
-    // MinHash signature stage fast (string building dominated the cost).
-    // Token hashes are materialized in their OWN projection below the
-    // Generate: inlining them into hashShingles' element_at lambdas would
-    // re-run the whole tokenize pipeline per element access (the
-    // CollapseProject trap — 5× slowdown measured).
-    val exploded = df
-      .select(idCol.as("id"),
-        transform(text.tokenize(textCol), t => graft.functions.SparkHash.xxh64(t)).as("__th"))
-      .select(col("id"),
-        explode(array_distinct(hashShingles(col("__th"), n))).as("shash"))
     // Canonical global order = ASCENDING document frequency (ties by
     // hash) — the AllPairs essential: prefixes then hold each doc's
     // RAREST shingles, so the candidate join explodes on rare hashes
@@ -98,8 +79,8 @@ object Dedup {
     // in every prefix and recreates the df² blowup.) df comes from a
     // count-over-shash window: ONE evaluation of the shingle stream,
     // two shuffles total (shash window, id aggregation).
-    val withDf = exploded.withColumn("__df",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("shash")))
+    val withDf = shingleRows(df, textCol, idCol, n)
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy("shash")))
     val docs = withDf
       .groupBy(col("id"))
       .agg(array_sort(collect_list(struct(col("__df"), col("shash")))).as("__ord"))
@@ -122,23 +103,31 @@ object Dedup {
               lit(minSim) * greatest(col("a.n_sh"), col("b.n_sh")).cast("double"))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
         .distinct()
-      // Verification: exact set intersection of the full shingle arrays.
-      // Doc arrays are shuffled only for candidate pairs; never broadcast
-      // (one row per doc — a broadcast OOMs at corpus scale).
-      cand
-        .join(docs.select(col("id").as("id_a"), col("sh").as("sa"),
-          col("n_sh").as("na")), Seq("id_a"))
-        .join(docs.select(col("id").as("id_b"), col("sh").as("sb"),
-          col("n_sh").as("nb")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("na") + col("nb") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= minSim)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
+      verifyJaccard(cand, "id_a", "id_b", docs, docs, minSim)
         // eager: pair set materialized before the doc cache is released
         .localCheckpoint(true)
     } finally docs.unpersist(blocking = false)
+  }
+
+  /** Word n-gram shingle hashes of every doc: `(id, shash)`, one row per
+    * shingle (per DISTINCT shingle when `distinct`). A shingle hash is
+    * xxhash over the n token hashes ([[hashShingles]]), so no shingle
+    * STRING is ever materialized — string building dominated the cost,
+    * and the shuffles that follow carry 8-byte longs, not text.
+    *
+    * The token hashes are a bound column `__th` in their OWN projection
+    * below the Generate: inlined into hashShingles' element_at lambdas,
+    * the whole tokenize pipeline would re-run per element access (the
+    * CollapseProject trap — 5× slower on 3-grams, 28 s instead of ~1 s
+    * at sf0.1 on spanDupReport's 8-grams).
+    */
+  private def shingleRows(df: DataFrame, textCol: Column, idCol: Column, n: Int,
+      distinct: Boolean = true): DataFrame = {
+    val shingles = hashShingles(col("__th"), n)
+    df.select(idCol.as("id"),
+        transform(text.tokenize(textCol), t => graft.functions.SparkHash.xxh64(t)).as("__th"))
+      .select(col("id"),
+        explode(if (distinct) array_distinct(shingles) else shingles).as("shash"))
   }
 
   /** Word-n-gram shingle hashes from a token-hash array: h(i) =
@@ -146,7 +135,7 @@ object Dedup {
     * xxhash64 is order-dependent across its arguments; no overflow-prone
     * arithmetic, ANSI-safe).
     */
-  private[graft] def hashShingles(tokenHashes: Column, n: Int): Column = {
+  private def hashShingles(tokenHashes: Column, n: Int): Column = {
     val cnt = size(tokenHashes) - (n - 1)
     val idxs = when(cnt >= 1, sequence(lit(1), cnt))
       .otherwise(array().cast("array<int>"))
@@ -154,15 +143,61 @@ object Dedup {
       graft.functions.SparkHash.xxh64((0 until n).map(j => element_at(tokenHashes, i + j)): _*))
   }
 
-  /** MinHash signature as an array<bigint> column: numPerm independent
-    * hash functions h_i(s) = graft.functions.SparkHash.xxh64(i, shingle-hash), min over shingles.
+  /** Per-doc shingle sets `(id, sh, n_sh)` of a [[shingleRows]] frame. */
+  private def shingleSets(shingles: DataFrame): DataFrame =
+    shingles.groupBy("id")
+      .agg(collect_set(col("shash")).as("sh"), count(lit(1)).as("n_sh"))
+
+  /** Exact Jaccard verify of candidate pairs `(a, b)`: each side joins
+    * its `(id, sh, n_sh)` shingle set, and pairs with |A∩B| / (|A|+|B|-
+    * |A∩B|) ≥ `minSim` survive as `(a, b, jaccard)`. Two hash joins on
+    * doc id, so set arrays shuffle only for candidate pairs; never
+    * broadcast (one row per doc — a broadcast OOMs at corpus scale).
     */
-  def minhashSignature(textCol: Column, n: Int = 3, numPerm: Int = 64): Column = {
-    val baseHashes = array_distinct(
-      hashShingles(transform(text.tokenize(textCol), t => graft.functions.SparkHash.xxh64(t)), n))
-    val perms = sequence(lit(0), lit(numPerm - 1))
-    transform(perms, i => array_min(transform(baseHashes, h => graft.functions.SparkHash.xxh64(i, h))))
+  private def verifyJaccard(cand: DataFrame, a: String, b: String,
+      setsA: DataFrame, setsB: DataFrame, minSim: Double): DataFrame =
+    cand
+      .join(setsA.select(col("id").as(a), col("sh").as("sa"),
+        col("n_sh").as("na")), Seq(a))
+      .join(setsB.select(col("id").as(b), col("sh").as("sb"),
+        col("n_sh").as("nb")), Seq(b))
+      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jaccard",
+        col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= minSim)
+      .select(col(a), col(b), col("jaccard"))
+
+  /** MinHash signatures `(id, sig)`: numPerm independent hash functions
+    * h_i(s) = xxh64(i, shingle-hash), min over a doc's shingles, as
+    * numPerm min() aggregates. The aggregation is a hard optimizer
+    * barrier (projection chains get re-inlined by CollapseProject,
+    * re-deriving the tokenize→shingle pipeline once per permutation
+    * lambda — catastrophically slow), and min() partial-aggregates
+    * map-side, so the only shuffle carries numPerm longs per doc. This
+    * is the 100 TB shape.
+    */
+  private def minhashSigs(shingles: DataFrame, numPerm: Int): DataFrame = {
+    val minAggs = (0 until numPerm).map(i =>
+      min(graft.functions.SparkHash.xxh64(lit(i), col("shash"))).as(s"__m$i"))
+    shingles
+      .groupBy("id")
+      .agg(minAggs.head, minAggs.tail: _*)
+      .select(col("id"),
+        array((0 until numPerm).map(i => col(s"__m$i")): _*).as("sig"))
   }
+
+  /** LSH banding of `(id, sig)` signatures: one `(id, keep…, band,
+    * bucket)` row per band, bucket = hash of the band's `rowsPerBand`
+    * minhashes. Docs sharing a (band, bucket) become candidate pairs.
+    */
+  private def bandRows(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+      keep: Column*): DataFrame =
+    sigs.select((col("id") +: keep) :+
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => hash(slice(col("sig"), b * rowsPerBand + lit(1), lit(rowsPerBand)), b))): _*)
+      .withColumnRenamed("col", "bucket")
+      .withColumnRenamed("pos", "band")
 
   /** MinHash + LSH banding: docs sharing ≥1 band bucket become candidate
     * pairs; estimated Jaccard = fraction of matching minhashes.
@@ -177,52 +212,26 @@ object Dedup {
       rowsPerBand: Int = 4,
       minEstSim: Double = 0.5): DataFrame = {
     val numPerm = bands * rowsPerBand
-    // Signature via numPerm min() aggregates over exploded shingle hashes.
-    // The aggregation is a hard optimizer barrier (projection chains get
-    // re-inlined by CollapseProject, re-deriving the tokenize→shingle
-    // pipeline once per permutation lambda — catastrophically slow), and
-    // min() partial-aggregates map-side, so the only shuffle carries
-    // numPerm longs per doc. This is the 100 TB shape.
-    // Shingle hash = mixed combination of the n token hashes — no shingle
-    // STRING is ever materialized (one xxhash per token, then long math),
-    // which halves the signature stage cost vs string shingles.
-    val exploded = df
-      .select(idCol.as("id"),
-        transform(text.tokenize(textCol), t => graft.functions.SparkHash.xxh64(t)).as("__th"))
-      .select(col("id"), explode(array_distinct(hashShingles(col("__th"), n))).as("shash"))
-    val minAggs = (0 until numPerm).map(i =>
-      min(graft.functions.SparkHash.xxh64(lit(i), col("shash"))).as(s"__m$i"))
-    val sigs = exploded
-      .groupBy("id")
-      .agg(minAggs.head, minAggs.tail: _*)
-      .select(col("id"),
-        array((0 until numPerm).map(i => col(s"__m$i")): _*).as("sig"))
+    val sigs = minhashSigs(shingleRows(df, textCol, idCol, n), numPerm)
       // r14: localCheckpoint beats persist for the slim signature frame
       .localCheckpoint(true)
-    locally {
-      val banded = sigs.select(
-        col("id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * rowsPerBand + lit(1), lit(rowsPerBand)), b))))
-        .withColumnRenamed("col", "bucket")
-        .withColumnRenamed("pos", "band")
-      val cand = banded.as("a")
-        .join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-        .dropDuplicates("id_a", "id_b")
-      cand
-        .withColumn("est_jaccard",
-          size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-            b => b)).cast("double") / lit(numPerm.toDouble))
-        .filter(col("est_jaccard") >= minEstSim)
-        .select(col("id_a"), col("id_b"), col("est_jaccard"))
-        // eager: pair set materialized before the signature blocks are
-        // released
-        .localCheckpoint(true)
-    }
+    val banded = bandRows(sigs, bands, rowsPerBand, col("sig"))
+    val cand = banded.as("a")
+      .join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+          col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
+      .dropDuplicates("id_a", "id_b")
+    cand
+      .withColumn("est_jaccard",
+        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
+          b => b)).cast("double") / lit(numPerm.toDouble))
+      .filter(col("est_jaccard") >= minEstSim)
+      .select(col("id_a"), col("id_b"), col("est_jaccard"))
+      // eager: pair set materialized before the signature blocks are
+      // released
+      .localCheckpoint(true)
   }
 
   /** MinHash-LSH with EXACT verification — the production MinHash dedup
@@ -248,45 +257,18 @@ object Dedup {
       bands: Int = 16,
       rowsPerBand: Int = 4,
       minSim: Double = 0.5): DataFrame = {
-    val numPerm = bands * rowsPerBand
-    val exploded = df
-      .select(idCol.as("id"),
-        transform(text.tokenize(textCol), t => graft.functions.SparkHash.xxh64(t)).as("__th"))
-      .select(col("id"), explode(array_distinct(hashShingles(col("__th"), n))).as("shash"))
-      .persist()
+    val exploded = shingleRows(df, textCol, idCol, n).persist()
     try {
-      val minAggs = (0 until numPerm).map(i =>
-        min(graft.functions.SparkHash.xxh64(lit(i), col("shash"))).as(s"__m$i"))
-      val sigs = exploded
-        .groupBy("id")
-        .agg(minAggs.head, minAggs.tail: _*)
-        .select(col("id"),
-          array((0 until numPerm).map(i => col(s"__m$i")): _*).as("sig"))
-      val banded = sigs.select(
-        col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * rowsPerBand + lit(1), lit(rowsPerBand)), b))))
-        .withColumnRenamed("col", "bucket")
-        .withColumnRenamed("pos", "band")
+      val banded =
+        bandRows(minhashSigs(exploded, bands * rowsPerBand), bands, rowsPerBand)
       val cand = banded.as("a")
         .join(banded.as("b"),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
             col("a.id") < col("b.id"))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
         .dropDuplicates("id_a", "id_b")
-      val sets = exploded.groupBy("id")
-        .agg(collect_set(col("shash")).as("sh"), count(lit(1)).as("n_sh"))
-      cand
-        .join(sets.select(col("id").as("id_a"), col("sh").as("sa"),
-          col("n_sh").as("na")), Seq("id_a"))
-        .join(sets.select(col("id").as("id_b"), col("sh").as("sb"),
-          col("n_sh").as("nb")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("na") + col("nb") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= minSim)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
+      val sets = shingleSets(exploded)
+      verifyJaccard(cand, "id_a", "id_b", sets, sets, minSim)
         // eager: pair set materialized before the shingle cache is
         // released
         .localCheckpoint(true)
@@ -321,48 +303,18 @@ object Dedup {
       bands: Int = 16,
       rowsPerBand: Int = 4,
       minSim: Double = 0.5): DataFrame = {
-    val numPerm = bands * rowsPerBand
-    def explodedOf(df: DataFrame, tc: Column, ic: Column): DataFrame = df
-      .select(ic.as("id"),
-        transform(text.tokenize(tc), t => graft.functions.SparkHash.xxh64(t)).as("__th"))
-      .select(col("id"), explode(array_distinct(hashShingles(col("__th"), n))).as("shash"))
-    // same signature/banding pipeline as the self-join path — min()
-    // partial-aggregates map-side; the only shuffle carries numPerm longs
-    // per doc (see minhashLshVerifiedPairs for the optimizer-barrier notes)
-    def bandedOf(exploded: DataFrame): DataFrame = {
-      val minAggs = (0 until numPerm).map(i =>
-        min(graft.functions.SparkHash.xxh64(lit(i), col("shash"))).as(s"__m$i"))
-      exploded.groupBy("id")
-        .agg(minAggs.head, minAggs.tail: _*)
-        .select(col("id"),
-          array((0 until numPerm).map(i => col(s"__m$i")): _*).as("sig"))
-        .select(col("id"),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)),
-            b => hash(slice(col("sig"), b * rowsPerBand + lit(1), lit(rowsPerBand)), b))))
-        .withColumnRenamed("col", "bucket")
-        .withColumnRenamed("pos", "band")
-    }
-    val newExploded = explodedOf(newDocs, textCol, idCol).persist()
-    val seenExploded = explodedOf(seen, seenTextCol, seenIdCol).persist()
+    def bandedOf(exploded: DataFrame): DataFrame =
+      bandRows(minhashSigs(exploded, bands * rowsPerBand), bands, rowsPerBand)
+    val newExploded = shingleRows(newDocs, textCol, idCol, n).persist()
+    val seenExploded = shingleRows(seen, seenTextCol, seenIdCol, n).persist()
     try {
       val cand = bandedOf(newExploded).as("a")
         .join(bandedOf(seenExploded).as("b"),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
         .select(col("a.id").as("new_id"), col("b.id").as("seen_id"))
         .dropDuplicates("new_id", "seen_id")
-      def setsOf(exploded: DataFrame): DataFrame = exploded.groupBy("id")
-        .agg(collect_set(col("shash")).as("sh"), count(lit(1)).as("n_sh"))
-      cand
-        .join(setsOf(newExploded).select(col("id").as("new_id"),
-          col("sh").as("sa"), col("n_sh").as("na")), Seq("new_id"))
-        .join(setsOf(seenExploded).select(col("id").as("seen_id"),
-          col("sh").as("sb"), col("n_sh").as("nb")), Seq("seen_id"))
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("na") + col("nb") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= minSim)
-        .select(col("new_id"), col("seen_id"), col("jaccard"))
+      verifyJaccard(cand, "new_id", "seen_id",
+        shingleSets(newExploded), shingleSets(seenExploded), minSim)
         // eager: pair set materialized before the shingle caches release
         .localCheckpoint(true)
     } finally {
@@ -477,28 +429,12 @@ object Dedup {
     * per-token 64-wide array fold of [[simhash]]; same bit semantics.
     * Token-less docs keep signature 0 (the fold's empty-input value).
     */
-  def simhashSignatures(df: DataFrame, textCol: Column, idCol: Column): DataFrame = {
-    val toks = df
-      .select(idCol.as("id"),
-        transform(text.tokenize(textCol), t => graft.functions.SparkHash.xxh64(t)).as("__th"))
-      .select(col("id"), explode(col("__th")).as("__t"))
-    // ones-count + 2·ones > n threshold — same rewrite as the md5
-    // variant below (identical signatures, no per-bit CASE in the agg)
-    val bitSums = (0 until 64).map { j =>
-      sum(call_function("shiftright", col("__t"), lit(j))
-        .bitwiseAND(lit(1L))).as(s"__b$j")
-    }
-    val agged = toks.groupBy(col("id"))
-      .agg(bitSums.head, bitSums.tail :+ count(lit(1)).as("__n"): _*)
-    val sig = (0 until 64).map { j =>
-      when(col(s"__b$j") * 2L > col("__n"),
-        call_function("shiftleft", lit(1L), lit(j)))
-        .otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-    df.select(idCol.as("id")).join(agged, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(sig, lit(0L)).as("sig"))
-  }
+  def simhashSignatures(df: DataFrame, textCol: Column, idCol: Column): DataFrame =
+    majoritySigs(df, idCol,
+      df.select(idCol.as("id"),
+          transform(text.tokenize(textCol), t => graft.functions.SparkHash.xxh64(t)).as("__th"))
+        .select(col("id"), explode(col("__th")).as("__w")),
+      j => j)
 
   /** SimHash signatures whose per-token bits come from md5 HEX DIGITS
     * instead of xxh64: bit j of a token is bit `3 - j%4` of hex digit
@@ -513,10 +449,10 @@ object Dedup {
     // bit j of a token = bit (3 - j%4) of hex digit (j/4 + 1) ⇔ bit
     // (63 - j) of the 64-bit word spelled by the first 16 hex digits —
     // decode that word ONCE per token (two 8-digit conv halves) so the
-    // 64 aggregates below are single shift-and-mask ops instead of 64
+    // 64 aggregates are single shift-and-mask ops instead of 64
     // separate conv(substring(...)) evaluations per row (r14: cut d04's
     // signature job ~4x)
-    val toks = df
+    val words = df
       .select(idCol.as("id"), explode(text.tokenize(textCol)).as("__t"))
       .select(col("id"), md5(col("__t")).as("__h"))
       .select(col("id"),
@@ -524,15 +460,24 @@ object Dedup {
           conv(substring(col("__h"), 1, 8), 16, 10).cast("long"), lit(32))
           .bitwiseOR(conv(substring(col("__h"), 9, 8), 16, 10).cast("long")))
           .as("__w"))
-    // ±1 bit sum positive ⟺ ones > zeros ⟺ 2·ones > n: aggregate the
-    // plain ones-count (no CASE branch per bit per row — r21, ~64
-    // conditionals removed from the hot agg update) and threshold
-    // against the token count. Identical signatures.
+    majoritySigs(df, idCol, words, j => 63 - j)
+  }
+
+  /** Majority-bit signatures `(id, sig)` over per-token 64-bit words
+    * `(id, __w)`: signature bit j is set iff bit `srcBit(j)` is set in
+    * more than half of the doc's tokens. ±1 bit sum positive ⟺ ones >
+    * zeros ⟺ 2·ones > n, so the 64 aggregates are plain partial-merge
+    * ones-counts thresholded against the token count (no CASE branch
+    * per bit per row — r21, ~64 conditionals removed from the hot agg
+    * update). Every row of `df` gets a signature; token-less docs keep 0.
+    */
+  private def majoritySigs(df: DataFrame, idCol: Column, words: DataFrame,
+      srcBit: Int => Int): DataFrame = {
     val bitSums = (0 until 64).map { j =>
-      sum(call_function("shiftright", col("__w"), lit(63 - j))
+      sum(call_function("shiftright", col("__w"), lit(srcBit(j)))
         .bitwiseAND(lit(1L))).as(s"__b$j")
     }
-    val agged = toks.groupBy(col("id"))
+    val agged = words.groupBy(col("id"))
       .agg(bitSums.head, bitSums.tail :+ count(lit(1)).as("__n"): _*)
     val sig = (0 until 64).map { j =>
       when(col(s"__b$j") * 2L > col("__n"),
@@ -779,6 +724,20 @@ object Dedup {
     math.min(65536L,
       math.max(8L, (n + targetClusterSize - 1) / targetClusterSize)).toInt
 
+  /** [[semDeDup]] default path: seed centroids with the scale-safe
+    * [[autoCentroidCount]] (k from a cheap corpus count — one extra
+    * `df.count()` pass, recomputed on non-deterministic inputs; pass
+    * explicit centroids to pin). Production quality improves with
+    * trained k-means centroids; the dedup semantics are identical.
+    */
+  def semDeDup(
+      df: DataFrame,
+      vecCol: Column,
+      idCol: Column,
+      minCosSim: Double): DataFrame =
+    semDeDup(df, vecCol, idCol,
+      seedCentroids(df, vecCol, idCol, autoCentroidCount(df.count())), minCosSim)
+
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication", arXiv:2303.09540) —
     * embedding-level semantic dedup: assign every vector to its nearest
@@ -808,20 +767,6 @@ object Dedup {
     * is the dup-group label (own id for singletons) and `keep` is the
     * retention verdict.
     */
-  /** [[semDeDup]] default path: seed centroids with the scale-safe
-    * [[autoCentroidCount]] (k from a cheap corpus count — one extra
-    * `df.count()` pass, recomputed on non-deterministic inputs; pass
-    * explicit centroids to pin). Production quality improves with
-    * trained k-means centroids; the dedup semantics are identical.
-    */
-  def semDeDup(
-      df: DataFrame,
-      vecCol: Column,
-      idCol: Column,
-      minCosSim: Double): DataFrame =
-    semDeDup(df, vecCol, idCol,
-      seedCentroids(df, vecCol, idCol, autoCentroidCount(df.count())), minCosSim)
-
   def semDeDup(
       df: DataFrame,
       vecCol: Column,
@@ -1157,11 +1102,8 @@ object Dedup {
       idCol: Column,
       benchTextCol: Column,
       n: Int = 5): DataFrame = {
-    def sh(df: DataFrame, t: Column, id: Column): DataFrame = df
-      .select(id.as("id"), transform(text.tokenize(t), w => graft.functions.SparkHash.xxh64(w)).as("__th"))
-      .select(col("id"), explode(array_distinct(hashShingles(col("__th"), n))).as("shash"))
-    val corpusSh = sh(corpus, textCol, idCol)
-    val benchSh = sh(bench, benchTextCol, idCol).select("shash").distinct()
+    val corpusSh = shingleRows(corpus, textCol, idCol, n)
+    val benchSh = shingleRows(bench, benchTextCol, idCol, n).select("shash").distinct()
       .withColumn("__hit", lit(1))
     corpusSh.join(benchSh, Seq("shash"), "left")
       .groupBy("id")
@@ -1276,19 +1218,9 @@ object Dedup {
       textCol: Column,
       idCol: Column,
       n: Int = 8): DataFrame = {
-    // token-hash array materialized as a bound column BEFORE the window
-    // expansion: hashShingles reads element_at 8× per window, and an
-    // inlined transform(...) subtree would be re-evaluated per access
-    // (the whole tokenize+hash per element_at — measured 28 s instead
-    // of ~1 s at sf0.1), same discipline as contaminationReport
-    val sh = df
-      .select(idCol.as("id"),
-        transform(text.tokenize(textCol),
-          w => graft.functions.SparkHash.xxh64(w)).as("__th"))
-      .select(col("id"), explode(hashShingles(col("__th"), n)).as("shash"))
-    val occurrences = count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("shash")))
-    sh.withColumn("__c", occurrences)
+    val occurrences = count(lit(1)).over(Window.partitionBy(col("shash")))
+    shingleRows(df, textCol, idCol, n, distinct = false)
+      .withColumn("__c", occurrences)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("__c") > 1, 1L).otherwise(0L)).as("n_dup"))
@@ -1309,35 +1241,6 @@ object Dedup {
     * its [[AutoPlanes]] default and is the engine's documented scale
     * path (its axis-aligned buckets are also engine-replayable).
     */
-  /** Bucket self-join build-side strategy for the LSH pair paths —
-    * `spark.graft.lsh.bucketJoin` session conf, default from env
-    * `SPARK_GRAFT_LSH_JOIN`, else "shuffle_hash".
-    *
-    * - "shuffle_hash" (default): pin SHJ. The 100 TB shape — neither
-    *   side of the bucket self-join can broadcast there, bounded bucket
-    *   loads make the per-partition hash build tiny, and the (table,
-    *   bucket) exchange spreads the cosine verify across reducers
-    *   (r21: with a single input split, AQE's broadcast plan ran the
-    *   whole verify in ONE probe task).
-    * - "auto": no hint — planner/AQE free choice (broadcast at small
-    *   SF). Exists so the r21 driver regression on d09/d10/d17 can be
-    *   A/B'd per VERDICT r21 #2 without a recompile.
-    * - "broadcast": force broadcast of the build side.
-    *
-    * Any other value fails, so a typo cannot quietly A/B the default.
-    */
-  private def lshBucketBuildSide(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.lsh.bucketJoin")
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_LSH_JOIN", "shuffle_hash"))
-    match {
-      case "auto" => df
-      case "broadcast" => broadcast(df)
-      case "shuffle_hash" => df.hint("shuffle_hash")
-      case other => throw new IllegalArgumentException(
-        s"unknown LSH bucket-join mode '$other' (spark.graft.lsh.bucketJoin / " +
-          "SPARK_GRAFT_LSH_JOIN): expected shuffle_hash, auto or broadcast")
-    }
-
   def lshCosinePairs(
       df: DataFrame,
       vecCol: Column,
@@ -1348,8 +1251,6 @@ object Dedup {
       seed: Long = 42L): DataFrame = {
     val rnd = new scala.util.Random(seed)
     val dim = df.select(size(vecCol)).head().getInt(0)
-    // one scan + posexplode over the per-table bucket keys (same rows as
-    // the former nTables-branch union — see lshCosineCoordPairs)
     val tableBuckets = (0 until nTables).map { _ =>
       val planes = Array.fill(nPlanes, dim)(rnd.nextGaussian().toFloat)
       planes.zipWithIndex.map { case (p, i) =>
@@ -1357,23 +1258,41 @@ object Dedup {
         when(proj > 0f, shiftleft(lit(1L), i)).otherwise(lit(0L))
       }.reduce[Column]((x, y) => x.bitwiseOR(y))
     }
+    bucketCosinePairs(df, vecCol, idCol, tableBuckets, minCosSim)
+  }
+
+  /** Cosine near-dup pairs `(id_a, id_b, cos_sim)` among rows that share
+    * a (table, bucket) key; `tableBuckets` holds one bucket-key column
+    * per hash table. All keys are computed in ONE pass over the scan and
+    * row-multiplied with posexplode (r21: the former per-table union
+    * re-read the input once per table per join side).
+    *
+    * The bucket self-join is pinned to shuffle-hash, never broadcast:
+    * with a single input split the broadcast plan AQE picks would run
+    * the whole cosine verify in ONE probe task (r21: 3× slower at
+    * sf0.1); the (table, bucket) exchange spreads the verify across
+    * reducers and is the shape that holds at 100 TB, where neither side
+    * could broadcast anyway. Bounded bucket loads make the per-partition
+    * hash build tiny, and no sort is paid (the blockedHammingPairs
+    * rationale).
+    *
+    * Cosine is verified on the join output, before the pair dedup:
+    * candidates carry two full embeddings, so only verified (id, id,
+    * score) rows ever shuffle. A pair colliding in several tables
+    * recomputes its cosine that many times; flops are far cheaper than
+    * shuffling vectors per candidate pair.
+    */
+  private def bucketCosinePairs(df: DataFrame, vecCol: Column, idCol: Column,
+      tableBuckets: Seq[Column], minCosSim: Double): DataFrame = {
     val buckets = df
       .select(idCol.as("id"), vecCol.as("__v"),
         posexplode(array(tableBuckets: _*)))
       .withColumnRenamed("pos", "table_id")
       .withColumnRenamed("col", "bucket")
-    // shuffle-hash by default — see lshCosineCoordPairs / the knob doc
     buckets.as("a")
-      .join(lshBucketBuildSide(buckets).as("b"),
+      .join(buckets.hint("shuffle_hash").as("b"),
         col("a.table_id") === col("b.table_id") &&
           col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      // verify on the join output (map side of the pair dedup): candidate
-      // pairs carry two full embeddings, so computing cos_sim and
-      // filtering BEFORE dropDuplicates means only verified near-dup
-      // pairs — slim (id, id, score) rows — ever shuffle. A pair that
-      // collides in several tables re-computes its cosine that many
-      // times; flops are far cheaper than shuffling vectors per
-      // candidate pair.
       .withColumn("cos_sim",
         graft.functions.distances.cosineSimilarity(col("a.__v"), col("b.__v")))
       .filter(col("cos_sim") >= minCosSim)
@@ -1447,35 +1366,11 @@ object Dedup {
     val effPlanes = math.min(math.min(dim, 62), // ≤ dim coords, bits fit a Long
       if (nPlanes == AutoPlanes) scaledPlaneCount(df.count()) else nPlanes)
     val planes = lshCoordPlanes(dim, effPlanes, nTables, seed)
-    // All nTables bucket keys are computed in ONE pass over the scan and
-    // row-multiplied with posexplode — the former per-table union re-read
-    // the input nTables times (r21: 16 scan legs per join side collapsed
-    // to one Generate; identical (id, table_id, bucket) rows).
     val tableBuckets = planes.map { coords =>
       coords.zipWithIndex.map { case (k, i) =>
         when(element_at(vecCol, k + 1) > lit(0f), lit(1L << i)).otherwise(lit(0L))
       }.reduce[Column]((x, y) => x.bitwiseOR(y))
     }
-    val buckets = df
-      .select(idCol.as("id"), vecCol.as("__v"),
-        posexplode(array(tableBuckets: _*)))
-      .withColumnRenamed("pos", "table_id")
-      .withColumnRenamed("col", "bucket")
-    // shuffle-hash, never broadcast: with a single input split the
-    // broadcast plan AQE picks would run the whole cosine verify in ONE
-    // probe task (measured 3× slower at sf0.1); the (table, bucket)
-    // exchange spreads the verify across reducers and is the shape that
-    // holds at 100 TB, where neither side could broadcast anyway. Same
-    // hint rationale as blockedHammingPairs (bounded bucket loads make
-    // the per-partition hash build tiny; no sort).
-    buckets.as("a")
-      .join(lshBucketBuildSide(buckets).as("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .withColumn("cos_sim",
-        graft.functions.distances.cosineSimilarity(col("a.__v"), col("b.__v")))
-      .filter(col("cos_sim") >= minCosSim)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cos_sim"))
-      .dropDuplicates("id_a", "id_b")
+    bucketCosinePairs(df, vecCol, idCol, tableBuckets, minCosSim)
   }
 }

@@ -3,7 +3,6 @@ package graft.operators
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Named-dictionary catalog + the reference's SQL dictionary-function
   * surface (`src/Functions/FunctionsExternalDictionaries.cpp`,

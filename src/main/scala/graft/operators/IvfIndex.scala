@@ -522,7 +522,7 @@ object IvfIndex {
       preFilter: Option[Column],
       distName: String,
       tieBreak: Seq[Column],
-      deletes: Option[DataFrame] = None): DataFrame = {
+      deletes: Option[DataFrame]): DataFrame = {
     val pruned = ProbedPartitions.read(spark, s"${art.dir}/lists", "list_id", probes)
     // Lightweight-delete mask applied INSIDE the index search (reference
     // `00037_mqvs_multiple_lwd.sql`): anti-join the probed lists against

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 
-import graft.functions.{Metric, PqAdcDistance}
+import graft.functions.PqAdcDistance
 
 /** IVFPQ — IVF with product quantization (reference index type registry
   * `/root/reference/src/VectorIndex/Interpreters/parseVSParameters.cpp:77-112`;
@@ -66,7 +66,6 @@ object PqIndex {
       trainSampleSize: Int = 100000,
       sourcePath: String = "",
       defaultNprobe: Int = 4): IvfIndex.IndexEntry = {
-    import spark.implicits._
     IvfIndex.Catalog.register(IvfIndex.IndexEntry(indexName, indexDir,
       sourcePath, vecCol, "IVFPQ", metric, "BUILDING", 0L, defaultNprobe))
     IvfIndex.Catalog.logEvent(indexName, "BUILD_START",

@@ -6,7 +6,7 @@ import java.nio.ByteBuffer
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.{LogicalTypes, Schema => ASchema, SchemaBuilder}
+import org.apache.avro.{LogicalTypes, Schema => ASchema}
 import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableByteArrayInput}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 

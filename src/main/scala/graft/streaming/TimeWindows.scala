@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** WindowView / streaming surface of the reference (SURVEY §2.11):
   * `tumble(t, INTERVAL)`, `hop(t, slide, size)`, `tumbleStart/End`

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.functions.{distances, VectorKernels}
+import graft.functions.distances
 import graft.operators.{BinaryIvfIndex, IvfIndex}
 
 class BinaryIvfSpec extends SparkSpec {

@@ -112,6 +112,23 @@ class OperatorsSpec extends SparkSpec {
     assert(inc === exactCross)
   }
 
+  test("verified minhash LSH = exact n-gram Jaccard pairs on sf0.001 and sf0.01 docs") {
+    // the d03/d22 contract, self-join twin of the incremental check above:
+    // banding recall ~1 at this corpus's similarity margins, and the
+    // verify is the exact set intersection, so the rows (scores included)
+    // equal the PPJoin path's
+    for (dir <- Seq(sfDir, s"${new java.io.File(sfDir).getParent}/sf0.01")) {
+      val docs = graft.engine.Tables.t(spark, dir, "documents")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.select("id_a", "id_b", "jaccard")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val exact = rows(Dedup.ngramJaccardPairs(docs, col("text"), col("doc_id"), 3, 0.5))
+      val lsh = rows(
+        Dedup.minhashLshVerifiedPairs(docs, col("text"), col("doc_id"), 3, 16, 4, 0.5))
+      assert(exact.nonEmpty, dir)
+      assert(lsh === exact, dir)
+    }
+  }
+
   test("simhash: identical texts collide, near texts are close in hamming") {
     val df = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),
@@ -255,27 +272,6 @@ class OperatorsSpec extends SparkSpec {
     assert(lsh.subsetOf(exact)) // cosine verification ⇒ perfect precision
     val recall = (exact & lsh).size.toDouble / exact.size
     assert(recall >= 0.9, s"LSH recall $recall over ${exact.size} exact pairs")
-  }
-
-  test("an unknown LSH bucket-join mode fails instead of running the default") {
-    val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
-    val key = "spark.graft.lsh.bucketJoin"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "brodcast")
-    try {
-      val err = intercept[IllegalArgumentException] {
-        Dedup.lshCosinePairs(emb, col("embedding"), col("vec_id"), 0.35, 4, 16)
-      }
-      assert(err.getMessage.contains("brodcast"), err.getMessage)
-      // the three documented modes still plan
-      for (mode <- Seq("shuffle_hash", "auto", "broadcast")) {
-        spark.conf.set(key, mode)
-        Dedup.lshCosinePairs(emb, col("embedding"), col("vec_id"), 0.35, 4, 16)
-      }
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   test("LSH-fed connected components ≈ exact-fed clusters (d10 path)") {

@@ -15,9 +15,6 @@ class ProtobufFormatSpec extends SparkSpec {
   private def hex(bytes: Array[Byte]): String =
     bytes.map(b => f"${b & 0xff}%02x").mkString(" ")
 
-  private def unhex(s: String): Array[Byte] =
-    s.split("\\s+").filter(_.nonEmpty).map(x => Integer.parseInt(x, 16).toByte)
-
   private def df(schema: StructType, rows: Row*) =
     spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
