@@ -89,7 +89,6 @@ object BinaryIvfIndex {
       sourcePath: String = "",
       defaultNprobe: Int = 4,
       metric: String = "hamming"): IvfIndex.IndexEntry = {
-    import spark.implicits._
     // the DECLARED ranking metric (reference binary types take Hamming or
     // Jaccard): probe ranking and within-probe scoring honor it; list
     // ASSIGNMENT stays Hamming-k-majority (centroids are bit-majorities —
@@ -114,9 +113,7 @@ object BinaryIvfIndex {
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$indexDir/lists")
 
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+    IndexArtifact.BinaryCentroids.write(spark, indexDir, centroids)
     val art = IndexArtifact.write(indexDir, "BinaryIVF",
       BMeta(nLists, nBytes, n, vecCol, idCol, "BUILT", metric))
     IndexArtifact.BinaryCentroids.put(art, centroids)

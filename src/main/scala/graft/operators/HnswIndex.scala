@@ -8,29 +8,34 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorKernels
 
-/** HNSW-FLAT vector index (`ADD VECTOR INDEX v col TYPE HNSWFLAT`,
-  * reference index-type registry per SURVEY §2.1; algorithm: Malkov &
-  * Yashunin, "Efficient and robust approximate nearest neighbor search
-  * using Hierarchical Navigable Small World graphs", IEEE TPAMI 2018).
+/** HNSW vector indexes — HNSWFLAT, and the quantized HNSWSQ and HNSWPQ
+  * (`ADD VECTOR INDEX v col TYPE HNSWFLAT|HNSWSQ|HNSWPQ`, reference
+  * index-type registry per SURVEY §2.1; algorithm: Malkov & Yashunin,
+  * "Efficient and robust approximate nearest neighbor search using
+  * Hierarchical Navigable Small World graphs", IEEE TPAMI 2018).
   *
   * Spark shape — mirrors the reference's per-part indexes:
-  *  - **Build**: one in-JVM graph per Spark partition (`mapPartitions`),
-  *    serialized as plain rows `(part_id, node_idx, id, vec,
+  *  - **Write**: one part writer ([[writeParts]]) serves the first load
+  *    and every later insert, as the reference indexes every data part
+  *    the same way (`VIBuilderUpdater.cpp`, `VIWithDataPart.cpp`). Each
+  *    Spark partition becomes one part with its own in-JVM graph, stored
+  *    as plain rows `(part_id, node_idx, id, vec | qvec,
   *    neighbors[layer][..])` — the graph IS a DataFrame, partitioned by
-  *    `part_id` on disk. No driver involvement, no global state.
-  *  - **Search**: `groupByKey(part_id).flatMapGroups` rebuilds (or takes
-  *    from the per-JVM cache — the `VICacheManager` analog) each part's
-  *    adjacency, runs the graph search, emits its local top-k; the global
-  *    merge is the same `TakeOrderedAndProject` every other top-K uses.
-  *    Per-part candidates = k (the reference merges per-part top-K the
-  *    same way).
+  *    `part_id` on disk. [[build]] is "clear the data directories, train
+  *    the quantizer, append from part 0"; [[append]] numbers its parts
+  *    past every part in use. No global state beyond the quantizer.
+  *  - **Search**: each `part_id=` directory is its own single-task scan
+  *    (`coalesce(1)`, no Exchange); the task takes the part's graph from
+  *    the per-JVM cache (the `VICacheManager` analog) or loads it, runs
+  *    the graph search and emits its local top-k; the global merge is the
+  *    same `TakeOrderedAndProject` every other top-K uses.
   *  - **Layout** under `indexDir`: `graph/part_id=N/` graph rows,
   *    `smallparts/` raw vectors of parts under the min-rows gate,
   *    `sq_params/` (HNSWSQ) or `codebooks/` (HNSWPQ), and `meta.json`, the
   *    [[IndexArtifact]] envelope (version, type, buildId, status) around
   *    [[Meta]]. Cached graphs are keyed `indexDir#part@buildId`.
   *
-  * Determinism: level draws are seeded per partition, so builds are
+  * Determinism: level draws are seeded per part, so builds are
   * reproducible.
   */
 object HnswIndex {
@@ -278,17 +283,75 @@ object HnswIndex {
   private val graphCache =
     new BoundedCache[Graph]("spark.graft.hnsw.graphCacheBytes", "4g")
 
-  /** Build: one graph per partition, persisted as parquet rows. The
-    * per-partition entry point is node with the highest layer (recomputed
-    * at load — no extra metadata needed).
+  /** How a quantized graph stores its vectors: HNSWSQ keeps one byte per
+    * dim (`sq_params/`), HNSWPQ one byte per subspace (`codebooks/`). The
+    * build trains it once; appends encode with the stored one.
+    */
+  private sealed trait Quantizer extends Serializable {
+    def encode(v: Array[Float]): Array[Byte]
+    def decode(codes: Array[Byte]): Array[Float]
+    def write(spark: SparkSession, indexDir: String): Unit
+    def put(art: IndexArtifact.Artifact[_]): Unit
+  }
+
+  private final case class Sq(scale: Array[Float], offset: Array[Float]) extends Quantizer {
+    def encode(v: Array[Float]): Array[Byte] = VectorKernels.sqEncode(v, scale, offset)
+    def decode(codes: Array[Byte]): Array[Float] = {
+      val v = new Array[Float](codes.length)
+      var j = 0
+      while (j < codes.length) {
+        v(j) = offset(j) + (codes(j) & 0xff) * scale(j); j += 1
+      }
+      v
+    }
+    def write(spark: SparkSession, indexDir: String): Unit =
+      IndexArtifact.SqParams.write(spark, indexDir, (scale, offset))
+    def put(art: IndexArtifact.Artifact[_]): Unit = IndexArtifact.SqParams.put(art, (scale, offset))
+  }
+
+  private final case class Pq(books: Array[Array[Array[Float]]]) extends Quantizer {
+    def encode(v: Array[Float]): Array[Byte] = PqIndex.encode(v, books)
+    def decode(codes: Array[Byte]): Array[Float] = {
+      val sub = books.head.head.length
+      val v = new Array[Float](codes.length * sub)
+      var s = 0
+      while (s < codes.length) {
+        System.arraycopy(books(s)(codes(s) & 0xff), 0, v, s * sub, sub)
+        s += 1
+      }
+      v
+    }
+    def write(spark: SparkSession, indexDir: String): Unit =
+      IndexArtifact.Codebooks.write(spark, indexDir, books)
+    def put(art: IndexArtifact.Artifact[_]): Unit = IndexArtifact.Codebooks.put(art, books)
+  }
+
+  private def storedQuantizer(
+      spark: SparkSession, art: IndexArtifact.Artifact[Meta]): Option[Quantizer] =
+    art.indexType match {
+      case "HNSWPQ" => Some(Pq(IndexArtifact.Codebooks.load(spark, art)))
+      case "HNSWSQ" =>
+        val (scale, offset) = IndexArtifact.SqParams.load(spark, art)
+        Some(Sq(scale, offset))
+      case _ => None
+    }
+
+  /** Build: an append into an empty index. Clear the index's data
+    * directories, train and write the quantizer if there is one, write
+    * every partition as a part from part 0 with the writer [[append]]
+    * uses ([[writeParts]]), then write `meta.json` with a fresh build id
+    * and warm the quantizer's cache entry.
     *
-    * `quantize=true` → HNSWSQ (reference quantized graph index,
-    * `parseVSParameters.cpp:77-112`): graph construction still uses exact
-    * floats, but the persisted rows carry int8 SQ codes (1 byte/dim — the
-    * graph file shrinks ~4×) plus per-dim scale/offset, and the loader
-    * dequantizes once per JVM. Search traversal is unchanged; reported
-    * distances are to the dequantized points, so pair HNSWSQ with the
-    * two-stage exact re-rank for exact distances.
+    * `quantize=true` → HNSWSQ, `pqSubspaces > 0` → HNSWPQ (reference
+    * quantized graph indexes, `parseVSParameters.cpp:77-112`): graph
+    * construction still uses exact floats, but the persisted rows carry
+    * the codes (HNSWSQ: int8, 1 byte/dim, the graph file shrinks ~4×;
+    * HNSWPQ: 1 byte/subspace), and the loader decodes once per JVM.
+    * Search traversal is unchanged; reported distances are to the decoded
+    * points, so pair quantized graphs with [[searchTwoStage]] for exact
+    * distances. The SQ params come from one pass over every row
+    * ([[SqIndex.trainParams]]); the PQ codebooks from a sample of at most
+    * 100k rows ([[PqIndex.trainCodebooks]]).
     */
   def build(
       spark: SparkSession,
@@ -304,8 +367,7 @@ object HnswIndex {
       sourcePath: String = "",
       quantize: Boolean = false,
       pqSubspaces: Int = 0,
-      minRowsToBuild: Long = 0L,
-      maxRowsForSlowMode: Long = 0L): IvfIndex.IndexEntry = {
+      minRowsToBuild: Long = 0L): IvfIndex.IndexEntry = {
     import spark.implicits._
     require(!(quantize && pqSubspaces > 0), "choose SQ or PQ, not both")
     val indexType =
@@ -316,162 +378,48 @@ object HnswIndex {
       s"$indexType m=$m efC=$efConstruction minRows=$minRowsToBuild")
     val base = df.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
-    val parted0 = numPartitions.map(base.repartition(_)).getOrElse(base)
-    // min_rows_to_build_vector_index gate (ref MergeTreeSettings.h:181):
-    // parts below the threshold get NO graph — their raw vectors land in
-    // smallparts/ (state SMALL_PART, ref VIInfo.h:41-49) and search()
-    // brute-forces them exactly, so tiny tail parts never pay graph
-    // construction while staying searchable.
-    val gated = minRowsToBuild > 0L || maxRowsForSlowMode > 0L
-    val parted = if (gated) parted0.persist() else parted0
-    val partCounts: Map[Int, Long] =
-      if (!gated) Map.empty
-      else parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single(pid -> it.size.toLong)
-      }.collect().toMap
-    val smallPartCounts: Map[Int, Long] = partCounts
-      .filter { case (_, n) => n > 0 && minRowsToBuild > 0L && n < minRowsToBuild }
-    val smallParts = smallPartCounts.keySet
-    // max_rows_for_slow_mode_single_vector_index_build (ref
-    // MergeTreeSettings.h:185): in the reference, parts above the
-    // threshold build in a separate rate-limited background pool so one
-    // giant index build can't starve merges. In an explicit distributed
-    // build the CLUSTER SCHEDULER is that pool — every part builds as one
-    // task in the same job — so the faithful mapping is observability,
-    // not throttling: oversized parts are recorded in the index event log
-    // (the VIEventLog analog) for operators watching build health.
-    if (maxRowsForSlowMode > 0L) {
-      val slow = partCounts.filter(_._2 > maxRowsForSlowMode).keys.toSeq.sorted
-      if (slow.nonEmpty)
-        IvfIndex.Catalog.logEvent(indexName, "BUILD_SLOW_MODE",
-          s"parts=${slow.mkString(",")} threshold=$maxRowsForSlowMode")
-    }
-    val bcSmall = spark.sparkContext.broadcast(smallParts)
-    // write smallparts/ only when a part actually fell under the gate —
-    // an empty-but-present dir would make every later search() union a
-    // pointless empty brute-force leg (extra scan + job per query)
-    if (gated && smallParts.nonEmpty) {
-      parted.mapPartitions { iter =>
-        val pid = TaskContext.getPartitionId()
-        if (bcSmall.value.contains(pid)) iter.map { case (id, v) => (pid, id, v) }
-        else Iterator.empty
-      }.toDF("part_id", "id", "vec")
-        .write.mode("overwrite").parquet(s"$indexDir/smallparts")
-    }
-    val graphDs = parted.mapPartitions { iter =>
-      val pid = TaskContext.getPartitionId()
-      if (bcSmall.value.contains(pid)) Iterator.empty
-      else {
-        val b = new Builder(metric, m, efConstruction, seed = 42L + pid)
-        iter.foreach { case (id, v) => b.insert(id, v) }
-        b.rows(pid)
-      }
-    }
-    if (pqSubspaces > 0) {
-      // HNSWPQ: persist m-byte PQ codes; codebooks trained like PqIndex —
-      // per-subspace spark.ml KMeans|| over a sampled distributed frame
-      // (array slices in the scan), no vector collect to the driver.
-      val vecsDf = parted.toDF("__id", "__v")
-      val nVecs = vecsDf.count()
-      require(nVecs > 0, "empty input to HnswIndex.build")
-      val dim = vecsDf.select(size(col("__v"))).head().getInt(0)
-      require(dim % pqSubspaces == 0, s"dim $dim not divisible by m=$pqSubspaces")
-      val sub = dim / pqSubspaces
-      val train = IvfIndex.trainFrame(vecsDf.select(col("__v")), nVecs, 100000)
-        .persist()
-      val books: Array[Array[Array[Float]]] =
-        try {
-          val nCodes = math.min(256L, train.count()).toInt
-          Array.tabulate(pqSubspaces) { s =>
-            val subDf = train.select(
-              slice(col("__v"), s * sub + 1, sub).as("__sub"))
-            IvfIndex.kmeansMl(subDf, "__sub", nCodes, seed = 42L + s)
-          }
-        } finally train.unpersist(blocking = false)
-      val bcB = spark.sparkContext.broadcast(books)
-      graphDs
-        .map(r => (r.part_id, r.node_idx, r.id,
-          PqIndex.encode(r.vec, bcB.value), r.neighbors))
-        .toDF("part_id", "node_idx", "id", "qvec", "neighbors")
-        .write.mode("overwrite").partitionBy("part_id")
-        .parquet(s"$indexDir/graph")
-      books.zipWithIndex.flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
-      }.toSeq.toDF("sub", "code", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    } else if (quantize) {
-      // per-dim min/max in one distributed pass (same shape as SqIndex)
-      val mm = base.map(_._2).mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val first = it.next()
-          val mn = first.clone(); val mx = first.clone()
-          it.foreach { v =>
-            var j = 0
-            while (j < v.length) {
-              if (v(j) < mn(j)) mn(j) = v(j)
-              if (v(j) > mx(j)) mx(j) = v(j)
-              j += 1
-            }
-          }
-          Iterator((mn, mx))
-        }
-      }.collect()
-      require(mm.nonEmpty, "empty input to HnswIndex.build")
-      val dim = mm.head._1.length
-      val mins = mm.map(_._1).reduce((a, b) => Array.tabulate(dim)(j => math.min(a(j), b(j))))
-      val maxs = mm.map(_._2).reduce((a, b) => Array.tabulate(dim)(j => math.max(a(j), b(j))))
-      val scale = Array.tabulate(dim)(j => (maxs(j) - mins(j)) / 255f)
-      val bcS = spark.sparkContext.broadcast(scale)
-      val bcO = spark.sparkContext.broadcast(mins)
-      graphDs
-        .map(r => (r.part_id, r.node_idx, r.id,
-          VectorKernels.sqEncode(r.vec, bcS.value, bcO.value), r.neighbors))
-        .toDF("part_id", "node_idx", "id", "qvec", "neighbors")
-        .write.mode("overwrite").partitionBy("part_id")
-        .parquet(s"$indexDir/graph")
-      Seq((scale.toSeq, mins.toSeq)).toDF("scale", "offset")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/sq_params")
-    } else graphDs.toDF().write.mode("overwrite").partitionBy("part_id")
-      .parquet(s"$indexDir/graph")
-    if (gated) parted.unpersist(blocking = false)
-    // per-part segment states (system.vector_index_segments analog);
-    // gated-out parts report SMALL_PART with their raw row counts
-    // (an index where EVERY part fell under the gate has an empty
-    // graph/ dir — legal; search() brute-forces smallparts/ alone)
-    val perPart = scala.util.Try {
-      spark.read.parquet(s"$indexDir/graph")
-        .groupBy(col("part_id")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1))
-    }.getOrElse(Array.empty[(Int, Long)])
-    perPart.foreach { case (pid, rows) =>
-      IvfIndex.Catalog.registerSegment(
-        IvfIndex.SegmentEntry(indexName, pid, "BUILT", rows))
-    }
-    smallPartCounts.toSeq.sorted.foreach { case (pid, rows) =>
-      IvfIndex.Catalog.registerSegment(
-        IvfIndex.SegmentEntry(indexName, pid, "SMALL_PART", rows))
-    }
-    val n = perPart.map(_._2).sum + smallPartCounts.values.sum
-    IndexArtifact.write(indexDir, indexType, Meta(metric, idCol, vecCol, n))
+    val parted = numPartitions.map(base.repartition(_)).getOrElse(base)
+    val root = new org.apache.hadoop.fs.Path(indexDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("graph", "smallparts", "sq_params", "codebooks")
+      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(root, d), true))
+    val quantizer: Option[Quantizer] =
+      if (pqSubspaces > 0) {
+        val vecs = parted.toDF("__id", "__v")
+        val nVecs = vecs.count()
+        require(nVecs > 0, "empty input to HnswIndex.build")
+        val dim = vecs.select(size(col("__v"))).head().getInt(0)
+        require(dim % pqSubspaces == 0, s"dim $dim not divisible by m=$pqSubspaces")
+        val train = IvfIndex.trainFrame(vecs.select(col("__v")), nVecs, 100000).persist()
+        try Some(Pq(PqIndex.trainCodebooks(train, "__v", pqSubspaces,
+          dim / pqSubspaces, train.count())))
+        finally train.unpersist(blocking = false)
+      } else if (quantize) {
+        val (scale, offset) = SqIndex.trainParams(base.map(_._2))
+        Some(Sq(scale, offset))
+      } else None
+    quantizer.foreach(_.write(spark, indexDir))
+    val w = writeParts(spark, parted, indexDir, indexName, firstPartId = 0,
+      quantizer, metric, m, efConstruction, minRowsToBuild)
+    val art = IndexArtifact.write(indexDir, indexType, Meta(metric, idCol, vecCol, w.rows))
+    quantizer.foreach(_.put(art))
     val entry = IvfIndex.IndexEntry(indexName, indexDir, sourcePath, vecCol,
-      indexType, metric, "BUILT", n, idCol = idCol)
+      indexType, metric, "BUILT", w.rows, idCol = idCol)
     IvfIndex.Catalog.register(entry)
-    IvfIndex.Catalog.logEvent(indexName, "BUILD_FINISH",
-      s"nRows=$n parts=${perPart.length} smallParts=${smallParts.size}")
+    IvfIndex.Catalog.logEvent(indexName, "BUILD_FINISH", s"nRows=${w.rows} ${w.detail}")
     entry
   }
 
   /** Incremental append — the reference's insert path: each new part
     * gets its OWN graph built at insert time (`VIWithDataPart`), old
     * parts' graphs untouched; a search unions all per-part graphs.
-    * Here: the batch becomes new `part_id=` directories numbered past
-    * the existing ones, built with the same per-partition in-JVM
-    * builder. Quantized variants (HNSWSQ/HNSWPQ) re-encode the batch
-    * with the STORED global params (sq_params/codebooks) — distribution
-    * drift in new data degrades quantization quality, not correctness
-    * (distances to slightly-misquantized codes still re-rank exactly in
-    * the two-stage path).
+    * Here: the batch goes through the same part writer as [[build]],
+    * numbered past every part in use (graph and small parts alike; part 0
+    * on an index with none). Quantized variants (HNSWSQ/HNSWPQ) encode
+    * the batch with the STORED quantizer (sq_params/codebooks) —
+    * distribution drift in new data degrades quantization quality, not
+    * correctness (distances to slightly-misquantized codes still re-rank
+    * exactly in the two-stage path). `meta.json` keeps its build id.
     */
   def append(
       spark: SparkSession,
@@ -487,33 +435,76 @@ object HnswIndex {
       minRowsToBuild: Long = 0L): Unit = {
     import spark.implicits._
     val l = layout(spark, indexDir)
-    require(l.parts.nonEmpty, s"no existing graph under $indexDir/graph — build first")
-    val offset = l.parts.map(_._1).max + 1
+    val smallMax = l.small.map(dir => spark.read.schema(SmallPartsSchema).parquet(dir)
+      .select(col("part_id")).as[Int].reduce((a, b) => math.max(a, b)))
+    val offset = (l.parts.map(_._1) ++ smallMax).maxOption.fold(0)(_ + 1)
     IvfIndex.Catalog.logEvent(indexName, "APPEND_START", s"offset=$offset")
-
     val base = batch.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
-    val parted0 = numPartitions.map(base.repartition(_)).getOrElse(base)
-    // same min_rows gate as build(): small new parts skip graph
-    // construction, land in smallparts/, state SMALL_PART
+    val w = writeParts(spark, numPartitions.map(base.repartition(_)).getOrElse(base),
+      indexDir, indexName, offset, l.quantizer, metric, m, efConstruction, minRowsToBuild)
+    IndexArtifact.write(indexDir, l.art.indexType,
+      l.art.meta.copy(nRows = l.art.meta.nRows + w.rows), l.art.buildId)
+    IvfIndex.Catalog.lookup(indexName).foreach { e =>
+      IvfIndex.Catalog.register(e.copy(nRows = e.nRows + w.rows))
+    }
+    IvfIndex.Catalog.logEvent(indexName, "APPEND_FINISH", s"added=${w.rows} ${w.detail}")
+  }
+
+  /** What one [[writeParts]] call added. */
+  private final case class Written(rows: Long, parts: Int, smallParts: Int) {
+    def detail: String = s"parts=$parts smallParts=$smallParts"
+  }
+
+  /** The one part writer behind [[build]] and [[append]]: partition `i` of
+    * `rows` becomes part `firstPartId + i`.
+    *
+    *  1. The min_rows_to_build_vector_index gate (ref
+    *     MergeTreeSettings.h:181): with `minRowsToBuild > 0` the rows are
+    *     persisted and one job sizes every partition. A non-empty part
+    *     under the threshold gets NO graph — its raw vectors land in
+    *     `smallparts/` (state SMALL_PART, ref VIInfo.h:41-49) and search()
+    *     brute-forces them exactly, so tiny tail parts never pay graph
+    *     construction while staying searchable.
+    *  1. Every other part builds its graph in its own task, seeded
+    *     `42 + part id`, and appends its rows — encoded by `quantizer`
+    *     when there is one — under `graph/part_id=N/`.
+    *  1. The written parts register their segments (the
+    *     `system.vector_index_segments` analog).
+    */
+  private def writeParts(
+      spark: SparkSession,
+      rows: Dataset[(Long, Array[Float])],
+      indexDir: String,
+      indexName: String,
+      firstPartId: Int,
+      quantizer: Option[Quantizer],
+      metric: String,
+      m: Int,
+      efConstruction: Int,
+      minRowsToBuild: Long): Written = {
+    import spark.implicits._
     val gated = minRowsToBuild > 0L
-    val parted = if (gated) parted0.persist() else parted0
-    val smallPartCounts: Map[Int, Long] =
+    val parted = if (gated) rows.persist() else rows
+    val small: Map[Int, Long] =
       if (!gated) Map.empty
-      else parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single((pid + offset) -> it.size.toLong)
+      else parted.rdd.mapPartitionsWithIndex { (i, it) =>
+        Iterator.single((firstPartId + i) -> it.size.toLong)
       }.collect().filter { case (_, n) => n > 0 && n < minRowsToBuild }.toMap
-    val bcSmall = spark.sparkContext.broadcast(smallPartCounts.keySet)
-    if (gated && smallPartCounts.nonEmpty) {
+    val bcSmall = spark.sparkContext.broadcast(small.keySet)
+    // write smallparts/ only when a part actually fell under the gate —
+    // an empty-but-present dir would make every later search() union a
+    // pointless empty brute-force leg (extra scan + job per query)
+    if (small.nonEmpty) {
       parted.mapPartitions { iter =>
-        val pid = TaskContext.getPartitionId() + offset
+        val pid = TaskContext.getPartitionId() + firstPartId
         if (bcSmall.value.contains(pid)) iter.map { case (id, v) => (pid, id, v) }
         else Iterator.empty
       }.toDF("part_id", "id", "vec")
         .write.mode("append").parquet(s"$indexDir/smallparts")
     }
-    val graphDs = parted.mapPartitions { iter =>
-      val pid = TaskContext.getPartitionId() + offset
+    val graphs = parted.mapPartitions { iter =>
+      val pid = TaskContext.getPartitionId() + firstPartId
       if (bcSmall.value.contains(pid)) Iterator.empty
       else {
         val b = new Builder(metric, m, efConstruction, seed = 42L + pid)
@@ -521,43 +512,28 @@ object HnswIndex {
         b.rows(pid)
       }
     }
-    // Re-encode with the stored quantization params.
-    val out = l.art.indexType match {
-      case "HNSWPQ" =>
-        val bcB = spark.sparkContext.broadcast(IndexArtifact.Codebooks.load(spark, l.art))
-        graphDs.map(r => (r.part_id, r.node_idx, r.id,
-          PqIndex.encode(r.vec, bcB.value), r.neighbors))
+    val out = quantizer match {
+      case Some(q) =>
+        val bcQ = spark.sparkContext.broadcast(q)
+        graphs.map(r => (r.part_id, r.node_idx, r.id, bcQ.value.encode(r.vec), r.neighbors))
           .toDF("part_id", "node_idx", "id", "qvec", "neighbors")
-      case "HNSWSQ" =>
-        val bcP = spark.sparkContext.broadcast(IndexArtifact.SqParams.load(spark, l.art))
-        graphDs.map(r => (r.part_id, r.node_idx, r.id,
-          VectorKernels.sqEncode(r.vec, bcP.value._1, bcP.value._2), r.neighbors))
-          .toDF("part_id", "node_idx", "id", "qvec", "neighbors")
-      case _ => graphDs.toDF()
+      case None => graphs.toDF()
     }
     out.write.mode("append").partitionBy("part_id").parquet(s"$indexDir/graph")
-
     if (gated) parted.unpersist(blocking = false)
-    val appended = spark.read.parquet(s"$indexDir/graph")
-      .filter(col("part_id") >= offset)
+    // an index where EVERY part fell under the gate has no part_id= dir —
+    // legal; search() brute-forces smallparts/ alone
+    val built = spark.read.schema(PartIdSchema).parquet(s"$indexDir/graph")
+      .filter(col("part_id") >= firstPartId)
       .groupBy(col("part_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1))
-    appended.foreach { case (pid, rows) =>
-      IvfIndex.Catalog.registerSegment(
-        IvfIndex.SegmentEntry(indexName, pid, "BUILT", rows))
+    built.foreach { case (pid, n) =>
+      IvfIndex.Catalog.registerSegment(IvfIndex.SegmentEntry(indexName, pid, "BUILT", n))
     }
-    smallPartCounts.toSeq.sorted.foreach { case (pid, rows) =>
-      IvfIndex.Catalog.registerSegment(
-        IvfIndex.SegmentEntry(indexName, pid, "SMALL_PART", rows))
+    small.toSeq.sorted.foreach { case (pid, n) =>
+      IvfIndex.Catalog.registerSegment(IvfIndex.SegmentEntry(indexName, pid, "SMALL_PART", n))
     }
-    val added = appended.map(_._2).sum + smallPartCounts.values.sum
-    IndexArtifact.write(indexDir, l.art.indexType,
-      l.art.meta.copy(nRows = l.art.meta.nRows + added), l.art.buildId)
-    IvfIndex.Catalog.lookup(indexName).foreach { e =>
-      IvfIndex.Catalog.register(e.copy(nRows = e.nRows + added))
-    }
-    IvfIndex.Catalog.logEvent(indexName, "APPEND_FINISH",
-      s"added=$added parts=${appended.length} smallParts=${smallPartCounts.size}")
+    Written(built.map(_._2).sum + small.values.sum, built.length, small.size)
   }
 
   /** Graph row as stored inside a `part_id=` directory (the partition
@@ -613,18 +589,19 @@ object HnswIndex {
     "node_idx INT, id BIGINT, qvec BINARY, neighbors ARRAY<ARRAY<INT>>")
   private val SmallPartsSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "part_id INT, id BIGINT, vec ARRAY<FLOAT>")
+  private val PartIdSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "node_idx INT, part_id INT")
 
-  /** What a search needs from one index dir: its metadata, its graph
-    * parts `(part id, dir)`, its small-parts dir when one exists, and the
-    * decoder of quantized graph rows (HNSWSQ: int8 + sq_params; HNSWPQ:
-    * m-byte codes + codebooks), which runs once per part at graph-load
-    * time.
+  /** What a search (or an append) needs from one index dir: its metadata,
+    * its graph parts `(part id, dir)`, its small-parts dir when one exists,
+    * and the stored quantizer of a quantized graph, whose decoder runs once
+    * per part at graph-load time.
     */
   private final case class Layout(
       art: IndexArtifact.Artifact[Meta],
       parts: Seq[(Int, String)],
       small: Option[String],
-      decode: Option[Array[Byte] => Array[Float]]) {
+      quantizer: Option[Quantizer]) {
     def graphKey(pid: Int): String = s"${art.dir}#$pid@${art.buildId}"
   }
 
@@ -636,32 +613,8 @@ object HnswIndex {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("part_id="))
       .map(st => (st.getPath.getName.stripPrefix("part_id=").toInt, st.getPath.toString))
     val small = new org.apache.hadoop.fs.Path(s"$indexDir/smallparts")
-    val decode: Option[Array[Byte] => Array[Float]] = art.indexType match {
-      case "HNSWPQ" =>
-        val books = IndexArtifact.Codebooks.load(spark, art)
-        val sub = books.head.head.length
-        Some { codes =>
-          val v = new Array[Float](codes.length * sub)
-          var s = 0
-          while (s < codes.length) {
-            System.arraycopy(books(s)(codes(s) & 0xff), 0, v, s * sub, sub)
-            s += 1
-          }
-          v
-        }
-      case "HNSWSQ" =>
-        val (scale, offset) = IndexArtifact.SqParams.load(spark, art)
-        Some { codes =>
-          val v = new Array[Float](codes.length)
-          var j = 0
-          while (j < codes.length) {
-            v(j) = offset(j) + (codes(j) & 0xff) * scale(j); j += 1
-          }
-          v
-        }
-      case _ => None
-    }
-    Layout(art, parts, Some(small.toString).filter(_ => fs.exists(small)), decode)
+    Layout(art, parts, Some(small.toString).filter(_ => fs.exists(small)),
+      storedQuantizer(spark, art))
   }
 
   private def searchLayout(spark: SparkSession, indexDir: String): Layout = {
@@ -681,14 +634,14 @@ object HnswIndex {
     import spark.implicits._
     l.parts.map { case (pid, path) =>
       val key = l.graphKey(pid)
-      l.decode match {
-        case Some(dec) =>
+      l.quantizer match {
+        case Some(qz) =>
           spark.read.schema(GraphSchemaQuant).parquet(path)
             .select(col("node_idx"), col("id"), col("qvec"), col("neighbors"))
             .as[(Int, Long, Array[Byte], Seq[Seq[Int]])]
             .coalesce(1)
             .mapPartitions(rows => f(key, rows.map { case (ni, id, codes, nbrs) =>
-              GraphNode(ni, id, dec(codes), nbrs)
+              GraphNode(ni, id, qz.decode(codes), nbrs)
             }))
         case None =>
           spark.read.schema(GraphSchemaFlat).parquet(path)

@@ -6,13 +6,13 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The on-disk metadata of every index family (IVFFLAT/MSTG, IVFSQ,
-  * IVFPQ, BinaryIVF, HNSW/BinaryHNSW, FTS) and the per-JVM cache of the
-  * small tables a search loads while it is planned (centroids, PQ
-  * codebooks, SQ params) — the reference keeps this per-part state in one place too
-  * (`VIInfo`, `VICacheManager`).
+  * IVFPQ, BinaryIVF, HNSW/BinaryHNSW, FTS), and the one writer and per-JVM
+  * cache of the small tables a search loads while it is planned
+  * (centroids, PQ codebooks, SQ params) — the reference keeps this
+  * per-part state in one place too (`VIInfo`, `VICacheManager`).
   *
   * `meta.json` is a `{version, type, buildId, status, meta}` envelope
   * around the family's `Meta` case class. `build` writes a fresh
@@ -94,18 +94,24 @@ private[graft] object IndexArtifact {
   private val cache =
     new BoundedCache[AnyRef]("spark.graft.index.centroidCacheBytes", "1g")
 
-  /** A small parquet table under an index dir, collected, decoded and
-    * cached under `dir/name@buildId`.
+  /** A small parquet table under an index dir: written once by the build
+    * (one file), collected, decoded and cached under `dir/name@buildId`.
     */
-  final class Table[V <: AnyRef](name: String, weigh: V => Long, decode: Array[Row] => V) {
+  final class Table[V <: AnyRef](name: String, weigh: V => Long,
+      decode: Array[Row] => V, encode: (SparkSession, V) => DataFrame) {
     private def key(a: Artifact[_]) = s"${a.dir}/$name@${a.buildId}"
     private val weight: AnyRef => Long = v => weigh(v.asInstanceOf[V])
+
+    def write(spark: SparkSession, dir: String, v: V): Unit =
+      encode(spark, v).coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
 
     def load(spark: SparkSession, a: Artifact[_]): V =
       cache.getOrLoad(key(a))(
         decode(spark.read.parquet(s"${a.dir}/$name").collect()))(weight).asInstanceOf[V]
 
-    /** Build-time warm insert of the table just written. */
+    /** Build-time warm insert of the table just written, once `meta.json`
+      * names the build.
+      */
     def put(a: Artifact[_], v: V): Unit = cache.put(key(a), v)(weight)
   }
 
@@ -114,12 +120,20 @@ private[graft] object IndexArtifact {
 
   /** `centroids/`: (list_id, centroid float[]), in list order. */
   val Centroids = new Table[Array[Array[Float]]]("centroids", floatTableBytes,
-    _.sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray))
+    _.sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray),
+    (spark, cs) => {
+      import spark.implicits._
+      cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("list_id", "centroid")
+    })
 
   /** `centroids/` of a binary index: (list_id, centroid bytes). */
   val BinaryCentroids = new Table[Array[Array[Byte]]]("centroids",
     t => 16L + t.iterator.map(r => 56L + r.length.toLong).sum,
-    _.sortBy(_.getInt(0)).map(_.getAs[Array[Byte]](1)))
+    _.sortBy(_.getInt(0)).map(_.getAs[Array[Byte]](1)),
+    (spark, cs) => {
+      import spark.implicits._
+      cs.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("list_id", "centroid")
+    })
 
   /** `codebooks/`: (sub, code, centroid) → books(sub)(code). */
   val Codebooks = new Table[Array[Array[Array[Float]]]]("codebooks",
@@ -128,10 +142,20 @@ private[graft] object IndexArtifact {
       val bySub = rows.groupBy(_.getInt(0))
       Array.tabulate(bySub.keys.max + 1)(s =>
         bySub(s).sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray))
+    },
+    (spark, books) => {
+      import spark.implicits._
+      books.zipWithIndex.flatMap { case (book, s) =>
+        book.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
+      }.toSeq.toDF("sub", "code", "centroid")
     })
 
   /** `sq_params/`: one (scale, offset) row of per-dim floats. */
   val SqParams = new Table[(Array[Float], Array[Float])]("sq_params",
     p => 32L + 8L * p._1.length,
-    rows => (rows.head.getSeq[Float](0).toArray, rows.head.getSeq[Float](1).toArray))
+    rows => (rows.head.getSeq[Float](0).toArray, rows.head.getSeq[Float](1).toArray),
+    (spark, p) => {
+      import spark.implicits._
+      Seq((p._1.toSeq, p._2.toSeq)).toDF("scale", "offset")
+    })
 }

@@ -21,8 +21,9 @@ import graft.functions.VectorKernels
   *     directories), so an nprobe search prunes to nprobe/nLists of the
   *     data at the FILE level before any scan happens.
   *
-  * Scale design: centroids are trained on a bounded sample (driver-side
-  * Lloyd's — nLists ≤ ~4k centroids × dim floats is MBs), assignment and
+  * Scale design: centroids are trained on a bounded sample ([[kmeansMl]]:
+  * the seeded driver Lloyd's up to [[DriverTrainMaxRows]] rows, KMeans||
+  * above; nLists ≤ ~4k centroids × dim floats is MBs), assignment and
   * list-partitioned write are fully distributed, and search reads only
   * the probed partitions. The searched-side plan is the same
   * TakeOrderedAndProject top-K as brute force, over 1/nLists·nprobe of
@@ -130,9 +131,8 @@ object IvfIndex {
     }
 
   /** Driver-side Lloyd's k-means over a bounded sample. Deterministic
-    * (seeded) independent of partitioning; retained for
-    * `distributedTrain = false` and unit tests — the default build path
-    * is [[kmeansMl]].
+    * (seeded) independent of partitioning; [[kmeansMl]] runs it for
+    * training frames of at most [[DriverTrainMaxRows]] rows.
     */
   private[graft] def kmeans(
       sample: Array[Array[Float]], k: Int, iters: Int = 10,
@@ -240,8 +240,7 @@ object IvfIndex {
       nLists: Int = 16,
       trainSampleSize: Int = 100000,
       sourcePath: String = "",
-      defaultNprobe: Int = 4,
-      distributedTrain: Boolean = true): IndexEntry = {
+      defaultNprobe: Int = 4): IndexEntry = {
     Catalog.register(IndexEntry(indexName, indexDir, sourcePath, vecCol, "IVFFLAT",
       metric, "BUILDING", 0L, defaultNprobe))
     Catalog.logEvent(indexName, "BUILD_START", s"IVFFLAT nLists=$nLists metric=$metric")
@@ -249,16 +248,8 @@ object IvfIndex {
       Catalog.registerSegment(SegmentEntry(indexName, i, "PENDING", 0L)))
 
     val n = df.count()
-    val centroids =
-      if (distributedTrain)
-        kmeansMl(trainFrame(df, n, trainSampleSize), vecCol, nLists,
-          approxRows = math.min(n, trainSampleSize.toLong))
-      else {
-        val fraction = math.min(1.0, trainSampleSize.toDouble / math.max(1L, n))
-        val sample = df.sample(withReplacement = false, fraction, seed = 42L)
-          .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
-        kmeans(sample, nLists)
-      }
+    val centroids = kmeansMl(trainFrame(df, n, trainSampleSize), vecCol, nLists,
+      approxRows = math.min(n, trainSampleSize.toLong))
     val dim = centroids.head.length
 
     val bc = spark.sparkContext.broadcast(centroids)
@@ -269,15 +260,7 @@ object IvfIndex {
       df.withColumn("list_id", assignUdf(col(vecCol)))
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(s"$indexDir/lists")
-      // per-segment row counts from the written layout (one footer pass)
-      val counts = spark.read.parquet(s"$indexDir/lists")
-        .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      (0 until nLists).foreach { i =>
-        val rows = counts.getOrElse(i, 0L)
-        val state = if (rows == 0L) "SMALL_PART" else "BUILT"
-        Catalog.registerSegment(SegmentEntry(indexName, i, state, rows))
-      }
+      registerLists(spark, indexName, indexDir, nLists)
     } catch {
       case e: Throwable =>
         (0 until nLists).foreach(i => Catalog.registerSegment(
@@ -290,12 +273,7 @@ object IvfIndex {
         throw e
     }
 
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-
+    IndexArtifact.Centroids.write(spark, indexDir, centroids)
     val art = IndexArtifact.write(indexDir, "IVFFLAT",
       Meta(metric, nLists, dim, n, sourcePath, vecCol, "BUILT"))
     IndexArtifact.Centroids.put(art, centroids)
@@ -305,6 +283,21 @@ object IvfIndex {
     Catalog.register(entry)
     Catalog.logEvent(indexName, "BUILD_FINISH", s"nRows=$n")
     entry
+  }
+
+  /** Per-list segment states from the written `lists/` layout (one
+    * footer pass): BUILT with its row count, SMALL_PART for an empty list.
+    */
+  private def registerLists(
+      spark: SparkSession, indexName: String, indexDir: String, nLists: Int): Unit = {
+    val counts = spark.read.parquet(s"$indexDir/lists")
+      .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    (0 until nLists).foreach { i =>
+      val rows = counts.getOrElse(i, 0L)
+      val state = if (rows == 0L) "SMALL_PART" else "BUILT"
+      Catalog.registerSegment(SegmentEntry(indexName, i, state, rows))
+    }
   }
 
   /** Incremental maintenance — the reference's insert-time index path
@@ -333,15 +326,7 @@ object IvfIndex {
     df.withColumn("list_id", assignUdf(col(meta.vecCol)))
       .write.mode("append").partitionBy("list_id")
       .parquet(s"$indexDir/lists")
-
-    val counts = spark.read.parquet(s"$indexDir/lists")
-      .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (0 until meta.nLists).foreach { i =>
-      val rows = counts.getOrElse(i, 0L)
-      val state = if (rows == 0L) "SMALL_PART" else "BUILT"
-      Catalog.registerSegment(SegmentEntry(indexName, i, state, rows))
-    }
+    registerLists(spark, indexName, indexDir, meta.nLists)
     val n = meta.nRows + nNew
     IndexArtifact.write(indexDir, art.indexType, meta.copy(nRows = n), art.buildId)
     val updated = entry.copy(nRows = n, status = "BUILT")

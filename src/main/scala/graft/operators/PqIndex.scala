@@ -12,9 +12,9 @@ import graft.functions.PqAdcDistance
   * Neighbor Search", IEEE TPAMI 2011).
   *
   * The vector is split into `m` contiguous subspaces; each subspace gets
-  * its own 256-centroid codebook (driver k-means on a bounded sample,
-  * like [[IvfIndex]]), so a d-dim float vector stores as m bytes — a
-  * 4·d/m× footprint cut (32× at d=128, m=16).
+  * its own 256-centroid codebook ([[trainCodebooks]], on a bounded
+  * sample like [[IvfIndex]]'s centroids), so a d-dim float vector stores
+  * as m bytes — a 4·d/m× footprint cut (32× at d=128, m=16).
   *
   * Search uses Asymmetric Distance Computation (ADC): per query, a
   * m×256 lookup table of exact subspace distances to the query is built
@@ -53,6 +53,21 @@ object PqIndex {
     out
   }
 
+  /** The `m` per-subspace codebooks (up to 256 centroids each) over the
+    * rows of `train`, whose `vecCol` holds `m * sub` floats: one seeded
+    * [[IvfIndex.kmeansMl]] per subspace over an array slice computed in
+    * the scan. `nTrain` is `train`'s row count, so no subspace counts it
+    * again. Shared by IVFPQ and HNSWPQ.
+    */
+  private[graft] def trainCodebooks(train: DataFrame, vecCol: String, m: Int,
+      sub: Int, nTrain: Long): Array[Array[Array[Float]]] = {
+    val nCodes = math.min(256L, nTrain).toInt
+    Array.tabulate(m) { s =>
+      IvfIndex.kmeansMl(train.select(slice(col(vecCol), s * sub + 1, sub).as("__sub")),
+        "__sub", nCodes, seed = 42L + s, approxRows = nTrain)
+    }
+  }
+
   def build(
       spark: SparkSession,
       df: DataFrame,
@@ -75,47 +90,18 @@ object PqIndex {
     require(n > 0, "empty input to PqIndex.build")
     val dim = df.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
 
     // distributed training: coarse centroids AND the m per-subspace
     // codebooks all train via spark.ml KMeans|| on a sampled frame —
-    // no vector sample ever reaches the driver. The subspace frames are
-    // array slices computed in the scan (codegen), one KMeans job each.
+    // no vector sample ever reaches the driver.
     val train = IvfIndex.trainFrame(df.select(col(vecCol)), n, trainSampleSize)
       .persist()
-    try {
-      val nTrain = train.count()
-      val centroids = IvfIndex.kmeansMl(train, vecCol, nLists,
-        approxRows = nTrain)
-      val nCodes = math.min(256L, nTrain).toInt
-      val books: Array[Array[Array[Float]]] = Array.tabulate(m) { s =>
-        val subDf = train.select(
-          slice(col(vecCol), s * sub + 1, sub).as("__sub"))
-        IvfIndex.kmeansMl(subDf, "__sub", nCodes, seed = 42L + s,
-          approxRows = nTrain)
-      }
-      buildWithCodebooks(spark, df, idCol, vecCol, indexName, indexDir, metric,
-        nLists, m, dim, n, sourcePath, defaultNprobe, centroids, books)
-    } finally train.unpersist(blocking = false)
-  }
-
-  private def buildWithCodebooks(
-      spark: SparkSession,
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      indexName: String,
-      indexDir: String,
-      metric: String,
-      nLists: Int,
-      m: Int,
-      dim: Int,
-      n: Long,
-      sourcePath: String,
-      defaultNprobe: Int,
-      centroids: Array[Array[Float]],
-      books: Array[Array[Array[Float]]]): IvfIndex.IndexEntry = {
-    import spark.implicits._
+    val (centroids, books) =
+      try {
+        val nTrain = train.count()
+        (IvfIndex.kmeansMl(train, vecCol, nLists, approxRows = nTrain),
+          trainCodebooks(train, vecCol, m, dim / m, nTrain))
+      } finally train.unpersist(blocking = false)
 
     val bcC = spark.sparkContext.broadcast(centroids)
     val bcB = spark.sparkContext.broadcast(books)
@@ -127,14 +113,8 @@ object PqIndex {
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$indexDir/lists")
 
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    // codebooks: (sub, code, centroid)
-    books.zipWithIndex.flatMap { case (book, s) =>
-      book.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
-    }.toSeq.toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebooks")
+    IndexArtifact.Centroids.write(spark, indexDir, centroids)
+    IndexArtifact.Codebooks.write(spark, indexDir, books)
 
     val art = IndexArtifact.write(indexDir, "IVFPQ",
       PqMeta(metric, nLists, m, dim, n, vecCol, idCol, "BUILT"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 
@@ -40,6 +40,35 @@ object SqIndex {
     case other => throw new IllegalArgumentException(s"unknown metric $other")
   }
 
+  /** Per-dim int8 quantizer `(scale, offset)`: each partition reduces its
+    * vectors to min/max arrays, and the driver reduces those dim-sized
+    * arrays — one pass, no shuffle. Shared by IVFSQ and HNSWSQ.
+    */
+  private[graft] def trainParams(vecs: Dataset[Array[Float]]): (Array[Float], Array[Float]) = {
+    import vecs.sparkSession.implicits._
+    val mm = vecs.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val first = it.next()
+        val mn = first.clone(); val mx = first.clone()
+        it.foreach { v =>
+          var j = 0
+          while (j < v.length) {
+            if (v(j) < mn(j)) mn(j) = v(j)
+            if (v(j) > mx(j)) mx(j) = v(j)
+            j += 1
+          }
+        }
+        Iterator((mn, mx))
+      }
+    }.collect()
+    require(mm.nonEmpty, "empty input to an SQ index build")
+    val dim = mm.head._1.length
+    val mins = mm.map(_._1).reduce((a, b) => Array.tabulate(dim)(j => math.min(a(j), b(j))))
+    val maxs = mm.map(_._2).reduce((a, b) => Array.tabulate(dim)(j => math.max(a(j), b(j))))
+    (Array.tabulate(dim)(j => (maxs(j) - mins(j)) / 255f), mins)
+  }
+
   def build(
       spark: SparkSession,
       df: DataFrame,
@@ -66,30 +95,7 @@ object SqIndex {
       vecCol, nLists, approxRows = math.min(n, trainSampleSize.toLong))
     val dim = centroids.head.length
 
-    // Per-dim min/max: per-partition arrays, dim-sized driver reduce.
-    val mm = df.select(col(vecCol)).as[Array[Float]].mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val first = it.next()
-        val mn = first.clone(); val mx = first.clone()
-        it.foreach { v =>
-          var j = 0
-          while (j < v.length) {
-            if (v(j) < mn(j)) mn(j) = v(j)
-            if (v(j) > mx(j)) mx(j) = v(j)
-            j += 1
-          }
-        }
-        Iterator((mn, mx))
-      }
-    }.collect()
-    require(mm.nonEmpty, "empty input to SqIndex.build")
-    val mins = mm.map(_._1).reduce { (a, b) =>
-      Array.tabulate(dim)(j => math.min(a(j), b(j))) }
-    val maxs = mm.map(_._2).reduce { (a, b) =>
-      Array.tabulate(dim)(j => math.max(a(j), b(j))) }
-    val scale = Array.tabulate(dim)(j => (maxs(j) - mins(j)) / 255f)
-    val offset = mins
+    val (scale, offset) = trainParams(df.select(col(vecCol)).as[Array[Float]])
 
     val bcC = spark.sparkContext.broadcast(centroids)
     val bcS = spark.sparkContext.broadcast(scale)
@@ -103,11 +109,8 @@ object SqIndex {
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$indexDir/lists")
 
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    Seq((scale.toSeq, offset.toSeq)).toDF("scale", "offset")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/sq_params")
+    IndexArtifact.Centroids.write(spark, indexDir, centroids)
+    IndexArtifact.SqParams.write(spark, indexDir, (scale, offset))
 
     val art = IndexArtifact.write(indexDir, "IVFSQ",
       SqMeta(metric, nLists, dim, n, vecCol, idCol, "BUILT"))

@@ -25,7 +25,7 @@ case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case agg @ Aggregate(groupExprs, resultExprs, child, _) =>
-      rewrite(agg, groupExprs, resultExprs, child).getOrElse(agg)
+      rewrite(groupExprs, resultExprs, child).getOrElse(agg)
     // normal (sort-order) projections — optimizeUseNormalProjection.cpp:
     // a Sort whose keys prefix a projection's ORDER BY reads the
     // projection's narrower, sort-clustered copy instead of the base scan
@@ -61,7 +61,7 @@ case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   private def rewrite(
-      agg: Aggregate, groupExprs: Seq[Expression],
+      groupExprs: Seq[Expression],
       resultExprs: Seq[NamedExpression], child: LogicalPlan): Option[LogicalPlan] = {
     // a WHERE over projection-key columns only is applied to the
     // projection's group rows (reference: projections serve filtered

@@ -68,8 +68,8 @@ case class TopKSearchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     validate(plan)
     plan.transformDown {
       case gl @ GlobalLimit(IntegerLiteral(k),
-          LocalLimit(_, sort @ Sort(orders, true, child, _))) if orders.nonEmpty =>
-        rewriteTopK(k, sort, orders, child).getOrElse(gl)
+          LocalLimit(_, Sort(orders, true, child, _))) if orders.nonEmpty =>
+        rewriteTopK(k, orders, child).getOrElse(gl)
     }
   }
 
@@ -164,7 +164,7 @@ case class TopKSearchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     Set("list_id", "qcodes", "pqcodes", "qvec", "node_idx", "neighbors", "part_id")
 
   private def rewriteTopK(
-      k: Int, sort: Sort, orders: Seq[SortOrder], child: LogicalPlan): Option[LogicalPlan] = {
+      k: Int, orders: Seq[SortOrder], child: LogicalPlan): Option[LogicalPlan] = {
     // First sort key must be an attribute produced by a projection as
     // `distance(vecCol, literal-query-vector)`, ascending; trailing keys
     // are tie-breaks and are preserved.

@@ -59,7 +59,7 @@ object FormatQueries {
         "o_orderpriority")
       .orderBy("o_orderkey")
 
-  private def agg(s: SparkSession, fmt: String, df: DataFrame): DataFrame =
+  private def agg(fmt: String, df: DataFrame): DataFrame =
     df.agg(
       count(lit(1)).as("cnt"),
       sum(col("o_orderkey")).as("key_sum"),
@@ -179,7 +179,7 @@ object FormatQueries {
           OutputFormats.save(base.repartition(4), dir, "TSV")
           InputFormats.readLines(s.read.textFile(dir), "TSV", fmtStructure)
         })
-      frames.map { case (name, df) => agg(s, name, df) }
+      frames.map { case (name, df) => agg(name, df) }
         .reduce(_.unionAll(_))
         .orderBy("fmt")
     }),

@@ -243,12 +243,12 @@ object CapnProtoFormat {
   case class CLayout(dataWords: Int, ptrWords: Int,
       slots: Map[String, Slot], discOffset: Int, tags: Map[String, Int])
 
-  private def isPointerType(sc: CSchema, t: CT): Boolean = t match {
+  private def isPointerType(t: CT): Boolean = t match {
     case TText | TData | _: TList | _: TStruct => true
     case _ => false
   }
 
-  private def lgSizeOf(sc: CSchema, t: CT): Int = t match {
+  private def lgSizeOf(t: CT): Int = t match {
     case TBool => 0
     case TInt(8, _) => 3
     case TInt(16, _) => 4
@@ -307,11 +307,11 @@ object CapnProtoFormat {
         }
         f.tpe match {
           case TVoid => ()
-          case t if isPointerType(sc, t) =>
+          case t if isPointerType(t) =>
             slots += f.name -> Slot(isPointer = true, ptrWords, -1)
             ptrWords += 1
           case t =>
-            val lg = lgSizeOf(sc, t)
+            val lg = lgSizeOf(t)
             slots += f.name -> Slot(isPointer = false, allocData(lg), lg)
         }
       }
@@ -472,7 +472,7 @@ object CapnProtoFormat {
     listPtr(seg, ptrPos, at, 2, n)
   }
 
-  private def elemCodeOf(sc: CSchema, elem: CT): Int = elem match {
+  private def elemCodeOf(elem: CT): Int = elem match {
     case TVoid => 0
     case TBool => 1
     case TInt(8, _) => 2
@@ -489,7 +489,7 @@ object CapnProtoFormat {
       xs: Seq[Any], ch: String): Unit = {
     val elemCh = if (ch.startsWith("Array(") && ch.endsWith(")"))
       ch.substring(6, ch.length - 1).trim else ""
-    elemCodeOf(sc, elem) match {
+    elemCodeOf(elem) match {
       case 0 => listPtr(seg, ptrPos, seg.words.length, 0, xs.length)
       case 1 =>
         val at = seg.alloc((xs.length + 63) / 64)
@@ -840,9 +840,9 @@ object CapnProtoFormat {
     val ptrLoc = Loc(dataLoc.seg, dataLoc.word + dw)
     def slotValue(f: CField): Any = f.tpe match {
       case TVoid => null
-      case t if isPointerType(sc, t) =>
+      case t if isPointerType(t) =>
         val slot = lay.slots(f.name)
-        if (slot.offset >= pw) defaultFor(sc, t) // beyond encoded ptr section
+        if (slot.offset >= pw) defaultFor(t) // beyond encoded ptr section
         else readPtrValue(sc, m, Loc(ptrLoc.seg, ptrLoc.word + slot.offset), t)
       case t =>
         val slot = lay.slots(f.name)
@@ -869,7 +869,7 @@ object CapnProtoFormat {
     }
   }
 
-  private def defaultFor(sc: CSchema, t: CT): Any = t match {
+  private def defaultFor(t: CT): Any = t match {
     case TText => ""
     case TData => Array.empty[Byte]
     case TList(_) => Seq.empty[Any]

@@ -154,7 +154,7 @@ object ChTypes {
   /** Parse a reference type name to (engine type, nullable). */
   def toSpark(ch: String): (DataType, Boolean) = {
     val s = stripComments(ch)
-    def inner(name: String): String = {
+    def inner: String = {
       val i = s.indexOf('(')
       require(i >= 0 && s.endsWith(")"), s"malformed type: $s")
       s.substring(i + 1, s.length - 1)
@@ -180,16 +180,16 @@ object ChTypes {
     }
 
     if (s.startsWith("Nullable(")) {
-      val (t, _) = toSpark(inner("Nullable")); (t, true)
+      val (t, _) = toSpark(inner); (t, true)
     } else if (s.startsWith("LowCardinality(")) {
-      toSpark(inner("LowCardinality"))
+      toSpark(inner)
     } else if (s.startsWith("Array(")) {
-      val (e, n) = toSpark(inner("Array")); (ArrayType(e, n), false)
+      val (e, n) = toSpark(inner); (ArrayType(e, n), false)
     } else if (s.startsWith("Map(")) {
-      val Seq(k, v) = splitArgs(inner("Map")).map(toSpark)
+      val Seq(k, v) = splitArgs(inner).map(toSpark)
       (MapType(k._1, v._1, v._2), false)
     } else if (s.startsWith("Tuple(")) {
-      val parts = splitArgs(inner("Tuple")).map(toSpark)
+      val parts = splitArgs(inner).map(toSpark)
       val fields = parts.zipWithIndex.map { case ((t, n), i) =>
         StructField(s"_${i + 1}", t, n)
       }
@@ -202,22 +202,22 @@ object ChTypes {
     } else if (s.startsWith("DateTime")) {
       (TimestampType, false)
     } else if (s.startsWith("Decimal32(")) {
-      (DecimalType(9, inner("Decimal32").trim.toInt), false)
+      (DecimalType(9, inner.trim.toInt), false)
     } else if (s.startsWith("Decimal64(")) {
-      (DecimalType(18, inner("Decimal64").trim.toInt), false)
+      (DecimalType(18, inner.trim.toInt), false)
     } else if (s.startsWith("Decimal128(")) {
-      (DecimalType(38, inner("Decimal128").trim.toInt), false)
+      (DecimalType(38, inner.trim.toInt), false)
     } else if (s.startsWith("Decimal256(")) {
       // Spark value precision caps at 38; the declared name is kept in
       // the ch_type metadata so the binary codecs frame 32 bytes. A
       // scale past 38 cannot be VALUE-represented — clamping it would
       // silently misread every value by a power of ten, so reject.
-      val sc = inner("Decimal256").trim.toInt
+      val sc = inner.trim.toInt
       require(sc <= 38,
         s"Decimal256($sc): scale > 38 exceeds the engine's DecimalType cap")
       (DecimalType(38, sc), false)
     } else if (s.startsWith("Decimal(")) {
-      val Seq(p, sc) = splitArgs(inner("Decimal"))
+      val Seq(p, sc) = splitArgs(inner)
       (DecimalType(math.min(p.toInt, 38), sc.toInt), false)
     } else s match {
       case "Int8" => (ByteType, false)

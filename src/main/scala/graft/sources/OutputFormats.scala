@@ -124,7 +124,7 @@ object OutputFormats {
     }
   }
 
-  def footerLines(schema: StructType, format: String, s: Settings): Seq[String] =
+  def footerLines(format: String, s: Settings): Seq[String] =
     canon(format) match {
       case "customseparated" if s.customResultAfterDelimiter.nonEmpty =>
         Seq(s.customResultAfterDelimiter.stripPrefix("\n").stripSuffix("\n"))
@@ -372,7 +372,7 @@ object OutputFormats {
       case _ if isRowFormat(f) =>
         val render = rowRenderer(schema, format, s)
         val hdr = headerLines(schema, format, s)
-        val ftr = footerLines(schema, format, s)
+        val ftr = footerLines(format, s)
         val body = rows0.map(render)
         ((hdr ++ body ++ ftr).mkString("", "\n", "\n"))
       case other =>

@@ -549,7 +549,7 @@ object ProtobufFormat {
     case other => throw new IllegalArgumentException(s"Protobuf: bad wire type $other")
   }
 
-  private def decodeScalar(kind: String, wire: Int, buf: ByteBuffer): Any = kind match {
+  private def decodeScalar(kind: String, buf: ByteBuffer): Any = kind match {
     case "int32" | "int64" => readVarint(buf)
     case "uint32" => readVarint(buf) & 0xffffffffL
     case "uint64" => readVarint(buf)
@@ -607,9 +607,9 @@ object ProtobufFormat {
               val ek = readVarint(buf)
               val et = (ek >>> 3).toInt
               val ew = (ek & 7).toInt
-              if (et == 1) k = decodeScalar(kKind, ew, buf)
+              if (et == 1) k = decodeScalar(kKind, buf)
               else if (et == 2) vType match {
-                case FScalar(vk) => mv = decodeScalar(vk, ew, buf)
+                case FScalar(vk) => mv = decodeScalar(vk, buf)
                 case FEnum(_) => mv = readVarint(buf)
                 case FMsg(mn) =>
                   val l = readVarint(buf).toInt
@@ -632,8 +632,8 @@ object ProtobufFormat {
               val len = readVarint(buf).toInt
               val pEnd = buf.position() + len
               while (buf.position() < pEnd)
-                append(f, decodeScalar(kind, wireOf(kind), buf))
-            } else append(f, decodeScalar(kind, wire, buf))
+                append(f, decodeScalar(kind, buf))
+            } else append(f, decodeScalar(kind, buf))
         }
       }
     }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.{HnswIndex, IvfIndex, VectorSearch}
+import graft.operators.{HnswIndex, IndexArtifact, IvfIndex, VectorSearch}
 
 class HnswIndexSpec extends SparkSpec {
 
@@ -157,31 +157,69 @@ class HnswIndexSpec extends SparkSpec {
     IvfIndex.Catalog.drop("h1"); IvfIndex.Catalog.drop("h2")
   }
 
-  test("append builds new parts at insert time; search unions all parts") {
-    val dir = Files.createTempDirectory("hnsw-append").toString
-    try {
-      // build on the first half, append the second half
-      val half1 = emb.filter(col("vec_id") % 2 === 0)
-      val half2 = emb.filter(col("vec_id") % 2 === 1)
-      HnswIndex.build(spark, half1, "vec_id", "embedding", "append_hnsw",
-        dir, "l2", m = 8, efConstruction = 64, numPartitions = Some(2))
-      val partsBefore = spark.read.parquet(s"$dir/graph")
-        .select("part_id").distinct().count()
-      HnswIndex.append(spark, dir, "append_hnsw", half2, "vec_id",
-        "embedding", "l2", m = 8, efConstruction = 64,
-        numPartitions = Some(2))
-      val g = spark.read.parquet(s"$dir/graph")
-      assert(g.count() === emb.count())
-      assert(g.select("part_id").distinct().count() === partsBefore + 2)
-      // appended rows are searchable at the usual recall bar
-      val got = HnswIndex.search(spark, dir, qv, 10, ef = 128)
-        .select("id").collect().map(_.getLong(0)).toSet
-      val recall = (got & bruteIds(10).toSet).size / 10.0
-      assert(recall >= 0.9, s"recall@10 after append = $recall")
-      // catalog row count reflects the append
-      assert(IvfIndex.Catalog.lookup("append_hnsw").get.nRows === emb.count())
-    } finally IvfIndex.Catalog.drop("append_hnsw")
-  }
+  private def sortedRows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+
+  Seq(("HNSWFLAT", false, 0), ("HNSWSQ", true, 0), ("HNSWPQ", false, 8))
+    .foreach { case (t, sq, pq) =>
+      test(s"$t: append builds new parts at insert time; search unions all parts") {
+        val dir = Files.createTempDirectory(s"hnsw-append-$t").toString
+        val name = s"append_${t.toLowerCase}"
+        try {
+          // build on the first half, append the second half
+          val half1 = emb.filter(col("vec_id") % 2 === 0)
+          val half2 = emb.filter(col("vec_id") % 2 === 1)
+          HnswIndex.build(spark, half1, "vec_id", "embedding", name,
+            dir, "l2", m = 8, efConstruction = 64, numPartitions = Some(2),
+            quantize = sq, pqSubspaces = pq)
+          val built = IndexArtifact.read(dir, classOf[HnswIndex.Meta])
+          val quantizer = Seq("sq_params", "codebooks")
+            .filter(d => Files.exists(java.nio.file.Paths.get(dir, d)))
+            .map(d => d -> sortedRows(s"$dir/$d"))
+          assert(quantizer.size === (if (t == "HNSWFLAT") 0 else 1))
+          val partsBefore = spark.read.parquet(s"$dir/graph")
+            .select("part_id").distinct().count()
+          HnswIndex.append(spark, dir, name, half2, "vec_id",
+            "embedding", "l2", m = 8, efConstruction = 64,
+            numPartitions = Some(2))
+          val g = spark.read.parquet(s"$dir/graph")
+          assert(g.count() === emb.count())
+          assert(g.select("part_id").distinct().count() === partsBefore + 2)
+          if (quantizer.nonEmpty) {
+            // appended parts carry codes of the stored quantizer: one byte
+            // per dim (SQ) or per subspace (PQ)
+            val lens = g.filter(col("part_id") >= partsBefore)
+              .select(length(col("qvec"))).distinct().collect().map(_.getInt(0))
+            assert(lens.toSeq === Seq(if (sq) qv.length else pq))
+          }
+          // every appended row is searchable: a self-query finds it
+          Seq(1L, 101L, 201L, 301L, 401L).foreach { id =>
+            val v = emb.filter(col("vec_id") === id).select(col("embedding"))
+              .head().getSeq[Float](0)
+            val got =
+              if (pq > 0) HnswIndex.searchTwoStage(spark, dir, emb, "vec_id",
+                  "embedding", v, 10, numReorder = 60, ef = 256)
+                .select("vec_id").collect().map(_.getLong(0)).toSet
+              else HnswIndex.search(spark, dir, v, 10, ef = 128)
+                .select("id").collect().map(_.getLong(0)).toSet
+            assert(got.contains(id), s"appended id $id missing from $got")
+          }
+          if (t == "HNSWFLAT") {
+            val got = HnswIndex.search(spark, dir, qv, 10, ef = 128)
+              .select("id").collect().map(_.getLong(0)).toSet
+            val recall = (got & bruteIds(10).toSet).size / 10.0
+            assert(recall >= 0.9, s"recall@10 after append = $recall")
+          }
+          // meta.json and the catalog count both halves; the build id and
+          // the trained quantizer stay the build's
+          val appended = IndexArtifact.read(dir, classOf[HnswIndex.Meta])
+          assert(appended.meta.nRows === emb.count())
+          assert(appended.buildId === built.buildId)
+          quantizer.foreach { case (d, rows) => assert(sortedRows(s"$dir/$d") === rows, d) }
+          assert(IvfIndex.Catalog.lookup(name).get.nRows === emb.count())
+        } finally IvfIndex.Catalog.drop(name)
+      }
+    }
 
   test("cosine metric graph: recall vs brute-force cosine (ref 00014)") {
     val dir = Files.createTempDirectory("hnsw-cos").toString
@@ -208,14 +246,7 @@ class HnswIndexSpec extends SparkSpec {
     try {
       HnswIndex.build(spark, big.unionAll(small), "vec_id", "embedding",
         "gate_hnsw", dir, "l2", m = 8, efConstruction = 64,
-        minRowsToBuild = 100L, maxRowsForSlowMode = 150L)
-      // the two large parts exceed the slow-mode threshold and are
-      // recorded in the event log (the reference's slow-mode build pool
-      // maps to observability here — see build())
-      val slowEvents = IvfIndex.Catalog.events("gate_hnsw")
-        .filter(_.event == "BUILD_SLOW_MODE")
-      assert(slowEvents.size === 1, slowEvents.mkString(","))
-      assert(slowEvents.head.detail.startsWith("parts=0,1"), slowEvents.head.detail)
+        minRowsToBuild = 100L)
       val segs = IvfIndex.Catalog.segmentsFor("gate_hnsw")
       val smallSegs = segs.filter(_.state == "SMALL_PART")
       assert(smallSegs.size === 2, segs.mkString(","))
@@ -238,5 +269,89 @@ class HnswIndexSpec extends SparkSpec {
         .select("vec_id").collect().map(_.getLong(0)).toSet
       assert((got & brute).size >= 8, s"gated recall@10 = ${(got & brute).size}")
     } finally IvfIndex.Catalog.drop("gate_hnsw")
+  }
+
+  test("append after a gated build numbers new parts past the small parts") {
+    val dir = Files.createTempDirectory("hnsw-gate-append").toString
+    val n = emb.count()
+    // graph parts 0 and 1, small parts 2 and 3, then two appended parts
+    val big = emb.filter(col("vec_id") < n - 150).repartition(2)
+    val small = emb.filter(col("vec_id") >= n - 150 && col("vec_id") < n - 100)
+      .repartition(2)
+    try {
+      HnswIndex.build(spark, big.unionAll(small), "vec_id", "embedding",
+        "gate_append", dir, "l2", m = 8, efConstruction = 64,
+        minRowsToBuild = 100L)
+      HnswIndex.append(spark, dir, "gate_append",
+        emb.filter(col("vec_id") >= n - 100), "vec_id", "embedding", "l2",
+        m = 8, efConstruction = 64, numPartitions = Some(2))
+      val graphParts = spark.read.parquet(s"$dir/graph").select("part_id")
+        .distinct().collect().map(_.getInt(0)).sorted.toSeq
+      assert(graphParts === Seq(0, 1, 4, 5))
+      val segs = IvfIndex.Catalog.segmentsFor("gate_append")
+      assert(segs.filter(_.state == "SMALL_PART").map(_.segmentId) === Seq(2, 3),
+        segs.mkString(","))
+      assert(segs.map(_.nRows).sum === n, segs.mkString(","))
+      val got = HnswIndex.search(spark, dir, qv, 500, ef = 500)
+        .select("id").collect().map(_.getLong(0)).toSeq
+      assert(got.sorted === (0L until n))
+    } finally IvfIndex.Catalog.drop("gate_append")
+  }
+
+  test("append to an index whose every part was gated") {
+    val dir = Files.createTempDirectory("hnsw-all-small").toString
+    try {
+      HnswIndex.build(spark, emb.filter(col("vec_id") < 100), "vec_id",
+        "embedding", "all_small", dir, "l2", m = 8, efConstruction = 64,
+        numPartitions = Some(2), minRowsToBuild = 1000L)
+      HnswIndex.append(spark, dir, "all_small",
+        emb.filter(col("vec_id") >= 100 && col("vec_id") < 200), "vec_id",
+        "embedding", "l2", m = 8, efConstruction = 64, numPartitions = Some(2))
+      val segs = IvfIndex.Catalog.segmentsFor("all_small")
+      assert(segs.map(s => (s.segmentId, s.state)) ===
+        Seq(0 -> "SMALL_PART", 1 -> "SMALL_PART", 2 -> "BUILT", 3 -> "BUILT"))
+      assert(IvfIndex.Catalog.lookup("all_small").get.nRows === 200L)
+      val got = HnswIndex.search(spark, dir, qv, 200, ef = 200)
+        .select("id").collect().map(_.getLong(0)).toSeq
+      assert(got.sorted === (0L until 200L))
+    } finally IvfIndex.Catalog.drop("all_small")
+  }
+
+  test("an in-place rebuild drops the previous build's small parts") {
+    val dir = Files.createTempDirectory("hnsw-rebuild").toString
+    val evens = emb.filter(col("vec_id") % 2 === 0)
+    try {
+      // build A: even ids, the ids >= 400 fall under the gate
+      HnswIndex.build(spark,
+        evens.filter(col("vec_id") < 400).repartition(2)
+          .unionAll(evens.filter(col("vec_id") >= 400).repartition(2)),
+        "vec_id", "embedding", "rebuild_hnsw", dir, "l2", m = 8,
+        efConstruction = 64, minRowsToBuild = 50L)
+      assert(Files.exists(java.nio.file.Paths.get(dir, "smallparts")))
+      // build B in the same directory: odd ids, nothing gated
+      HnswIndex.build(spark, emb.filter(col("vec_id") % 2 === 1), "vec_id",
+        "embedding", "rebuild_hnsw", dir, "l2", m = 8, efConstruction = 64,
+        numPartitions = Some(2))
+      val q = emb.filter(col("vec_id") === 450).select(col("embedding"))
+        .head().getSeq[Float](0)
+      val got = HnswIndex.search(spark, dir, q, 20, ef = 128)
+        .select("id").collect().map(_.getLong(0)).toSeq
+      assert(got.size === 20)
+      assert(got.distinct.size === got.size, got.mkString(","))
+      assert(got.forall(_ % 2 == 1), got.mkString(","))
+    } finally IvfIndex.Catalog.drop("rebuild_hnsw")
+  }
+
+  test("HNSWSQ and HNSWPQ searches after a build run no Spark job while built") {
+    Seq((true, 0), (false, 8)).foreach { case (sq, pq) =>
+      val dir = Files.createTempDirectory("hnsw-warm").toString
+      try {
+        HnswIndex.build(spark, emb, "vec_id", "embedding", "warm_hnsw", dir,
+          "l2", m = 8, efConstruction = 32, numPartitions = Some(2),
+          quantize = sq, pqSubspaces = pq)
+        val (_, jobs) = jobsDuring(HnswIndex.search(spark, dir, qv, 10))
+        assert(jobs === 0, s"quantize=$sq pqSubspaces=$pq")
+      } finally IvfIndex.Catalog.drop("warm_hnsw")
+    }
   }
 }

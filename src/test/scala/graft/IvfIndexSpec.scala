@@ -156,7 +156,7 @@ class IvfIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("ivf-ml").toString
     try {
       IvfIndex.build(spark, emb, "embedding", "ml_ivf", dir, "l2",
-        nLists = 4, distributedTrain = true)
+        nLists = 4)
       val got = IvfIndex.search(spark, dir, qv, 10, nprobe = 4,
           None, None, "d", Seq(col("vec_id")))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
