@@ -1,15 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json (SparkEntry.oracleSql and the replay oracles of
+  * `VectorQueries`), for the DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Enable the replay-oracle side channel for THIS dir only (see
-    // VectorQueries.captureReplay): queries export their index decision
-    // sets as DuckDB VALUES while running under Verify; Bench and specs
-    // never pay the export.
-    System.setProperty("graft.replay.dir", sfDir)
     // optional 3rd arg: comma-separated query-name filter for fast local
     // iteration (the driver passes exactly two args — all queries)
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
@@ -37,7 +33,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // the replay oracles export the index decision sets of the approximate
+    // vector queries as DuckDB VALUES; only this dump pays for the export
+    val replays = graft.queries.VectorQueries.replayOracles
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .flatMap { case (name, oracle) =>
+        try Some(name -> oracle(spark, sfDir))
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name replay oracle failed: ${e.getMessage}")
+          None
+        }
+      }
+    val json = (SparkEntry.oracleSql ++ replays)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

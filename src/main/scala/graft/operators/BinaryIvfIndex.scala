@@ -165,14 +165,8 @@ object BinaryIvfIndex {
       deletes: Option[DataFrame] = None): DataFrame = {
     val art = artifact(indexDir)
     val meta = art.meta
-    val pruned0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-      probes(spark, art, qvec, nprobe))
-    val pruned1 = deletes.map { d =>
-      require(d.columns.length == 1, "deletes must be a single id column")
-      pruned0.join(d, d.columns.toSeq, "left_anti")
-    }.getOrElse(pruned0)
-    val pruned = preFilter.map(pruned1.filter).getOrElse(pruned1)
-
+    val pruned = IvfIndex.probedLists(spark, indexDir,
+      probes(spark, art, qvec, nprobe), deletes, preFilter)
     val kernel =
       if (meta.metric == "jaccard") distances.jaccardDistance _
       else distances.hammingDistance _

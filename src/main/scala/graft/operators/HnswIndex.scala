@@ -927,11 +927,12 @@ object HnswIndex {
   }
 
   /** Two-stage search for quantized graphs (HNSWSQ/HNSWPQ): the graph
-    * ranks `numReorder` candidates on dequantized points, then the
-    * survivors are re-ranked with exact float distances from `source`
-    * (broadcast semi-join on the id — the same recall-repair shape as
-    * [[SqIndex.search]]/[[PqIndex.search]]). Essential for PQ, whose
-    * reconstruction error is too coarse for direct top-K.
+    * ranks `numReorder` candidates on dequantized points
+    * ([[stage1Candidates]]), then [[VectorSearch.rerank]] re-ranks the
+    * survivors with exact float distances from `source` — the same
+    * recall-repair shape as [[SqIndex.search]]/[[PqIndex.search]].
+    * Essential for PQ, whose reconstruction error is too coarse for
+    * direct top-K.
     */
   def searchTwoStage(
       spark: SparkSession,
@@ -946,12 +947,9 @@ object HnswIndex {
       metric: String = "l2",
       distName: String = "d",
       tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
-    val cand = search(spark, indexDir, qvec, numReorder,
-        math.max(ef, numReorder), metric)
-      .withColumnRenamed("id", idCol)
-      .select(col(idCol))
-    val candidates = source.join(broadcast(cand), Seq(idCol), "left_semi")
-    VectorSearch.topK(candidates, col(vecCol), qvec, k, metric, None,
-      distName, tieBreak)
+    VectorSearch.rerank(source, idCol, vecCol,
+      stage1Candidates(spark, indexDir, qvec, numReorder, ef, metric)
+        .withColumnRenamed("id", idCol),
+      qvec, k, metric, None, distName, tieBreak)
   }
 }

@@ -346,9 +346,55 @@ object IvfIndex {
     d.indices.sortBy(d(_)).take(nprobe)
   }
 
-  private def probes(spark: SparkSession, art: IndexArtifact.Artifact[Meta],
-      qvec: Seq[Float], nprobe: Int, metric: String): IndexedSeq[Int] =
-    nearestLists(IndexArtifact.Centroids.load(spark, art), metric, qvec.toArray, nprobe)
+  /** [[nearestLists]] over the index's cached centroids; shared by every
+    * centroid-probed family (IVFFLAT, MSTG, IVFSQ, IVFPQ).
+    */
+  private[graft] def probes(spark: SparkSession, art: IndexArtifact.Artifact[_],
+      q: Array[Float], nprobe: Int, metric: String): IndexedSeq[Int] =
+    nearestLists(IndexArtifact.Centroids.load(spark, art), metric, q, nprobe)
+
+  /** The probed lists of an IVF-family index — the one read of `lists/`
+    * for every search of IVFFLAT, MSTG, IVFSQ, IVFPQ and BinaryIVF, and of
+    * the SQL rewrite's IVFFLAT route: only the `probes` partitions are
+    * listed and scanned (file-level pruning via the `list_id=` dirs).
+    *
+    * Lightweight-delete mask (reference `00037_mqvs_multiple_lwd.sql`):
+    * the lists are anti-joined against the deleted-id set on its (single)
+    * id column. No explicit broadcast hint — the mask can be any size; AQE
+    * picks broadcast-anti when it is small, shuffle-anti otherwise.
+    *
+    * `preFilter` applies BEFORE any ranking (the reference's
+    * performPrefilter semantics): the lists carry every source column (the
+    * quantized lists all but the vector), so filters evaluate in place.
+    */
+  private[graft] def probedLists(
+      spark: SparkSession,
+      indexDir: String,
+      probes: Seq[Int],
+      deletes: Option[DataFrame] = None,
+      preFilter: Option[Column] = None): DataFrame = {
+    val lists = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id", probes)
+    val live = deletes.fold(lists) { d =>
+      require(d.columns.length == 1,
+        s"deletes must be a single id column, got ${d.columns.mkString(",")}")
+      lists.join(d, d.columns.toSeq, "left_anti")
+    }
+    preFilter.fold(live)(live.filter)
+  }
+
+  /** Stage 1 of the quantized families (IVFSQ, IVFPQ): score each probed
+    * row with the family's cheap `score`, keep the `n` best ids. A tie on
+    * the score breaks on the id, so the DataFrame search, the SQL rewrite
+    * and the replay oracles all keep the same candidates.
+    */
+  private[graft] def stage1Cut(lists: DataFrame, scoreName: String, score: Column,
+      desc: Boolean, idCol: String, n: Int): DataFrame = {
+    val dir = if (desc) col(scoreName).desc else col(scoreName).asc
+    lists.withColumn(scoreName, score)
+      .orderBy(dir, col(idCol))
+      .limit(n)
+      .select(col(idCol))
+  }
 
   /** The probe set [[search]] uses for this query: the nprobe nearest
     * centroid lists under the index metric. Public so a replay oracle can
@@ -363,7 +409,7 @@ object IvfIndex {
       nprobe: Int,
       metricOverride: Option[String] = None): Seq[Int] = {
     val art = artifact(indexDir)
-    probes(spark, art, qvec, nprobe, metricOverride.getOrElse(art.meta.metric))
+    probes(spark, art, qvec.toArray, nprobe, metricOverride.getOrElse(art.meta.metric))
   }
 
   /** nprobe search: probe the nearest nprobe centroid lists, scan only
@@ -387,8 +433,11 @@ object IvfIndex {
       deletes: Option[DataFrame] = None): DataFrame = {
     val art = artifact(indexDir)
     val metric = metricOverride.getOrElse(art.meta.metric)
-    searchLists(spark, art, qvec, k, probes(spark, art, qvec, nprobe, metric),
-      metric, preFilter, distName, tieBreak, deletes)
+    val lists = probedLists(spark, indexDir,
+      probes(spark, art, qvec.toArray, nprobe, metric), deletes, preFilter)
+    VectorSearch.topK(lists, col(art.meta.vecCol), qvec, k, metric, None,
+        distName, tieBreak)
+      .drop("list_id")
   }
 
   /** `batch_distance()` THROUGH the index: per-query probe lists are
@@ -417,20 +466,11 @@ object IvfIndex {
     val probePairs: Seq[(Int, Int)] = queries.zipWithIndex.flatMap { case (q, qi) =>
       nearestLists(centroids, metric, q.toArray, nprobe).map(l => (qi, l))
     }
-    val listSet = probePairs.map(_._2).distinct
     val probeDf = spark.createDataFrame(probePairs).toDF("query_idx", "list_id")
     val qDf = spark
       .createDataFrame(queries.zipWithIndex.map { case (v, i) => (i, v) })
       .toDF("query_idx", "query_vec")
-    val lists0 = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id", listSet)
-    // same lightweight-delete anti-join as the single-query path
-    val lists = deletes.map { d =>
-      val idCols = d.columns.toSeq
-      require(idCols.size == 1,
-        s"deletes must be a single id column, got ${idCols.mkString(",")}")
-      lists0.join(d, idCols, "left_anti")
-    }.getOrElse(lists0)
-    val scored = lists
+    val scored = probedLists(spark, indexDir, probePairs.map(_._2).distinct, deletes)
       .join(broadcast(probeDf), "list_id")
       .join(broadcast(qDf), "query_idx")
       .withColumn(distName,
@@ -463,65 +503,10 @@ object IvfIndex {
       tieBreak: Seq[Column] = Nil): DataFrame = {
     val art = artifact(indexDir)
     val metric = metricOverride.getOrElse(art.meta.metric)
-    val lists = ProbedPartitions.read(spark, s"$indexDir/lists", "list_id",
-      probes(spark, art, qvec, nprobe, metric))
+    val lists = probedLists(spark, indexDir,
+      probes(spark, art, qvec.toArray, nprobe, metric))
     VectorSearch.topK(lists.join(other, joinCond), col(art.meta.vecCol), qvec,
         k, metric, None, distName, tieBreak)
-      .drop("list_id")
-  }
-
-  /** Two-stage index search (reference `two_stage_search`): stage 1 pulls
-    * `numReorder` candidates from the probed lists, stage 2 re-ranks them
-    * exactly — recall repair at a fixed extra cost of numReorder exact
-    * distances.
-    */
-  def searchTwoStage(
-      spark: SparkSession,
-      indexDir: String,
-      qvec: Seq[Float],
-      k: Int,
-      numReorder: Int,
-      nprobe: Int = 4,
-      metricOverride: Option[String] = None,
-      preFilter: Option[Column] = None,
-      distName: String = "d",
-      tieBreak: Seq[Column] = Nil,
-      deletes: Option[DataFrame] = None): DataFrame = {
-    val art = artifact(indexDir)
-    val metric = metricOverride.getOrElse(art.meta.metric)
-    val candidates = searchLists(spark, art, qvec, numReorder,
-        probes(spark, art, qvec, nprobe, metric), metric, preFilter,
-        "__stage1_d", tieBreak, deletes)
-      .drop("__stage1_d")
-    VectorSearch.topK(candidates, col(art.meta.vecCol), qvec, k, metric, None,
-      distName, tieBreak)
-  }
-
-  private def searchLists(
-      spark: SparkSession,
-      art: IndexArtifact.Artifact[Meta],
-      qvec: Seq[Float],
-      k: Int,
-      probes: IndexedSeq[Int],
-      metric: String,
-      preFilter: Option[Column],
-      distName: String,
-      tieBreak: Seq[Column],
-      deletes: Option[DataFrame]): DataFrame = {
-    val pruned = ProbedPartitions.read(spark, s"${art.dir}/lists", "list_id", probes)
-    // Lightweight-delete mask applied INSIDE the index search (reference
-    // `00037_mqvs_multiple_lwd.sql`): anti-join the probed lists against
-    // the deleted-id set on its (single) id column. No explicit broadcast
-    // hint — the mask can be any size; AQE picks broadcast-anti when it is
-    // small, shuffle-anti otherwise.
-    val lists = deletes.map { d =>
-      val idCols = d.columns.toSeq
-      require(idCols.size == 1,
-        s"deletes must be a single id column, got ${idCols.mkString(",")}")
-      pruned.join(d, idCols, "left_anti")
-    }.getOrElse(pruned)
-    VectorSearch.topK(lists, col(art.meta.vecCol), qvec, k, metric,
-        preFilter, distName, tieBreak)
       .drop("list_id")
   }
 }

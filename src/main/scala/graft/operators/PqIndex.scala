@@ -20,9 +20,11 @@ import graft.functions.PqAdcDistance
   * m×256 lookup table of exact subspace distances to the query is built
   * once on the driver (m·256 kernel evaluations), then every candidate's
   * distance is just m table lookups — no float math per row. The table
-  * rides into codegen as a reference object ([[PqAdcDistance]]). Stage 2
-  * re-ranks `numReorder` survivors exactly against the source table, the
-  * same two-stage shape as [[SqIndex]].
+  * rides into codegen as a reference object ([[PqAdcDistance]]). The
+  * search split is [[SqIndex]]'s: [[IvfIndex.probedLists]], the shared
+  * [[IvfIndex.stage1Cut]] on the ADC score in [[stage1Candidates]], then
+  * [[VectorSearch.rerank]] of the `numReorder` survivors against the
+  * source table.
   */
 object PqIndex {
 
@@ -128,16 +130,6 @@ object PqIndex {
     entry
   }
 
-  /** The probed lists' PQ-coded rows, plus what ranking them needs. */
-  private def probed(spark: SparkSession, indexDir: String, q: Array[Float],
-      nprobe: Int): (PqMeta, Array[Array[Array[Float]]], DataFrame) = {
-    val art = IndexArtifact.read(indexDir, classOf[PqMeta])
-    val probes = IvfIndex.nearestLists(IndexArtifact.Centroids.load(spark, art),
-      art.meta.metric, q, nprobe)
-    (art.meta, IndexArtifact.Codebooks.load(spark, art),
-      ProbedPartitions.read(spark, s"$indexDir/lists", "list_id", probes))
-  }
-
   /** ADC lookup table: adc(s*256 + c) = exact L2² between the query's
     * subvector s and codebook centroid c. Σ over subspaces = L2² to the
     * dequantized vector (for IP: Σ of subspace dots, negated for ranking).
@@ -167,8 +159,11 @@ object PqIndex {
     table
   }
 
-  /** Stage-1 candidate ids only (ADC ranking) — the SQL-rewrite hook,
-    * mirroring [[SqIndex.stage1Candidates]].
+  /** Stage 1: the `numReorder` ids with the best ADC distance
+    * ([[adcTable]] + [[PqAdcDistance]], m table lookups per row) over the
+    * probed lists' codes, after `deletes` and `preFilter`. The only stage 1
+    * of IVFPQ: [[search]], [[graft.plans.TopKSearchRewrite]] and the v16
+    * replay oracle all call it.
     */
   def stage1Candidates(
       spark: SparkSession,
@@ -176,23 +171,20 @@ object PqIndex {
       qvec: Seq[Float],
       numReorder: Int,
       nprobe: Int,
-      preFilter: Option[Column] = None): DataFrame = {
+      preFilter: Option[Column] = None,
+      deletes: Option[DataFrame] = None): DataFrame = {
+    val art = IndexArtifact.read(indexDir, classOf[PqMeta])
     val q = qvec.toArray
-    val (meta, books, pruned0) = probed(spark, indexDir, q, nprobe)
-    // pre-filter BEFORE ranking (reference performPrefilter semantics)
-    val pruned = preFilter.map(pruned0.filter).getOrElse(pruned0)
-    val table = adcTable(q, books, meta.metric)
-    val ip = meta.metric.equalsIgnoreCase("ip") || meta.metric.equalsIgnoreCase("dot")
-    val adc = shim.column(PqAdcDistance(shim.expression(col("pqcodes")), table))
-    val dir = if (ip) col("__adc").desc else col("__adc").asc
-    pruned.withColumn("__adc", adc)
-      .orderBy(dir, col(meta.idCol))
-      .limit(numReorder)
-      .select(col(meta.idCol))
+    val table = adcTable(q, IndexArtifact.Codebooks.load(spark, art), art.meta.metric)
+    IvfIndex.stage1Cut(
+      IvfIndex.probedLists(spark, indexDir,
+        IvfIndex.probes(spark, art, q, nprobe, art.meta.metric), deletes, preFilter),
+      "__adc", shim.column(PqAdcDistance(shim.expression(col("pqcodes")), table)),
+      VectorSearch.isDescending(art.meta.metric), art.meta.idCol, numReorder)
   }
 
-  /** Two-stage IVFPQ search: ADC ranking over the probed lists (m table
-    * lookups per row), exact re-rank of `numReorder` survivors.
+  /** Two-stage IVFPQ search: [[stage1Candidates]], then
+    * [[VectorSearch.rerank]] of the survivors against `source`.
     */
   def search(
       spark: SparkSession,
@@ -206,25 +198,9 @@ object PqIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val q = qvec.toArray
-    val (meta, books, pruned0) = probed(spark, indexDir, q, nprobe)
-    val pruned1 = deletes.map { d =>
-      require(d.columns.length == 1, "deletes must be a single id column")
-      pruned0.join(d, d.columns.toSeq, "left_anti")
-    }.getOrElse(pruned0)
-    val pruned = preFilter.map(pruned1.filter).getOrElse(pruned1)
-
-    val table = adcTable(q, books, meta.metric)
-    val ip = meta.metric.equalsIgnoreCase("ip") || meta.metric.equalsIgnoreCase("dot")
-    val adc = shim.column(PqAdcDistance(shim.expression(col("pqcodes")), table))
-    val stage1Dir = if (ip) col("__adc").desc else col("__adc").asc
-    val cands = pruned.withColumn("__adc", adc)
-      .orderBy(stage1Dir +: tieBreak: _*)
-      .limit(numReorder)
-      .select(col(meta.idCol))
-
-    val candidates = source.join(broadcast(cands), Seq(meta.idCol), "left_semi")
-    VectorSearch.topK(candidates, col(meta.vecCol), qvec, k, meta.metric,
-      preFilter, distName, tieBreak)
+    val meta = IndexArtifact.read(indexDir, classOf[PqMeta]).meta
+    VectorSearch.rerank(source, meta.idCol, meta.vecCol,
+      stage1Candidates(spark, indexDir, qvec, numReorder, nprobe, preFilter, deletes),
+      qvec, k, meta.metric, preFilter, distName, tieBreak)
   }
 }

@@ -18,12 +18,13 @@ import graft.functions.{Metric, SqDistance, VectorKernels}
   * offset/scale) are trained in one distributed `mapPartitions` pass
   * (per-partition min/max arrays, dim-sized driver reduce — no shuffle).
   *
-  * Search is the reference's two-stage shape: stage 1 ranks quantized
-  * codes with the fused dequantize-and-score expression [[SqDistance]]
-  * (codegen'd, probed lists only), stage 2 re-ranks the `numReorder`
-  * survivors with exact float distances read from the SOURCE table
-  * (broadcast semi-join on the id — the reference reads raw vectors from
-  * the part for its second stage the same way).
+  * Search is the reference's two-stage shape, split like every IVF-family
+  * search: [[IvfIndex.probedLists]] reads the probed lists,
+  * [[stage1Candidates]] ranks their quantized codes with the fused
+  * dequantize-and-score expression [[SqDistance]] (codegen'd) and cuts the
+  * `numReorder` best in the shared [[IvfIndex.stage1Cut]], and
+  * [[VectorSearch.rerank]] re-ranks the survivors with exact float
+  * distances read from the SOURCE table.
   */
 object SqIndex {
 
@@ -124,20 +125,13 @@ object SqIndex {
     entry
   }
 
-  /** The probed lists' quantized rows, plus what ranking them needs. */
-  private def probed(spark: SparkSession, indexDir: String, q: Array[Float],
-      nprobe: Int): (SqMeta, (Array[Float], Array[Float]), DataFrame) = {
-    val art = IndexArtifact.read(indexDir, classOf[SqMeta])
-    val probes = IvfIndex.nearestLists(IndexArtifact.Centroids.load(spark, art),
-      art.meta.metric, q, nprobe)
-    (art.meta, IndexArtifact.SqParams.load(spark, art),
-      ProbedPartitions.read(spark, s"$indexDir/lists", "list_id", probes))
-  }
-
-  /** Stage-1 candidate ids only (quantized ranking over the probed
-    * lists) — used by [[graft.plans.TopKSearchRewrite]] to graft an IVFSQ
-    * path into a SQL plan, where the original projection's exact distance
-    * + Sort/Limit IS the stage-2 re-rank.
+  /** Stage 1: the `numReorder` ids with the best [[SqDistance]] over the
+    * probed lists' codes, after `deletes` and `preFilter` (the lists
+    * carry every source column except the vector, so filters evaluate
+    * directly on the quantized layout). The only stage 1 of IVFSQ:
+    * [[search]], [[graft.plans.TopKSearchRewrite]] (whose original
+    * projection's exact distance + Sort/Limit IS the stage-2 re-rank) and
+    * the v14 replay oracle all call it.
     */
   def stage1Candidates(
       spark: SparkSession,
@@ -145,25 +139,22 @@ object SqIndex {
       qvec: Seq[Float],
       numReorder: Int,
       nprobe: Int,
-      preFilter: Option[Column] = None): DataFrame = {
+      preFilter: Option[Column] = None,
+      deletes: Option[DataFrame] = None): DataFrame = {
+    val art = IndexArtifact.read(indexDir, classOf[SqMeta])
     val q = qvec.toArray
-    val (meta, (scale, offset), pruned0) = probed(spark, indexDir, q, nprobe)
-    // pre-filter BEFORE ranking (reference performPrefilter semantics):
-    // the lists carry every source column except the vector, so filters
-    // evaluate directly on the quantized layout
-    val pruned = preFilter.map(pruned0.filter).getOrElse(pruned0)
-    val m = parseMetric(meta.metric)
-    val sqd = shim.column(SqDistance(
-      shim.expression(col("qcodes")), q, scale, offset, m))
-    val dir = if (m == Metric.IP || m == Metric.Dot) col("__sqd").desc else col("__sqd").asc
-    pruned.withColumn("__sqd", sqd)
-      .orderBy(dir, col(meta.idCol))
-      .limit(numReorder)
-      .select(col(meta.idCol))
+    val (scale, offset) = IndexArtifact.SqParams.load(spark, art)
+    val m = parseMetric(art.meta.metric)
+    IvfIndex.stage1Cut(
+      IvfIndex.probedLists(spark, indexDir,
+        IvfIndex.probes(spark, art, q, nprobe, art.meta.metric), deletes, preFilter),
+      "__sqd", shim.column(SqDistance(shim.expression(col("qcodes")), q, scale, offset, m)),
+      desc = m == Metric.IP || m == Metric.Dot, art.meta.idCol, numReorder)
   }
 
-  /** Two-stage IVFSQ search. Stage 1 never touches float vectors; stage 2
-    * re-ranks `numReorder` candidates exactly against `source`.
+  /** Two-stage IVFSQ search: [[stage1Candidates]] never touches float
+    * vectors; [[VectorSearch.rerank]] re-ranks them exactly against
+    * `source`.
     */
   def search(
       spark: SparkSession,
@@ -177,27 +168,9 @@ object SqIndex {
       distName: String = "d",
       tieBreak: Seq[Column] = Nil,
       deletes: Option[DataFrame] = None): DataFrame = {
-    val q = qvec.toArray
-    val (meta, (scale, offset), pruned0) = probed(spark, indexDir, q, nprobe)
-    val pruned1 = deletes.map { d =>
-      require(d.columns.length == 1, "deletes must be a single id column")
-      pruned0.join(d, d.columns.toSeq, "left_anti")
-    }.getOrElse(pruned0)
-    val pruned = preFilter.map(pruned1.filter).getOrElse(pruned1)
-
-    val m = parseMetric(meta.metric)
-    val sqd = shim.column(SqDistance(
-      shim.expression(col("qcodes")), q, scale, offset, m))
-    val desc = m == Metric.IP || m == Metric.Dot
-    val stage1Dir = if (desc) col("__sqd").desc else col("__sqd").asc
-    val cands = pruned.withColumn("__sqd", sqd)
-      .orderBy(stage1Dir +: tieBreak: _*)
-      .limit(numReorder)
-      .select(col(meta.idCol))
-
-    // numReorder ids — bounded, broadcast into the source scan.
-    val candidates = source.join(broadcast(cands), Seq(meta.idCol), "left_semi")
-    VectorSearch.topK(candidates, col(meta.vecCol), qvec, k, meta.metric,
-      preFilter, distName, tieBreak)
+    val meta = IndexArtifact.read(indexDir, classOf[SqMeta]).meta
+    VectorSearch.rerank(source, meta.idCol, meta.vecCol,
+      stage1Candidates(spark, indexDir, qvec, numReorder, nprobe, preFilter, deletes),
+      qvec, k, meta.metric, preFilter, distName, tieBreak)
   }
 }

@@ -194,8 +194,26 @@ object VectorSearch {
       topK(df, vecCol, q, numReorder, stage1Metric, preFilter, "__stage1_d", tieBreak)
         .drop("__stage1_d")
     // Stage 2: exact metric over the candidate set only.
-    val scored = candidates.withColumn(distName, distCol(vecCol, q, metric))
-    val dir = if (isDescending(metric)) col(distName).desc else col(distName).asc
-    scored.orderBy(dir +: tieBreak: _*).limit(k)
+    topK(candidates, vecCol, q, k, metric, None, distName, tieBreak)
   }
+
+  /** Stage 2 of every two-stage index search (IVFSQ, IVFPQ, HNSWSQ,
+    * HNSWPQ): the exact top-K of `source` restricted to the stage-1
+    * `candidates`, a one-column `idCol` frame of at most numReorder ids,
+    * broadcast into the source scan as a semi-join — the reference reads
+    * raw vectors from the part for its second stage the same way.
+    */
+  private[graft] def rerank(
+      source: DataFrame,
+      idCol: String,
+      vecCol: String,
+      candidates: DataFrame,
+      q: Seq[Float],
+      k: Int,
+      metric: String,
+      preFilter: Option[Column],
+      distName: String,
+      tieBreak: Seq[Column]): DataFrame =
+    topK(source.join(broadcast(candidates), Seq(idCol), "left_semi"), col(vecCol),
+      q, k, metric, preFilter, distName, tieBreak)
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.functions.VectorDistance
-import graft.operators.{HnswIndex, IndexArtifact, IvfIndex, ProbedPartitions}
+import graft.operators.{HnswIndex, IvfIndex, PqIndex, SqIndex}
 
 /** Catalyst rule for the reference's search-query shape.
   *
@@ -35,10 +35,10 @@ import graft.operators.{HnswIndex, IndexArtifact, IvfIndex, ProbedPartitions}
   *    `defaultNprobe` nearest lists — file-level pruning IS the index
   *    acceleration. Like the HNSW route, it runs no job during
   *    optimization: the probes rank against the cached centroids and
-  *    [[ProbedPartitions]] lists only the probed `list_id=` directories
-  *    and takes the schema from one footer. A WHERE below the sort stays
-  *    BELOW the ranking (pre-filter semantics). Approximate when nprobe <
-  *    nLists, like the reference's index path.
+  *    [[IvfIndex.probedLists]] lists only the probed `list_id=`
+  *    directories and takes the schema from one footer. A WHERE below the
+  *    sort stays BELOW the ranking (pre-filter semantics). Approximate when
+  *    nprobe < nLists, like the reference's index path.
   *  - With a BUILT **HNSWFLAT** index, the scan is replaced by a
   *    semi-join of the relation against the graph search's (id, d)
   *    candidates — the graph search itself is the shuffle-free per-part
@@ -209,14 +209,11 @@ case class TopKSearchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // MSTG is the validated-DDL stand-in over the IVF backend (SURVEY
       // §2.1) — identical probed-lists plan
       case "IVFFLAT" | "MSTG" =>
-        val centroids = IndexArtifact.Centroids.load(spark,
-          IvfIndex.artifact(entry.indexDir))
-        val probes = IvfIndex.nearestLists(centroids, entry.metric,
-          qArray.toFloatArray(), entry.defaultNprobe)
+        val probes = IvfIndex.probeSet(spark, entry.indexDir,
+          qArray.toFloatArray().toSeq, entry.defaultNprobe, Some(entry.metric))
         logInfo(s"TopKSearchRewrite: ORDER BY ${vd.prettyName} LIMIT $k over $path " +
-          s"→ IVF index ${entry.name} (nprobe=${entry.defaultNprobe}/${centroids.length})")
-        ProbedPartitions.read(spark, s"${entry.indexDir}/lists", "list_id", probes)
-          .queryExecution.analyzed
+          s"→ IVF index ${entry.name} (nprobe=${entry.defaultNprobe})")
+        IvfIndex.probedLists(spark, entry.indexDir, probes).queryExecution.analyzed
       case sq @ ("IVFSQ" | "IVFPQ")
           if !filterReferencesVector(filterCond, vecAttr) =>
         val qvec = qArray.toFloatArray()
@@ -229,15 +226,10 @@ case class TopKSearchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // (`MergeTreeSelectWithHybridSearchProcessor.h:117-129`).
         val numReorder = math.max(4 * k, 64)
         val listsFilter = filterCond.map(byNameColumn)
-        val cand =
-          (if (sq == "IVFSQ")
-            graft.operators.SqIndex.stage1Candidates(
-              spark, entry.indexDir, qvec.toSeq, numReorder,
-              entry.defaultNprobe, listsFilter)
-          else
-            graft.operators.PqIndex.stage1Candidates(
-              spark, entry.indexDir, qvec.toSeq, numReorder,
-              entry.defaultNprobe, listsFilter))
+        val stage1 =
+          if (sq == "IVFSQ") SqIndex.stage1Candidates _ else PqIndex.stage1Candidates _
+        val cand = stage1(spark, entry.indexDir, qvec.toSeq, numReorder,
+          entry.defaultNprobe, listsFilter, None)
         logInfo(s"TopKSearchRewrite: ORDER BY ${vd.prettyName} LIMIT $k over $path " +
           s"→ $sq index ${entry.name} (numReorder=$numReorder, " +
           s"filtered=${filterCond.nonEmpty})")

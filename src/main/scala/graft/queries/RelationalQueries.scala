@@ -1458,17 +1458,12 @@ object RelationalQueries {
   )
 
   /** One lineitem projection per sf dir (ALTER ADD PROJECTION analog). */
-  private val projDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def projDir(s: SparkSession, dir: String): String =
-    projDirs.getOrElseUpdate(dir, {
-      val pd = java.nio.file.Files.createTempDirectory("graft-proj").toString
-      graft.operators.Projections.build(s, t(s, dir, "lineitem"),
-        s"proj_lineitem_${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
-        s"file:$dir/lineitem.parquet", pd,
-        groupCols = Seq("l_returnflag", "l_linestatus"),
-        sumCols = Seq("l_quantity"))
-      pd
-    })
+    IndexFixtures.dir("graft-proj", dir)(pd => graft.operators.Projections.build(s,
+      t(s, dir, "lineitem"), IndexFixtures.name("proj_lineitem", dir),
+      s"file:$dir/lineitem.parquet", pd,
+      groupCols = Seq("l_returnflag", "l_linestatus"),
+      sumCols = Seq("l_quantity")))
 
   val oracles: Map[String, String] = Map(
     "q46_projection_agg" -> """

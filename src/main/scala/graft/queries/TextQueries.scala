@@ -61,48 +61,30 @@ object TextQueries {
       ORDER BY bm25_score DESC, doc_id"""
   }
 
-  /** One FTS index per sf dir, built lazily and reused across queries
-    * (the reference builds the Tantivy index once per part, not per
-    * query).
-    */
-  private val ftsDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def ftsDir(s: SparkSession, dir: String): String =
-    ftsDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-fts").toString
-      FtsIndex.build(s, t(s, dir, "documents"), "doc_id", "text",
-        s"fts_documents_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        nBuckets = 64, sourcePath = s"$dir/documents.parquet")
-      idx
-    })
+    IndexFixtures.dir("graft-fts", dir)(idx => FtsIndex.build(s,
+      t(s, dir, "documents"), "doc_id", "text", IndexFixtures.name("fts_documents", dir),
+      idx, nBuckets = 64, sourcePath = s"$dir/documents.parquet"))
 
   /** FTS index over the HYBRID corpus (documents ⋈ embeddings) — BM25
     * stats must be computed over the same joined rows as the direct path
     * (cardinalities can differ between the two tables).
     */
-  private val hybFtsDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def hybFtsDir(s: SparkSession, dir: String): String =
-    hybFtsDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-fts-hyb").toString
+    IndexFixtures.dir("graft-fts-hyb", dir) { idx =>
       val joined = t(s, dir, "documents")
         .join(t(s, dir, "embeddings"), col("doc_id") === col("vec_id"))
-      FtsIndex.build(s, joined, "doc_id", "text",
-        s"fts_hybrid_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        nBuckets = 64, sourcePath = s"$dir/documents+embeddings")
-      idx
-    })
+      FtsIndex.build(s, joined, "doc_id", "text", IndexFixtures.name("fts_hybrid", dir),
+        idx, nBuckets = 64, sourcePath = s"$dir/documents+embeddings")
+    }
 
   /** Cosine IVF index over the embeddings table for the fully-indexed
     * hybrid path (dense_nprobe leg).
     */
-  private val hybIvfDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def hybIvfDir(s: SparkSession, dir: String): String =
-    hybIvfDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-ivf-hyb").toString
-      graft.operators.IvfIndex.build(s, t(s, dir, "embeddings"), "embedding",
-        s"ivf_hybrid_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        "cosine", 16)
-      idx
-    })
+    IndexFixtures.dir("graft-ivf-hyb", dir)(idx => graft.operators.IvfIndex.build(s,
+      t(s, dir, "embeddings"), "embedding", IndexFixtures.name("ivf_hybrid", dir), idx,
+      "cosine", 16))
 
   val queries: Map[String, Q] = Map(
     // Fully index-backed hybrid: dense leg probes the cosine IVF index

@@ -31,135 +31,66 @@ object VectorQueries {
 
   private def emb(s: SparkSession, dir: String): DataFrame = t(s, dir, "embeddings")
 
-  /** Replay-oracle side channel for the deterministic approximate modes
-    * (v09 nprobe-IVF, v14 IVFSQ, v15 BinaryIVF, v16 IVFPQ — and since
-    * round 16 the HNSW ef-limited modes v11/v17/v18/v19/v26/v31 via the
-    * candidate-pool export): given the
-    * Spark-trained index artifacts, the search decision is a FIXED set —
-    * the per-row list assignment plus the probe set (IVF), the stage-1
-    * candidate ids (SQ/PQ re-rank), or the pre-truncation ef-beam
-    * (HNSW) — so the query fn exports that set as
-    * literal VALUES and DuckDB recomputes the restricted top-K with its
-    * own exact kernels. Captured when the query runs; [[oracles]] merges
-    * the snapshot (Verify runs every query BEFORE dumping
-    * oracle_sql.json). If a query never ran in this JVM its entry is
-    * absent → the driver falls back to the rows-only check.
-    *
-    * GATED on the `graft.replay.dir` system property, which only
-    * [[graft.Verify]] sets (to its single sfDir): Bench's timed runs pay
-    * ZERO export cost (the r15 run-1 numbers for v09/v14/v15/v16 included
-    * the one-off export jobs), and a JVM that runs the query fns against
-    * several dirs (specs at sf0.001 + anything else) can never overwrite
-    * one dir's VALUES with another's — only the dir Verify is dumping
-    * captures at all.
-    */
-  private[graft] val ReplayDirProp = "graft.replay.dir"
-  private val replayOracles =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val replayMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private def captureReplay(name: String, dir: String)(mk: => String): Unit =
-    if (sys.props.get(ReplayDirProp).contains(dir))
-      replayOracles.put(name, replayMemo.getOrElseUpdate((name, dir), mk))
-
-  /** One IVF index per sf dir, built lazily and reused across queries
-    * (the reference builds indexes once per part, not per query).
-    */
-  private val ivfDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val hnswDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def hnswDir(s: SparkSession, dir: String): String =
-    hnswDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-hnsw").toString
-      HnswIndex.build(s, emb(s, dir), "vec_id", "embedding",
-        s"hnsw_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        "l2", m = 12, efConstruction = 80, numPartitions = Some(4))
-      idx
-    })
   private def ivfDir(s: SparkSession, dir: String): String =
-    ivfDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-      IvfIndex.build(s, emb(s, dir), "embedding",
-        s"ivf_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx, "l2", 16)
-      idx
-    })
-  private val ivfCosDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+    IndexFixtures.dir("graft-ivf", dir)(idx => IvfIndex.build(s, emb(s, dir),
+      "embedding", IndexFixtures.name("ivf_embeddings", dir), idx, "l2", 16))
+  private def hnswDir(s: SparkSession, dir: String): String =
+    IndexFixtures.dir("graft-hnsw", dir)(idx => HnswIndex.build(s, emb(s, dir),
+      "vec_id", "embedding", IndexFixtures.name("hnsw_embeddings", dir), idx,
+      "l2", m = 12, efConstruction = 80, numPartitions = Some(4)))
   private def ivfCosDir(s: SparkSession, dir: String): String =
-    ivfCosDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-ivf-cos").toString
-      IvfIndex.build(s, emb(s, dir), "embedding",
-        s"ivfcos_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        "cosine", 16)
-      idx
-    })
-  private val sqDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+    IndexFixtures.dir("graft-ivf-cos", dir)(idx => IvfIndex.build(s, emb(s, dir),
+      "embedding", IndexFixtures.name("ivfcos_embeddings", dir), idx, "cosine", 16))
   private def sqDir(s: SparkSession, dir: String): String =
-    sqDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-ivfsq").toString
-      SqIndex.build(s, emb(s, dir), "vec_id", "embedding",
-        s"ivfsq_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx, "l2", 16)
-      idx
-    })
-  private val hnswSqDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+    IndexFixtures.dir("graft-ivfsq", dir)(idx => SqIndex.build(s, emb(s, dir),
+      "vec_id", "embedding", IndexFixtures.name("ivfsq_embeddings", dir), idx, "l2", 16))
   private def hnswSqDir(s: SparkSession, dir: String): String =
-    hnswSqDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-hnswsq").toString
-      HnswIndex.build(s, emb(s, dir), "vec_id", "embedding",
-        s"hnswsq_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        "l2", m = 12, efConstruction = 80, numPartitions = Some(4),
-        quantize = true)
-      idx
-    })
-  private val hnswPqDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+    IndexFixtures.dir("graft-hnswsq", dir)(idx => HnswIndex.build(s, emb(s, dir),
+      "vec_id", "embedding", IndexFixtures.name("hnswsq_embeddings", dir), idx,
+      "l2", m = 12, efConstruction = 80, numPartitions = Some(4), quantize = true))
   private def hnswPqDir(s: SparkSession, dir: String): String =
-    hnswPqDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-hnswpq").toString
-      HnswIndex.build(s, emb(s, dir), "vec_id", "embedding",
-        s"hnswpq_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        "l2", m = 12, efConstruction = 80, numPartitions = Some(4),
-        pqSubspaces = 8)
-      idx
-    })
-  private val pqDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+    IndexFixtures.dir("graft-hnswpq", dir)(idx => HnswIndex.build(s, emb(s, dir),
+      "vec_id", "embedding", IndexFixtures.name("hnswpq_embeddings", dir), idx,
+      "l2", m = 12, efConstruction = 80, numPartitions = Some(4), pqSubspaces = 8))
   private def pqDir(s: SparkSession, dir: String): String =
-    pqDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-      PqIndex.build(s, emb(s, dir), "vec_id", "embedding",
-        s"ivfpq_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx, "l2",
-        nLists = 16, m = 8)
-      idx
-    })
-  private val mstgDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+    IndexFixtures.dir("graft-ivfpq", dir)(idx => PqIndex.build(s, emb(s, dir),
+      "vec_id", "embedding", IndexFixtures.name("ivfpq_embeddings", dir), idx, "l2",
+      nLists = 16, m = 8))
   private def mstgDir(s: SparkSession, dir: String): String =
-    mstgDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-mstg").toString
-      graft.operators.MstgIndex.build(s, emb(s, dir), "embedding",
-        s"mstg_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        params = Seq("disk_mode=1", "metric_type=L2"), nLists = 16)
-      idx
-    })
-  private val bivfDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+    IndexFixtures.dir("graft-mstg", dir)(idx => graft.operators.MstgIndex.build(s,
+      emb(s, dir), "embedding", IndexFixtures.name("mstg_embeddings", dir), idx,
+      params = Seq("disk_mode=1", "metric_type=L2"), nLists = 16))
   /** Binary corpus: deterministic 16-byte vectors from document text
     * (same derivation as v10, so the two stay comparable).
     */
   private def bvecs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(col("doc_id"), unhex(md5(col("text"))).as("bvec"))
-  private val bhnswDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def bhnswDir(s: SparkSession, dir: String): String =
-    bhnswDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-bhnsw").toString
-      BinaryHnswIndex.build(s, bvecs(s, dir), "doc_id", "bvec",
-        s"bhnsw_documents_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx,
-        m = 12, efConstruction = 80, numPartitions = Some(4))
-      idx
-    })
+    IndexFixtures.dir("graft-bhnsw", dir)(idx => BinaryHnswIndex.build(s,
+      bvecs(s, dir), "doc_id", "bvec", IndexFixtures.name("bhnsw_documents", dir), idx,
+      m = 12, efConstruction = 80, numPartitions = Some(4)))
   private def bivfDir(s: SparkSession, dir: String): String =
-    bivfDirs.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft-bivf").toString
-      BinaryIvfIndex.build(s, bvecs(s, dir), "doc_id", "bvec",
-        s"bivf_documents_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", idx, nLists = 16)
-      idx
-    })
+    IndexFixtures.dir("graft-bivf", dir)(idx => BinaryIvfIndex.build(s,
+      bvecs(s, dir), "doc_id", "bvec", IndexFixtures.name("bivf_documents", dir), idx,
+      nLists = 16))
+  /** Row doc_id = 0's binary code: the query of the binary index paths. */
+  private def bquery(s: SparkSession, dir: String): Array[Byte] =
+    bvecs(s, dir).filter(col("doc_id") === 0).select("bvec").head().getAs[Array[Byte]](0)
+
+  /** v26's filtered HNSW candidates over `e`: the accept set `label = 3`
+    * is a lazy id frame, aggregated at execution time.
+    */
+  private def prefilterHnswCands(s: SparkSession, dir: String, e: DataFrame): DataFrame = {
+    val idx = hnswDir(s, dir)
+    val nRows = IvfIndex.Catalog.lookup(IndexFixtures.name("hnsw_embeddings", dir))
+      .map(_.nRows).getOrElse(0L)
+    HnswIndex.searchWithAcceptDf(s, idx, queryVec(s, dir), 10,
+        efCap = 4096, metric = "l2",
+        acceptDf = e.filter(col("label") === 3).select(col("vec_id").cast("long").as("id")),
+        maxIds = 2 << 20, nRowsTotal = nRows)
+      .select(col("id").as("vec_id"))
+  }
 
   val queries: Map[String, Q] = Map(
     // `SELECT id, distance(v, q) AS d ... ORDER BY d LIMIT k` — L2.
@@ -233,25 +164,7 @@ object VectorQueries {
     // nprobe-restricted top-K (recall additionally measured in ScalaTest
     // and gated by v33).
     "v09_ivf_nprobe" -> ((s, dir) => {
-      val idx = ivfDir(s, dir)
-      val q = queryVec(s, dir)
-      captureReplay("v09_ivf_nprobe", dir) {
-        val assigns = s.read.parquet(s"$idx/lists").select("vec_id", "list_id")
-          .collect().map(r => (r.getLong(0), r.get(1).toString.toInt))
-          .sortBy(_._1)
-        val probes = IvfIndex.probeSet(s, idx, q, nprobe = 4)
-        s"""WITH assign(vec_id, list_id) AS (VALUES ${
-            assigns.map { case (v, l) => s"($v,$l)" }.mkString(",")}),
-          cand AS (SELECT vec_id FROM assign
-                   WHERE list_id IN (${probes.mkString(",")}))
-          SELECT * FROM (
-            SELECT e.vec_id,
-                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
-            FROM embeddings e JOIN cand USING (vec_id)
-            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
-          ORDER BY vec_id"""
-      }
-      IvfIndex.search(s, idx, q, 10,
+      IvfIndex.search(s, ivfDir(s, dir), queryVec(s, dir), 10,
           nprobe = 4, None, None, "d", Seq(col("vec_id")))
         .select(col("vec_id"), (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
         .orderBy(col("vec_id"))
@@ -295,20 +208,7 @@ object VectorQueries {
     // pinning kernel/rounding/tie-break parity; graph-traversal quality
     // itself stays covered by the v33 recall gates + HnswIndexSpec.
     "v11_hnsw_search" -> ((s, dir) => {
-      val idx = hnswDir(s, dir)
-      val q = queryVec(s, dir)
-      captureReplay("v11_hnsw_search", dir) {
-        val pool = HnswIndex.candidatePool(s, idx, q, 10, ef = 128)
-          .select("id").collect().map(_.getLong(0)).distinct.sorted
-        s"""WITH pool(vec_id) AS (VALUES ${pool.map(i => s"($i)").mkString(",")})
-          SELECT * FROM (
-            SELECT e.vec_id,
-                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
-            FROM embeddings e JOIN pool USING (vec_id)
-            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
-          ORDER BY vec_id"""
-      }
-      HnswIndex.search(s, idx, q, 10, ef = 128)
+      HnswIndex.search(s, hnswDir(s, dir), queryVec(s, dir), 10, ef = 128)
         .select(col("id").as("vec_id"), (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
         .orderBy(col("vec_id"))
     }),
@@ -342,20 +242,7 @@ object VectorQueries {
     // whole decision) is exported as VALUES and DuckDB re-ranks it with
     // its own exact kernel — stage 2 IS exact top-K over that set.
     "v14_ivfsq" -> ((s, dir) => {
-      val idx = sqDir(s, dir)
-      val q = queryVec(s, dir)
-      captureReplay("v14_ivfsq", dir) {
-        val cands = SqIndex.stage1Candidates(s, idx, q, numReorder = 50,
-            nprobe = 16).collect().map(_.getLong(0)).sorted
-        s"""WITH cand(vec_id) AS (VALUES ${cands.map(c => s"($c)").mkString(",")})
-          SELECT * FROM (
-            SELECT e.vec_id,
-                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
-            FROM embeddings e JOIN cand USING (vec_id)
-            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
-          ORDER BY vec_id"""
-      }
-      SqIndex.search(s, idx, emb(s, dir), q, 10,
+      SqIndex.search(s, sqDir(s, dir), emb(s, dir), queryVec(s, dir), 10,
           numReorder = 50, nprobe = 16, None, "d", Seq(col("vec_id")))
         .select(col("vec_id"), (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
         .orderBy(col("vec_id"))
@@ -368,25 +255,7 @@ object VectorQueries {
     // tie-break, given the index's decision (pool + codes). Recall vs
     // exact floats stays in HnswIndexSpec + v33.
     "v17_hnswsq" -> ((s, dir) => {
-      val idx = hnswSqDir(s, dir)
-      val q = queryVec(s, dir)
-      captureReplay("v17_hnswsq", dir) {
-        val pool = HnswIndex.candidatePool(s, idx, q, 10, ef = 128)
-          .select("id", "vec").collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1)))
-          .sortBy(_._1)
-        val rows = pool.map { case (id, dq) =>
-          s"($id,[${dq.mkString(",")}])"
-        }.mkString(",")
-        s"""WITH pool(vec_id, dq) AS (VALUES $rows)
-          SELECT * FROM (
-            SELECT vec_id,
-                   round(CAST(list_distance(CAST(dq AS FLOAT[]), $qv0) AS DOUBLE), 3) + 0.0 AS d
-            FROM pool
-            ORDER BY list_distance(CAST(dq AS FLOAT[]), $qv0), vec_id LIMIT 10)
-          ORDER BY vec_id"""
-      }
-      HnswIndex.search(s, idx, q, 10, ef = 128)
+      HnswIndex.search(s, hnswSqDir(s, dir), queryVec(s, dir), 10, ef = 128)
         .select(col("id").as("vec_id"), (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
         .orderBy(col("vec_id"))
     }),
@@ -397,21 +266,8 @@ object VectorQueries {
     // pattern) are exported and DuckDB re-ranks them with its own exact
     // kernel. Recall in spec + v33.
     "v19_hnswpq" -> ((s, dir) => {
-      val idx = hnswPqDir(s, dir)
-      val q = queryVec(s, dir)
-      captureReplay("v19_hnswpq", dir) {
-        val cands = HnswIndex.stage1Candidates(s, idx, q,
-            numReorder = 60, ef = 256).collect().map(_.getLong(0)).sorted
-        s"""WITH cand(vec_id) AS (VALUES ${cands.map(c => s"($c)").mkString(",")})
-          SELECT * FROM (
-            SELECT e.vec_id,
-                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
-            FROM embeddings e JOIN cand USING (vec_id)
-            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
-          ORDER BY vec_id"""
-      }
-      HnswIndex.searchTwoStage(s, idx, emb(s, dir),
-          "vec_id", "embedding", q, 10,
+      HnswIndex.searchTwoStage(s, hnswPqDir(s, dir), emb(s, dir),
+          "vec_id", "embedding", queryVec(s, dir), 10,
           numReorder = 60, ef = 256, "l2", "d", Seq(col("vec_id")))
         .select(col("vec_id"), (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
         .orderBy(col("vec_id"))
@@ -421,20 +277,7 @@ object VectorQueries {
     // since round 15 (same stage-1-candidate export as v14); recall also
     // in PqIndexSpec + v33.
     "v16_ivfpq" -> ((s, dir) => {
-      val idx = pqDir(s, dir)
-      val q = queryVec(s, dir)
-      captureReplay("v16_ivfpq", dir) {
-        val cands = PqIndex.stage1Candidates(s, idx, q, numReorder = 50,
-            nprobe = 16).collect().map(_.getLong(0)).sorted
-        s"""WITH cand(vec_id) AS (VALUES ${cands.map(c => s"($c)").mkString(",")})
-          SELECT * FROM (
-            SELECT e.vec_id,
-                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
-            FROM embeddings e JOIN cand USING (vec_id)
-            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
-          ORDER BY vec_id"""
-      }
-      PqIndex.search(s, idx, emb(s, dir), q, 10,
+      PqIndex.search(s, pqDir(s, dir), emb(s, dir), queryVec(s, dir), 10,
           numReorder = 50, nprobe = 16, None, "d", Seq(col("vec_id")))
         .select(col("vec_id"), (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
         .orderBy(col("vec_id"))
@@ -446,31 +289,7 @@ object VectorQueries {
     // restricted Hamming top-K recomputed from md5 hex digits (the v10/
     // v22 kernel-parity trick). Recall vs brute Hamming in BinaryIvfSpec.
     "v15_binary_ivf" -> ((s, dir) => {
-      val idx = bivfDir(s, dir)
-      val q = bvecs(s, dir).filter(col("doc_id") === 0)
-        .select("bvec").head().getAs[Array[Byte]](0)
-      captureReplay("v15_binary_ivf", dir) {
-        val assigns = s.read.parquet(s"$idx/lists").select("doc_id", "list_id")
-          .collect().map(r => (r.getLong(0), r.get(1).toString.toInt))
-          .sortBy(_._1)
-        val probes = BinaryIvfIndex.probeSet(s, idx, q, nprobe = 8)
-        s"""WITH assign(doc_id, list_id) AS (VALUES ${
-            assigns.map { case (v, l) => s"($v,$l)" }.mkString(",")}),
-          cand AS (SELECT doc_id FROM assign
-                   WHERE list_id IN (${probes.mkString(",")})),
-          q AS (SELECT md5(text) AS qh FROM documents WHERE doc_id = 0),
-          h AS (SELECT doc_id, md5(text) AS h
-                FROM documents JOIN cand USING (doc_id))
-          SELECT * FROM (
-            SELECT doc_id,
-              CAST(list_sum(list_transform(range(1, 33), i ->
-                bit_count(xor(strpos('0123456789abcdef', substring(h, CAST(i AS INTEGER), 1)) - 1,
-                              strpos('0123456789abcdef', substring(qh, CAST(i AS INTEGER), 1)) - 1)))) AS DOUBLE) AS d
-            FROM h CROSS JOIN q
-            ORDER BY d, doc_id LIMIT 10)
-          ORDER BY doc_id"""
-      }
-      BinaryIvfIndex.search(s, idx, q, 10,
+      BinaryIvfIndex.search(s, bivfDir(s, dir), bquery(s, dir), 10,
           nprobe = 8, None, "d", Seq(col("doc_id")))
         .select(col("doc_id"), col("d").cast("double").as("d"))
         .orderBy(col("doc_id"))
@@ -483,27 +302,7 @@ object VectorQueries {
     // true Hamming and the pool top-K equals the merged result. Recall +
     // integer-exact distances in BinaryHnswSpec.
     "v18_binary_hnsw" -> ((s, dir) => {
-      val idx = bhnswDir(s, dir)
-      val q = bvecs(s, dir).filter(col("doc_id") === 0)
-        .select("bvec").head().getAs[Array[Byte]](0)
-      captureReplay("v18_binary_hnsw", dir) {
-        val pool = HnswIndex.candidatePool(s, idx,
-            BinaryHnswIndex.bitsToFloats(q).toSeq, 10, ef = 128)
-          .select("id").collect().map(_.getLong(0)).distinct.sorted
-        s"""WITH pool(doc_id) AS (VALUES ${pool.map(i => s"($i)").mkString(",")}),
-          q AS (SELECT md5(text) AS qh FROM documents WHERE doc_id = 0),
-          h AS (SELECT doc_id, md5(text) AS h
-                FROM documents JOIN pool USING (doc_id))
-          SELECT * FROM (
-            SELECT doc_id,
-              CAST(list_sum(list_transform(range(1, 33), i ->
-                bit_count(xor(strpos('0123456789abcdef', substring(h, CAST(i AS INTEGER), 1)) - 1,
-                              strpos('0123456789abcdef', substring(qh, CAST(i AS INTEGER), 1)) - 1)))) AS DOUBLE) AS d
-            FROM h CROSS JOIN q
-            ORDER BY d, doc_id LIMIT 10)
-          ORDER BY doc_id"""
-      }
-      BinaryHnswIndex.search(s, idx, q, 10, ef = 128)
+      BinaryHnswIndex.search(s, bhnswDir(s, dir), bquery(s, dir), 10, ef = 128)
         .select(col("id").as("doc_id"), col("d").cast("double").as("d"))
         .orderBy(col("doc_id"))
     }),
@@ -538,28 +337,8 @@ object VectorQueries {
     // each query's restricted top-5. HnswIndexSpec additionally asserts
     // batch ≡ the same graph's single-query searches exactly.
     "v31_batch_hnsw" -> ((s, dir) => {
-      val idx = hnswDir(s, dir)
       val qs = Seq(queryVec(s, dir, 0), queryVec(s, dir, 1), queryVec(s, dir, 2))
-      captureReplay("v31_batch_hnsw", dir) {
-        val rows = qs.zipWithIndex.flatMap { case (q, qi) =>
-          HnswIndex.candidatePool(s, idx, q, 5, ef = 128)
-            .select("id").collect().map(_.getLong(0)).distinct.sorted
-            .map(id => s"($qi,$id)")
-        }.mkString(",")
-        s"""WITH pool(query_idx, vec_id) AS (VALUES $rows),
-          q AS (SELECT 0 AS query_idx, $qv0 AS qv
-                UNION ALL SELECT 1, $qv1
-                UNION ALL SELECT 2, $qv2)
-          SELECT p.query_idx, p.vec_id,
-                 round(CAST(list_distance(e.embedding, q.qv) AS DOUBLE), 3) + 0.0 AS d
-          FROM pool p
-          JOIN embeddings e ON e.vec_id = p.vec_id
-          JOIN q ON q.query_idx = p.query_idx
-          QUALIFY row_number() OVER (PARTITION BY p.query_idx
-            ORDER BY list_distance(e.embedding, q.qv), p.vec_id) <= 5
-          ORDER BY p.query_idx, p.vec_id"""
-      }
-      HnswIndex.batchSearch(s, idx, qs, 5, ef = 128,
+      HnswIndex.batchSearch(s, hnswDir(s, dir), qs, 5, ef = 128,
           tieBreak = Seq(col("id")))
         .select(col("query_idx"), col("id").as("vec_id"),
           (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
@@ -601,31 +380,9 @@ object VectorQueries {
     // label predicate is repeated in the oracle for faithfulness).
     "v26_prefilter_hnsw" -> ((s, dir) => {
       val e = emb(s, dir)
-      val idxDir = hnswDir(s, dir)
-      val qv = queryVec(s, dir)
-      val acceptDf = e.filter(col("label") === 3)
-        .select(col("vec_id").cast("long").as("id"))
-      val nRows = IvfIndex.Catalog.lookup(
-          s"hnsw_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-        .map(_.nRows).getOrElse(0L)
-      val cand = HnswIndex.searchWithAcceptDf(s, idxDir, qv, 10,
-          efCap = 4096, metric = "l2", acceptDf = acceptDf,
-          maxIds = 2 << 20, nRowsTotal = nRows)
-        .select(col("id").as("vec_id"))
-      captureReplay("v26_prefilter_hnsw", dir) {
-        val pool = cand.collect().map(_.getLong(0)).distinct.sorted
-        s"""WITH pool(vec_id) AS (VALUES ${pool.map(i => s"($i)").mkString(",")})
-          SELECT * FROM (
-            SELECT e.vec_id,
-                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
-            FROM embeddings e JOIN pool USING (vec_id)
-            WHERE e.label = 3
-            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
-          ORDER BY vec_id"""
-      }
-      VectorSearch.topK(
-          e.filter(col("label") === 3).join(cand, Seq("vec_id"), "left_semi"),
-          col("embedding"), qv, 10, "l2", None, "d", Seq(col("vec_id")))
+      VectorSearch.topK(e.filter(col("label") === 3)
+          .join(prefilterHnswCands(s, dir, e), Seq("vec_id"), "left_semi"),
+          col("embedding"), queryVec(s, dir), 10, "l2", None, "d", Seq(col("vec_id")))
         .select(col("vec_id"), (round(col("d").cast("double"), 3) + lit(0.0)).as("d"))
         .orderBy(col("vec_id"))
     }),
@@ -651,9 +408,7 @@ object VectorQueries {
     // bucketing never alters them), so exhaustive probing IS exact —
     // shares v10's hex-digit-popcount oracle.
     "v22_binary_ivf_exact" -> ((s, dir) => {
-      val q = bvecs(s, dir).filter(col("doc_id") === 0)
-        .select("bvec").head().getAs[Array[Byte]](0)
-      BinaryIvfIndex.search(s, bivfDir(s, dir), q, 10,
+      BinaryIvfIndex.search(s, bivfDir(s, dir), bquery(s, dir), 10,
           nprobe = 16, None, "d", Seq(col("doc_id")))
         .select(col("doc_id"), col("d").cast("double").as("d"))
         .orderBy(col("doc_id"))
@@ -745,10 +500,8 @@ object VectorQueries {
     // graph itself, so full-ef search IS brute force — shares v22's
     // hex-digit-popcount oracle.
     "v37_binary_hnsw_exact" -> ((s, dir) => {
-      val q = bvecs(s, dir).filter(col("doc_id") === 0)
-        .select("bvec").head().getAs[Array[Byte]](0)
       val n = bvecs(s, dir).count().toInt
-      BinaryHnswIndex.search(s, bhnswDir(s, dir), q, 10, ef = n)
+      BinaryHnswIndex.search(s, bhnswDir(s, dir), bquery(s, dir), 10, ef = n)
         .select(col("id").as("doc_id"), col("d").cast("double").as("d"))
         .orderBy(col("doc_id"))
     }),
@@ -759,7 +512,7 @@ object VectorQueries {
     // a DuckDB oracle that derives the row count from the same parquet.
     "q79_vector_index_catalog" -> ((s, dir) => {
       val _ = ivfDir(s, dir) // ensure built + registered
-      val name = s"ivf_embeddings_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val name = IndexFixtures.name("ivf_embeddings", dir)
       val vi = IvfIndex.Catalog.asDataFrame(s)
         .filter(col("name") === name)
         .select(col("indexType").as("index_type"), col("metric"),
@@ -863,17 +616,189 @@ object VectorQueries {
     }.reduce(_ unionAll _).orderBy(col("kind"))
   }
 
+  /** Replay oracles for the deterministic approximate modes (v09
+    * nprobe-IVF, v14 IVFSQ, v15 BinaryIVF, v16 IVFPQ, and the HNSW
+    * ef-limited modes v11/v17/v18/v19/v26/v31 via the candidate-pool
+    * export): given the Spark-trained index artifacts, the search decision
+    * is a FIXED set — the per-row list assignment plus the probe set
+    * (IVF), the stage-1 candidate ids (SQ/PQ re-rank), or the
+    * pre-truncation ef-beam (HNSW) — so each entry exports that set as
+    * literal VALUES and DuckDB recomputes the restricted top-K with its
+    * own exact kernels. [[graft.Verify]] evaluates them against the dir it
+    * dumps, after the queries ran, and writes them into oracle_sql.json
+    * beside [[oracles]]; the query functions never export anything.
+    */
+  val replayOracles: Map[String, (SparkSession, String) => String] = Map(
+    "v09_ivf_nprobe" -> ((s, dir) => {
+      val idx = ivfDir(s, dir)
+      val q = queryVec(s, dir)
+      val assigns = s.read.parquet(s"$idx/lists").select("vec_id", "list_id")
+        .collect().map(r => (r.getLong(0), r.get(1).toString.toInt))
+        .sortBy(_._1)
+      val probes = IvfIndex.probeSet(s, idx, q, nprobe = 4)
+      s"""WITH assign(vec_id, list_id) AS (VALUES ${
+            assigns.map { case (v, l) => s"($v,$l)" }.mkString(",")}),
+          cand AS (SELECT vec_id FROM assign
+                   WHERE list_id IN (${probes.mkString(",")}))
+          SELECT * FROM (
+            SELECT e.vec_id,
+                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
+            FROM embeddings e JOIN cand USING (vec_id)
+            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
+          ORDER BY vec_id"""
+    }),
+    "v11_hnsw_search" -> ((s, dir) => {
+      val idx = hnswDir(s, dir)
+      val q = queryVec(s, dir)
+      val pool = HnswIndex.candidatePool(s, idx, q, 10, ef = 128)
+        .select("id").collect().map(_.getLong(0)).distinct.sorted
+      s"""WITH pool(vec_id) AS (VALUES ${pool.map(i => s"($i)").mkString(",")})
+          SELECT * FROM (
+            SELECT e.vec_id,
+                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
+            FROM embeddings e JOIN pool USING (vec_id)
+            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
+          ORDER BY vec_id"""
+    }),
+    "v14_ivfsq" -> ((s, dir) => {
+      val idx = sqDir(s, dir)
+      val q = queryVec(s, dir)
+      val cands = SqIndex.stage1Candidates(s, idx, q, numReorder = 50,
+          nprobe = 16).collect().map(_.getLong(0)).sorted
+      s"""WITH cand(vec_id) AS (VALUES ${cands.map(c => s"($c)").mkString(",")})
+          SELECT * FROM (
+            SELECT e.vec_id,
+                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
+            FROM embeddings e JOIN cand USING (vec_id)
+            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
+          ORDER BY vec_id"""
+    }),
+    "v15_binary_ivf" -> ((s, dir) => {
+      val idx = bivfDir(s, dir)
+      val q = bquery(s, dir)
+      val assigns = s.read.parquet(s"$idx/lists").select("doc_id", "list_id")
+        .collect().map(r => (r.getLong(0), r.get(1).toString.toInt))
+        .sortBy(_._1)
+      val probes = BinaryIvfIndex.probeSet(s, idx, q, nprobe = 8)
+      s"""WITH assign(doc_id, list_id) AS (VALUES ${
+            assigns.map { case (v, l) => s"($v,$l)" }.mkString(",")}),
+          cand AS (SELECT doc_id FROM assign
+                   WHERE list_id IN (${probes.mkString(",")})),
+          q AS (SELECT md5(text) AS qh FROM documents WHERE doc_id = 0),
+          h AS (SELECT doc_id, md5(text) AS h
+                FROM documents JOIN cand USING (doc_id))
+          SELECT * FROM (
+            SELECT doc_id,
+              CAST(list_sum(list_transform(range(1, 33), i ->
+                bit_count(xor(strpos('0123456789abcdef', substring(h, CAST(i AS INTEGER), 1)) - 1,
+                              strpos('0123456789abcdef', substring(qh, CAST(i AS INTEGER), 1)) - 1)))) AS DOUBLE) AS d
+            FROM h CROSS JOIN q
+            ORDER BY d, doc_id LIMIT 10)
+          ORDER BY doc_id"""
+    }),
+    "v16_ivfpq" -> ((s, dir) => {
+      val idx = pqDir(s, dir)
+      val q = queryVec(s, dir)
+      val cands = PqIndex.stage1Candidates(s, idx, q, numReorder = 50,
+          nprobe = 16).collect().map(_.getLong(0)).sorted
+      s"""WITH cand(vec_id) AS (VALUES ${cands.map(c => s"($c)").mkString(",")})
+          SELECT * FROM (
+            SELECT e.vec_id,
+                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
+            FROM embeddings e JOIN cand USING (vec_id)
+            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
+          ORDER BY vec_id"""
+    }),
+    "v17_hnswsq" -> ((s, dir) => {
+      val idx = hnswSqDir(s, dir)
+      val q = queryVec(s, dir)
+      val pool = HnswIndex.candidatePool(s, idx, q, 10, ef = 128)
+        .select("id", "vec").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1)))
+        .sortBy(_._1)
+      val rows = pool.map { case (id, dq) =>
+        s"($id,[${dq.mkString(",")}])"
+      }.mkString(",")
+      s"""WITH pool(vec_id, dq) AS (VALUES $rows)
+          SELECT * FROM (
+            SELECT vec_id,
+                   round(CAST(list_distance(CAST(dq AS FLOAT[]), $qv0) AS DOUBLE), 3) + 0.0 AS d
+            FROM pool
+            ORDER BY list_distance(CAST(dq AS FLOAT[]), $qv0), vec_id LIMIT 10)
+          ORDER BY vec_id"""
+    }),
+    "v18_binary_hnsw" -> ((s, dir) => {
+      val idx = bhnswDir(s, dir)
+      val q = bquery(s, dir)
+      val pool = HnswIndex.candidatePool(s, idx,
+          BinaryHnswIndex.bitsToFloats(q).toSeq, 10, ef = 128)
+        .select("id").collect().map(_.getLong(0)).distinct.sorted
+      s"""WITH pool(doc_id) AS (VALUES ${pool.map(i => s"($i)").mkString(",")}),
+          q AS (SELECT md5(text) AS qh FROM documents WHERE doc_id = 0),
+          h AS (SELECT doc_id, md5(text) AS h
+                FROM documents JOIN pool USING (doc_id))
+          SELECT * FROM (
+            SELECT doc_id,
+              CAST(list_sum(list_transform(range(1, 33), i ->
+                bit_count(xor(strpos('0123456789abcdef', substring(h, CAST(i AS INTEGER), 1)) - 1,
+                              strpos('0123456789abcdef', substring(qh, CAST(i AS INTEGER), 1)) - 1)))) AS DOUBLE) AS d
+            FROM h CROSS JOIN q
+            ORDER BY d, doc_id LIMIT 10)
+          ORDER BY doc_id"""
+    }),
+    "v19_hnswpq" -> ((s, dir) => {
+      val idx = hnswPqDir(s, dir)
+      val q = queryVec(s, dir)
+      val cands = HnswIndex.stage1Candidates(s, idx, q,
+          numReorder = 60, ef = 256).collect().map(_.getLong(0)).sorted
+      s"""WITH cand(vec_id) AS (VALUES ${cands.map(c => s"($c)").mkString(",")})
+          SELECT * FROM (
+            SELECT e.vec_id,
+                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
+            FROM embeddings e JOIN cand USING (vec_id)
+            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
+          ORDER BY vec_id"""
+    }),
+    "v26_prefilter_hnsw" -> ((s, dir) => {
+      val cand = prefilterHnswCands(s, dir, emb(s, dir))
+      val pool = cand.collect().map(_.getLong(0)).distinct.sorted
+      s"""WITH pool(vec_id) AS (VALUES ${pool.map(i => s"($i)").mkString(",")})
+          SELECT * FROM (
+            SELECT e.vec_id,
+                   round(CAST(list_distance(e.embedding, $qv0) AS DOUBLE), 3) + 0.0 AS d
+            FROM embeddings e JOIN pool USING (vec_id)
+            WHERE e.label = 3
+            ORDER BY list_distance(e.embedding, $qv0), e.vec_id LIMIT 10)
+          ORDER BY vec_id"""
+    }),
+    "v31_batch_hnsw" -> ((s, dir) => {
+      val idx = hnswDir(s, dir)
+      val qs = Seq(queryVec(s, dir, 0), queryVec(s, dir, 1), queryVec(s, dir, 2))
+      val rows = qs.zipWithIndex.flatMap { case (q, qi) =>
+        HnswIndex.candidatePool(s, idx, q, 5, ef = 128)
+          .select("id").collect().map(_.getLong(0)).distinct.sorted
+          .map(id => s"($qi,$id)")
+      }.mkString(",")
+      s"""WITH pool(query_idx, vec_id) AS (VALUES $rows),
+          q AS (SELECT 0 AS query_idx, $qv0 AS qv
+                UNION ALL SELECT 1, $qv1
+                UNION ALL SELECT 2, $qv2)
+          SELECT p.query_idx, p.vec_id,
+                 round(CAST(list_distance(e.embedding, q.qv) AS DOUBLE), 3) + 0.0 AS d
+          FROM pool p
+          JOIN embeddings e ON e.vec_id = p.vec_id
+          JOIN q ON q.query_idx = p.query_idx
+          QUALIFY row_number() OVER (PARTITION BY p.query_idx
+            ORDER BY list_distance(e.embedding, q.qv), p.vec_id) <= 5
+          ORDER BY p.query_idx, p.vec_id"""
+    }),
+  )
+
   private val qv0 = "(SELECT embedding FROM embeddings WHERE vec_id = 0)"
   private val qv1 = "(SELECT embedding FROM embeddings WHERE vec_id = 1)"
   private val qv2 = "(SELECT embedding FROM embeddings WHERE vec_id = 2)"
 
-  /** Static oracles plus the [[replayOracles]] snapshot — a `def` so the
-    * merge happens when Verify dumps oracle_sql.json, AFTER the query fns
-    * ran and captured their replay sets.
-    */
-  def oracles: Map[String, String] = staticOracles ++ replayOracles
-
-  private val staticOracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = Map(
     // v33: the gate booleans and result counts are pinned — any index
     // path whose recall collapses flips recall_ok and hash-fails.
     "v33_recall_gates" -> recallMinHits.keys.toSeq.sorted

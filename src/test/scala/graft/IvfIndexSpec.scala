@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.{IvfIndex, VectorSearch}
+import graft.operators.{IvfIndex, PqIndex, SqIndex, VectorSearch}
 
 class IvfIndexSpec extends SparkSpec {
 
@@ -184,16 +185,35 @@ class IvfIndexSpec extends SparkSpec {
     assert(hits.select("vec_id").collect().map(_.getLong(0)).toSeq === bruteIds(10))
   }
 
-  test("two-stage IVF search recall >= plain nprobe search") {
-    val brute = bruteIds(10).toSet
-    val plain = IvfIndex.search(spark, indexDir, qv, 10, nprobe = 2,
-        None, None, "d", Seq(col("vec_id")))
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val twoStage = IvfIndex.searchTwoStage(spark, indexDir, qv, 10,
-        numReorder = 40, nprobe = 2, None, None, "d", Seq(col("vec_id")))
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert((twoStage & brute).size >= (plain & brute).size)
-    assert(twoStage.size === 10)
+  test("IVFSQ/IVFPQ: search keeps the stage-1 candidates on tied codes") {
+    import spark.implicits._
+    // 20 identical vectors (ids 0-19) tie on every quantized code and on
+    // the exact distance; distant noise fills the rest of the lists
+    val dup = Seq.fill(8)(1f)
+    val rnd = new scala.util.Random(7)
+    val df = ((0L until 20L).map(i => (i, dup)) ++
+      (20L until 80L).map(i => (i, Seq.fill(8)(50f + 50f * rnd.nextFloat()))))
+      .toDF("vec_id", "embedding")
+    val tie = Seq(col("vec_id").desc) // the caller's order disagrees with the id
+    // family -> (build, search, stage1Candidates), all at nprobe = nLists
+    val families: Seq[(String, String => Any, String => DataFrame, String => DataFrame)] = Seq(
+      ("tie_sq",
+        dir => SqIndex.build(spark, df, "vec_id", "embedding", "tie_sq", dir, nLists = 4),
+        dir => SqIndex.search(spark, dir, df, dup, 5, numReorder = 5, nprobe = 4, tieBreak = tie),
+        dir => SqIndex.stage1Candidates(spark, dir, dup, numReorder = 5, nprobe = 4)),
+      ("tie_pq",
+        dir => PqIndex.build(spark, df, "vec_id", "embedding", "tie_pq", dir, nLists = 4, m = 4),
+        dir => PqIndex.search(spark, dir, df, dup, 5, numReorder = 5, nprobe = 4, tieBreak = tie),
+        dir => PqIndex.stage1Candidates(spark, dir, dup, numReorder = 5, nprobe = 4)))
+    def ids(d: DataFrame): Set[Long] = d.select("vec_id").collect().map(_.getLong(0)).toSet
+    families.foreach { case (name, build, search, stage1) =>
+      val dir = Files.createTempDirectory(name).toString
+      try {
+        build(dir)
+        assert(ids(stage1(dir)) === (0L until 5L).toSet, name)
+        assert(ids(search(dir)) === ids(stage1(dir)), name)
+      } finally IvfIndex.Catalog.drop(name)
+    }
   }
 
   test("batchSearch: exhaustive probes equal brute batch; nprobe recalls") {

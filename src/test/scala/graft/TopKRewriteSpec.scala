@@ -120,37 +120,46 @@ class TopKRewriteSpec extends SparkSpec {
     } finally IvfIndex.Catalog.drop("auto_hnswsq")
   }
 
-  test("IVFSQ index routes through quantized stage-1 + exact re-rank") {
-    val dir = Files.createTempDirectory("sq-auto").toString
-    val srcPath = "file:" + sfDir + "/embeddings.parquet"
-    try {
-      graft.operators.SqIndex.build(spark, emb, "vec_id", "embedding",
-        "auto_sq", dir, "l2", nLists = 8, sourcePath = srcPath,
-        defaultNprobe = 8)
-      val df = topkDf(10)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Join"), s"expected candidate semi-join in:\n$plan")
-      val got = df.collect().map(_.getLong(0)).toSet
-      val brute = VectorSearch.topK(emb, col("embedding"), qv, 10, "l2",
-          None, "d", Seq(col("vec_id")))
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      assert((got & brute).size >= 9, s"recall: ${(got & brute).size}/10")
-      // filtered query routes with the WHERE pushed into stage 1
-      // (pre-filter semantics: candidates qualify before the reorder cut)
-      val filtered = emb.filter(col("label") === 2)
-        .select(col("vec_id"), col("label"),
-          distances.l2Distance(col("embedding"), typedLit(qv)).as("d"))
-        .orderBy(col("d")).limit(5)
-      assert(filtered.queryExecution.executedPlan.toString.contains("Join"),
-        "filtered IVFSQ query fell back to brute force")
-      val fRows = filtered.collect()
-      assert(fRows.forall(_.getInt(1) === 2))
-      val fBrute = VectorSearch.topK(emb, col("embedding"), qv, 5, "l2",
-          Some(col("label") === 2), "d", Seq(col("vec_id")))
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      assert((fRows.map(_.getLong(0)).toSet & fBrute).size >= 4,
-        s"filtered recall: ${(fRows.map(_.getLong(0)).toSet & fBrute).size}/5")
-    } finally IvfIndex.Catalog.drop("auto_sq")
+  // family -> its build into (name, dir, source path)
+  Seq[(String, (String, String, String) => Any)](
+    "IVFSQ" -> ((name, dir, srcPath) => graft.operators.SqIndex.build(spark, emb,
+      "vec_id", "embedding", name, dir, "l2", nLists = 8, sourcePath = srcPath,
+      defaultNprobe = 8)),
+    "IVFPQ" -> ((name, dir, srcPath) => graft.operators.PqIndex.build(spark, emb,
+      "vec_id", "embedding", name, dir, "l2", nLists = 8, sourcePath = srcPath,
+      defaultNprobe = 8))
+  ).foreach { case (family, build) =>
+    test(s"$family index routes through quantized stage-1 + exact re-rank") {
+      val name = s"auto_${family.toLowerCase}"
+      val dir = Files.createTempDirectory(name).toString
+      val srcPath = "file:" + sfDir + "/embeddings.parquet"
+      try {
+        build(name, dir, srcPath)
+        val df = topkDf(10)
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("Join"), s"expected candidate semi-join in:\n$plan")
+        val got = df.collect().map(_.getLong(0)).toSet
+        val brute = VectorSearch.topK(emb, col("embedding"), qv, 10, "l2",
+            None, "d", Seq(col("vec_id")))
+          .select("vec_id").collect().map(_.getLong(0)).toSet
+        assert((got & brute).size >= 9, s"recall: ${(got & brute).size}/10")
+        // filtered query routes with the WHERE pushed into stage 1
+        // (pre-filter semantics: candidates qualify before the reorder cut)
+        val filtered = emb.filter(col("label") === 2)
+          .select(col("vec_id"), col("label"),
+            distances.l2Distance(col("embedding"), typedLit(qv)).as("d"))
+          .orderBy(col("d")).limit(5)
+        assert(filtered.queryExecution.executedPlan.toString.contains("Join"),
+          s"filtered $family query fell back to brute force")
+        val fRows = filtered.collect()
+        assert(fRows.forall(_.getInt(1) === 2))
+        val fBrute = VectorSearch.topK(emb, col("embedding"), qv, 5, "l2",
+            Some(col("label") === 2), "d", Seq(col("vec_id")))
+          .select("vec_id").collect().map(_.getLong(0)).toSet
+        assert((fRows.map(_.getLong(0)).toSet & fBrute).size >= 4,
+          s"filtered recall: ${(fRows.map(_.getLong(0)).toSet & fBrute).size}/5")
+      } finally IvfIndex.Catalog.drop(name)
+    }
   }
 
   test("selective filter routes and resolves exactly via exact-over-bitmap") {
