@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * Realization: each bit expands to a 0/1 float, because squared L2 over
   * 0/1 vectors IS the Hamming distance — so the whole [[HnswIndex]]
   * machinery (per-part graphs, shuffle-free search, per-JVM cache) is
-  * reused verbatim with `metric=l2`. Graphs are built with
+  * reused verbatim with `metric=l2`: [[search]] is [[HnswIndex.search]]
+  * on the expanded query, and the replay oracle reads the same index
+  * through [[HnswIndex.candidatePool]]. Graphs are built with
   * `quantize=true`, so the persisted rows store 1 byte per BIT (the SQ
   * codes of the 0/1 floats); reported distances are converted back to
   * integer Hamming by squaring.
@@ -59,10 +61,8 @@ object BinaryHnswIndex {
       indexDir: String,
       qvec: Array[Byte],
       k: Int,
-      ef: Int = 64,
-      accept: Option[Long => Boolean] = None): DataFrame = {
-    HnswIndex.search(spark, indexDir, bitsToFloats(qvec).toSeq, k, ef,
-        "l2", accept)
+      ef: Int = 64): DataFrame = {
+    HnswIndex.search(spark, indexDir, bitsToFloats(qvec).toSeq, k, ef, "l2")
       // L2 = sqrt(ΣΔ²) over 0/1 dims ⇒ d² is the bit-difference count
       .withColumn("d", round(col("d") * col("d")).cast("float"))
       .orderBy(col("d"), col("id"))

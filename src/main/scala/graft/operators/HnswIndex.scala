@@ -27,8 +27,14 @@ import graft.functions.VectorKernels
   *  - **Search**: each `part_id=` directory is its own single-task scan
   *    (`coalesce(1)`, no Exchange); the task takes the part's graph from
   *    the per-JVM cache (the `VICacheManager` analog) or loads it, runs
-  *    the graph search and emits its local top-k; the global merge is the
-  *    same `TakeOrderedAndProject` every other top-K uses.
+  *    one beam per query ([[Graph]]: descend the layers, one ef-beam on
+  *    layer 0, sorted by `(d, id)`) and emits its local top-k; the parts
+  *    too small to index are brute-forced from `smallparts/`. Every search
+  *    — [[search]], [[candidatePool]], [[batchSearch]],
+  *    [[searchWithAcceptDf]] — unions that graph leg and that small-part
+  *    leg and differs only in what a part emits and how the union is cut;
+  *    the global merge is the same `TakeOrderedAndProject` every other
+  *    top-K uses.
   *  - **Layout** under `indexDir`: `graph/part_id=N/` graph rows,
   *    `smallparts/` raw vectors of parts under the min-rows gate,
   *    `sq_params/` (HNSWSQ) or `codebooks/` (HNSWPQ), and `meta.json`, the
@@ -45,6 +51,50 @@ object HnswIndex {
   case class GraphRow(part_id: Int, node_idx: Int, id: Long,
       vec: Array[Float], neighbors: Seq[Seq[Int]])
 
+  /** The graph distance: 1 − cosine similarity, or squared L2 (rank-
+    * equivalent to L2, so the beam never pays for a sqrt).
+    */
+  private def dist(cosine: Boolean, a: Array[Float], b: Array[Float]): Float =
+    if (cosine) 1.0f - VectorKernels.cosineSim(a, b) else VectorKernels.l2sq(a, b)
+
+  /** A [[dist]] value in the metric's native scale (sqrt for L2). */
+  private def native(cosine: Boolean, d: Float): Float =
+    if (cosine) d else math.sqrt(d).toFloat
+
+  /** The ef-bounded best-first beam over one layer, from `ep`, as
+    * unordered `(distance, node)` pairs. `dq(n)` is node n's distance to
+    * the query and `nbrs(n, layer)` its adjacency; nodes already in
+    * `visited` are never entered (an insert pre-visits itself).
+    */
+  private def searchLayer(ep: Int, ef: Int, layer: Int, dq: Int => Float,
+      nbrs: (Int, Int) => Iterable[Int],
+      visited: mutable.HashSet[Int] = mutable.HashSet.empty): Seq[(Float, Int)] = {
+    // candidates: min-dist first; results: max-dist first (bounded ef)
+    val cand = mutable.PriorityQueue.empty[(Float, Int)](Ordering.by(-_._1))
+    val res = mutable.PriorityQueue.empty[(Float, Int)](Ordering.by(_._1))
+    if (visited.add(ep)) {
+      val d = dq(ep)
+      cand.enqueue((d, ep)); res.enqueue((d, ep))
+    }
+    while (cand.nonEmpty) {
+      val (dc, c) = cand.dequeue()
+      if (res.size >= ef && dc > res.head._1) {
+        cand.clear() // every remaining candidate is farther
+      } else {
+        nbrs(c, layer).foreach { n =>
+          if (visited.add(n)) {
+            val d = dq(n)
+            if (res.size < ef || d < res.head._1) {
+              cand.enqueue((d, n)); res.enqueue((d, n))
+              if (res.size > ef) res.dequeue()
+            }
+          }
+        }
+      }
+    }
+    res.dequeueAll
+  }
+
   /** In-memory graph for one partition. */
   final class Graph(
       val ids: Array[Long],
@@ -53,137 +103,75 @@ object HnswIndex {
       val entryPoint: Int,
       val metric: String) {
 
-    private def dist(a: Array[Float], b: Array[Float]): Float =
-      metric.toLowerCase match {
-        case "cosine" => 1.0f - VectorKernels.cosineSim(a, b)
-        case _        => VectorKernels.l2sq(a, b) // rank-equivalent to L2
-      }
+    private val cosine = metric.equalsIgnoreCase("cosine")
 
-    def maxLayerOf(i: Int): Int = neighbors(i).length - 1
+    private def layerNbrs(node: Int, layer: Int): Iterable[Int] =
+      if (layer < neighbors(node).length) neighbors(node)(layer) else Nil
 
-    /** Greedy best-first search restricted to one layer. */
-    private def searchLayer(q: Array[Float], eps: Seq[Int], ef: Int, layer: Int): mutable.PriorityQueue[(Float, Int)] = {
-      val visited = mutable.HashSet.empty[Int]
-      // candidates: min-dist first; results: max-dist first (bounded ef)
-      val cand = mutable.PriorityQueue.empty[(Float, Int)](Ordering.by(-_._1))
-      val res = mutable.PriorityQueue.empty[(Float, Int)](Ordering.by(_._1))
-      eps.foreach { ep =>
-        if (visited.add(ep)) {
-          val d = dist(q, vecs(ep))
-          cand.enqueue((d, ep)); res.enqueue((d, ep))
-        }
+    /** The layer-0 ef-beam of `q` sorted by `(d, id)` — the index's whole
+      * decision for a query: descend the upper layers with ef = 1, then
+      * one beam of width `max(ef, k)` on layer 0. Distances are [[dist]]s.
+      */
+    private def pool(q: Array[Float], k: Int, ef: Int): Seq[(Float, Int)] = {
+      if (ids.isEmpty) return Nil
+      val dq = (n: Int) => dist(cosine, q, vecs(n))
+      var ep = entryPoint
+      var layer = neighbors(entryPoint).length - 1
+      while (layer > 0) {
+        ep = searchLayer(ep, 1, layer, dq, layerNbrs).minBy(_._1)._2
+        layer -= 1
       }
-      while (cand.nonEmpty) {
-        val (dc, c) = cand.dequeue()
-        if (res.size >= ef && dc > res.head._1) {
-          cand.clear() // every remaining candidate is farther
-        } else {
-          val layerNbrs = if (layer < neighbors(c).length) neighbors(c)(layer) else Array.empty[Int]
-          layerNbrs.foreach { n =>
-            if (visited.add(n)) {
-              val d = dist(q, vecs(n))
-              if (res.size < ef || d < res.head._1) {
-                cand.enqueue((d, n)); res.enqueue((d, n))
-                if (res.size > ef) res.dequeue()
-              }
-            }
-          }
-        }
-      }
-      res
+      searchLayer(ep, math.max(ef, k), 0, dq, layerNbrs).sortBy(x => (x._1, ids(x._2)))
     }
 
-    /** Top-k (id, distance) — distance reported in the metric's native
-      * scale (sqrt applied for L2). `accept` post-filters candidates by id
-      * (the reference's filter-bitmap / lightweight-delete mask applied
-      * inside the index search,
+    /** Top-k (id, distance) in the metric's native scale. `accept`
+      * restricts the result by id (the reference's filter-bitmap /
+      * lightweight-delete mask applied inside the index search,
       * `MergeTreeSelectWithHybridSearchProcessor.h:117-129`): the graph is
       * still traversed through non-qualifying nodes (they keep the small
-      * world connected), only the result set is restricted — callers
-      * should raise `ef` when the filter is selective.
+      * world connected), so callers raise `ef` when the filter is
+      * selective.
       */
     def search(q: Array[Float], k: Int, ef: Int,
-        accept: Long => Boolean = _ => true): Seq[(Long, Float)] = {
-      if (ids.isEmpty) return Nil
-      var ep = entryPoint
-      var layer = maxLayerOf(entryPoint)
-      while (layer > 0) {
-        ep = (searchLayer(q, Seq(ep), 1, layer).dequeueAll: Seq[(Float, Int)]).minBy(_._1)._2
-        layer -= 1
-      }
-      val found = searchLayer(q, Seq(ep), math.max(ef, k), 0)
-      val top = (found.dequeueAll: Seq[(Float, Int)])
-        .filter(x => accept(ids(x._2)))
-        .sortBy(x => (x._1, ids(x._2))).take(k)
-      top.map { case (d, i) =>
-        val out = if (metric.equalsIgnoreCase("cosine")) d else math.sqrt(d).toFloat
-        (ids(i), out)
-      }.toSeq
-    }
+        accept: Long => Boolean = _ => true): Seq[(Long, Float)] =
+      pool(q, k, ef).filter(x => accept(ids(x._2))).take(k)
+        .map { case (d, i) => (ids(i), native(cosine, d)) }
 
-    /** The full layer-0 ef-beam — the pre-truncation candidate pool, i.e.
-      * the index's WHOLE decision for a query (the reference's stage-1
-      * result set before the k-cut, `MergeTreeVSManager.cpp:449-460`
-      * stage split). Same entry-point descent and beam as [[search]];
-      * the only difference is no `take(k)`. Exported by the replay
-      * oracles so DuckDB can recompute the exact top-K restricted to the
-      * pool — pinning kernel/rounding/tie-break parity of everything
-      * downstream of graph traversal.
+    /** The whole layer-0 beam as `(id, distance, stored vector)` — the
+      * pre-truncation candidate pool (the reference's stage-1 result set
+      * before the k-cut, `MergeTreeVSManager.cpp:449-460` stage split).
+      * Exported by the replay oracles so DuckDB can recompute the exact
+      * top-K restricted to the pool — pinning kernel/rounding/tie-break
+      * parity of everything downstream of graph traversal.
       */
-    def searchPool(q: Array[Float], k: Int, ef: Int): Seq[(Long, Float, Array[Float])] = {
-      if (ids.isEmpty) return Nil
-      var ep = entryPoint
-      var layer = maxLayerOf(entryPoint)
-      while (layer > 0) {
-        ep = (searchLayer(q, Seq(ep), 1, layer).dequeueAll: Seq[(Float, Int)]).minBy(_._1)._2
-        layer -= 1
-      }
-      val found = searchLayer(q, Seq(ep), math.max(ef, k), 0)
-      (found.dequeueAll: Seq[(Float, Int)])
-        .sortBy(x => (x._1, ids(x._2)))
-        .map { case (d, i) =>
-          val out = if (metric.equalsIgnoreCase("cosine")) d else math.sqrt(d).toFloat
-          (ids(i), out, vecs(i))
-        }.toSeq
-    }
+    def searchPool(q: Array[Float], k: Int, ef: Int): Seq[(Long, Float, Array[Float])] =
+      pool(q, k, ef).map { case (d, i) => (ids(i), native(cosine, d), vecs(i)) }
 
-    /** Exact scoring without graph traversal — the "exact-over-bitmap"
-      * regime the reference uses for selective filters (per-part brute
-      * force over the filter bitmap instead of a masked graph walk,
-      * `MergeTreeSelectWithHybridSearchProcessor.h:117-129`). With
-      * `mask = Some(sortedIds)` only accepted nodes are scored; with
-      * `None` every node is (the degraded-but-exact overflow path).
-      * Distances are reported in the metric's native scale.
+    /** Exact scoring of the nodes whose id is in the sorted `mask`, without
+      * graph traversal — the "exact-over-bitmap" regime the reference uses
+      * for selective filters (per-part brute force over the filter bitmap
+      * instead of a masked graph walk,
+      * `MergeTreeSelectWithHybridSearchProcessor.h:117-129`). Distances are
+      * reported in the metric's native scale.
       */
-    def bruteScores(q: Array[Float], mask: Option[Array[Long]]): Iterator[(Long, Float)] =
+    def bruteScores(q: Array[Float], mask: Array[Long]): Iterator[(Long, Float)] =
       ids.indices.iterator
-        .filter(i => mask.forall(m => java.util.Arrays.binarySearch(m, ids(i)) >= 0))
-        .map { i =>
-          val d = dist(q, vecs(i))
-          val out = if (metric.equalsIgnoreCase("cosine")) d else math.sqrt(d).toFloat
-          (ids(i), out)
-        }
+        .filter(i => java.util.Arrays.binarySearch(mask, ids(i)) >= 0)
+        .map(i => (ids(i), native(cosine, dist(cosine, q, vecs(i)))))
   }
 
   /** Incremental builder (insert-based, seeded levels). */
   final class Builder(metric: String, m: Int, efConstruction: Int, seed: Long) {
     private val mL = 1.0 / math.log(m.toDouble)
     private val rnd = new scala.util.Random(seed)
+    private val cosine = metric.equalsIgnoreCase("cosine")
     private val ids = mutable.ArrayBuffer.empty[Long]
     private val vecs = mutable.ArrayBuffer.empty[Array[Float]]
     private val nbrs = mutable.ArrayBuffer.empty[Array[mutable.ArrayBuffer[Int]]]
     private var entry = -1
 
-    private def dist(a: Array[Float], b: Array[Float]): Float =
-      metric.toLowerCase match {
-        case "cosine" => 1.0f - VectorKernels.cosineSim(a, b)
-        case _        => VectorKernels.l2sq(a, b)
-      }
-
-    private def graph: Graph =
-      new Graph(ids.toArray, vecs.toArray,
-        nbrs.map(_.map(_.toArray).toArray).toArray,
-        if (entry < 0) 0 else entry, metric)
+    private def layerNbrs(node: Int, layer: Int): Iterable[Int] =
+      if (layer < nbrs(node).length) nbrs(node)(layer) else Nil
 
     def insert(id: Long, v: Array[Float]): Unit = {
       val level = math.min(15, (-math.log(rnd.nextDouble() + 1e-12) * mL).toInt)
@@ -192,16 +180,17 @@ object HnswIndex {
       nbrs += Array.fill(level + 1)(mutable.ArrayBuffer.empty[Int])
       if (idx == 0) { entry = 0; return }
 
-      val g = graph
+      val top = nbrs(entry).length - 1
+      val dq = (n: Int) => dist(cosine, v, vecs(n))
       var ep = entry
-      var layer = g.maxLayerOf(entry)
+      var layer = top
       while (layer > level) {
         ep = bestFrom(v, ep, layer)
         layer -= 1
       }
-      var l = math.min(level, g.maxLayerOf(entry))
+      var l = math.min(level, top)
       while (l >= 0) {
-        val cands = searchLayerForInsert(v, ep, efConstruction, l, idx)
+        val cands = searchLayer(ep, efConstruction, l, dq, layerNbrs, mutable.HashSet(idx))
         val selected = cands.sortBy(_._1).take(m).map(_._2)
         selected.foreach { n =>
           nbrs(idx)(l) += n
@@ -210,66 +199,38 @@ object HnswIndex {
           val cap = if (l == 0) 2 * m else m
           if (nbrs(n)(l).length > cap) {
             val pruned = nbrs(n)(l)
-              .map(x => (dist(vecs(n), vecs(x)), x)).sortBy(_._1).take(cap).map(_._2)
+              .map(x => (dist(cosine, vecs(n), vecs(x)), x)).sortBy(_._1).take(cap).map(_._2)
             nbrs(n)(l) = mutable.ArrayBuffer(pruned.toSeq: _*)
           }
         }
         if (selected.nonEmpty) ep = selected.head
         l -= 1
       }
-      if (level > g.maxLayerOf(entry)) entry = idx
+      if (level > top) entry = idx
     }
 
+    /** Greedy descent on one layer: move to the nearest neighbour while
+      * that improves. Not an ef = 1 [[searchLayer]]: the two can part on
+      * tied distances, and the stored graphs follow this walk.
+      */
     private def bestFrom(q: Array[Float], start: Int, layer: Int): Int = {
       var cur = start
-      var curD = dist(q, vecs(cur))
+      var curD = dist(cosine, q, vecs(cur))
       var improved = true
       while (improved) {
         improved = false
-        val ns = if (layer < nbrs(cur).length) nbrs(cur)(layer) else mutable.ArrayBuffer.empty[Int]
-        ns.foreach { n =>
-          val d = dist(q, vecs(n))
+        layerNbrs(cur, layer).foreach { n =>
+          val d = dist(cosine, q, vecs(n))
           if (d < curD) { curD = d; cur = n; improved = true }
         }
       }
       cur
     }
 
-    private def searchLayerForInsert(
-        q: Array[Float], ep: Int, ef: Int, layer: Int, self: Int): Seq[(Float, Int)] = {
-      val visited = mutable.HashSet(self)
-      val cand = mutable.PriorityQueue.empty[(Float, Int)](Ordering.by(-_._1))
-      val res = mutable.PriorityQueue.empty[(Float, Int)](Ordering.by(_._1))
-      if (visited.add(ep)) {
-        val d = dist(q, vecs(ep)); cand.enqueue((d, ep)); res.enqueue((d, ep))
-      }
-      while (cand.nonEmpty) {
-        val (dc, c) = cand.dequeue()
-        if (res.size >= ef && dc > res.head._1) cand.clear()
-        else {
-          val ns = if (layer < nbrs(c).length) nbrs(c)(layer) else mutable.ArrayBuffer.empty[Int]
-          ns.foreach { n =>
-            if (visited.add(n)) {
-              val d = dist(q, vecs(n))
-              if (res.size < ef || d < res.head._1) {
-                cand.enqueue((d, n)); res.enqueue((d, n))
-                if (res.size > ef) res.dequeue()
-              }
-            }
-          }
-        }
-      }
-      (res.dequeueAll: Seq[(Float, Int)])
-    }
-
-    def rows(partId: Int): Iterator[GraphRow] = {
-      val g = graph
+    def rows(partId: Int): Iterator[GraphRow] =
       ids.indices.iterator.map { i =>
-        GraphRow(partId, i, ids(i), vecs(i),
-          g.neighbors(i).map(_.toSeq).toSeq)
+        GraphRow(partId, i, ids(i), vecs(i), nbrs(i).map(_.toSeq).toSeq)
       }
-    }
-    def entryIdx: Int = math.max(entry, 0)
   }
 
   // Per-JVM graph cache — the VICacheManager analog, now SIZE-BOUNDED
@@ -435,8 +396,8 @@ object HnswIndex {
       minRowsToBuild: Long = 0L): Unit = {
     import spark.implicits._
     val l = layout(spark, indexDir)
-    val smallMax = l.small.map(dir => spark.read.schema(SmallPartsSchema).parquet(dir)
-      .select(col("part_id")).as[Int].reduce((a, b) => math.max(a, b)))
+    val smallMax = l.smallRows(spark)
+      .map(_.select(col("part_id")).as[Int].reduce((a, b) => math.max(a, b)))
     val offset = (l.parts.map(_._1) ++ smallMax).maxOption.fold(0)(_ + 1)
     IvfIndex.Catalog.logEvent(indexName, "APPEND_START", s"offset=$offset")
     val base = batch.select(col(idCol).cast("long"), col(vecCol))
@@ -603,6 +564,8 @@ object HnswIndex {
       small: Option[String],
       quantizer: Option[Quantizer]) {
     def graphKey(pid: Int): String = s"${art.dir}#$pid@${art.buildId}"
+    def smallRows(spark: SparkSession): Option[DataFrame] =
+      small.map(spark.read.schema(SmallPartsSchema).parquet(_))
   }
 
   private def layout(spark: SparkSession, indexDir: String): Layout = {
@@ -653,6 +616,43 @@ object HnswIndex {
     }
   }
 
+  /** The graph leg: `f` runs against each part's graph inside the part's
+    * single-task scan ([[mapParts]]); the parts' rows are unioned and
+    * named `cols`. None when every part fell under the min-rows gate.
+    */
+  private def graphLeg[T: Encoder](spark: SparkSession, l: Layout, metric: String,
+      cols: String*)(f: Graph => Iterator[T]): Option[DataFrame] = {
+    val perPart = mapParts(spark, l)((key, rows) => f(loadGraph(key, rows, metric)))
+    if (perPart.isEmpty) None else Some(perPart.reduce(_ union _).toDF(cols: _*))
+  }
+
+  /** The small-part leg: SMALL_PART segments (parts under
+    * min_rows_to_build_vector_index at write time) hold raw vectors in
+    * `smallparts/` and are brute-forced exactly — the reference's behavior
+    * for index-less parts. Rows keep their columns plus `d`, scored against
+    * one literal query (`Left`) or, per `query_idx`, a broadcast frame of
+    * the batch (`Right`, tiny by the gate's definition); `accept` keeps
+    * only its ids through a lazy semi-join. Callers cut it.
+    */
+  private def smallLeg(spark: SparkSession, l: Layout, metric: String,
+      query: Either[Array[Float], Seq[Seq[Float]]],
+      accept: Option[DataFrame] = None): Option[DataFrame] =
+    l.smallRows(spark).map { rows =>
+      val kept = accept.fold(rows)(rows.join(_, Seq("id"), "left_semi"))
+      val (scored, qv) = query match {
+        case Left(q) => (kept, typedLit(q.toSeq))
+        case Right(qs) =>
+          val qDf = spark.createDataFrame(qs.zipWithIndex.map { case (v, i) => (i, v) })
+            .toDF("query_idx", "__qv")
+          (kept.crossJoin(broadcast(qDf)), col("__qv"))
+      }
+      scored.withColumn("d", graft.functions.distances.distance(metric)(col("vec"), qv))
+    }
+
+  /** The union of the legs an index has ([[searchLayout]] requires one). */
+  private def unionLegs(legs: Option[DataFrame]*): DataFrame =
+    legs.flatten.reduce(_ unionAll _)
+
   /** ANN search across all per-partition graphs + global top-K merge.
     *
     * Plan shape (the 100 TB property): each `part_id=` directory is read
@@ -662,10 +662,7 @@ object HnswIndex {
     * rows; the union of parts feeds the usual TakeOrderedAndProject merge.
     * The previous shape (`groupByKey(part_id)`) shuffled every graph row
     * (id + vector + adjacency) on every query — more I/O than brute force.
-    *
-    * `accept` restricts results by id (pre-filter / lightweight-delete
-    * mask pushed into the index search); `ef` should grow with filter
-    * selectivity.
+    * A filtered search is [[searchWithAcceptDf]].
     */
   def search(
       spark: SparkSession,
@@ -673,34 +670,14 @@ object HnswIndex {
       qvec: Seq[Float],
       k: Int,
       ef: Int = 64,
-      metric: String = "l2",
-      accept: Option[Long => Boolean] = None): DataFrame = {
+      metric: String = "l2"): DataFrame = {
     import spark.implicits._
     val q = qvec.toArray
     val l = searchLayout(spark, indexDir)
-    val filt = accept
-    val perPart = mapParts(spark, l) { (key, rows) =>
-      loadGraph(key, rows, metric)
-        .search(q, k, ef, filt.getOrElse((_: Long) => true)).iterator
-    }
-    // SMALL_PART segments (parts under min_rows_to_build_vector_index at
-    // build time) hold raw vectors in smallparts/ — brute-forced exactly,
-    // the reference's behavior for index-less parts.
-    val smallHits: Option[DataFrame] = l.small.map { small =>
-      val acceptUdf = filt.map(f => udf((id: Long) => f(id)))
-      val sp = spark.read.schema(SmallPartsSchema).parquet(small)
-      val filtered = acceptUdf.map(u => sp.filter(u(col("id")))).getOrElse(sp)
-      filtered
-        .select(col("id"),
-          graft.functions.distances.distance(metric)(col("vec"), typedLit(q.toSeq))
-            .as("d"))
-        .orderBy(col("d"), col("id")).limit(k)
-    }
-    val graphHits: Option[DataFrame] =
-      if (perPart.isEmpty) None
-      else Some(perPart.reduce(_ union _).toDF("id", "d"))
-    (graphHits.toSeq ++ smallHits.toSeq)
-      .reduce(_ unionAll _)
+    unionLegs(
+      graphLeg(spark, l, metric, "id", "d")(_.search(q, k, ef).iterator),
+      smallLeg(spark, l, metric, Left(q))
+        .map(_.select(col("id"), col("d")).orderBy(col("d"), col("id")).limit(k)))
       .orderBy(col("d"), col("id"))
       .limit(k)
   }
@@ -729,20 +706,9 @@ object HnswIndex {
     import spark.implicits._
     val q = qvec.toArray
     val l = searchLayout(spark, indexDir)
-    val perPart = mapParts(spark, l) { (key, rows) =>
-      loadGraph(key, rows, metric).searchPool(q, k, ef).iterator
-    }
-    val smallHits: Option[DataFrame] = l.small.map { small =>
-      spark.read.schema(SmallPartsSchema).parquet(small)
-        .select(col("id"),
-          graft.functions.distances.distance(metric)(col("vec"), typedLit(q.toSeq))
-            .as("d"),
-          col("vec"))
-    }
-    val graphHits: Option[DataFrame] =
-      if (perPart.isEmpty) None
-      else Some(perPart.reduce(_ union _).toDF("id", "d", "vec"))
-    (graphHits.toSeq ++ smallHits.toSeq).reduce(_ unionAll _)
+    unionLegs(
+      graphLeg(spark, l, metric, "id", "d", "vec")(_.searchPool(q, k, ef).iterator),
+      smallLeg(spark, l, metric, Left(q)).map(_.select(col("id"), col("d"), col("vec"))))
   }
 
   /** Stage-1 candidate ids of [[searchTwoStage]] — the quantized graph's
@@ -842,7 +808,7 @@ object HnswIndex {
             math.ceil(2.0 * numCand / math.max(sel, 1e-9)).toInt)
           if (mask.length < numCand || efNeeded > efCap) {
             // exact-over-bitmap: selective filter → score accepted only
-            g.bruteScores(q, Some(mask)).toSeq
+            g.bruteScores(q, mask).toSeq
               .sortBy(x => (x._2, x._1)).take(numCand).iterator
           } else {
             g.search(q, numCand, math.min(efCap, efNeeded),
@@ -855,17 +821,11 @@ object HnswIndex {
       if (perPart.isEmpty) None
       else Some(spark.createDataset(spark.sparkContext.union(perPart))
         .toDF("id", "d"))
-    // SMALL_PART leg: raw vectors, exact — qualifying ids via a lazy
-    // semi-join against the FULL accept frame (no cap needed: a join
-    // never materializes the set)
-    val smallHits: Option[DataFrame] = l.small.map { small =>
-      spark.read.schema(SmallPartsSchema).parquet(small)
-        .join(acceptDf, Seq("id"), "left_semi")
-        .select(col("id"),
-          graft.functions.distances.distance(metric)(col("vec"), typedLit(q.toSeq))
-            .as("d"))
-        .orderBy(col("d"), col("id")).limit(numCand)
-    }
+    // the small parts take their qualifying ids from a semi-join against
+    // the FULL accept frame (no cap needed: a join never materializes the
+    // set)
+    val smallHits = smallLeg(spark, l, metric, Left(q), Some(acceptDf))
+      .map(_.select(col("id"), col("d")).orderBy(col("d"), col("id")).limit(numCand))
     // overflow branch: when (and only when) the accept set overflowed
     // the mask cap, ALL qualifying ids become candidates — the
     // empty-or-everything gate is a runtime cross join against a lazy
@@ -875,8 +835,7 @@ object HnswIndex {
       .filter(col("cnt") > cap).select(lit(1).as("__overflow"))
     val overflowIds = acceptDf.crossJoin(overflowGate)
       .select(col("id"), lit(Float.NaN).as("d"))
-    (graphHits.toSeq ++ smallHits.toSeq ++ Seq(overflowIds))
-      .reduce(_ unionAll _)
+    unionLegs(graphHits, smallHits, Some(overflowIds))
   }
 
   /** `batch_distance()` THROUGH the per-part graphs: each part's task
@@ -900,29 +859,14 @@ object HnswIndex {
     require(queries.nonEmpty, "batchSearch: empty query batch")
     val qArr = queries.map(_.toArray).toArray
     val l = searchLayout(spark, indexDir)
-    val perPart = mapParts(spark, l) { (key, rows) =>
-      val g = loadGraph(key, rows, metric)
+    val graphHits = graphLeg(spark, l, metric, "query_idx", "id", "d") { g =>
       qArr.iterator.zipWithIndex.flatMap { case (q, qi) =>
         g.search(q, k, ef).iterator.map { case (id, d) => (qi, id, d) }
       }
     }
-    val graphHits: Option[DataFrame] =
-      if (perPart.isEmpty) None
-      else Some(perPart.reduce(_ union _).toDF("query_idx", "id", "d"))
-    // SMALL_PART leg: brute-score the raw vectors against the broadcast
-    // query frame (tiny by the gate's definition)
-    val smallHits: Option[DataFrame] = l.small.map { small =>
-      val qDf = spark
-        .createDataFrame(queries.zipWithIndex.map { case (v, i) => (i, v) })
-        .toDF("query_idx", "__qv")
-      spark.read.schema(SmallPartsSchema).parquet(small)
-        .crossJoin(broadcast(qDf))
-        .select(col("query_idx"), col("id"),
-          graft.functions.distances.distance(metric)(col("vec"), col("__qv"))
-            .as("d"))
-    }
-    val all = (graphHits.toSeq ++ smallHits.toSeq).reduce(_ unionAll _)
-    VectorSearch.perQueryTopK(all, k, "d",
+    val smallHits = smallLeg(spark, l, metric, Right(queries))
+      .map(_.select(col("query_idx"), col("id"), col("d")))
+    VectorSearch.perQueryTopK(unionLegs(graphHits, smallHits), k, "d",
       VectorSearch.isDescending(metric), tieBreak)
   }
 

@@ -253,18 +253,16 @@ case class TopKSearchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // per-part graph tasks pick the regime from the actual mask:
         // masked traversal with selectivity-scaled ef, exact-over-bitmap
         // scoring when the filter is selective, or (mask over
-        // spark.graft.maxPrefilterIds) an all-qualifying-ids candidate
+        // DefaultMaxPrefilterIds) an all-qualifying-ids candidate
         // branch that keeps the exact re-rank exact. See
         // HnswIndex.searchWithAcceptDf for the regime contract.
         val cand = (filterCond match {
           case Some(cond) =>
-            val maxIds = spark.conf.getOption("spark.graft.maxPrefilterIds")
-              .map(_.toInt).getOrElse(TopKSearchRewrite.DefaultMaxPrefilterIds)
             val acceptDf = shim.ofRows(spark, Filter(cond, rel))
               .select(col(entry.idCol).cast("long").as("id"))
             HnswIndex.searchWithAcceptDf(spark, entry.indexDir, qvec.toSeq,
               numCand, TopKSearchRewrite.EfCap, entry.metric, acceptDf,
-              maxIds, entry.nRows)
+              TopKSearchRewrite.DefaultMaxPrefilterIds, entry.nRows)
           case None =>
             HnswIndex.search(spark, entry.indexDir, qvec.toSeq, numCand,
               ef = math.min(TopKSearchRewrite.EfCap, math.max(64, 2 * numCand)),

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import scala.collection.concurrent.TrieMap
 
 /** The index fixtures the catalog queries search: one directory per
@@ -13,11 +11,12 @@ private[queries] object IndexFixtures {
   private val dirs = TrieMap.empty[(String, String), String]
 
   /** The fixture `kind` for `sfDir`: a fresh temp directory named after
-    * `kind`, filled by `build` the first time it is asked for.
+    * `kind`, filled by `build` the first time it is asked for and deleted
+    * when the JVM shuts down.
     */
   def dir(kind: String, sfDir: String)(build: String => Any): String =
     dirs.getOrElseUpdate((kind, sfDir), {
-      val d = Files.createTempDirectory(kind).toString
+      val d = org.apache.spark.sql.graft.shim.createTempDir(kind).toString
       build(d)
       d
     })

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Tables.t
 import graft.operators.{BinaryHnswIndex, BinaryIvfIndex, HnswIndex, IvfIndex, PqIndex, SqIndex, VectorSearch}
+import graft.plans.TopKSearchRewrite
 
 /** Vector-search coverage (SURVEY §2.1): distance() top-K per metric,
   * pre-filtered search, batch_distance, two-stage re-rank. Oracles use
@@ -86,9 +87,9 @@ object VectorQueries {
     val nRows = IvfIndex.Catalog.lookup(IndexFixtures.name("hnsw_embeddings", dir))
       .map(_.nRows).getOrElse(0L)
     HnswIndex.searchWithAcceptDf(s, idx, queryVec(s, dir), 10,
-        efCap = 4096, metric = "l2",
+        efCap = TopKSearchRewrite.EfCap, metric = "l2",
         acceptDf = e.filter(col("label") === 3).select(col("vec_id").cast("long").as("id")),
-        maxIds = 2 << 20, nRowsTotal = nRows)
+        maxIds = TopKSearchRewrite.DefaultMaxPrefilterIds, nRowsTotal = nRows)
       .select(col("id").as("vec_id"))
   }
 

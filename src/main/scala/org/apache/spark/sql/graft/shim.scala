@@ -40,6 +40,13 @@ object shim {
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** A fresh directory `<namePrefix>-<uuid>` under `java.io.tmpdir` that
+    * the JVM deletes at shutdown (`Utils.createTempDir` is
+    * `private[spark]`).
+    */
+  def createTempDir(namePrefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
+
   /** Propagate the task context onto a helper thread
     * (`TaskContext.setTaskContext` is `private[spark]`). Spark's own
     * PipedRDD does exactly this for its stdin-writer thread; without it,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
 import graft.operators.{HnswIndex, IndexArtifact, IvfIndex, VectorSearch}
+import graft.plans.TopKSearchRewrite
 
 class HnswIndexSpec extends SparkSpec {
 
@@ -81,8 +82,12 @@ class HnswIndexSpec extends SparkSpec {
 
   test("accept filter (pre-filter / delete mask) is honored in-search") {
     val masked = bruteIds(5).toSet // delete the 5 nearest
-    val got = HnswIndex.search(spark, indexDir, qv, 10, ef = 256,
-        accept = Some((id: Long) => !masked.contains(id)))
+    val accept = emb.filter(!col("vec_id").isin(masked.toSeq: _*))
+      .select(col("vec_id").cast("long").as("id"))
+    val got = HnswIndex.searchWithAcceptDf(spark, indexDir, qv, 10,
+        TopKSearchRewrite.EfCap, "l2", accept,
+        TopKSearchRewrite.DefaultMaxPrefilterIds, emb.count())
+      .orderBy(col("d"), col("id")).limit(10)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got.intersect(masked).isEmpty)
     assert(got.size === 10)
@@ -95,6 +100,35 @@ class HnswIndexSpec extends SparkSpec {
     val recall = (got & bruteSurvivors).size / 10.0
     assert(recall >= 0.8, s"masked recall@10 = $recall")
   }
+
+  // the replay oracles of v11/v17/v18/v31 score candidatePool in place of
+  // search: the two must agree on every part kind
+  Seq(("HNSWFLAT", false, 0L), ("HNSWSQ", true, 0L), ("gated HNSWFLAT", false, 100L))
+    .foreach { case (kind, sq, minRows) =>
+      test(s"$kind: search(k) is the top k of candidatePool by (d, id)") {
+        val dir = Files.createTempDirectory("hnsw-pool").toString
+        val n = emb.count()
+        // two large parts and two of 25 rows, which the gate leaves unindexed
+        val parts = emb.filter(col("vec_id") < n - 50).repartition(2)
+          .unionAll(emb.filter(col("vec_id") >= n - 50).repartition(2))
+        try {
+          HnswIndex.build(spark, parts, "vec_id", "embedding", "pool_hnsw", dir,
+            "l2", m = 8, efConstruction = 64, quantize = sq, minRowsToBuild = minRows)
+          assert(Files.exists(java.nio.file.Paths.get(dir, "smallparts")) === (minRows > 0))
+          Seq(5L, n - 10).foreach { qid =>
+            val q = emb.filter(col("vec_id") === qid).select(col("embedding"))
+              .head().getSeq[Float](0)
+            def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Float)] =
+              df.select("id", "d").collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+            val pool = rows(HnswIndex.candidatePool(spark, dir, q, 10, ef = 16))
+              .sortBy(x => (x._2, x._1))
+            assert(pool.size > 10)
+            assert(rows(HnswIndex.search(spark, dir, q, 10, ef = 16)) === pool.take(10),
+              s"query $qid")
+          }
+        } finally IvfIndex.Catalog.drop("pool_hnsw")
+      }
+    }
 
   test("reported distances match exact kernel values") {
     val rows = HnswIndex.search(spark, indexDir, qv, 5, ef = 128).collect()

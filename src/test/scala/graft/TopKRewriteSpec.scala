@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.functions.distances
-import graft.operators.{IvfIndex, VectorSearch}
+import graft.operators.{HnswIndex, IvfIndex, VectorSearch}
+import graft.plans.TopKSearchRewrite
 
 class TopKRewriteSpec extends SparkSpec {
 
@@ -183,29 +184,31 @@ class TopKRewriteSpec extends SparkSpec {
     } finally IvfIndex.Catalog.drop("sel_hnsw")
   }
 
-  test("accept mask past spark.graft.maxPrefilterIds → exact overflow branch") {
+  test("accept mask past maxIds → exact overflow branch") {
     val dir = Files.createTempDirectory("hnsw-cap").toString
-    val srcPath = "file:" + sfDir + "/embeddings.parquet"
-    spark.conf.set("spark.graft.maxPrefilterIds", "10")
     try {
-      graft.operators.HnswIndex.build(spark, emb, "vec_id", "embedding",
+      HnswIndex.build(spark, emb, "vec_id", "embedding",
         "cap_hnsw", dir, "l2", m = 12, efConstruction = 80,
-        numPartitions = Some(2), sourcePath = srcPath)
-      val filtered = emb.filter(col("label") === 2) // ≫ 10 matching ids
-        .select(col("vec_id"), col("label"),
-          distances.l2Distance(col("embedding"), typedLit(qv)).as("d"))
-        .orderBy(col("d")).limit(5)
+        numPartitions = Some(2))
+      val e = emb
+      val accept = e.filter(col("label") === 2) // ≫ 10 matching ids
+        .select(col("vec_id").cast("long").as("id"))
       // the mask overflows at EXECUTION time; the runtime-gated branch
       // makes every qualifying id a candidate, so the exact re-rank
       // reproduces brute force bit-for-bit
-      val fBrute = VectorSearch.topK(emb, col("embedding"), qv, 5, "l2",
+      val cands = HnswIndex.searchWithAcceptDf(spark, dir, qv, numCand = 5,
+          efCap = TopKSearchRewrite.EfCap, metric = "l2", acceptDf = accept,
+          maxIds = 10, nRowsTotal = e.count())
+        .select(col("id").as("vec_id"))
+      assert(cands.count() === accept.count())
+      val got = VectorSearch.rerank(e, "vec_id", "embedding", cands, qv, 5, "l2",
+          None, "d", Seq(col("vec_id")))
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      val fBrute = VectorSearch.topK(e, col("embedding"), qv, 5, "l2",
           Some(col("label") === 2), "d", Seq(col("vec_id")))
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      assert(filtered.collect().map(_.getLong(0)).toSet === fBrute)
-    } finally {
-      spark.conf.unset("spark.graft.maxPrefilterIds")
-      IvfIndex.Catalog.drop("cap_hnsw")
-    }
+      assert(got === fBrute)
+    } finally IvfIndex.Catalog.drop("cap_hnsw")
   }
 
   test("IVFFLAT routing runs NO Spark job during optimization") {
