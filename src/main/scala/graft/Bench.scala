@@ -64,7 +64,7 @@ object Bench {
       // in an idle environment and bisection exonerated the r11 code).
       for (tbl <- Seq("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "documents", "embeddings"))
-        spark.read.parquet(s"$sfDir/$tbl.parquet").foreach(_ => ())
+        graft.engine.Tables.t(spark, sfDir, tbl).foreach(_ => ())
       graft.engine.Tables.t(spark, sfDir, "events").foreach(_ => ())
       // Pre-build persisted indexes (IVF/HNSW/SQ/BinaryIVF/FTS) untimed —
       // the reference builds indexes at insert/merge time, not inside the

@@ -91,13 +91,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Table loading over the driver-provided parquet layout. */
+/** Table loading over the driver-provided parquet layout. The schema
+  * comes from one footer ([[ParquetSchema]]), so loading a table starts
+  * no Spark job. It is not cached: one footer read costs less than a
+  * job, and a table rewritten by another JVM is seen at once.
+  */
 object Tables {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.types.LongType
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSchema.load(spark, s"$dir/$name.parquet")
 
   /** `events` carries nanosecond timestamps, which Spark's parquet reader
     * rejects; sessions set `spark.sql.legacy.parquet.nanosAsLong` and this

@@ -330,6 +330,7 @@ object FtsIndex {
     * postings (`TableFunctionFtsIndex.cpp`, `StorageFtsIndex.cpp:1-217`).
     */
   def termStats(spark: SparkSession, indexDir: String): DataFrame =
+    // every bucket= partition, so Spark's partition discovery reads it
     spark.read.parquet(s"$indexDir/postings")
       .groupBy(col("term"))
       .agg(count(lit(1)).as("doc_freq"), sum(col("tf")).cast("long").as("total_tf"))

@@ -6,6 +6,7 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.engine.ParquetSchema
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The on-disk metadata of every index family (IVFFLAT/MSTG, IVFSQ,
@@ -107,7 +108,8 @@ private[graft] object IndexArtifact {
 
     def load(spark: SparkSession, a: Artifact[_]): V =
       cache.getOrLoad(key(a))(
-        decode(spark.read.parquet(s"${a.dir}/$name").collect()))(weight).asInstanceOf[V]
+        decode(ParquetSchema.load(spark, s"${a.dir}/$name").collect()))(weight)
+        .asInstanceOf[V]
 
     /** Build-time warm insert of the table just written, once `meta.json`
       * names the build.

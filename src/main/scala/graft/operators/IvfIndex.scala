@@ -290,6 +290,7 @@ object IvfIndex {
     */
   private def registerLists(
       spark: SparkSession, indexName: String, indexDir: String, nLists: Int): Unit = {
+    // every list_id= partition, so Spark's partition discovery reads it
     val counts = spark.read.parquet(s"$indexDir/lists")
       .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

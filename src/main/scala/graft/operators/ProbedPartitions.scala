@@ -1,11 +1,10 @@
 package graft.operators
 
+import graft.engine.ParquetSchema
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Job-free read of the probed partitions of a `partCol=v`-partitioned
   * parquet artifact: the IVF-family `lists/` (`list_id=`) and the FTS
@@ -16,18 +15,15 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them) and
   * infers the schema in a second job, on every search. Here the driver
   * lists the root non-recursively, keeps the requested directories that
-  * exist, and takes the data schema from the Spark row-metadata key of
-  * one footer (the same source Spark's own inference reads) plus the INT
-  * partition column. The `isin` filter stays, so the scan still carries
-  * `PartitionFilters`.
+  * exist, and takes the data schema from one footer
+  * ([[graft.engine.ParquetSchema]], the same sources Spark's own
+  * inference reads) plus the INT partition column. The `isin` filter
+  * stays, so the scan still carries `PartitionFilters`.
   *
   * Nothing is cached: every search lists afresh, so an append or a
   * rebuild in another JVM is seen by the next query.
   */
 private[graft] object ProbedPartitions {
-
-  /** Footer key under which Spark's parquet writer stores the row schema. */
-  val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** The requested partitions of `root`, or None when none of them exists. */
   def readPresent(spark: SparkSession, root: String, partCol: String,
@@ -62,27 +58,17 @@ private[graft] object ProbedPartitions {
       .toMap
   }
 
-  /** Row schema from the footer of the first data file found in `dirs`,
-    * plus the INT partition column. A footer without Spark's schema key
-    * fails: there is no fallback to the parquet-level schema, whose types
-    * can differ.
+  /** Row schema from the footer of the first data file found in `dirs`
+    * ([[graft.engine.ParquetSchema.footer]]), plus the INT partition
+    * column.
     */
   private def schema(spark: SparkSession, root: String, partCol: String,
       dirs: Seq[Path]): StructType = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    val file = dirs.iterator.flatMap { d =>
-      d.getFileSystem(conf).listStatus(d).iterator
-        .filter(s => s.isFile && visible(s.getPath)).map(_.getPath)
-        .toSeq.sortBy(_.getName).headOption
-    }.nextOption().getOrElse(throw new IllegalStateException(
-      s"no parquet data file under any partition of $root"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val json =
-      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-      finally reader.close()
-    if (json == null) throw new IllegalStateException(
-      s"parquet footer of $file has no Spark schema ($SparkSchemaKey)")
-    DataType.fromJson(json).asInstanceOf[StructType].add(partCol, IntegerType)
+    val file = dirs.iterator
+      .flatMap(d => ParquetSchema.dataFiles(d.getFileSystem(conf), d).headOption)
+      .nextOption().getOrElse(throw new IllegalStateException(
+        s"no parquet data file under any partition of $root"))
+    ParquetSchema.footer(spark, conf, file).add(partCol, IntegerType)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.concurrent.TrieMap
 
+import graft.engine.ParquetSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,7 +71,7 @@ object Projections {
     df.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(projDir)
-    val nGroups = spark.read.parquet(projDir).count()
+    val nGroups = ParquetSchema.load(spark, projDir).count()
     val entry = ProjEntry(name, sourcePath, projDir, groupCols, sumCols,
       minCols, maxCols, nGroups)
     register(entry)
@@ -115,7 +116,7 @@ object Projections {
       .repartitionByRange(sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode("overwrite").parquet(projDir)
-    val nRows = spark.read.parquet(projDir).count()
+    val nRows = ParquetSchema.load(spark, projDir).count()
     val entry = NormalEntry(name, sourcePath, projDir, sortCols,
       (sortCols ++ cols).distinct, nRows)
     registerNormal(entry)

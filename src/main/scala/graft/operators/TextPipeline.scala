@@ -150,9 +150,12 @@ object TextPipeline {
     // and the scored-side bigrams — four full tokenize passes
     // self-scored (a direct token-ARRAY persist was A/B'd in r21 and
     // lost: token strings are corpus-sized; these rows are three longs).
-    // The pair frame and the vocab-bounded count frames persist
-    // (MEMORY_AND_DISK, lineage kept) and stay live with the returned
-    // lazy frame.
+    //
+    // Nothing is persisted and nothing runs while the frame is built, so
+    // a long-lived session keeps no cached frame per call. Self-scored,
+    // the corpus is tokenized twice: once for the pair counts, which the
+    // plan shares between the bigram join, both unigram joins and T, and
+    // once for the scored positions.
     def tokenPairs(src: DataFrame): DataFrame =
       src.select(idCol.as("id"), text.tokenize(textCol).as("__t"))
         .select(col("id"), explode(expr(
@@ -163,23 +166,27 @@ object TextPipeline {
     // count frames come from the REFERENCE corpus when given (the
     // CCNet posture: a held-out/high-quality reference LM), else from
     // the scored corpus itself
-    val dfPairs = tokenPairs(df).persist()
+    val dfPairs = tokenPairs(df)
     val refPairs = if (reference == null) dfPairs else tokenPairs(reference)
-    val uni = refPairs.groupBy(col("wh").as("th")).agg(count(lit(1)).as("c1"))
-      .persist()
-    // T = Σ c1 over the (vocab-bounded, persisted) unigram frame — the
-    // r21 form burned a full tokenize pass on refToks.count()
-    val totRow = uni.agg(sum(col("c1"))).collect()(0)
-    val total = math.max(if (totRow.isNullAt(0)) 0L else totRow.getLong(0), 1L)
-    val bi = refPairs.filter(col("ph").isNotNull)
-      .groupBy(col("ph").as("p"), col("wh").as("w"))
+    // c2 per (ph, wh), position 0 under the sentinel ph xxhash64('') (no
+    // token is empty): c1(w) is the sum over every ph and T the sum over
+    // every pair. A non-null key lets no consumer push a filter below
+    // the aggregate, so all of them read the same exchange.
+    val pairCounts = refPairs
+      .groupBy(coalesce(col("ph"), expr("xxhash64('')")).as("p"), col("wh").as("w"))
       .agg(count(lit(1)).as("c2"))
+    val uni = pairCounts.groupBy(col("w").as("th")).agg(sum(col("c2")).as("c1"))
+    // T = max(Σ c1, 1) over the vocab-bounded unigram frame, as one
+    // aggregate row inside the plan
+    val total = uni.agg(greatest(coalesce(sum(col("c1")), lit(0L)), lit(1L))
+      .cast("double").as("__T"))
     val scored = dfPairs.filter(col("ph").isNotNull)
-      .join(bi, col("ph") === col("p") && col("wh") === col("w"), "left")
+      .join(pairCounts, col("ph") === col("p") && col("wh") === col("w"), "left")
       .join(uni.withColumnRenamed("th", "__pt").withColumnRenamed("c1", "c1p"),
         col("ph") === col("__pt"), "left")
       .join(uni.withColumnRenamed("th", "__ct").withColumnRenamed("c1", "c1c"),
         col("wh") === col("__ct"), "left")
+      .crossJoin(broadcast(total))
       .select(col("id"),
         // seen bigram: c2/c1(prev); else stupid backoff α·c1(cur)/T,
         // with an unseen NEXT token counting one virtual occurrence
@@ -189,7 +196,7 @@ object TextPipeline {
         col("c2").cast("double") / col("c1p").cast("double"))
         .otherwise(lit(alpha) *
           greatest(coalesce(col("c1c"), lit(0L)), lit(1L)).cast("double") /
-          lit(total.toDouble))
+          col("__T"))
         .as("__s"))
     df.select(idCol.as("id")).join(
         scored.groupBy("id").agg(avg(col("__s")).as("mean_tok_prob")),
@@ -228,54 +235,40 @@ object TextPipeline {
       alpha: Double = 0.4,
       reference: DataFrame = null): DataFrame = {
     val scored = lmQualityScore(df, textCol, idCol, alpha, reference)
-    // Persisted: three consumers (the range-partitioner's sample pass,
-    // the rank shuffle, the per-language counts) would each re-run the
-    // whole LM score chain — count-frame joins, not a scan projection.
-    // Slim rows (id, lang, score); the cache stays live with the
-    // returned lazy frame.
+    // Not persisted: the rank, the per-language counts and the tail
+    // branch read the same score exchanges, which the plan reuses.
     val base = df.select(idCol.as("id"), langCol.as("lang"))
       .join(scored, Seq("id"))
       .withColumn("__s6", round(col("mean_tok_prob"), 6))
-      .persist()
     // Terciles are computed over SCORABLE docs only: if unscorable docs
     // occupied ranks they would inflate the per-language count and
     // promote bottom-tercile scorable docs into head (a language with 3
     // scorable + 6 unscorable docs would put ALL scorable docs in
     // head). Unscorable docs bypass ranking entirely and union back in
     // as tail.
-    try {
-      val scorable = base.filter(col("__s6").isNotNull)
-      val ranked = RelationalOps.keyedRank(scorable, "lang",
-        Seq(col("__s6").desc, col("id").asc))
-      val counts = scorable.groupBy(col("lang").as("__clang"))
-        .agg(count(lit(1)).as("__n"))
-      val bucketNum = expr(
-        """CASE WHEN __rank <= ((__n div 3) + 1) * (__n % 3)
-          |     THEN (__rank - 1) div ((__n div 3) + 1) + 1
-          |     ELSE (__n % 3) +
-          |          (__rank - ((__n div 3) + 1) * (__n % 3) - 1)
-          |            div greatest(__n div 3, 1) + 1
-          |END""".stripMargin)
-      val bucketed = ranked
-        .join(broadcast(counts), col("lang") <=> col("__clang"))
-        .withColumn("__b", bucketNum)
+    val scorable = base.filter(col("__s6").isNotNull)
+    val ranked = RelationalOps.keyedRank(scorable, "lang",
+      Seq(col("__s6").desc, col("id").asc))
+    val counts = scorable.groupBy(col("lang").as("__clang"))
+      .agg(count(lit(1)).as("__n"))
+    val bucketNum = expr(
+      """CASE WHEN __rank <= ((__n div 3) + 1) * (__n % 3)
+        |     THEN (__rank - 1) div ((__n div 3) + 1) + 1
+        |     ELSE (__n % 3) +
+        |          (__rank - ((__n div 3) + 1) * (__n % 3) - 1)
+        |            div greatest(__n div 3, 1) + 1
+        |END""".stripMargin)
+    val bucketed = ranked
+      .join(broadcast(counts), col("lang") <=> col("__clang"))
+      .withColumn("__b", bucketNum)
+      .select(col("id"), col("lang"), col("mean_tok_prob"),
+        when(col("__b") === 1, "head")
+          .when(col("__b") === 2, "middle")
+          .otherwise("tail").as("ppl_bucket"))
+    bucketed.unionByName(
+      base.filter(col("__s6").isNull)
         .select(col("id"), col("lang"), col("mean_tok_prob"),
-          when(col("__b") === 1, "head")
-            .when(col("__b") === 2, "middle")
-            .otherwise("tail").as("ppl_bucket"))
-      bucketed.unionByName(
-        base.filter(col("__s6").isNull)
-          .select(col("id"), col("lang"), col("mean_tok_prob"),
-            lit("tail").as("ppl_bucket")))
-    } catch {
-      // building the frame can fail (a missing column); release the
-      // cached slim frame rather than leaking it in a long-lived
-      // session. keyedRank's cardinality cap fails later, when the
-      // query runs, and the cache then stays with the returned frame.
-      case e: Throwable =>
-        base.unpersist(blocking = false)
-        throw e
-    }
+          lit("tail").as("ppl_bucket")))
   }
 
   // RE2-compatible patterns (no lookarounds) — identical semantics under

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.engine.ParquetSchema
 import graft.operators.Projections
 
 /** Swaps `Aggregate(scan)` for a re-aggregation over a registered
@@ -104,7 +105,7 @@ case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     val entry = candidates.find(covered).getOrElse(return None)
 
-    val projScan = spark.read.parquet(entry.projDir).queryExecution.analyzed
+    val projScan = ParquetSchema.load(spark, entry.projDir).queryExecution.analyzed
     val byName = projScan.output.map(a => a.name -> a).toMap
     def proj(name: String): Attribute = byName(name)
 
@@ -179,7 +180,7 @@ case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       .sortBy(_.cols.length) // narrowest covering projection wins
       .headOption.getOrElse(return None)
 
-    val projScan = spark.read.parquet(entry.projDir).queryExecution.analyzed
+    val projScan = ParquetSchema.load(spark, entry.projDir).queryExecution.analyzed
     val byName = projScan.output.map(a => a.name -> a).toMap
     if (!neededNames.forall(byName.contains)) return None
     val filtered = filterCond match {

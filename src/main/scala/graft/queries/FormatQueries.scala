@@ -174,8 +174,8 @@ object FormatQueries {
         // the DISTRIBUTED path: multi-partition save() to a TSV file set,
         // read back with mapPartitions readLines (no driver round-trip)
         "save_tsv" -> {
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft_q76_save").resolve("tsv").toString
+          val dir = org.apache.spark.sql.graft.shim
+            .createTempDir("graft_q76_save").toPath.resolve("tsv").toString
           OutputFormats.save(base.repartition(4), dir, "TSV")
           InputFormats.readLines(s.read.textFile(dir), "TSV", fmtStructure)
         })

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
 
 import graft.engine.Tables.t
 import graft.functions.text
@@ -229,7 +230,7 @@ object PipelineQueries {
       import graft.streaming.FileLogEngine
       import java.nio.file.{Files, StandardOpenOption}
       import java.nio.charset.StandardCharsets
-      val dir = Files.createTempDirectory("graft-q84")
+      val dir = shim.createTempDir("graft-q84").toPath
       val a = dir.resolve("a.csv")
       def put(lines: Seq[String]): Unit =
         Files.write(a, lines.mkString("", "\n", "\n")
@@ -264,8 +265,8 @@ object PipelineQueries {
       import graft.streaming.FileLogEngine
       import java.nio.file.{Files, StandardOpenOption}
       import java.nio.charset.StandardCharsets
-      val dir = Files.createTempDirectory("graft-q85")
-      val sinkRoot = Files.createTempDirectory("graft-q85-sink")
+      val dir = shim.createTempDir("graft-q85").toPath
+      val sinkRoot = shim.createTempDir("graft-q85-sink").toPath
       val sink = sinkRoot.resolve("mv_target").toString
       def put(f: String, lines: Seq[String]): Unit =
         Files.write(dir.resolve(f), lines.mkString("", "\n", "\n")
@@ -284,7 +285,7 @@ object PipelineQueries {
       put("a.csv", (13 to 25).map(i => s"$i,${i * 7}"))
       put("b.csv", (100 to 110).map(i => s"$i,${i * 7}"))
       mvInsert()
-      val total = s.read.parquet(sink)
+      val total = graft.engine.ParquetSchema.load(s, sink)
         .agg(count(lit(1)).as("n"), sum(col("k")).as("k_sum"),
           sum(col("v")).as("v_sum"), sum(col("sv")).as("sv_sum"))
         .localCheckpoint(true) // materialize before the dirs go

@@ -633,6 +633,7 @@ object VectorQueries {
     "v09_ivf_nprobe" -> ((s, dir) => {
       val idx = ivfDir(s, dir)
       val q = queryVec(s, dir)
+      // every list_id= partition, so Spark's partition discovery reads it
       val assigns = s.read.parquet(s"$idx/lists").select("vec_id", "list_id")
         .collect().map(r => (r.getLong(0), r.get(1).toString.toInt))
         .sortBy(_._1)
@@ -677,6 +678,7 @@ object VectorQueries {
     "v15_binary_ivf" -> ((s, dir) => {
       val idx = bivfDir(s, dir)
       val q = bquery(s, dir)
+      // every list_id= partition, so Spark's partition discovery reads it
       val assigns = s.read.parquet(s"$idx/lists").select("doc_id", "list_id")
         .collect().map(r => (r.getLong(0), r.get(1).toString.toInt))
         .sortBy(_._1)

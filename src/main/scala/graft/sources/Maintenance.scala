@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.engine.ParquetSchema
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
 
@@ -58,7 +59,7 @@ object Maintenance {
       return CompactionResult(0, 0, 0L, 0L)
     val nOut = math.max(1, math.ceil(bytesBefore.toDouble / targetFileBytes).toInt)
 
-    val df0 = spark.read.parquet(dir)
+    val df0 = ParquetSchema.load(spark, dir)
     val df = if (deduplicate) df0.dropDuplicates() else df0
     val writer = {
       val base =
@@ -100,7 +101,7 @@ object Maintenance {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val df = spark.read.parquet(dir)
+    val df = ParquetSchema.load(spark, dir)
     val before = df.count()
     // NULL TTL expressions keep the row (the reference's behavior)
     val kept = df.filter(not(coalesce(expireWhen, lit(false))))
@@ -130,7 +131,7 @@ object Maintenance {
     val old = new Path(p.getParent, s".${p.getName}.ttl.old")
     if (fs.exists(old)) fs.delete(old, true)
     swap(fs, p, tmp, old)
-    val after = spark.read.parquet(dir).count()
+    val after = ParquetSchema.load(spark, dir).count()
     TtlResult(before, before - after, fileCount(fs, p))
   }
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.engine.ParquetSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -67,7 +68,7 @@ object TableFunctions {
         .option("sep", if (path.endsWith(".tsv")) "\t" else ",").csv(path)
       case "json"    => spark.read.json(path)
       case "orc"     => spark.read.orc(path)
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => ParquetSchema.load(spark, path)
       case _ =>
         // reference-only formats (Values/TSKV/RowBinary*/MySQLDump/…):
         // single local file through the format parsers

@@ -362,7 +362,7 @@ object FileLogEngine {
   def create(name: String, dir: String, format: String, structure: String,
       metaDir: Option[String] = None): Table = {
     val meta = metaDir.getOrElse(
-      Files.createTempDirectory(s"graft-filelog-$name").toString)
+      org.apache.spark.sql.graft.shim.createTempDir(s"graft-filelog-$name").toString)
     val t = new Table(name, dir, format, structure, meta)
     registry.put(name, t)
     t

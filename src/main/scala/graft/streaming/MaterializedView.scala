@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.engine.ParquetSchema
 import graft.functions.StateCombinators
 
 /** Incremental materialized views over streams — the reference's
@@ -41,7 +42,8 @@ object MaterializedView {
 
   /** Finalized view: merge all state rows (any number of batches). */
   def read(spark: SparkSession, statePath: String, keys: Seq[String]): DataFrame =
-    StateCombinators.mergeStates(spark.read.parquet(statePath), keys.map(col))
+    StateCombinators.mergeStates(ParquetSchema.load(spark, statePath),
+      keys.map(col))
 
   /** LiveView (reference `registerStorages.cpp:24`, `StorageLiveView`):
     * an always-current in-memory result of a query over a stream.

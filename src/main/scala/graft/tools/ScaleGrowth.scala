@@ -84,8 +84,8 @@ object ScaleGrowth {
       val out = s"$workRoot/x$factor"
       val marker = java.nio.file.Paths.get(s"$out/_DONE")
       if (java.nio.file.Files.exists(marker)) return out
-      val docs = spark.read.parquet(s"$baseDir/documents.parquet")
-      val embs = spark.read.parquet(s"$baseDir/embeddings.parquet")
+      val docs = graft.engine.Tables.t(spark, baseDir, "documents")
+      val embs = graft.engine.Tables.t(spark, baseDir, "embeddings")
       val letters = ('a' to 'z').mkString
       val digits = ('0' to '9').mkString
       // deterministic per-replica alphabet permutation (Fisher–Yates over

@@ -40,6 +40,33 @@ object shim {
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** The session's SQL conf (`sessionState` is `private[sql]`). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** The Hadoop conf a file-source read of `spark` with `options` uses. */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession,
+      options: Map[String, String]): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConfWithOptions(options)
+
+  /** `schema` with every field nullable, as a file-source relation
+    * reads it (`StructType.asNullable` is `private[spark]`).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
+  /** The `PATH_NOT_FOUND` error `spark.read.parquet` raises for `path`. */
+  def pathNotFound(path: String): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.dataPathNotExistError(path)
+
+  /** The `UNABLE_TO_INFER_SCHEMA` error `spark.read.<format>` raises for
+    * a path with no data file.
+    */
+  def unableToInferSchema(format: String): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.dataSchemaNotSpecifiedError(format)
+
   /** A fresh directory `<namePrefix>-<uuid>` under `java.io.tmpdir` that
     * the JVM deletes at shutdown (`Utils.createTempDir` is
     * `private[spark]`).

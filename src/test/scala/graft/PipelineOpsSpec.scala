@@ -548,6 +548,16 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got === exp)
   }
 
+  test("t20/t21 run no job while built and leave no persisted frame") {
+    for (q <- Seq("t20_lm_quality", "t21_ppl_buckets")) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val (df, jobs) = jobsDuring(SparkEntry.queries(q)(spark, sfDir))
+      assert(jobs === 0, q)
+      assert(df.collect().nonEmpty, q)
+      assert(spark.sparkContext.getPersistentRDDs.size === before, q)
+    }
+  }
+
   test("perplexityBuckets: equal-count per-lang terciles, fluent docs in head") {
     import graft.operators.TextPipeline
     // 6 'aa' docs: the repeated phrase is high-probability, the shuffled
