@@ -20,7 +20,7 @@ class ParquetSchemaSpec extends SparkSpec {
 
   for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
     test(s"Tables.t has Spark's inferred schema for all 10 tables at $sf") {
-      val dir = s"/root/testdata/$sf"
+      val dir = s"${new java.io.File(sfDir).getParent}/$sf"
       tables.foreach { name =>
         assert(Tables.t(spark, dir, name).schema ===
           spark.read.parquet(s"$dir/$name.parquet").schema, name)
