@@ -1,13 +1,13 @@
 package graft.engine
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -27,9 +27,9 @@ import scala.util.Try
   * the driver, so `spark.read.schema(read(spark, p)).parquet(p)` plans
   * the scan Spark's inference would and starts no job.
   *
-  * Spark's own inference still runs when `mergeSchema` is on (every
-  * footer counts) and for a directory with subdirectories (partition
-  * discovery).
+  * Spark's own inference still runs when the session conf turns
+  * `mergeSchema` on (every footer counts) and for a directory with
+  * subdirectories (partition discovery).
   *
   * Nothing is cached: the footer is read on every call, so a table
   * rewritten by another JVM is seen at once.
@@ -43,16 +43,15 @@ object ParquetSchema {
   def load(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(read(spark, path)).parquet(path)
 
-  /** The schema `spark.read.options(options).parquet(path)` infers
-    * (every field nullable, as a file-source relation reads it). A
-    * missing path or a directory without a data file fails with the
-    * error class Spark raises (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`).
+  /** The schema `spark.read.parquet(path)` infers (every field
+    * nullable, as a file-source relation reads it). A missing path or a
+    * directory without a data file fails with the error class Spark
+    * raises (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`).
     */
-  def read(spark: SparkSession, path: String,
-      options: Map[String, String] = Map.empty): StructType = {
-    def inferred = spark.read.options(options).parquet(path).schema
-    if (new ParquetOptions(options, shim.sqlConf(spark)).mergeSchema) return inferred
-    val conf = shim.hadoopConf(spark, options)
+  def read(spark: SparkSession, path: String): StructType = {
+    def inferred = spark.read.parquet(path).schema
+    if (shim.sqlConf(spark).isParquetSchemaMergingEnabled) return inferred
+    val conf = shim.hadoopConf(spark)
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val root = try fs.getFileStatus(p) catch {
@@ -62,24 +61,24 @@ object ParquetSchema {
     val file =
       if (root.isFile) p
       else {
-        val visible = fs.listStatus(p).filter(s => isVisible(s.getPath.getName))
-        if (visible.exists(_.isDirectory)) return inferred
-        val files = visible.map(_.getPath).sortBy(_.toString)
-        def named(n: String) = files.find(_.getName == n)
-        named("_common_metadata").orElse(named("_metadata"))
-          .orElse(files.find(f => !isSummary(f.getName)))
-          .getOrElse(throw shim.unableToInferSchema("Parquet"))
+        val listing = fs.listStatus(p).toSeq
+        if (listing.exists(s => s.isDirectory && isVisible(s.getPath.getName))) return inferred
+        schemaFile(listing).getOrElse(throw shim.unableToInferSchema("Parquet"))
       }
     shim.asNullable(footer(spark, conf, file))
   }
 
-  /** Data files directly under `dir`, in path order: what Spark lists,
-    * less the `_metadata`/`_common_metadata` summaries.
+  /** The file among one directory's `listing` whose footer Spark's
+    * inference reads with `mergeSchema` off: a `_common_metadata` or
+    * `_metadata` summary, else the first visible data file in path order.
     */
-  private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
-    fs.listStatus(dir).iterator.filter(_.isFile).map(_.getPath)
-      .filter(f => isVisible(f.getName) && !isSummary(f.getName))
-      .toSeq.sortBy(_.toString)
+  private[graft] def schemaFile(listing: Seq[FileStatus]): Option[Path] = {
+    val files = listing.filter(s => s.isFile && isVisible(s.getPath.getName))
+      .map(_.getPath).sortBy(_.toString)
+    def named(n: String) = files.find(_.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !isSummary(f.getName)))
+  }
 
   /** The row schema in the footer of `file`: Spark's row-metadata key if
     * present and parseable, else the parquet schema converted under the

@@ -58,15 +58,16 @@ private[graft] object ProbedPartitions {
       .toMap
   }
 
-  /** Row schema from the footer of the first data file found in `dirs`
-    * ([[graft.engine.ParquetSchema.footer]]), plus the INT partition
-    * column.
+  /** Row schema from the footer of the first partition in `dirs` that
+    * holds a data file ([[graft.engine.ParquetSchema.schemaFile]] picks the
+    * file, [[graft.engine.ParquetSchema.footer]] reads it), plus the INT
+    * partition column.
     */
   private def schema(spark: SparkSession, root: String, partCol: String,
       dirs: Seq[Path]): StructType = {
     val conf = spark.sparkContext.hadoopConfiguration
     val file = dirs.iterator
-      .flatMap(d => ParquetSchema.dataFiles(d.getFileSystem(conf), d).headOption)
+      .flatMap(d => ParquetSchema.schemaFile(d.getFileSystem(conf).listStatus(d).toSeq))
       .nextOption().getOrElse(throw new IllegalStateException(
         s"no parquet data file under any partition of $root"))
     ParquetSchema.footer(spark, conf, file).add(partCol, IntegerType)

@@ -45,11 +45,11 @@ object shim {
       : org.apache.spark.sql.internal.SQLConf =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
 
-  /** The Hadoop conf a file-source read of `spark` with `options` uses. */
-  def hadoopConf(spark: org.apache.spark.sql.SparkSession,
-      options: Map[String, String]): org.apache.hadoop.conf.Configuration =
+  /** The Hadoop conf a file-source read of `spark` uses. */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.newHadoopConfWithOptions(options)
+      .sessionState.newHadoopConf()
 
   /** `schema` with every field nullable, as a file-source relation
     * reads it (`StructType.asNullable` is `private[spark]`).

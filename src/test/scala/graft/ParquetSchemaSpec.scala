@@ -54,13 +54,12 @@ class ParquetSchemaSpec extends SparkSpec {
     assert(ParquetSchema.read(spark, dir).fieldNames.toSeq === Seq("id", "x", "y"))
   }
 
-  test("mergeSchema, as a reader option or the session conf, defers to Spark") {
+  test("mergeSchema on in the session conf defers to Spark") {
     val dir = tempDir("pschema-merge").resolve("t").toString
     Seq((1L, "a")).toDF("id", "name").write.parquet(dir)
     Seq((2L, 0.5)).toDF("id", "x").write.mode("append").parquet(dir)
     val merged = spark.read.option("mergeSchema", "true").parquet(dir).schema
     assert(merged.fieldNames.toSet === Set("id", "name", "x"))
-    assert(ParquetSchema.read(spark, dir, Map("mergeSchema" -> "true")) === merged)
     spark.conf.set("spark.sql.parquet.mergeSchema", "true")
     try assert(ParquetSchema.read(spark, dir) === merged)
     finally spark.conf.unset("spark.sql.parquet.mergeSchema")
