@@ -14,7 +14,8 @@ import graft.functions.text
   * `src/VectorIndex/TableFunctions/TableFunctionFtsIndex.cpp`).
   *
   * Layout under `indexDir` (plain parquet + JSON):
-  *   - `postings/` — one row per (term, doc): `(term, doc_id, tf, dl)`,
+  *   - `postings/` — one row per (term, doc): `(term, doc_id, dl, tf,
+  *     positions)`,
   *     hive-partitioned by `bucket = floorMod(term.hashCode, nBuckets)` so
   *     a query's terms prune to ≤ |terms| bucket directories at the FILE
   *     level. A term's postings live entirely in its bucket, so per-term
@@ -28,17 +29,18 @@ import graft.functions.text
   * Query cost: ≤ |terms| bucket partitions (tiny fraction of the
   * postings), read twice inside one plan (per-term df, then scoring) —
   * versus the index-less path's two full corpus scans per query; no job
-  * runs while the search is built. Build cost: one stats pass + one
-  * explode/groupBy shuffle (the classic distributed inverted-index
-  * build, map-side combined).
+  * runs while the search is built. Build cost: `build` is an `append`
+  * into an empty index — one stats pass (N, token total) and one
+  * explode/groupBy shuffle writing the postings (the classic distributed
+  * inverted-index build, map-side combined).
   *
   * Scoring is identical to [[TextSearch]] (Tantivy BM25, k1=1.2, b=0.75)
   * so the indexed path reproduces the non-indexed results exactly.
   */
 object FtsIndex {
 
-  /** `totalDl` is the exact token total that appends add to; `avgDl` is
-    * derived from it.
+  /** `totalDl` is the exact token total of the indexed documents, which
+    * appends add to; `avgDl` is `totalDl / nDocs`.
     */
   case class Meta(nDocs: Long, avgDl: Double, nBuckets: Int, textCol: String,
       totalDl: Double)
@@ -69,8 +71,9 @@ object FtsIndex {
   def bucketOf(term: String, nBuckets: Int): Int =
     math.floorMod(term.hashCode, nBuckets)
 
-  /** Build the inverted index. Two jobs: a stats pass (N, avgdl) and the
-    * tokenize→explode→count shuffle writing bucket-partitioned postings.
+  /** Build the inverted index: an [[append]] into an empty index. The
+    * old postings go, an empty [[Meta]] is written under a new build id,
+    * and the append writes every document's postings and the stats.
     */
   def build(
       spark: SparkSession,
@@ -82,52 +85,29 @@ object FtsIndex {
       nBuckets: Int = 64,
       sourcePath: String = ""): Entry = {
     Catalog.register(Entry(indexName, indexDir, sourcePath, textCol, "BUILDING", 0L))
-    val base = df
-      .select(col(idCol).cast("long").as("doc_id"), text.tokenize(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("double"))
-
-    val statsRow = base.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).head()
-    val nDocs = statsRow.getAs[Long]("n")
-    // empty corpus → avg() is NULL; an empty index is legal (appends fill it)
-    val avgDl = Option(statsRow.get(1)).map(_.toString.toDouble).getOrElse(0.0)
-
-    val nb = nBuckets
-    val bucketU = udf((t: String) => math.floorMod(t.hashCode, nb))
-    postingsOf(base, bucketU)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexDir/postings")
-
-    IndexArtifact.write(indexDir, "FTS",
-      Meta(nDocs, avgDl, nBuckets, textCol, nDocs * avgDl))
-    val entry = Entry(indexName, indexDir, sourcePath, textCol, "BUILT", nDocs)
+    val postings = new org.apache.hadoop.fs.Path(indexDir, "postings")
+    postings.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(postings, true)
+    IndexArtifact.write(indexDir, "FTS", Meta(0L, 0.0, nBuckets, textCol, 0.0))
+    val meta = append(spark, df, idCol, textCol, indexDir)
+    val entry = Entry(indexName, indexDir, sourcePath, textCol, "BUILT", meta.nDocs)
     Catalog.register(entry)
     entry
   }
 
-  /** Postings rows with POSITIONAL information: `(term, doc_id, dl, tf,
+  /** Incremental maintenance — the reference's insert-time index update
+    * (`VIBuilderUpdater.cpp` lifecycle: new parts get indexed without
+    * rebuilding old ones), and the one postings writer. New documents'
+    * postings are APPENDED into the bucket directories (immutable-file
+    * semantics: new parquet files only) and the global stats are updated
+    * incrementally; per-term df at query time comes from the pruned
+    * read, which lists the bucket directories on every query, so
+    * appended postings participate immediately. Callers must not
+    * re-append existing doc ids.
+    *
+    * Postings rows carry POSITIONAL information: `(term, doc_id, dl, tf,
     * positions[], bucket)` — positions are the 0-based token offsets of
     * the term in the document (Tantivy's positional postings), enabling
     * index-side phrase matching.
-    */
-  private def postingsOf(
-      base: DataFrame,
-      bucketU: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame =
-    base
-      .select(col("doc_id"), col("dl"),
-        posexplode(col("toks")).as(Seq("pos", "term")))
-      .groupBy(col("term"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).cast("double").as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .withColumn("bucket", bucketU(col("term")))
-
-  /** Incremental maintenance — the reference's insert-time index update
-    * (`VIBuilderUpdater.cpp` lifecycle: new parts get indexed without
-    * rebuilding old ones). New documents' postings are APPENDED into the
-    * same bucket directories (immutable-file semantics: new parquet files
-    * only) and the global stats are updated incrementally; per-term df at
-    * query time comes from the pruned read, which lists the bucket
-    * directories on every query, so appended postings participate
-    * immediately. Callers must not re-append existing doc ids.
     */
   def append(
       spark: SparkSession,
@@ -147,8 +127,14 @@ object FtsIndex {
     if (nNew == 0) return meta
 
     val nb = meta.nBuckets
-    val bucketU = udf((t: String) => math.floorMod(t.hashCode, nb))
-    postingsOf(base, bucketU)
+    val bucketU = udf((t: String) => bucketOf(t, nb))
+    base
+      .select(col("doc_id"), col("dl"),
+        posexplode(col("toks")).as(Seq("pos", "term")))
+      .groupBy(col("term"), col("doc_id"), col("dl"))
+      .agg(count(lit(1)).cast("double").as("tf"),
+        sort_array(collect_list(col("pos"))).as("positions"))
+      .withColumn("bucket", bucketU(col("term")))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"$indexDir/postings")
 
@@ -163,14 +149,26 @@ object FtsIndex {
   private[graft] def loadMeta(indexDir: String): Meta =
     IndexArtifact.read(indexDir, classOf[Meta]).meta
 
+  /** The postings in the buckets of `terms` — the one pruned read of
+    * `postings/` (an empty frame when none of those buckets exists).
+    */
+  private def termBuckets(spark: SparkSession, indexDir: String, meta: Meta,
+      terms: Seq[String]): DataFrame =
+    ProbedPartitions.read(spark, s"$indexDir/postings", "bucket",
+      terms.map(bucketOf(_, meta.nBuckets)).distinct)
+
+  private def noDocs(spark: SparkSession, scoreName: String): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
+  }
+
   /** BM25 top-K against the postings index. One plan, no driver job:
     * the pruned postings read lists only the query terms' bucket
-    * directories, per-term df is a `groupBy(term).count` over that read
-    * broadcast-joined back to it (bucket partitioning makes it
-    * table-global), idf is the Scala [[idf]] through a UDF (bit-identical
-    * to the former driver-folded literals; Spark's `log` is StrictMath),
-    * the per-doc score is a single hash aggregation, and the top-K is the
-    * usual TakeOrderedAndProject. Returns `(doc_id, <scoreName>)`.
+    * directories and [[TextSearch.scorePostings]] scores them (per-term
+    * df aggregated in the plan and broadcast back — bucket partitioning
+    * makes it table-global — then one per-doc hash aggregation); the
+    * top-K is the usual TakeOrderedAndProject. Returns `(doc_id,
+    * <scoreName>)`.
     */
   def search(
       spark: SparkSession,
@@ -181,38 +179,16 @@ object FtsIndex {
       scoreName: String = "bm25_score",
       tieBreak: Seq[Column] = Nil,
       deletedIds: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
     val meta = loadMeta(indexDir)
     val terms = TextSearch.queryTerms(query)
-    lazy val empty = Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
     // empty index (built before any append) has no postings files at all
-    if (terms.isEmpty || meta.nDocs == 0) return empty
+    if (terms.isEmpty || meta.nDocs == 0) return noDocs(spark, scoreName)
 
-    val buckets = terms.map(bucketOf(_, meta.nBuckets)).distinct
-    val posts =
-      ProbedPartitions.readPresent(spark, s"$indexDir/postings", "bucket", buckets) match {
-        case Some(p) => p.filter(col("term").isin(terms: _*))
-        case None    => return empty // no query term's bucket has postings
-      }
-
-    // df per query term (≤ |terms| rows), computed in the plan
-    val dfs = posts.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    val nDocs = meta.nDocs
-    val idfU = udf((df: Long) => idf(nDocs, df))
-    val contrib = idfU(col("__df")) * col("tf") * lit(TextSearch.K1 + 1.0) /
-      (col("tf") + lit(TextSearch.K1) *
-        (lit(1.0 - TextSearch.B) + lit(TextSearch.B) * col("dl") / meta.avgDl))
-
-    val scored = posts.join(broadcast(dfs), "term")
-      .withColumn("__c", contrib)
-      .groupBy(col("doc_id"))
-      .agg(sum(col("__c")).as(scoreName), count(lit(1)).as("__nterms"))
+    val posts = termBuckets(spark, indexDir, meta, terms).filter(col("term").isin(terms: _*))
     // AND: every (distinct) query term posts for the doc; a term missing
     // from the index matches no doc
-    val matched = operator.toUpperCase match {
-      case "AND" => scored.filter(col("__nterms") === terms.size)
-      case _     => scored
-    }
+    val matched = TextSearch.scorePostings(posts, "doc_id", meta.nDocs, meta.avgDl,
+      scoreName, if (TextSearch.isAnd(operator)) terms.size else 0)
     // Lightweight-DELETE mask (reference 00040_mqvs_hybrid_search_with_lwd
     // over a part WITH a Tantivy index): deleted rows vanish from the
     // RESULT while the index-resident statistics (N, avgdl, df) keep
@@ -226,20 +202,18 @@ object FtsIndex {
           .as("doc_id"))), Seq("doc_id"), "left_anti")
       case None => matched
     }
-    masked.drop("__nterms")
-      .orderBy(col(scoreName).desc +: tieBreak: _*)
-      .limit(k)
+    masked.orderBy(col(scoreName).desc +: tieBreak: _*).limit(k)
   }
-
-  private def idf(n: Long, df: Long): Double =
-    math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
   /** `enable_nlq` search against the positional postings index — the
     * index-side twin of [[TextSearch.textSearchNlq]]. Phrases resolve by
     * chaining per-term position lists (`valid ∩ (positions - 1)` folds,
     * Tantivy-style) over the pruned postings; `+must`/`-mustNot` are
-    * semi/anti joins on per-term doc sets; scoring is BM25 over the
-    * scored terms. One pruned-bucket scan per query, no corpus access.
+    * semi/anti joins on per-term doc sets, so a must or phrase term
+    * without postings empties the result; scoring is
+    * [[TextSearch.scorePostings]] over the scored terms. One
+    * pruned-bucket read per query, no corpus access, no job while it is
+    * built.
     */
   def searchNlq(
       spark: SparkSession,
@@ -248,82 +222,57 @@ object FtsIndex {
       k: Int,
       scoreName: String = "bm25_score",
       tieBreak: Seq[Column] = Nil): DataFrame = {
-    import spark.implicits._
     val meta = loadMeta(indexDir)
     val nlq = TextSearch.parseNlq(query)
     val scored = nlq.scoredTerms
     val allTerms = (scored ++ nlq.mustNot).distinct
-    if (scored.isEmpty || meta.nDocs == 0)
-      return Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
+    if (scored.isEmpty || meta.nDocs == 0) return noDocs(spark, scoreName)
 
-    val buckets = allTerms.map(bucketOf(_, meta.nBuckets)).distinct
-    // multiple lazy passes over the pruned postings — each is a
+    // several lazy passes over the pruned postings — each is a
     // partition-pruned scan of ≤ |terms| buckets, no caching needed
-    val posts = ProbedPartitions.read(spark, s"$indexDir/postings", "bucket", buckets)
+    val posts = termBuckets(spark, indexDir, meta, allTerms)
       .filter(col("term").isin(allTerms: _*))
 
-    val dfByTerm = posts.filter(col("term").isin(scored: _*))
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // a missing must/phrase term empties the result (direct-path
-      // parity); missing SHOULD terms merely score nothing
-      val required = (nlq.must ++ nlq.phrases.flatten).distinct
-      if (required.exists(t => dfByTerm.getOrElse(t, 0L) == 0L))
-        return Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
-      val live = scored.filter(t => dfByTerm.getOrElse(t, 0L) > 0L)
-      if (live.isEmpty)
-        return Seq.empty[(Long, Double)].toDF("doc_id", scoreName)
+    def docsWith(terms: Seq[String], requireAll: Boolean): Option[DataFrame] =
+      if (terms.isEmpty) None
+      else if (requireAll) Some(
+        posts.filter(col("term").isin(terms: _*))
+          .groupBy(col("doc_id")).agg(countDistinct(col("term")).as("__nt"))
+          .filter(col("__nt") === terms.size).select("doc_id"))
+      else Some(
+        posts.filter(col("term").isin(terms: _*)).select("doc_id").distinct())
 
-      def docsWith(terms: Seq[String], requireAll: Boolean): Option[DataFrame] =
-        if (terms.isEmpty) None
-        else if (requireAll) Some(
-          posts.filter(col("term").isin(terms: _*))
-            .groupBy(col("doc_id")).agg(countDistinct(col("term")).as("__nt"))
-            .filter(col("__nt") === terms.size).select("doc_id"))
-        else Some(
-          posts.filter(col("term").isin(terms: _*)).select("doc_id").distinct())
-
-      /** Docs containing the phrase: fold `valid = (valid + 1) ∩ pos_i`. */
-      def phraseDocs(phrase: Seq[String]): DataFrame = {
-        var cur = posts.filter(col("term") === phrase.head)
-          .select(col("doc_id"), col("positions").as("__valid"))
-        phrase.tail.foreach { t =>
-          val nxt = posts.filter(col("term") === t)
-            .select(col("doc_id"), col("positions").as("__p2"))
-          cur = cur.join(nxt, "doc_id")
-            .withColumn("__valid",
-              array_intersect(transform(col("__valid"), x => x + 1), col("__p2")))
-            .filter(size(col("__valid")) > 0)
-            .select(col("doc_id"), col("__valid"))
-        }
-        cur.select("doc_id")
+    /** Docs containing the phrase: fold `valid = (valid + 1) ∩ pos_i`. */
+    def phraseDocs(phrase: Seq[String]): DataFrame = {
+      var cur = posts.filter(col("term") === phrase.head)
+        .select(col("doc_id"), col("positions").as("__valid"))
+      phrase.tail.foreach { t =>
+        val nxt = posts.filter(col("term") === t)
+          .select(col("doc_id"), col("positions").as("__p2"))
+        cur = cur.join(nxt, "doc_id")
+          .withColumn("__valid",
+            array_intersect(transform(col("__valid"), x => x + 1), col("__p2")))
+          .filter(size(col("__valid")) > 0)
+          .select(col("doc_id"), col("__valid"))
       }
+      cur.select("doc_id")
+    }
 
-      val constraints =
-        nlq.phrases.map(phraseDocs) ++
-          docsWith(nlq.must, requireAll = true).toSeq ++
-          (if (nlq.must.isEmpty && nlq.phrases.isEmpty)
-            docsWith(nlq.should, requireAll = false).toSeq
-          else Nil)
-      var matched = constraints.reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-      docsWith(nlq.mustNot, requireAll = false).foreach { banned =>
-        matched = matched.join(banned, Seq("doc_id"), "left_anti")
-      }
+    val constraints =
+      nlq.phrases.map(phraseDocs) ++
+        docsWith(nlq.must, requireAll = true).toSeq ++
+        (if (nlq.must.isEmpty && nlq.phrases.isEmpty)
+          docsWith(nlq.should, requireAll = false).toSeq
+        else Nil)
+    var matched = constraints.reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
+    docsWith(nlq.mustNot, requireAll = false).foreach { banned =>
+      matched = matched.join(banned, Seq("doc_id"), "left_anti")
+    }
 
-      val idfCol = live.tail.foldLeft(
-        when(col("term") === live.head, lit(idf(meta.nDocs, dfByTerm(live.head))))) {
-        (acc, t) => acc.when(col("term") === t, lit(idf(meta.nDocs, dfByTerm(t))))
-      }.otherwise(lit(0.0))
-      val contrib = idfCol * col("tf") * lit(TextSearch.K1 + 1.0) /
-        (col("tf") + lit(TextSearch.K1) *
-          (lit(1.0 - TextSearch.B) + lit(TextSearch.B) * col("dl") / meta.avgDl))
-      posts.filter(col("term").isin(live: _*))
-        .join(matched, Seq("doc_id"), "left_semi")
-        .withColumn("__c", contrib)
-        .groupBy(col("doc_id"))
-        .agg(sum(col("__c")).as(scoreName))
-        .orderBy(col(scoreName).desc +: tieBreak: _*)
-        .limit(k)
+    TextSearch.scorePostings(posts.filter(col("term").isin(scored: _*)), "doc_id",
+        meta.nDocs, meta.avgDl, scoreName, only = Some(matched))
+      .orderBy(col(scoreName).desc +: tieBreak: _*)
+      .limit(k)
   }
 
   /** `fts_index(table)` TVF analog: per-term statistics straight off the
@@ -354,8 +303,7 @@ object FtsIndex {
     val meta = loadMeta(indexDir)
     val terms = TextSearch.queryTerms(query)
     require(terms.nonEmpty, s"fts_index: no terms in query '$query'")
-    val buckets = terms.map(bucketOf(_, meta.nBuckets)).distinct
-    val posts = ProbedPartitions.read(spark, s"$indexDir/postings", "bucket", buckets)
+    val posts = termBuckets(spark, indexDir, meta, terms)
     val termFreq = posts
       .filter(col("term").isin(terms: _*))
       .groupBy(col("bucket"), col("term"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -71,14 +71,21 @@ object HybridSearch {
     val t = normalized(textCandidates, bm25Col, "__norm_b")
       .withColumn("__text_term", col("__norm_b") * lit(fusionWeight))
       .select(col(idCol), col("__text_term"))
+    sumTerms(v, t, idCol, k, fusedName, tieBreak)
+  }
 
+  /** The fusion tail of [[rsf]] and [[rrf]]: full outer join of the two
+    * per-list terms on the id, their sum (a list that misses the id
+    * adds 0), top `k`.
+    */
+  private def sumTerms(v: DataFrame, t: DataFrame, idCol: String, k: Int,
+      fusedName: String, tieBreak: Seq[Column]): DataFrame =
     v.join(t, Seq(idCol), "full_outer")
       .withColumn(fusedName,
         coalesce(col("__vec_term"), lit(0.0)) + coalesce(col("__text_term"), lit(0.0)))
       .select(col(idCol), col(fusedName))
       .orderBy(col(fusedName).desc +: tieBreak: _*)
       .limit(k)
-  }
 
   /** Reciprocal-rank fusion. Ranks are 1-based positions in each candidate
     * list ordered by its own score (dist asc/desc per metric; bm25 desc).
@@ -106,14 +113,43 @@ object HybridSearch {
       .withColumn("__rank",
         row_number().over(Window.orderBy(col(bm25Col).desc, col(idCol))))
       .select(col(idCol), (lit(1.0) / (lit(rrfK) + col("__rank"))).as("__text_term"))
-
-    v.join(t, Seq(idCol), "full_outer")
-      .withColumn(fusedName,
-        coalesce(col("__vec_term"), lit(0.0)) + coalesce(col("__text_term"), lit(0.0)))
-      .select(col(idCol), col(fusedName))
-      .orderBy(col(fusedName).desc +: tieBreak: _*)
-      .limit(k)
+    sumTerms(v, t, idCol, k, fusedName, tieBreak)
   }
+
+  /** The one fusion step of the hybrid family: `vecCand` (idCol, dist)
+    * and `textCand` (idCol, bm25_score), each `k * TopKMultipleBase`
+    * candidates, fused by `fusionType` ("rrf", else RSF) into (idCol,
+    * fused_score) top-`k`, ties broken by the id.
+    */
+  private def fuse(vecCand: DataFrame, textCand: DataFrame, idCol: String, k: Int,
+      fusionType: String, metric: String, fusionWeight: Double, rrfK: Int): DataFrame = {
+    val distAsc = !metric.equalsIgnoreCase("ip")
+    fusionType.toLowerCase match {
+      case "rrf" =>
+        rrf(vecCand, textCand, idCol, "dist", "bm25_score", k, rrfK, distAsc,
+          "fused_score", Seq(col(idCol)))
+      case _ =>
+        rsf(vecCand, textCand, idCol, "dist", "bm25_score", k, fusionWeight,
+          distAsc, "fused_score", Seq(col(idCol)))
+    }
+  }
+
+  /** Brute-force vector leg: the exact top `nCand` of `df` by `metric`. */
+  private def bruteLeg(df: DataFrame, idCol: String, vecCol: Column, qvec: Seq[Float],
+      nCand: Int, metric: String): DataFrame =
+    VectorSearch.topK(df, vecCol, qvec, nCand, metric, None, "dist", Seq(col(idCol)))
+      .select(col(idCol), col("dist"))
+
+  /** FTS-index text leg: the top `nCand` of the persisted postings, with
+    * `doc_id` renamed to `idCol`.
+    */
+  private def ftsLeg(spark: SparkSession, ftsIndexDir: String, qtext: String, nCand: Int,
+      idCol: String, deletedIds: Option[DataFrame]): DataFrame =
+    FtsIndex
+      .search(spark, ftsIndexDir, qtext, nCand, "OR", "bm25_score",
+        Seq(col("doc_id")), deletedIds = deletedIds)
+      .withColumnRenamed("doc_id", idCol)
+      .select(col(idCol), col("bm25_score"))
 
   /** `hybridsearch('fusion_type=...')(v, doc, qvec, qtext) ... LIMIT k`:
     * runs both sub-searches over `df` (vector brute/IVF + BM25 text),
@@ -132,31 +168,19 @@ object HybridSearch {
       fusionWeight: Double = DefaultFusionWeight,
       rrfK: Int = DefaultRrfK): DataFrame = {
     val nCand = k * TopKMultipleBase
-    val distAsc = !metric.equalsIgnoreCase("ip")
-    val vecCand = VectorSearch
-      .topK(df, vecCol, qvec, nCand, metric, None, "dist", Seq(col(idCol)))
-      .select(col(idCol), col("dist"))
     val textCand = TextSearch
       .textSearch(df, textCol, qtext, nCand, "OR", "bm25_score", Seq(col(idCol)))
       .select(col(idCol), col("bm25_score"))
-    val fused = fusionType.toLowerCase match {
-      case "rrf" =>
-        rrf(vecCand, textCand, idCol, "dist", "bm25_score", k, rrfK, distAsc,
-          "fused_score", Seq(col(idCol)))
-      case _ =>
-        rsf(vecCand, textCand, idCol, "dist", "bm25_score", k, fusionWeight,
-          distAsc, "fused_score", Seq(col(idCol)))
-    }
-    fused
+    fuse(bruteLeg(df, idCol, vecCol, qvec, nCand, metric), textCand, idCol, k,
+      fusionType, metric, fusionWeight, rrfK)
   }
 
   /** Index-backed hybrid search: the text leg reads the persisted FTS
     * posting-list index (one pruned-bucket scan) instead of re-tokenizing
-    * and re-aggregating the corpus — the per-query cost the judge flagged
-    * for every hybrid query. The FTS index must be built over the SAME
-    * corpus `df` so BM25 statistics agree with the direct path. The vector
-    * leg stays the brute/TakeOrdered top-K (swap in IVF via
-    * [[IvfIndex.search]] when the corpus has one).
+    * and re-aggregating the corpus on every query. The FTS index must be
+    * built over the SAME corpus `df` so BM25 statistics agree with the
+    * direct path. The vector leg stays the brute/TakeOrdered top-K (swap
+    * in IVF via [[IvfIndex.search]] when the corpus has one).
     */
   def hybridSearchIndexed(
       df: DataFrame,
@@ -170,25 +194,10 @@ object HybridSearch {
       metric: String = "cosine",
       fusionWeight: Double = DefaultFusionWeight,
       rrfK: Int = DefaultRrfK): DataFrame = {
-    val spark = df.sparkSession
     val nCand = k * TopKMultipleBase
-    val distAsc = !metric.equalsIgnoreCase("ip")
-    val vecCand = VectorSearch
-      .topK(df, vecCol, qvec, nCand, metric, None, "dist", Seq(col(idCol)))
-      .select(col(idCol), col("dist"))
-    val textCand = FtsIndex
-      .search(spark, ftsIndexDir, qtext, nCand, "OR", "bm25_score",
-        Seq(col("doc_id")))
-      .withColumnRenamed("doc_id", idCol)
-      .select(col(idCol), col("bm25_score"))
-    fusionType.toLowerCase match {
-      case "rrf" =>
-        rrf(vecCand, textCand, idCol, "dist", "bm25_score", k, rrfK, distAsc,
-          "fused_score", Seq(col(idCol)))
-      case _ =>
-        rsf(vecCand, textCand, idCol, "dist", "bm25_score", k, fusionWeight,
-          distAsc, "fused_score", Seq(col(idCol)))
-    }
+    fuse(bruteLeg(df, idCol, vecCol, qvec, nCand, metric),
+      ftsLeg(df.sparkSession, ftsIndexDir, qtext, nCand, idCol, None), idCol, k,
+      fusionType, metric, fusionWeight, rrfK)
   }
 
   /** Fully index-backed hybrid search — BOTH legs on persisted indexes,
@@ -203,7 +212,7 @@ object HybridSearch {
     * against the direct-path oracle.
     */
   def hybridSearchFullyIndexed(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       idCol: String,
       vecIdCol: String,
       qvec: Seq[Float],
@@ -218,7 +227,6 @@ object HybridSearch {
       rrfK: Int = DefaultRrfK,
       deletedIds: Option[DataFrame] = None): DataFrame = {
     val nCand = k * TopKMultipleBase
-    val distAsc = !metric.equalsIgnoreCase("ip")
     // Lightweight-DELETE over the fully-indexed path (reference
     // 00040_with_lwd on indexed parts): BOTH candidate legs drop deleted
     // rows before their top-nCand cuts; index-resident statistics stay
@@ -229,18 +237,7 @@ object HybridSearch {
         deletes = deletedIds)
       .withColumnRenamed(vecIdCol, idCol)
       .select(col(idCol), col("dist"))
-    val textCand = FtsIndex
-      .search(spark, ftsIndexDir, qtext, nCand, "OR", "bm25_score",
-        Seq(col("doc_id")), deletedIds = deletedIds)
-      .withColumnRenamed("doc_id", idCol)
-      .select(col(idCol), col("bm25_score"))
-    fusionType.toLowerCase match {
-      case "rrf" =>
-        rrf(vecCand, textCand, idCol, "dist", "bm25_score", k, rrfK, distAsc,
-          "fused_score", Seq(col(idCol)))
-      case _ =>
-        rsf(vecCand, textCand, idCol, "dist", "bm25_score", k, fusionWeight,
-          distAsc, "fused_score", Seq(col(idCol)))
-    }
+    fuse(vecCand, ftsLeg(spark, ftsIndexDir, qtext, nCand, idCol, deletedIds), idCol, k,
+      fusionType, metric, fusionWeight, rrfK)
   }
 }

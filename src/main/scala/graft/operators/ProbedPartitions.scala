@@ -25,25 +25,20 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   */
 private[graft] object ProbedPartitions {
 
-  /** The requested partitions of `root`, or None when none of them exists. */
-  def readPresent(spark: SparkSession, root: String, partCol: String,
-      values: Seq[Int]): Option[DataFrame] = {
-    val all = partitionDirs(spark, root, partCol)
-    val dirs = values.distinct.sorted.flatMap(all.get)
-    if (dirs.isEmpty) None
-    else Some(spark.read.schema(schema(spark, root, partCol, dirs))
-      .option("basePath", root).parquet(dirs.map(_.toString): _*)
-      .filter(col(partCol).isin(values: _*)))
-  }
-
   /** The requested partitions of `root`; an empty frame with the
     * artifact's schema when none of them exists.
     */
   def read(spark: SparkSession, root: String, partCol: String,
-      values: Seq[Int]): DataFrame =
-    readPresent(spark, root, partCol, values).getOrElse(spark.createDataFrame(
-      java.util.List.of[Row](),
-      schema(spark, root, partCol, partitionDirs(spark, root, partCol).values.toSeq)))
+      values: Seq[Int]): DataFrame = {
+    val all = partitionDirs(spark, root, partCol)
+    val dirs = values.distinct.sorted.flatMap(all.get)
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.List.of[Row](),
+        schema(spark, root, partCol, all.values.toSeq))
+    else spark.read.schema(schema(spark, root, partCol, dirs))
+      .option("basePath", root).parquet(dirs.map(_.toString): _*)
+      .filter(col(partCol).isin(values: _*))
+  }
 
   /** `partCol=v` directories directly under `root`, by `v`. */
   private def partitionDirs(spark: SparkSession, root: String,

@@ -36,23 +36,35 @@ object TextSearch {
     * aggregates reference the attribute, not a per-term re-tokenization
     * (a 26-term query was paying 26 regexp splits per row before r14).
     */
-  def collectStats(df: DataFrame, textCol: Column, terms: Seq[String]): Bm25Stats =
-    statsFromTokens(
-      df.select(text.tokenize(textCol).as("__graft_toks")), col("__graft_toks"), terms)
-
-  private def statsFromTokens(df: DataFrame, toks: Column, terms: Seq[String]): Bm25Stats = {
+  def collectStats(df: DataFrame, textCol: Column, terms: Seq[String]): Bm25Stats = {
+    val toks = col("__graft_toks")
     val dfAggs = terms.zipWithIndex.map { case (t, i) =>
       sum(when(array_contains(toks, t), 1L).otherwise(0L)).as(s"df_$i")
     }
     val allAggs = Seq(
       count(lit(1)).as("n"),
       avg(size(toks).cast("double")).as("avgdl")) ++ dfAggs
-    val row = df.agg(allAggs.head, allAggs.tail: _*).head()
+    val row = df.select(text.tokenize(textCol).as("__graft_toks"))
+      .agg(allAggs.head, allAggs.tail: _*).head()
     Bm25Stats(
       row.getAs[Long]("n"),
       row.getAs[Double]("avgdl"),
       terms.zipWithIndex.map { case (t, i) => t -> row.getAs[Long](s"df_$i") }.toMap)
   }
+
+  /** Tantivy's idf, `ln(1 + (N - df + 0.5) / (df + 0.5))` — the one idf
+    * of the text family (Scala `math.log`; Spark's `log` is StrictMath and
+    * may differ in the last bit).
+    */
+  def idf(n: Long, df: Long): Double =
+    math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+  /** One term's BM25 contribution for term frequency `tf` in a document
+    * of `dl` tokens — the one scoring rule of the direct and the index
+    * path.
+    */
+  private[operators] def bm25Term(idf: Column, tf: Column, dl: Column, avgDl: Double): Column =
+    idf * tf * lit(K1 + 1.0) / (tf + lit(K1) * (lit(1.0 - B) + lit(B) * dl / avgDl))
 
   /** BM25 score column for `query` given global stats. Pure built-in
     * expressions (codegen'd): tf via a filtered token count, dl via token
@@ -69,15 +81,37 @@ object TextSearch {
     val perTerm = terms.map { t =>
       val dfT = stats.docFreq.getOrElse(t, 0L)
       if (dfT == 0L) lit(0.0)
-      else {
-        val idf = math.log(1.0 + (stats.totalDocs - dfT + 0.5) / (dfT + 0.5))
-        val tf = size(filter(toks, x => x === t)).cast("double")
-        lit(idf) * tf * (lit(K1) + 1.0) /
-          (tf + lit(K1) * (lit(1.0) - B + lit(B) * dl / stats.avgDl))
-      }
+      else bm25Term(lit(idf(stats.totalDocs, dfT)),
+        size(filter(toks, x => x === t)).cast("double"), dl, stats.avgDl)
     }
     perTerm.reduceOption(_ + _).getOrElse(lit(0.0))
   }
+
+  /** BM25 per document from postings rows `(term, <doc>, tf, dl)` — the
+    * one scorer of the index path and the many-terms direct path. Per-term
+    * df is a `groupBy(term).count` over the same rows, broadcast back (≤
+    * |terms| rows), so no job runs while the plan is built; idf goes
+    * through a UDF over [[idf]]. `only` restricts the scored documents
+    * (df still counts every row); `allTerms > 0` keeps only the documents
+    * that post for that many distinct terms (AND). Returns `(<doc>,
+    * <scoreName>)`.
+    */
+  private[operators] def scorePostings(posts: DataFrame, doc: String, nDocs: Long,
+      avgDl: Double, scoreName: String, allTerms: Int = 0,
+      only: Option[DataFrame] = None): DataFrame = {
+    val dfs = posts.groupBy(col("term")).agg(count(lit(1)).as("__df"))
+    val idfU = udf((df: Long) => idf(nDocs, df))
+    val rows = posts.join(broadcast(dfs), "term")
+    val perDoc = only.fold(rows)(rows.join(_, Seq(doc), "left_semi"))
+      .withColumn("__c", bm25Term(idfU(col("__df")), col("tf"), col("dl"), avgDl))
+      .groupBy(col(doc))
+      .agg(sum(col("__c")).as(scoreName), count(lit(1)).as("__nterms"))
+    (if (allTerms > 0) perDoc.filter(col("__nterms") === allTerms) else perDoc)
+      .drop("__nterms")
+  }
+
+  /** `operator` = "AND": every query term must match (else OR, any term). */
+  private[operators] def isAnd(operator: String): Boolean = operator.equalsIgnoreCase("AND")
 
   /** `textsearch(doc, 'query')` top-K with OR (any term) or AND (all
     * terms) match, score exposed as `bm25_score` (reference param
@@ -94,21 +128,30 @@ object TextSearch {
     val terms = queryTerms(query)
     // A query with no alphanumeric terms matches nothing (empty result,
     // schema preserved) instead of crashing on an empty reduce.
-    if (terms.isEmpty)
-      return df.withColumn(scoreName, lit(0.0)).filter(lit(false)).limit(k)
+    if (terms.isEmpty) return noMatch(df, k, scoreName)
     if (terms.length > ManyTermsThreshold)
       return textSearchManyTerms(df, textCol, terms, k, operator, scoreName, tieBreak)
-    // tokenize once per row: match + score reference the projected column
-    val tname = "__graft_toks"
-    val withT = df.withColumn(tname, text.tokenize(textCol))
-    val tcol = col(tname)
-    val stats = collectStats(df, textCol, terms)
-    val matched = operator.toUpperCase match {
-      case "AND" => terms.map(t => array_contains(tcol, t)).reduce(_ && _)
-      case _     => terms.map(t => array_contains(tcol, t)).reduce(_ || _)
+    scoreDirect(df, textCol, terms, k, scoreName, tieBreak) { toks =>
+      val has = terms.map(t => array_contains(toks, t))
+      if (isAnd(operator)) has.reduce(_ && _) else has.reduce(_ || _)
     }
-    withT.filter(matched)
-      .withColumn(scoreName, bm25ScoreTokens(tcol, terms, stats))
+  }
+
+  private def noMatch(df: DataFrame, k: Int, scoreName: String): DataFrame =
+    df.withColumn(scoreName, lit(0.0)).filter(lit(false)).limit(k)
+
+  /** The direct path's one body: tokenize once per row (match and score
+    * reference the projected column), collect the global stats, keep the
+    * rows `matched` accepts, score `terms`, cut the top `k`.
+    */
+  private def scoreDirect(df: DataFrame, textCol: Column, terms: Seq[String], k: Int,
+      scoreName: String, tieBreak: Seq[Column])(matched: Column => Column): DataFrame = {
+    val tname = "__graft_toks"
+    val toks = col(tname)
+    val withT = df.withColumn(tname, text.tokenize(textCol))
+    val stats = collectStats(df, textCol, terms)
+    withT.filter(matched(toks))
+      .withColumn(scoreName, bm25ScoreTokens(toks, terms, stats))
       .drop(tname)
       .orderBy(col(scoreName).desc +: tieBreak: _*)
       .limit(k)
@@ -121,13 +164,14 @@ object TextSearch {
     */
   val ManyTermsThreshold = 32
 
-  /** Many-term BM25: explode tokens, keep only query terms, count per
-    * (row, term), broadcast the per-term doc-freqs back, sum components
-    * per row. O(corpus tokens + matches) instead of
-    * O(rows × terms × tokens) — the shape that survives a full document
-    * used as the query string (t15: hundreds of distinct terms).
-    * Scores are exactly the per-term-expression path's BM25 (same stats,
-    * same formula; only FP summation order differs).
+  /** Many-term BM25: explode tokens into in-plan postings `(term, row,
+    * tf, dl)` for the query terms only and score them with
+    * [[scorePostings]], the index path's scorer. O(corpus tokens +
+    * matches) instead of O(rows × terms × tokens) — the shape that
+    * survives a whole document used as the query string (no catalog
+    * query reaches it: t15's query has 17–26 distinct terms across the
+    * scale factors). Scores equal the per-term-expression path's BM25
+    * (same stats, same formula; only FP summation order differs).
     */
   private def textSearchManyTerms(
       df: DataFrame,
@@ -137,43 +181,26 @@ object TextSearch {
       operator: String,
       scoreName: String,
       tieBreak: Seq[Column]): DataFrame = {
+    val stats = collectStats(df, textCol, Nil)
     val toks = text.tokenize(textCol)
-    val statsRow = df.agg(count(lit(1)).as("n"),
-      avg(size(toks).cast("double")).as("avgdl")).head()
-    val n = statsRow.getAs[Long]("n")
-    val avgDl = statsRow.getAs[Double]("avgdl")
     val rid = "__graft_ts_rid"
     // monotonically_increasing_id is only stable if the input's partition
     // splits and row order are deterministic — NOT guaranteed downstream
     // of a shuffle. Materialize the id assignment ONCE (the Dedup barrier
-    // pattern) so the exploded branch and the final join read the SAME
+    // pattern) so the postings branch and the final join read the SAME
     // ids instead of independently recomputing them.
     val base = df.withColumn(rid, monotonically_increasing_id())
       .localCheckpoint(true)
-    val exploded = base
-      .select(col(rid), size(toks).cast("double").as("__dl"),
-        explode(toks).as("__tok"))
-      .where(col("__tok").isInCollection(terms))
-    val counts = exploded.groupBy(col(rid), col("__tok"))
-      .agg(count(lit(1)).cast("double").as("__tf"), first(col("__dl")).as("__dl"))
-    // per-term document frequency: tiny (≤ |terms| rows) → broadcast back
-    val dfPerTerm = counts.groupBy(col("__tok")).agg(count(lit(1)).as("__df"))
-    val scored = counts.join(broadcast(dfPerTerm), "__tok")
-      .withColumn("__comp",
-        log(lit(1.0) + (lit(n.toDouble) - col("__df") + 0.5) / (col("__df") + 0.5)) *
-          col("__tf") * (K1 + 1.0) /
-          (col("__tf") + lit(K1) *
-            (lit(1.0 - B) + lit(B) * col("__dl") / avgDl)))
-    val perDoc0 = scored.groupBy(col(rid))
-      .agg(sum(col("__comp")).as(scoreName), count(lit(1)).as("__nterms"))
-    val perDoc = operator.toUpperCase match {
-      // AND: every query term present (a term absent from the whole
-      // corpus leaves no row with the full count — result empty, same as
-      // the per-term path's conjunction)
-      case "AND" => perDoc0.where(col("__nterms") === terms.length)
-      case _ => perDoc0
-    }
-    base.join(perDoc.select(col(rid), col(scoreName)), Seq(rid), "inner")
+    val posts = base
+      .select(col(rid), size(toks).cast("double").as("dl"), explode(toks).as("term"))
+      .where(col("term").isInCollection(terms))
+      .groupBy(col("term"), col(rid), col("dl"))
+      .agg(count(lit(1)).cast("double").as("tf"))
+    // AND: a term absent from the whole corpus leaves no row with the
+    // full count — result empty, same as the per-term path's conjunction
+    val perDoc = scorePostings(posts, rid, stats.totalDocs, stats.avgDl, scoreName,
+      if (isAnd(operator)) terms.length else 0)
+    base.join(perDoc, Seq(rid), "inner")
       .drop(rid)
       .orderBy(col(scoreName).desc +: tieBreak: _*)
       .limit(k)
@@ -219,29 +246,20 @@ object TextSearch {
       scoreName: String = "bm25_score",
       tieBreak: Seq[Column] = Nil): DataFrame = {
     val nlq = parseNlq(query)
-    val terms = nlq.scoredTerms
-    if (terms.isEmpty && nlq.mustNot.isEmpty)
-      return df.withColumn(scoreName, lit(0.0)).filter(lit(false)).limit(k)
-    val tname = "__graft_toks"
-    val withT = df.withColumn(tname, text.tokenize(textCol))
-    val toks = col(tname)
-    val joined = concat(lit(" "), array_join(toks, " "), lit(" "))
-    val phraseConds = nlq.phrases.map(p =>
-      joined.contains(" " + p.mkString(" ") + " "))
-    val mustConds = nlq.must.map(t => array_contains(toks, t))
-    val notConds = nlq.mustNot.map(t => !array_contains(toks, t))
-    val shouldCond =
-      if (nlq.should.isEmpty) Nil
-      else if (nlq.must.nonEmpty || nlq.phrases.nonEmpty) Nil // should only scores
-      else Seq(nlq.should.map(t => array_contains(toks, t)).reduce(_ || _))
-    val matched = (phraseConds ++ mustConds ++ notConds ++ shouldCond)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val stats = collectStats(df, textCol, terms)
-    withT.filter(matched)
-      .withColumn(scoreName, bm25ScoreTokens(toks, terms, stats))
-      .drop(tname)
-      .orderBy(col(scoreName).desc +: tieBreak: _*)
-      .limit(k)
+    if (nlq.scoredTerms.isEmpty && nlq.mustNot.isEmpty) return noMatch(df, k, scoreName)
+    scoreDirect(df, textCol, nlq.scoredTerms, k, scoreName, tieBreak) { toks =>
+      val joined = concat(lit(" "), array_join(toks, " "), lit(" "))
+      val phraseConds = nlq.phrases.map(p =>
+        joined.contains(" " + p.mkString(" ") + " "))
+      val mustConds = nlq.must.map(t => array_contains(toks, t))
+      val notConds = nlq.mustNot.map(t => !array_contains(toks, t))
+      val shouldCond =
+        if (nlq.should.isEmpty) Nil
+        else if (nlq.must.nonEmpty || nlq.phrases.nonEmpty) Nil // should only scores
+        else Seq(nlq.should.map(t => array_contains(toks, t)).reduce(_ || _))
+      (phraseConds ++ mustConds ++ notConds ++ shouldCond)
+        .reduceOption(_ && _).getOrElse(lit(true))
+    }
   }
 
   /** `textsearch()` over a Map column's keys or values (reference

@@ -74,6 +74,12 @@ object shim {
   def createTempDir(namePrefix: String): java.io.File =
     org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
 
+  /** Delete `dir` recursively at JVM shutdown, as [[createTempDir]]'s
+    * directories are (`ShutdownHookManager` is `private[spark]`).
+    */
+  def deleteAtShutdown(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+
   /** Propagate the task context onto a helper thread
     * (`TaskContext.setTaskContext` is `private[spark]`). Spark's own
     * PipedRDD does exactly this for its stdin-writer thread; without it,

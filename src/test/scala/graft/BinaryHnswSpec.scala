@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -16,7 +14,7 @@ class BinaryHnswSpec extends SparkSpec {
     .select("bvec").head().getAs[Array[Byte]](0)
 
   lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("bhnsw-spec").toString
+    val dir = tempDir("bhnsw-spec").toString
     BinaryHnswIndex.build(spark, docs, "doc_id", "bvec", "spec_bhnsw", dir,
       m = 12, efConstruction = 80, numPartitions = Some(2))
     dir

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -16,7 +14,7 @@ class BinaryIvfSpec extends SparkSpec {
     .select("bvec").head().getAs[Array[Byte]](0)
 
   lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("bivf-spec").toString
+    val dir = tempDir("bivf-spec").toString
     BinaryIvfIndex.build(spark, docs, "doc_id", "bvec", "spec_bivf", dir,
       nLists = 8)
     dir

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Co-located joins via bucketing — the Spark counterpart of the
@@ -11,7 +9,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
-    val wh = Files.createTempDirectory("graft-buckets").toString
+    val wh = tempDir("graft-buckets").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '$wh'")
     try {
       val li = graft.engine.Tables.t(spark, sfDir, "lineitem")

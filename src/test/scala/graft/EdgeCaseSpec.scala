@@ -20,7 +20,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("FTS index builds empty, appends fill it, search works throughout") {
-    val dir = java.nio.file.Files.createTempDirectory("fts-empty").toString
+    val dir = tempDir("fts-empty").toString
     FtsIndex.build(spark, emptyDocs, "doc_id", "text", "fts_empty", dir, 4)
     assert(FtsIndex.loadMeta(dir).nDocs === 0)
     // search against the empty index: no postings → empty result
@@ -97,7 +97,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("compacting an empty directory is a no-op, not an error") {
-    val dir = java.nio.file.Files.createTempDirectory("compact-empty").toString
+    val dir = tempDir("compact-empty").toString
     val res = graft.sources.Maintenance.compact(spark, dir)
     assert(res.filesBefore === 0 && res.filesAfter === 0)
   }

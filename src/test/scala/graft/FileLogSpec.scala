@@ -23,7 +23,7 @@ class FileLogSpec extends SparkSpec {
     df.select(col("k").cast("long")).collect().map(_.getLong(0)).toSeq.sorted
 
   test("02023 shape: appends deliver once; copies are new; renames are not; deletes drop") {
-    val dir = Files.createTempDirectory("graft-filelog")
+    val dir = tempDir("graft-filelog")
     val a = dir.resolve("a.txt")
     append(a, (1 to 20).map(i => s"$i,$i"))
     val t = FileLogEngine.create("flog1", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -51,7 +51,7 @@ class FileLogSpec extends SparkSpec {
     // per-inode metadata, StorageFileLog.cpp DirectoryWatcher): mv the
     // live file aside, recreate the same NAME fresh, keep appending to
     // both — every record must deliver exactly once
-    val dir = Files.createTempDirectory("graft-filelog-rot")
+    val dir = tempDir("graft-filelog-rot")
     val a = dir.resolve("app.log")
     append(a, (1 to 10).map(i => s"$i,$i"))
     val t = FileLogEngine.create("flogrot", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -75,7 +75,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("log rotation: deleting the rotated-away file drops only ITS offsets") {
-    val dir = Files.createTempDirectory("graft-filelog-rotdel")
+    val dir = tempDir("graft-filelog-rotdel")
     val a = dir.resolve("app.log")
     append(a, (1 to 5).map(i => s"$i,$i"))
     val t = FileLogEngine.create("flogrotdel", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -99,7 +99,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("copytruncate: a file shrunk below its offset restarts from byte 0") {
-    val dir = Files.createTempDirectory("graft-filelog-trunc")
+    val dir = tempDir("graft-filelog-trunc")
     val a = dir.resolve("app.log")
     append(a, (1 to 5).map(i => s"$i,$i"))
     val t = FileLogEngine.create("flogtrunc", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -113,7 +113,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("02022 shape: single file incremental tail with partial-line holdback") {
-    val dir = Files.createTempDirectory("graft-filelog-one")
+    val dir = tempDir("graft-filelog-one")
     val a = dir.resolve("a.txt")
     append(a, (1 to 5).map(i => s"$i,${i * 2}"))
     val t = FileLogEngine.create("flog2", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -129,7 +129,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("02025 shape: _filename and _offset virtual columns") {
-    val dir = Files.createTempDirectory("graft-filelog-virt")
+    val dir = tempDir("graft-filelog-virt")
     append(dir.resolve("x.csv"), Seq("1,10", "2,20"))
     val t = FileLogEngine.create("flog3", dir.toString, "CSV", "k UInt64, v UInt64")
     val got = t.consume(spark)
@@ -139,7 +139,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("_offset stays byte-exact past blank lines") {
-    val dir = Files.createTempDirectory("graft-filelog-blank")
+    val dir = tempDir("graft-filelog-blank")
     // "1,10\n" (5) + "\n" (1) + "2,20\n" -> record 2 starts at byte 6
     append(dir.resolve("x.csv"), Seq("1,10", "", "2,20"))
     val t = FileLogEngine.create("flog7", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -150,7 +150,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("offsets persist across detach/attach (02023 tail)") {
-    val dir = Files.createTempDirectory("graft-filelog-meta")
+    val dir = tempDir("graft-filelog-meta")
     val a = dir.resolve("a.txt")
     append(a, (1 to 3).map(i => s"$i,$i"))
     val t = FileLogEngine.create("flog4", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -164,8 +164,8 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("02024 shape: FileLog feeding an incremental sink (the MV flow)") {
-    val dir = Files.createTempDirectory("graft-filelog-mv")
-    val sink = Files.createTempDirectory("graft-filelog-sink").resolve("t").toString
+    val dir = tempDir("graft-filelog-mv")
+    val sink = tempDir("graft-filelog-sink").resolve("t").toString
     val a = dir.resolve("a.txt")
     append(a, (1 to 10).map(i => s"$i,$i"))
     val t = FileLogEngine.create("flog5", dir.toString, "CSV", "k UInt64, v UInt64")
@@ -180,7 +180,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("CRLF records parse clean; the \\r byte stays in the offset math") {
-    val dir = Files.createTempDirectory("graft-filelog-crlf")
+    val dir = tempDir("graft-filelog-crlf")
     Files.write(dir.resolve("w.csv"), "1,x\r\n2,y\r\n".getBytes("UTF-8"),
       StandardOpenOption.CREATE)
     val t = FileLogEngine.create("flog8", dir.toString, "CSV", "k UInt64, v String")
@@ -199,7 +199,7 @@ class FileLogSpec extends SparkSpec {
     // fail the poll before offsets commit; this PERMANENT condition
     // quarantines only the poisoned file (offset preserved, loud
     // warning) while the rest of the table keeps streaming.
-    val dir = Files.createTempDirectory("graft-filelog-err")
+    val dir = tempDir("graft-filelog-err")
     val a = dir.resolve("a.csv")
     append(a, Seq("1,1", "2,2"))
     val t = FileLogEngine.create("flog11", dir.toString, "CSV",
@@ -232,7 +232,7 @@ class FileLogSpec extends SparkSpec {
     // scan high-water mark (offsets.tsv column 4) records how far the
     // newline search got, so the next poll resumes there instead of
     // re-scanning the whole partial record from `offset` every time
-    val dir = Files.createTempDirectory("graft-filelog-partial")
+    val dir = tempDir("graft-filelog-partial")
     val a = dir.resolve("a.csv")
     Files.write(a, "hello\n".getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE)
@@ -268,7 +268,7 @@ class FileLogSpec extends SparkSpec {
     // backlog up to its last newline as one giant range (which would
     // have quarantined a perfectly deliverable multi-record file had it
     // crossed 2 GiB)
-    val dir = Files.createTempDirectory("graft-filelog-bigrec")
+    val dir = tempDir("graft-filelog-bigrec")
     val a = dir.resolve("a.csv")
     val ch = java.nio.channels.FileChannel.open(a,
       StandardOpenOption.CREATE, StandardOpenOption.WRITE)
@@ -290,7 +290,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("hard links deliver once (inode identity)") {
-    val dir = Files.createTempDirectory("graft-filelog-link")
+    val dir = tempDir("graft-filelog-link")
     val a = dir.resolve("a.csv")
     append(a, Seq("1,1", "2,2"))
     try Files.createLink(dir.resolve("alias.csv"), a)
@@ -300,7 +300,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("a tab in a filename cannot corrupt the offset store") {
-    val dir = Files.createTempDirectory("graft-filelog-tabname")
+    val dir = tempDir("graft-filelog-tabname")
     append(dir.resolve("a\tb.csv"), Seq("1,1"))
     val t = FileLogEngine.create("flog10", dir.toString, "CSV", "k UInt64, v UInt64")
     assert(t.consume(spark).count() === 1)
@@ -309,7 +309,7 @@ class FileLogSpec extends SparkSpec {
   }
 
   test("JSONEachRow format variant") {
-    val dir = Files.createTempDirectory("graft-filelog-json")
+    val dir = tempDir("graft-filelog-json")
     append(dir.resolve("a.jsonl"),
       Seq("""{"k": 1, "v": "x"}""", """{"k": 2, "v": "y"}"""))
     val t = FileLogEngine.create("flog6", dir.toString, "JSONEachRow",

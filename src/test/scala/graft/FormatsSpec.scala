@@ -431,7 +431,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("save(): distributed export writes one file set per partition") {
-    val dir = java.nio.file.Files.createTempDirectory("fmt-save").toString + "/out"
+    val dir = tempDir("fmt-save").toString + "/out"
     val d = spark.range(0, 100, 1, 4).toDF("n")
     OutputFormats.save(d, dir, "JSONEachRow")
     val back = spark.read.textFile(dir).collect().sorted
@@ -606,7 +606,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("readLines: distributed TSV file-set parse matches the driver parse") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_readlines")
+    val dir = tempDir("graft_readlines")
       .resolve("tsv").toString
     val d = spark.range(0, 100).selectExpr("id AS n", "concat('s', id) AS s")
     OutputFormats.save(d.repartition(4), dir, "TSV")

@@ -15,7 +15,7 @@ class FtsIndexSpec extends SparkSpec {
     (5L, "")).toDF("doc_id", "text")
 
   lazy val indexDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("fts-spec").toString
+    val dir = tempDir("fts-spec").toString
     FtsIndex.build(spark, corpus, "doc_id", "text", "fts_spec", dir,
       nBuckets = 8, sourcePath = "spec://corpus")
     dir
@@ -75,17 +75,40 @@ class FtsIndexSpec extends SparkSpec {
     assert(plan.contains("bucket"), plan)
   }
 
-  test("search runs NO Spark job while it is built and planned (OR and AND)") {
+  test("search and searchNlq run NO Spark job while they are built and planned") {
     indexDir // force build
-    for (op <- Seq("OR", "AND")) {
-      val (_, jobs) = jobsDuring {
-        FtsIndex.search(spark, indexDir, "spark fast", 10, op, "bm25_score",
-          Seq(col("doc_id"))).queryExecution.executedPlan
-      }
+    val searches = Seq("OR", "AND").map(op => op -> (() =>
+      FtsIndex.search(spark, indexDir, "spark fast", 10, op, "bm25_score",
+        Seq(col("doc_id"))))) :+
+      ("NLQ" -> (() => FtsIndex.searchNlq(spark, indexDir,
+        """"spark joins" +fast -ducks""", 10, "bm25_score", Seq(col("doc_id")))))
+    for ((name, search) <- searches) {
+      val (_, jobs) = jobsDuring(search().queryExecution.executedPlan)
       // the bucket listing, the schema inference and the per-term df
       // collect each used to run a job here
-      assert(jobs === 0, s"$op: $jobs job(s) ran while the search was built")
+      assert(jobs === 0, s"$name: $jobs job(s) ran while the search was built")
     }
+  }
+
+  test("build stores the exact token total; an append keeps avgDl = totalDl / nDocs") {
+    val dir = tempDir("fts-totaldl").toString
+    // 7 documents, 4+4+4+4+4+4+5 = 29 tokens: 7 * (29.0 / 7) is not 29.0
+    val seven = (1L to 7L).map(i =>
+      (i, (Seq("spark", "data", "rows", "fast") ++ (if (i == 7) Seq("ducks") else Nil))
+        .mkString(" "))).toDF("doc_id", "text")
+    FtsIndex.build(spark, seven, "doc_id", "text", "fts_totaldl", dir, nBuckets = 4)
+    val built = FtsIndex.loadMeta(dir)
+    assert(built.nDocs === 7)
+    assert(built.totalDl === 29.0)
+    assert(built.avgDl === 29.0 / 7)
+    val appended = FtsIndex.append(spark,
+      Seq((8L, "spark ponds"), (9L, "the quick brown fox")).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    assert(appended.nDocs === 9)
+    assert(appended.totalDl === 35.0)
+    assert(appended.avgDl === appended.totalDl / appended.nDocs)
+    assert(FtsIndex.loadMeta(dir) === appended)
+    FtsIndex.Catalog.drop("fts_totaldl")
   }
 
   test("termStats TVF reports global df and tf") {
@@ -154,7 +177,7 @@ class FtsIndexSpec extends SparkSpec {
   }
 
   test("incremental append: build half + append half == direct full search") {
-    val dir = java.nio.file.Files.createTempDirectory("fts-append").toString
+    val dir = tempDir("fts-append").toString
     val half1 = corpus.filter($"doc_id" <= 2)
     val half2 = corpus.filter($"doc_id" > 2)
     FtsIndex.build(spark, half1, "doc_id", "text", "fts_append", dir, nBuckets = 8)

@@ -15,7 +15,7 @@ class HnswIndexSpec extends SparkSpec {
     .select(col("embedding")).head().getSeq[Float](0)
 
   lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("hnsw-spec").toString
+    val dir = tempDir("hnsw-spec").toString
     HnswIndex.build(spark, emb, "vec_id", "embedding", "spec_hnsw", dir,
       "l2", m = 8, efConstruction = 64, numPartitions = Some(4))
     dir
@@ -106,7 +106,7 @@ class HnswIndexSpec extends SparkSpec {
   Seq(("HNSWFLAT", false, 0L), ("HNSWSQ", true, 0L), ("gated HNSWFLAT", false, 100L))
     .foreach { case (kind, sq, minRows) =>
       test(s"$kind: search(k) is the top k of candidatePool by (d, id)") {
-        val dir = Files.createTempDirectory("hnsw-pool").toString
+        val dir = tempDir("hnsw-pool").toString
         val n = emb.count()
         // two large parts and two of 25 rows, which the gate leaves unindexed
         val parts = emb.filter(col("vec_id") < n - 50).repartition(2)
@@ -141,7 +141,7 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("HNSWSQ: quantized graph is ~4x smaller and keeps recall") {
-    val dir = Files.createTempDirectory("hnswsq-spec").toString
+    val dir = tempDir("hnswsq-spec").toString
     HnswIndex.build(spark, emb, "vec_id", "embedding", "spec_hnswsq", dir,
       "l2", m = 8, efConstruction = 64, numPartitions = Some(2), quantize = true)
     val cat = IvfIndex.Catalog.asDataFrame(spark)
@@ -157,7 +157,7 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("HNSWPQ: m-byte graph rows via product quantization keep recall") {
-    val dir = Files.createTempDirectory("hnswpq-spec").toString
+    val dir = tempDir("hnswpq-spec").toString
     HnswIndex.build(spark, emb, "vec_id", "embedding", "spec_hnswpq", dir,
       "l2", m = 8, efConstruction = 64, numPartitions = Some(2),
       pqSubspaces = 8)
@@ -178,8 +178,8 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("deterministic rebuild produces identical graphs") {
-    val d1 = Files.createTempDirectory("hnsw-d1").toString
-    val d2 = Files.createTempDirectory("hnsw-d2").toString
+    val d1 = tempDir("hnsw-d1").toString
+    val d2 = tempDir("hnsw-d2").toString
     val single = emb.repartition(1)
     HnswIndex.build(spark, single, "vec_id", "embedding", "h1", d1, "l2", 8, 64)
     HnswIndex.build(spark, single, "vec_id", "embedding", "h2", d2, "l2", 8, 64)
@@ -197,7 +197,7 @@ class HnswIndexSpec extends SparkSpec {
   Seq(("HNSWFLAT", false, 0), ("HNSWSQ", true, 0), ("HNSWPQ", false, 8))
     .foreach { case (t, sq, pq) =>
       test(s"$t: append builds new parts at insert time; search unions all parts") {
-        val dir = Files.createTempDirectory(s"hnsw-append-$t").toString
+        val dir = tempDir(s"hnsw-append-$t").toString
         val name = s"append_${t.toLowerCase}"
         try {
           // build on the first half, append the second half
@@ -256,7 +256,7 @@ class HnswIndexSpec extends SparkSpec {
     }
 
   test("cosine metric graph: recall vs brute-force cosine (ref 00014)") {
-    val dir = Files.createTempDirectory("hnsw-cos").toString
+    val dir = tempDir("hnsw-cos").toString
     try {
       HnswIndex.build(spark, emb, "vec_id", "embedding", "cos_hnsw", dir,
         "cosine", m = 8, efConstruction = 64, numPartitions = Some(2))
@@ -271,7 +271,7 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("min_rows gate: small parts skip graph build, stay searchable exactly") {
-    val dir = Files.createTempDirectory("hnsw-gate").toString
+    val dir = tempDir("hnsw-gate").toString
     // skewed layout: 2 large parts + 2 tiny parts (union concatenates
     // partitions), so minRowsToBuild=100 gates exactly the tiny ones
     val n = emb.count()
@@ -306,7 +306,7 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("append after a gated build numbers new parts past the small parts") {
-    val dir = Files.createTempDirectory("hnsw-gate-append").toString
+    val dir = tempDir("hnsw-gate-append").toString
     val n = emb.count()
     // graph parts 0 and 1, small parts 2 and 3, then two appended parts
     val big = emb.filter(col("vec_id") < n - 150).repartition(2)
@@ -333,7 +333,7 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("append to an index whose every part was gated") {
-    val dir = Files.createTempDirectory("hnsw-all-small").toString
+    val dir = tempDir("hnsw-all-small").toString
     try {
       HnswIndex.build(spark, emb.filter(col("vec_id") < 100), "vec_id",
         "embedding", "all_small", dir, "l2", m = 8, efConstruction = 64,
@@ -352,7 +352,7 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("an in-place rebuild drops the previous build's small parts") {
-    val dir = Files.createTempDirectory("hnsw-rebuild").toString
+    val dir = tempDir("hnsw-rebuild").toString
     val evens = emb.filter(col("vec_id") % 2 === 0)
     try {
       // build A: even ids, the ids >= 400 fall under the gate
@@ -378,7 +378,7 @@ class HnswIndexSpec extends SparkSpec {
 
   test("HNSWSQ and HNSWPQ searches after a build run no Spark job while built") {
     Seq((true, 0), (false, 8)).foreach { case (sq, pq) =>
-      val dir = Files.createTempDirectory("hnsw-warm").toString
+      val dir = tempDir("hnsw-warm").toString
       try {
         HnswIndex.build(spark, emb, "vec_id", "embedding", "warm_hnsw", dir,
           "l2", m = 8, efConstruction = 32, numPartitions = Some(2),

@@ -56,13 +56,12 @@ class HybridSearchSpec extends SparkSpec {
   }
 
   test("indexed hybrid search runs NO Spark job while it is built and planned") {
-    import java.nio.file.Files
     val docs = graft.engine.Tables.t(spark, sfDir, "documents")
     val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
     val joined = docs.join(emb, col("doc_id") === col("vec_id"))
     val qvec = emb.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
-    val ftsDir = Files.createTempDirectory("hyb-nojob-fts").toString
+    val ftsDir = tempDir("hyb-nojob-fts").toString
     try {
       graft.operators.FtsIndex.build(spark, joined, "doc_id", "text",
         "hyb_nojob_fts", ftsDir, nBuckets = 64)
@@ -85,14 +84,13 @@ class HybridSearchSpec extends SparkSpec {
   }
 
   test("fully-indexed hybrid at realistic dense_nprobe recalls the direct path") {
-    import java.nio.file.Files
     val docs = graft.engine.Tables.t(spark, sfDir, "documents")
     val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
     val joined = docs.join(emb, col("doc_id") === col("vec_id"))
     val qvec = emb.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
-    val ivfDir = Files.createTempDirectory("hyb-ivf").toString
-    val ftsDir = Files.createTempDirectory("hyb-fts").toString
+    val ivfDir = tempDir("hyb-ivf").toString
+    val ftsDir = tempDir("hyb-fts").toString
     try {
       graft.operators.IvfIndex.build(spark, emb, "embedding",
         "hyb_spec_ivf", ivfDir, "cosine", 16)

@@ -87,7 +87,7 @@ class IndexArtifactSpec extends SparkSpec {
     }
   }
 
-  private def tmp(tag: String) = Files.createTempDirectory(s"artifact-$tag").toString
+  private def tmp(tag: String) = tempDir(s"artifact-$tag").toString
 
   /** Index B of each family, built once for (b) and (c). */
   private lazy val builtB: Map[String, String] = families.map { f =>

@@ -40,7 +40,7 @@ package graft.queries {
     */
   class ScratchDirSpec extends graft.SparkSpec {
     test("FileLogEngine's default metadata directory is deleted at shutdown") {
-      val dir = org.apache.spark.sql.graft.shim.createTempDir("scratch-filelog").toString
+      val dir = tempDir("scratch-filelog").toString
       val t = graft.streaming.FileLogEngine.create("scratch_spec", dir, "CSV", "k UInt64")
       try assert(ShutdownDeleteProbe.registered(new java.io.File(t.metaDir)), t.metaDir)
       finally graft.streaming.FileLogEngine.drop("scratch_spec")

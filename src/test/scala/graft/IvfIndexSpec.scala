@@ -15,7 +15,7 @@ class IvfIndexSpec extends SparkSpec {
     .select(col("embedding")).head().getSeq[Float](0)
 
   lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("ivf-spec").toString
+    val dir = tempDir("ivf-spec").toString
     IvfIndex.build(spark, emb, "embedding", "spec_ivf", dir, "l2", nLists = 8)
     dir
   }
@@ -134,7 +134,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("incremental append: assign to existing centroids, exact at full probes") {
-    val dir = Files.createTempDirectory("ivf-append").toString
+    val dir = tempDir("ivf-append").toString
     try {
       IvfIndex.build(spark, emb.filter(col("vec_id") < 250), "embedding",
         "append_ivf", dir, "l2", nLists = 8)
@@ -154,7 +154,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("distributed KMeans training path builds a working index") {
-    val dir = Files.createTempDirectory("ivf-ml").toString
+    val dir = tempDir("ivf-ml").toString
     try {
       IvfIndex.build(spark, emb, "embedding", "ml_ivf", dir, "l2",
         nLists = 4)
@@ -207,7 +207,7 @@ class IvfIndexSpec extends SparkSpec {
         dir => PqIndex.stage1Candidates(spark, dir, dup, numReorder = 5, nprobe = 4)))
     def ids(d: DataFrame): Set[Long] = d.select("vec_id").collect().map(_.getLong(0)).toSet
     families.foreach { case (name, build, search, stage1) =>
-      val dir = Files.createTempDirectory(name).toString
+      val dir = tempDir(name).toString
       try {
         build(dir)
         assert(ids(stage1(dir)) === (0L until 5L).toSet, name)

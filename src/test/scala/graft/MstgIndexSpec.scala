@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfIndex, MstgIndex, VectorSearch}
@@ -25,7 +23,7 @@ class MstgIndexSpec extends SparkSpec {
   }
 
   test("build params: unknown key, non-int value, candidate sets rejected") {
-    val dir = Files.createTempDirectory("mstg-bad").toString
+    val dir = tempDir("mstg-bad").toString
     def build(params: String*) =
       MstgIndex.build(spark, emb, "embedding", "bad_mstg", dir,
         params = params, nLists = 4)
@@ -42,7 +40,7 @@ class MstgIndexSpec extends SparkSpec {
   }
 
   test("search params: alpha range enforced, string rejected") {
-    val dir = Files.createTempDirectory("mstg-s").toString
+    val dir = tempDir("mstg-s").toString
     MstgIndex.build(spark, emb, "embedding", "s_mstg", dir,
       params = Seq("disk_mode=0"), nLists = 4)
     try {
@@ -59,7 +57,7 @@ class MstgIndexSpec extends SparkSpec {
   }
 
   test("MSTG build + alpha=4 search is exact; catalog row reports MSTG") {
-    val dir = Files.createTempDirectory("mstg-ok").toString
+    val dir = tempDir("mstg-ok").toString
     MstgIndex.build(spark, emb, "embedding", "ok_mstg", dir,
       params = Seq("disk_mode=1", "metric_type=L2"), nLists = 4)
     try {
@@ -73,7 +71,7 @@ class MstgIndexSpec extends SparkSpec {
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(got.sorted === brute.sorted)
       // cosine variant builds with the mapped metric
-      val dir2 = Files.createTempDirectory("mstg-cos").toString
+      val dir2 = tempDir("mstg-cos").toString
       MstgIndex.build(spark, emb, "embedding", "cos_mstg", dir2,
         params = Seq("metric_type=Cosine"), nLists = 4)
       try assert(IvfIndex.Catalog.lookup("cos_mstg").get.metric === "cosine")
@@ -94,7 +92,7 @@ class MstgIndexSpec extends SparkSpec {
   test("buildDefault dispatches by column type and stamps the catalog row (00041 product surface)") {
     import org.apache.spark.sql.functions._
     val emb = graft.engine.Tables.t(spark, sfDir, "embeddings").limit(200)
-    val dirF = Files.createTempDirectory("default-float").toString
+    val dirF = tempDir("default-float").toString
     val ef = MstgIndex.buildDefault(spark, emb, "vec_id", "embedding",
       "def_float", dirF, params = Seq("metric_type=Cosine"))
     try assert(ef.indexType === "MSTG" &&
@@ -102,7 +100,7 @@ class MstgIndexSpec extends SparkSpec {
     finally IvfIndex.Catalog.drop("def_float")
     val bin = graft.engine.Tables.t(spark, sfDir, "documents").limit(200)
       .select(col("doc_id"), unhex(md5(col("text"))).as("bvec"))
-    val dirB = Files.createTempDirectory("default-bin").toString
+    val dirB = tempDir("default-bin").toString
     val eb = MstgIndex.buildDefault(spark, bin, "doc_id", "bvec",
       "def_bin", dirB, params = Seq("metric_type=Jaccard"))
     try {
@@ -125,7 +123,7 @@ class MstgIndexSpec extends SparkSpec {
     } finally IvfIndex.Catalog.drop("def_bin")
     // float metric names are rejected on the binary grid (reference
     // param validation posture)
-    val dirX = Files.createTempDirectory("default-bad").toString
+    val dirX = tempDir("default-bad").toString
     assertThrows[IllegalArgumentException](
       MstgIndex.buildDefault(spark, bin, "doc_id", "bvec", "def_bad", dirX,
         params = Seq("metric_type=L2")))

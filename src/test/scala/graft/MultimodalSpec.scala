@@ -216,7 +216,7 @@ class MultimodalSpec extends SparkSpec {
       // (file scheme needs an FS-provider connection: AWS connections
       // are scheme-restricted to s3/http(s) — ADVICE r9 SSRF fix)
       Connections.create("conn_00009_fs", "FS")
-      val f = java.nio.file.Files.createTempFile("obj", ".bin")
+      val f = tempDir("obj").resolve("obj.bin")
       java.nio.file.Files.write(f, "sql-payload".getBytes("UTF-8"))
       val got = spark.sql(
         s"SELECT getObject('conn_00009_fs', 'file://${f}')")
@@ -342,7 +342,7 @@ class MultimodalSpec extends SparkSpec {
     // Host/path/X-Amz-* params — a presign made with the WRONG secret
     // must 403 (fail-fast NonRetryable), the right one must serve bytes
     import graft.multimodal.{Connections, LoopbackObjectStore}
-    val dir = java.nio.file.Files.createTempDirectory("graft-loopback-spec")
+    val dir = tempDir("graft-loopback-spec")
     java.nio.file.Files.write(dir.resolve("obj.bin"), "s3-payload".getBytes)
     val good = Connections.ObjectStoreCredentials("LOOPAK", "loop-secret")
     val port = LoopbackObjectStore.port(dir, good)
@@ -375,7 +375,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("LoopbackObjectStore rejects EXPIRED presigns; gs:// leg round-trips") {
     import graft.multimodal.{Connections, LoopbackObjectStore, SigV4}
-    val dir = java.nio.file.Files.createTempDirectory("graft-loopback-exp")
+    val dir = tempDir("graft-loopback-exp")
     java.nio.file.Files.write(dir.resolve("g.bin"), "gs-payload".getBytes)
     val creds = Connections.ObjectStoreCredentials("LOOPAK2", "loop-secret-2")
     val port = LoopbackObjectStore.port(dir, creds)

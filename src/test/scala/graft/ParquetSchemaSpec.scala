@@ -11,10 +11,6 @@ import graft.operators.Projections
 class ParquetSchemaSpec extends SparkSpec {
   import spark.implicits._
 
-  /** A fresh directory the JVM deletes at shutdown. */
-  def tempDir(prefix: String): java.nio.file.Path =
-    org.apache.spark.sql.graft.shim.createTempDir(prefix).toPath
-
   val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "documents", "embeddings", "events")
 

@@ -57,7 +57,7 @@ class PlanRegressionSpec extends SparkSpec {
     // execution stage (visible via the pushed-down predicate on the
     // candidate side's relation scan) — the reference computes its
     // pre-filter bitmap at execution time, and so must we
-    val dir = java.nio.file.Files.createTempDirectory("hnsw-planreg").toString
+    val dir = tempDir("hnsw-planreg").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     spark.catalog.clearCache()
     val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")

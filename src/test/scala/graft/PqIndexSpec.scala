@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -16,7 +14,7 @@ class PqIndexSpec extends SparkSpec {
   lazy val nEmb: Long = emb.count()
 
   lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("pq-spec").toString
+    val dir = tempDir("pq-spec").toString
     PqIndex.build(spark, emb, "vec_id", "embedding", "spec_ivfpq", dir,
       "l2", nLists = 8, m = 8)
     dir

@@ -25,7 +25,7 @@ class ProbedPartitionsSpec extends SparkSpec {
   }
 
   test("a probed IVF list with no list_id= directory is skipped; none left → empty") {
-    val dir = Files.createTempDirectory("pp-ivf").toString
+    val dir = tempDir("pp-ivf").toString
     try {
       IvfIndex.build(spark, emb, "embedding", "pp_ivf", dir, "l2", nLists = 8)
       val qv = vecOf(7)
@@ -58,7 +58,7 @@ class ProbedPartitionsSpec extends SparkSpec {
     (3L, "ducks swim in ponds")).toDF("doc_id", "text")
 
   test("FTS query whose buckets have no directory returns the empty (doc_id, score) frame") {
-    val dir = Files.createTempDirectory("pp-fts").toString
+    val dir = tempDir("pp-fts").toString
     FtsIndex.build(spark, corpus, "doc_id", "text", "pp_fts", dir, nBuckets = 64)
     val present = Files.list(Paths.get(s"$dir/postings")).toArray.map(_.toString)
       .filter(_.contains("bucket=")).map(_.split("bucket=").last.toInt).toSet
@@ -73,7 +73,7 @@ class ProbedPartitionsSpec extends SparkSpec {
   }
 
   test("FTS AND with one term missing from the index matches nothing; OR still scores") {
-    val dir = Files.createTempDirectory("pp-fts-and").toString
+    val dir = tempDir("pp-fts-and").toString
     FtsIndex.build(spark, corpus, "doc_id", "text", "pp_fts_and", dir, nBuckets = 8)
     // "zebra" is in no document; its bucket may or may not hold other terms
     assert(FtsIndex.search(spark, dir, "spark zebra", 10, "AND").count() === 0)
@@ -84,7 +84,7 @@ class ProbedPartitionsSpec extends SparkSpec {
   }
 
   test("IvfIndex.append is seen by the next search") {
-    val dir = Files.createTempDirectory("pp-ivf-append").toString
+    val dir = tempDir("pp-ivf-append").toString
     try {
       IvfIndex.build(spark, emb.filter(col("vec_id") < 250), "embedding",
         "pp_ivf_append", dir, "l2", nLists = 8)
@@ -100,7 +100,7 @@ class ProbedPartitionsSpec extends SparkSpec {
   }
 
   test("FtsIndex.append is seen by the next search") {
-    val dir = Files.createTempDirectory("pp-fts-append").toString
+    val dir = tempDir("pp-fts-append").toString
     FtsIndex.build(spark, corpus, "doc_id", "text", "pp_fts_append", dir, nBuckets = 8)
     def hits(q: String) = FtsIndex.search(spark, dir, q, 10)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -115,7 +115,7 @@ class ProbedPartitionsSpec extends SparkSpec {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val root = Files.createTempDirectory("pp-footer").toString
+    val root = tempDir("pp-footer").toString
     Files.createDirectories(Paths.get(s"$root/bucket=3"))
     val file = new org.apache.hadoop.fs.Path(s"$root/bucket=3/part-0.parquet")
     val schema = MessageTypeParser.parseMessageType(

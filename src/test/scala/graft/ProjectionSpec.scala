@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Projections
@@ -15,7 +13,7 @@ class ProjectionSpec extends SparkSpec {
   lazy val srcPath = "file:" + sfDir + "/lineitem.parquet"
 
   lazy val projDir: String = {
-    val dir = Files.createTempDirectory("proj-spec").toString
+    val dir = tempDir("proj-spec").toString
     Projections.build(spark, li, "p_flag_status", srcPath, dir,
       groupCols = Seq("l_returnflag", "l_linestatus"),
       sumCols = Seq("l_quantity", "l_extendedprice"),
@@ -117,7 +115,7 @@ class ProjectionSpec extends SparkSpec {
   // ---- normal (sort-order) projections: optimizeUseNormalProjection ----
 
   lazy val normDir: String = {
-    val dir = Files.createTempDirectory("normproj-spec").toString
+    val dir = tempDir("normproj-spec").toString
     Projections.buildNormal(spark, li, "n_by_shipdate", srcPath, dir,
       sortCols = Seq("l_shipdate"),
       cols = Seq("l_shipdate", "l_orderkey", "l_quantity"))

@@ -13,6 +13,18 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
 
+  /** A fresh directory under `java.io.tmpdir` that the JVM deletes at
+    * shutdown, so no spec run leaves its index, table or log directories
+    * behind. The name keeps `createTempDirectory`'s short numeric suffix:
+    * plan strings truncate a scan's location at 100 characters, and
+    * specs look for the `lists` directory in them.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    org.apache.spark.sql.graft.shim.deleteAtShutdown(dir.toFile)
+    dir
+  }
+
   /** `body`'s value and the Spark jobs started while it ran. The listener
     * bus is drained before listening starts, so earlier jobs are not
     * counted.

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -16,7 +14,7 @@ class SqIndexSpec extends SparkSpec {
   lazy val nEmb: Long = emb.count()
 
   lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("sq-spec").toString
+    val dir = tempDir("sq-spec").toString
     SqIndex.build(spark, emb, "vec_id", "embedding", "spec_ivfsq", dir,
       "l2", nLists = 8)
     dir

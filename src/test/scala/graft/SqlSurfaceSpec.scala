@@ -23,7 +23,7 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("SQL ORDER BY distance LIMIT k is routed through a registered IVF index") {
     spark.catalog.clearCache() // rule matches LogicalRelation, not cache
-    val dir = java.nio.file.Files.createTempDirectory("ivf-sql").toString
+    val dir = tempDir("ivf-sql").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     val emb = graft.engine.Tables.t(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 4)

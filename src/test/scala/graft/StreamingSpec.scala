@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,16 +14,16 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val half1 = docs.filter($"doc_id" < 100)
     val half2 = docs.filter($"doc_id" >= 100)
-    val idx = Files.createTempDirectory("fts-stream").toString
+    val idx = tempDir("fts-stream").toString
     FtsIndex.build(spark, half1, "doc_id", "text", "fts_stream", idx, 16)
 
     // stream the second half in as parquet micro-batches
-    val srcDir = Files.createTempDirectory("fts-stream-src").toString
+    val srcDir = tempDir("fts-stream-src").toString
     half2.write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(half2.schema).parquet(srcDir)
     val q = graft.streaming.MaterializedView.attachFtsIndex(
       stream, "doc_id", "text", idx,
-      Files.createTempDirectory("fts-stream-ckpt").toString)
+      tempDir("fts-stream-ckpt").toString)
     q.processAllAvailable(); q.stop()
 
     assert(FtsIndex.loadMeta(idx).nDocs === docs.count())
@@ -42,7 +40,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tumble window streaming agg matches batch result (memory sink)") {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream").toString
     val batch = graft.engine.Tables.events(spark, sfDir)
       .select(col("ts").cast("timestamp").as("ts"), col("event_type"), col("value"))
     batch.write.mode("overwrite").parquet(dir)
@@ -69,7 +67,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("LiveView: complete-mode memory sink stays current across batches") {
-    val dir = Files.createTempDirectory("graft-live").toString
+    val dir = tempDir("graft-live").toString
     val batch1 = spark.range(100).selectExpr("id % 5 AS g", "id AS v")
     batch1.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch1.schema).parquet(dir)
@@ -98,7 +96,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedupe by key within watermark") {
-    val dir = Files.createTempDirectory("graft-dedup").toString
+    val dir = tempDir("graft-dedup").toString
     Seq((ts("2024-01-01 10:00:00"), 1L), (ts("2024-01-01 10:00:01"), 1L),
         (ts("2024-01-01 10:00:02"), 2L))
       .toDF("ts", "k").write.mode("overwrite").parquet(dir)
@@ -113,7 +111,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("mapGroupsWithState running counters") {
-    val dir = Files.createTempDirectory("graft-state").toString
+    val dir = tempDir("graft-state").toString
     Seq((1L, 10.0), (1L, 5.0), (2L, 1.0)).toDF("k", "v")
       .write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema("k long, v double").parquet(dir)
@@ -128,9 +126,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("incremental MV: state rows per batch, merged read = full aggregate") {
-    val src = Files.createTempDirectory("mv-src").toString
-    val state = Files.createTempDirectory("mv-state").toString + "/states"
-    val ckpt = Files.createTempDirectory("mv-ckpt").toString
+    val src = tempDir("mv-src").toString
+    val state = tempDir("mv-state").toString + "/states"
+    val ckpt = tempDir("mv-ckpt").toString
     val ev = graft.engine.Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_type"), col("value"))
     // two "insert blocks"

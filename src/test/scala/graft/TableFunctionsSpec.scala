@@ -33,7 +33,7 @@ class TableFunctionsSpec extends SparkSpec {
   }
 
   test("file: extension inference for csv/json/parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("tf-file")
+    val dir = tempDir("tf-file")
     val csv = dir.resolve("t.csv")
     java.nio.file.Files.writeString(csv, "a,b\n1,x\n2,y\n")
     val fromCsv = TableFunctions.file(spark, csv.toString)
@@ -109,7 +109,7 @@ class TableFunctionsSpec extends SparkSpec {
 
   test("system.parts: footer stats match the table (rows, min/max)") {
     import graft.sources.SystemParts
-    val dir = java.nio.file.Files.createTempDirectory("parts").toString
+    val dir = tempDir("parts").toString
     spark.range(1000).selectExpr("id", "id % 7 AS g")
       .repartition(3).write.mode("overwrite").parquet(dir)
     val parts = SystemParts.parts(spark, dir, statCols = Seq("id"))
@@ -126,7 +126,7 @@ class TableFunctionsSpec extends SparkSpec {
 
   test("compact merges small files, preserves data, keeps sort stats tight") {
     import graft.sources.{Maintenance, SystemParts}
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    val dir = tempDir("compact").toString + "/t"
     spark.range(10000).selectExpr("id", "id % 13 AS g")
       .repartition(20).write.parquet(dir)
     val before = spark.read.parquet(dir).orderBy("id").collect()
@@ -145,7 +145,7 @@ class TableFunctionsSpec extends SparkSpec {
 
   test("OPTIMIZE DEDUPLICATE: full-row duplicates collapse during the rewrite") {
     import graft.sources.Maintenance
-    val dir = java.nio.file.Files.createTempDirectory("dedup-opt").toString + "/t"
+    val dir = tempDir("dedup-opt").toString + "/t"
     val base = spark.range(500).selectExpr("id", "id % 7 AS g")
     base.union(base.limit(100)).repartition(6).write.parquet(dir)
     assert(spark.read.parquet(dir).count() === 600)
@@ -157,7 +157,7 @@ class TableFunctionsSpec extends SparkSpec {
 
   test("TTL DELETE: expired rows dropped atomically, NULL TTL keeps") {
     import graft.sources.Maintenance
-    val dir = java.nio.file.Files.createTempDirectory("ttl").toString + "/t"
+    val dir = tempDir("ttl").toString + "/t"
     spark.range(1000)
       .selectExpr("id", "IF(id % 10 = 0, NULL, id % 100) AS age")
       .repartition(4).write.parquet(dir)
@@ -172,7 +172,7 @@ class TableFunctionsSpec extends SparkSpec {
 
   test("getObject fetches real local files; off-provider schemes rejected") {
     import graft.multimodal.Connections
-    val f = java.nio.file.Files.createTempFile("obj", ".bin")
+    val f = tempDir("obj").resolve("obj.bin")
     java.nio.file.Files.write(f, "real-bytes".getBytes("UTF-8"))
     Connections.create("local", "FS")
     try {
@@ -238,7 +238,7 @@ class TableFunctionsSpec extends SparkSpec {
 
   test("s3(...) TVF: fetch through a CONNECTION + format parse (TableFunctionS3.cpp)") {
     import graft.multimodal.Connections
-    val dir = java.nio.file.Files.createTempDirectory("tvf-s3").toFile
+    val dir = tempDir("tvf-s3").toFile
     val f = new java.io.File(dir, "t.tsv")
     java.nio.file.Files.writeString(f.toPath, "c1\tc2\n7\tzz\n")
     Connections.create("tvfs3", "fs", "file://" + dir.getAbsolutePath)
@@ -251,7 +251,7 @@ class TableFunctionsSpec extends SparkSpec {
   }
 
   test("fileWrite: the INSERT INTO FUNCTION file(...) shape round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("tf-filewrite")
+    val dir = tempDir("tf-filewrite")
     val d = spark.range(0, 5).selectExpr("id AS x", "id % 3 AS y",
       "'Hello' AS z")
     // single-file SQLInsert -> MySQLDump (the 02322 flow)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.functions.distances
@@ -32,7 +30,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("registered index → scan swapped to probed IVF lists, exact at nprobe=nLists") {
-    val dir = Files.createTempDirectory("ivf-auto").toString
+    val dir = tempDir("ivf-auto").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       IvfIndex.build(spark, emb, "embedding", "auto_ivf", dir, "l2",
@@ -49,7 +47,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("tie-break sort keys no longer lose the index") {
-    val dir = Files.createTempDirectory("ivf-ties").toString
+    val dir = tempDir("ivf-ties").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       IvfIndex.build(spark, emb, "embedding", "ties_ivf", dir, "l2",
@@ -68,7 +66,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("HNSWFLAT index routes the top-K through the graph search") {
-    val dir = Files.createTempDirectory("hnsw-auto").toString
+    val dir = tempDir("hnsw-auto").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       graft.operators.HnswIndex.build(spark, emb, "vec_id", "embedding",
@@ -103,7 +101,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("HNSWSQ index routes with candidate over-fetch + exact re-rank") {
-    val dir = Files.createTempDirectory("hnswsq-auto").toString
+    val dir = tempDir("hnswsq-auto").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       graft.operators.HnswIndex.build(spark, emb, "vec_id", "embedding",
@@ -132,7 +130,7 @@ class TopKRewriteSpec extends SparkSpec {
   ).foreach { case (family, build) =>
     test(s"$family index routes through quantized stage-1 + exact re-rank") {
       val name = s"auto_${family.toLowerCase}"
-      val dir = Files.createTempDirectory(name).toString
+      val dir = tempDir(name).toString
       val srcPath = "file:" + sfDir + "/embeddings.parquet"
       try {
         build(name, dir, srcPath)
@@ -164,7 +162,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("selective filter routes and resolves exactly via exact-over-bitmap") {
-    val dir = Files.createTempDirectory("hnsw-sel").toString
+    val dir = tempDir("hnsw-sel").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       graft.operators.HnswIndex.build(spark, emb, "vec_id", "embedding",
@@ -185,7 +183,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("accept mask past maxIds → exact overflow branch") {
-    val dir = Files.createTempDirectory("hnsw-cap").toString
+    val dir = tempDir("hnsw-cap").toString
     try {
       HnswIndex.build(spark, emb, "vec_id", "embedding",
         "cap_hnsw", dir, "l2", m = 12, efConstruction = 80,
@@ -212,7 +210,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("IVFFLAT routing runs NO Spark job during optimization") {
-    val dir = Files.createTempDirectory("ivf-nojob").toString
+    val dir = tempDir("ivf-nojob").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       IvfIndex.build(spark, emb, "embedding", "nojob_ivf", dir, "l2",
@@ -240,7 +238,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("filtered HNSW routing runs NO Spark job during optimization") {
-    val dir = Files.createTempDirectory("hnsw-nojob").toString
+    val dir = tempDir("hnsw-nojob").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       graft.operators.HnswIndex.build(spark, emb, "vec_id", "embedding",
@@ -276,9 +274,9 @@ class TopKRewriteSpec extends SparkSpec {
     // two vector columns, each with its OWN index of a different type —
     // a query ranks by one column and must route to THAT column's index
     // (reference 00037_mqvs_select_multiple_vector_indices)
-    val tmp = Files.createTempDirectory("multi-vec").toString
-    val ivfDir = Files.createTempDirectory("mv-ivf").toString
-    val hnswDir = Files.createTempDirectory("mv-hnsw").toString
+    val tmp = tempDir("multi-vec").toString
+    val ivfDir = tempDir("mv-ivf").toString
+    val hnswDir = tempDir("mv-hnsw").toString
     val src = tmp + "/emb2.parquet"
     emb.withColumn("embedding2",
         expr("transform(embedding, x -> x * cast(-1.0 as float) + cast(1.0 as float))"))
@@ -320,8 +318,8 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("source schema colliding with index-internal names never routes") {
-    val tmp = Files.createTempDirectory("resv").toString
-    val dir = Files.createTempDirectory("ivf-resv").toString
+    val tmp = tempDir("resv").toString
+    val dir = tempDir("ivf-resv").toString
     val src = tmp + "/emb_resv.parquet"
     // a source column named `qcodes` would be clobbered inside the index
     // layout — the rewrite must leave the plain exact plan alone
@@ -390,7 +388,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("metric mismatch leaves the plan untouched") {
-    val dir = Files.createTempDirectory("ivf-cos").toString
+    val dir = tempDir("ivf-cos").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       IvfIndex.build(spark, emb, "embedding", "cos_ivf", dir, "cosine",
@@ -402,7 +400,7 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("pre-filter stays below the ranking after the swap") {
-    val dir = Files.createTempDirectory("ivf-filter").toString
+    val dir = tempDir("ivf-filter").toString
     val srcPath = "file:" + sfDir + "/embeddings.parquet"
     try {
       IvfIndex.build(spark, emb, "embedding", "filt_ivf", dir, "l2",
